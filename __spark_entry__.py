@@ -2,7 +2,8 @@
 
 ``queries()`` exposes one entry per implemented operator family from
 SURVEY.md §2 (+ the training-data graft ops); each has an ``oracle_sql()``
-twin in ANSI SQL for DuckDB.  Geospatial queries derive deterministic
+twin in ANSI SQL for DuckDB.  Both are derived from ``REGISTRY``, the one
+table of query membership.  Geospatial queries derive deterministic
 (lon, lat) from TPC-H keys with an integer LCG that is emitted both as a
 Spark Column expression and as SQL text from one spec
 (``tilemaker_spark.sources.synth``), so Spark and DuckDB compute
@@ -15,6 +16,7 @@ sides (driver hashes values after sorting columns by name).
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -386,7 +388,7 @@ r AS (SELECT z, n,
              row_number() OVER (PARTITION BY z ORDER BY n, x, y) AS rk,
              count(*) OVER (PARTITION BY z) AS cnt
       FROM t)
-SELECT z, max(cnt) AS n_tiles, sum(n) AS n_points,
+SELECT z, max(cnt) AS n_tiles, CAST(sum(n) AS BIGINT) AS n_points,
        max(n) AS max_load,
        max(CASE WHEN rk = (cnt - 1) * 50 // 100 + 1 THEN n END)
          AS p50_load,
@@ -419,7 +421,7 @@ def sql_zonal_stats():
     return f"""
 SELECT CAST(n.n_nationkey AS int) AS zone,
        count(*) AS n_points,
-       sum(c.c_custkey) AS sum_key,
+       CAST(sum(c.c_custkey) AS BIGINT) AS sum_key,
        min(c.c_custkey) AS min_key,
        max(c.c_custkey) AS max_key
 FROM customer c JOIN nation n
@@ -1602,7 +1604,8 @@ def q_cube_stats(spark, sf_dir):
 
 def sql_cube_stats():
     return """
-SELECT source, lang, count(*) AS n_docs, sum(n_chars) AS sum_chars,
+SELECT source, lang, count(*) AS n_docs,
+       CAST(sum(n_chars) AS BIGINT) AS sum_chars,
        GROUPING(source, lang) AS gid
 FROM documents GROUP BY CUBE (source, lang)
 """
@@ -1683,8 +1686,9 @@ def sql_pack_blocks(capacity: int = 256):
 WITH t AS (SELECT doc_id, CAST({toks} AS bigint) AS toks FROM documents),
 c AS (
   SELECT doc_id, toks,
-         sum(toks) OVER (ORDER BY doc_id
-                         ROWS UNBOUNDED PRECEDING) - toks AS tok_start
+         CAST(sum(toks) OVER (ORDER BY doc_id
+                              ROWS UNBOUNDED PRECEDING) - toks AS BIGINT)
+           AS tok_start
   FROM t
 )
 SELECT doc_id, tok_start,
@@ -1766,7 +1770,7 @@ WITH t AS (
          {TE.lat2tiley_sql(CUST_LAT, 6)} AS y, count(*) AS n
   FROM customer GROUP BY 1, 2
 )
-SELECT a.x, a.y, a.n, sum(b.n) AS heat
+SELECT a.x, a.y, a.n, CAST(sum(b.n) AS BIGINT) AS heat
 FROM t a JOIN t b
   ON abs(a.x - b.x) <= 1 AND abs(a.y - b.y) <= 1
 GROUP BY a.x, a.y, a.n
@@ -3499,9 +3503,9 @@ SELECT audio_id,
        min(n) AS n_samples,
        (min(n) * 1000) // min(sample_rate) AS duration_ms,
        max(abs(v)) AS peak,
-       sum(CASE WHEN j > 0 AND ((v < 0) <> (vp < 0)) THEN 1 ELSE 0 END)
-         AS zero_crossings,
-       sum(v * v) AS sum_sq
+       CAST(sum(CASE WHEN j > 0 AND ((v < 0) <> (vp < 0)) THEN 1 ELSE 0
+                     END) AS BIGINT) AS zero_crossings,
+       CAST(sum(v * v) AS BIGINT) AS sum_sq
 FROM vals
 GROUP BY audio_id
 """
@@ -4263,7 +4267,7 @@ WITH iv AS (
   FROM orders
 )
 SELECT iv.o_orderkey, count(*) AS n_events,
-       sum(CAST(floor(e.value) AS BIGINT)) AS sum_value_floor
+       CAST(sum(CAST(floor(e.value) AS BIGINT)) AS BIGINT) AS sum_value_floor
 FROM iv JOIN events e
   ON e.user_id % 100 = iv.cohort AND e.ts BETWEEN iv.iv_start AND iv.iv_end
 GROUP BY iv.o_orderkey
@@ -4423,248 +4427,137 @@ GROUP BY o.doc_id
 """
 
 
+# name -> (Spark query, DuckDB oracle SQL builder): the one table of
+# query membership; queries(), oracle_sql() and bench.py derive from it
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
+                          Callable[[], str]]] = {
+    "tile_assign": (q_tile_assign, sql_tile_assign),
+    "quadkey": (q_quadkey, sql_quadkey),
+    "geohash": (q_geohash, sql_geohash),
+    "cell_index": (q_cell_index, sql_cell_index),
+    "hex_index": (q_hex_index, sql_hex_index),
+    "s2_cells": (q_s2_cells, sql_s2_cells),
+    "adaptive_cells": (q_adaptive_cells, sql_adaptive_cells),
+    "geo_corpus": (q_geo_corpus, sql_geo_corpus),
+    "pip_broadcast": (q_pip_broadcast, sql_pip),
+    "pip_cell": (q_pip_cell, sql_pip),
+    "zonal_stats": (q_zonal_stats, sql_zonal_stats),
+    "tile_budget": (q_tile_budget, sql_tile_budget),
+    "knn": (q_knn, sql_knn),
+    "radius_join": (q_radius_join, sql_radius_join),
+    "way_assembly": (q_way_assembly, sql_way_assembly),
+    "spherical_area": (q_spherical_area, sql_spherical_area),
+    "zorder_topk": (q_zorder_topk, sql_zorder_topk),
+    "tiles_rollup": (q_tiles_rollup, sql_tiles_rollup),
+    "minzoom_filter": (q_minzoom_filter, sql_minzoom_filter),
+    "combine_points": (q_combine_points, sql_combine_points),
+    "area_filter": (q_area_filter, sql_area_filter),
+    "pricing_summary": (q_pricing_summary, sql_pricing_summary),
+    "shipping_priority": (q_shipping_priority, sql_shipping_priority),
+    "events_window": (q_events_window, sql_events_window),
+    "sliding_users": (q_sliding_users, sql_sliding_users),
+    "dedup_exact": (q_dedup_exact, sql_dedup_exact),
+    "text_stats": (q_text_stats, text_ops.text_stats_oracle_sql),
+    "lang_id": (q_lang_id, text_ops.lang_scores_oracle_sql),
+    "bpe_tokens": (q_bpe_tokens, text_ops.bpe_token_count_oracle_sql),
+    "fingerprint": (q_fingerprint, sql_fingerprint),
+    "tfidf_terms": (q_tfidf_terms, text_ops.tfidf_top_terms_oracle_sql),
+    "scd2": (q_scd2, sql_scd2),
+    "chunk_docs": (q_chunk_docs, sql_chunk_docs),
+    "lm_surprise": (q_lm_surprise, sql_lm_surprise),
+    "retrieval_eval": (q_retrieval_eval, sql_retrieval_eval),
+    "repetition": (q_repetition, text_ops.repetition_metrics_oracle_sql),
+    "bpe_pairs": (q_bpe_pairs, text_ops.bpe_merge_counts_oracle_sql),
+    "substring_dups": (
+        q_substring_dups,
+        partial(substrings_ops.substring_dup_pairs_oracle_sql, length=20)),
+    "ngram_jaccard": (q_ngram_jaccard, sql_ngram_jaccard),
+    "jaccard_prefix": (
+        q_jaccard_prefix, partial(sql_ngram_jaccard, threshold=0.7)),
+    "dedup_clusters": (q_dedup_clusters, sql_dedup_clusters),
+    "dedup_canonical": (q_dedup_canonical, sql_dedup_canonical),
+    "corpus_dedup": (q_corpus_dedup, sql_corpus_dedup),
+    "cover_large": (q_cover_large, sql_cover_large),
+    "poly_union": (q_poly_union, sql_poly_union),
+    "area_intersect": (q_area_intersect, sql_area_intersect),
+    "rel_members": (q_rel_members, sql_rel_members),
+    "pip_line": (q_pip_line, sql_pip_line),
+    "covered_by": (q_covered_by, sql_covered_by),
+    "minhash_pairs": (q_minhash_pairs, sql_minhash_pairs),
+    "simhash_dups": (q_simhash_dups, sql_simhash_dups),
+    "ann_topk": (q_ann_topk, sql_ann_topk),
+    "ann_ivf": (q_ann_ivf, sql_ann_ivf),
+    "clip_gate": (q_clip_gate, sql_clip_gate),
+    "emb_dups": (q_emb_dups, sql_emb_dups),
+    "video_frames": (q_video_frames, sql_video_frames),
+    "audio_features": (q_audio_features, sql_audio_features),
+    "phash_clusters": (q_phash_clusters, sql_phash_clusters),
+    "hilbert": (q_hilbert, sql_hilbert),
+    "salt_plan": (q_salt_plan, sql_salt_plan),
+    "wkb_pip": (q_wkb_pip, sql_wkb_pip),
+    "filter_funnel": (q_filter_funnel, sql_filter_funnel),
+    "pip_anti": (q_pip_anti, sql_pip_anti),
+    "wkb_points": (q_wkb_points, sql_wkb_points),
+    "dirty_tiles": (q_dirty_tiles, sql_dirty_tiles),
+    "ar_bucket": (q_ar_bucket, sql_ar_bucket),
+    "corrupt_scan": (q_corrupt_scan, sql_corrupt_scan),
+    "image_meta": (q_image_meta, sql_image_meta),
+    "image_canonical": (q_image_canonical, sql_image_canonical),
+    "multimodal_dups": (q_multimodal_dups, sql_multimodal_dups),
+    "geo_dedup": (q_geo_dedup, sql_geo_dedup),
+    "upsert": (q_upsert, sql_upsert),
+    "image_quality": (q_image_quality, sql_image_quality),
+    "resize_check": (q_resize_check, sql_resize_check),
+    "letterbox_check": (q_letterbox_check, sql_letterbox_check),
+    "orientation_check": (q_orientation_check, sql_orientation_check),
+    "augment_check": (q_augment_check, sql_augment_check),
+    "grayscale_check": (q_grayscale_check, sql_grayscale_check),
+    "patchify_check": (q_patchify_check, sql_patchify_check),
+    "channel_stats": (q_channel_stats, sql_channel_stats),
+    "mixup_check": (q_mixup_check, sql_mixup_check),
+    "shard_roundtrip": (q_shard_roundtrip, sql_shard_roundtrip),
+    "caption_check": (q_caption_check, sql_caption_check),
+    "sessionize": (q_sessionize, sql_sessionize),
+    "funnel": (q_funnel, sql_funnel),
+    "retention": (q_retention, sql_retention),
+    "concurrency": (q_concurrency, sql_concurrency),
+    "kmv_distinct": (q_kmv_distinct, sql_kmv_distinct),
+    "kmv_setops": (q_kmv_setops, sql_kmv_setops),
+    "grouped_topk": (q_grouped_topk, sql_grouped_topk),
+    "sel_quantiles": (q_sel_quantiles, sql_sel_quantiles),
+    "bloom_prune": (q_bloom_prune, sql_bloom_prune),
+    "cm_counts": (q_cm_counts, sql_cm_counts),
+    "analyze": (q_analyze, sql_analyze),
+    "fuzzy_join": (q_fuzzy_join, sql_fuzzy_join),
+    "hot_ngrams": (q_hot_ngrams, sql_hot_ngrams),
+    "weighted_sample": (q_weighted_sample, sql_weighted_sample),
+    "bpe_encode": (q_bpe_encode, sql_bpe_encode),
+    "heat_grid": (q_heat_grid, sql_heat_grid),
+    "decontam": (q_decontam, sql_decontam),
+    "pii_redact": (q_pii_redact, sql_pii_redact),
+    "stratified": (q_stratified, sql_stratified),
+    "cube_stats": (q_cube_stats, sql_cube_stats),
+    "domain_cap": (q_domain_cap, sql_domain_cap),
+    "corpus_shuffle": (q_corpus_shuffle, sql_corpus_shuffle),
+    "pack_blocks": (q_pack_blocks, sql_pack_blocks),
+    "length_median": (q_length_median, sql_length_median),
+    "hash_split": (q_hash_split, sql_hash_split),
+    "mixture": (q_mixture, sql_mixture),
+    "zorder_layout": (q_zorder_layout, sql_zorder_layout),
+    "line_clip": (q_line_clip, sql_line_clip),
+    "getdata_lookup": (q_getdata_lookup, sql_getdata_lookup),
+    "label_centroid": (q_label_centroid, sql_label_centroid),
+    "raster_roundtrip": (q_raster_roundtrip, sql_raster_roundtrip),
+    "simplify": (q_simplify, sql_simplify),
+    "asof_join": (q_asof_join, sql_asof_join),
+    "interval_join": (q_interval_join, sql_interval_join),
+    "boilerplate": (q_boilerplate, sql_boilerplate),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "tile_assign": q_tile_assign,
-        "quadkey": q_quadkey,
-        "geohash": q_geohash,
-        "cell_index": q_cell_index,
-        "hex_index": q_hex_index,
-        "s2_cells": q_s2_cells,
-        "adaptive_cells": q_adaptive_cells,
-        "geo_corpus": q_geo_corpus,
-        "pip_broadcast": q_pip_broadcast,
-        "pip_cell": q_pip_cell,
-        "zonal_stats": q_zonal_stats,
-        "tile_budget": q_tile_budget,
-        "knn": q_knn,
-        "radius_join": q_radius_join,
-        "way_assembly": q_way_assembly,
-        "spherical_area": q_spherical_area,
-        "zorder_topk": q_zorder_topk,
-        "tiles_rollup": q_tiles_rollup,
-        "minzoom_filter": q_minzoom_filter,
-        "combine_points": q_combine_points,
-        "area_filter": q_area_filter,
-        "pricing_summary": q_pricing_summary,
-        "shipping_priority": q_shipping_priority,
-        "events_window": q_events_window,
-        "sliding_users": q_sliding_users,
-        "dedup_exact": q_dedup_exact,
-        "text_stats": q_text_stats,
-        "lang_id": q_lang_id,
-        "bpe_tokens": q_bpe_tokens,
-        "fingerprint": q_fingerprint,
-        "tfidf_terms": q_tfidf_terms,
-        "scd2": q_scd2,
-        "chunk_docs": q_chunk_docs,
-        "lm_surprise": q_lm_surprise,
-        "retrieval_eval": q_retrieval_eval,
-        "repetition": q_repetition,
-        "bpe_pairs": q_bpe_pairs,
-        "substring_dups": q_substring_dups,
-        "ngram_jaccard": q_ngram_jaccard,
-        "jaccard_prefix": q_jaccard_prefix,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_canonical": q_dedup_canonical,
-        "corpus_dedup": q_corpus_dedup,
-        "cover_large": q_cover_large,
-        "poly_union": q_poly_union,
-        "area_intersect": q_area_intersect,
-        "rel_members": q_rel_members,
-        "pip_line": q_pip_line,
-        "covered_by": q_covered_by,
-        "minhash_pairs": q_minhash_pairs,
-        "simhash_dups": q_simhash_dups,
-        "ann_topk": q_ann_topk,
-        "ann_ivf": q_ann_ivf,
-        "clip_gate": q_clip_gate,
-        "emb_dups": q_emb_dups,
-        "video_frames": q_video_frames,
-        "audio_features": q_audio_features,
-        "phash_clusters": q_phash_clusters,
-        "hilbert": q_hilbert,
-        "salt_plan": q_salt_plan,
-        "wkb_pip": q_wkb_pip,
-        "filter_funnel": q_filter_funnel,
-        "pip_anti": q_pip_anti,
-        "wkb_points": q_wkb_points,
-        "dirty_tiles": q_dirty_tiles,
-        "ar_bucket": q_ar_bucket,
-        "corrupt_scan": q_corrupt_scan,
-        "image_meta": q_image_meta,
-        "image_canonical": q_image_canonical,
-        "multimodal_dups": q_multimodal_dups,
-        "geo_dedup": q_geo_dedup,
-        "upsert": q_upsert,
-        "image_quality": q_image_quality,
-        "resize_check": q_resize_check,
-        "letterbox_check": q_letterbox_check,
-        "orientation_check": q_orientation_check,
-        "augment_check": q_augment_check,
-        "grayscale_check": q_grayscale_check,
-        "patchify_check": q_patchify_check,
-        "channel_stats": q_channel_stats,
-        "mixup_check": q_mixup_check,
-        "shard_roundtrip": q_shard_roundtrip,
-        "caption_check": q_caption_check,
-        "sessionize": q_sessionize,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "concurrency": q_concurrency,
-        "kmv_distinct": q_kmv_distinct,
-        "kmv_setops": q_kmv_setops,
-        "grouped_topk": q_grouped_topk,
-        "sel_quantiles": q_sel_quantiles,
-        "bloom_prune": q_bloom_prune,
-        "cm_counts": q_cm_counts,
-        "analyze": q_analyze,
-        "fuzzy_join": q_fuzzy_join,
-        "hot_ngrams": q_hot_ngrams,
-        "weighted_sample": q_weighted_sample,
-        "bpe_encode": q_bpe_encode,
-        "heat_grid": q_heat_grid,
-        "decontam": q_decontam,
-        "pii_redact": q_pii_redact,
-        "stratified": q_stratified,
-        "cube_stats": q_cube_stats,
-        "domain_cap": q_domain_cap,
-        "corpus_shuffle": q_corpus_shuffle,
-        "pack_blocks": q_pack_blocks,
-        "length_median": q_length_median,
-        "hash_split": q_hash_split,
-        "mixture": q_mixture,
-        "zorder_layout": q_zorder_layout,
-        "line_clip": q_line_clip,
-        "getdata_lookup": q_getdata_lookup,
-        "label_centroid": q_label_centroid,
-        "raster_roundtrip": q_raster_roundtrip,
-        "simplify": q_simplify,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "boilerplate": q_boilerplate,
-    }
+    return {name: q for name, (q, _) in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "tile_assign": sql_tile_assign(),
-        "quadkey": sql_quadkey(),
-        "geohash": sql_geohash(),
-        "cell_index": sql_cell_index(),
-        "hex_index": sql_hex_index(),
-        "s2_cells": sql_s2_cells(),
-        "adaptive_cells": sql_adaptive_cells(),
-        "geo_corpus": sql_geo_corpus(),
-        "pip_broadcast": sql_pip(),
-        "pip_cell": sql_pip(),
-        "zonal_stats": sql_zonal_stats(),
-        "tile_budget": sql_tile_budget(),
-        "knn": sql_knn(),
-        "radius_join": sql_radius_join(),
-        "way_assembly": sql_way_assembly(),
-        "spherical_area": sql_spherical_area(),
-        "zorder_topk": sql_zorder_topk(),
-        "tiles_rollup": sql_tiles_rollup(),
-        "minzoom_filter": sql_minzoom_filter(),
-        "combine_points": sql_combine_points(),
-        "area_filter": sql_area_filter(),
-        "pricing_summary": sql_pricing_summary(),
-        "shipping_priority": sql_shipping_priority(),
-        "events_window": sql_events_window(),
-        "sliding_users": sql_sliding_users(),
-        "dedup_exact": sql_dedup_exact(),
-        "text_stats": text_ops.text_stats_oracle_sql(),
-        "lang_id": text_ops.lang_scores_oracle_sql(),
-        "bpe_tokens": text_ops.bpe_token_count_oracle_sql(),
-        "repetition": text_ops.repetition_metrics_oracle_sql(),
-        "bpe_pairs": text_ops.bpe_merge_counts_oracle_sql(),
-        "substring_dups":
-            substrings_ops.substring_dup_pairs_oracle_sql(length=20),
-        "fingerprint": sql_fingerprint(),
-        "tfidf_terms": text_ops.tfidf_top_terms_oracle_sql(),
-        "scd2": sql_scd2(),
-        "chunk_docs": sql_chunk_docs(),
-        "lm_surprise": sql_lm_surprise(),
-        "retrieval_eval": sql_retrieval_eval(),
-        "ngram_jaccard": sql_ngram_jaccard(),
-        "jaccard_prefix": sql_ngram_jaccard(threshold=0.7),
-        "dedup_clusters": sql_dedup_clusters(),
-        "dedup_canonical": sql_dedup_canonical(),
-        "corpus_dedup": sql_corpus_dedup(),
-        "cover_large": sql_cover_large(),
-        "poly_union": sql_poly_union(),
-        "area_intersect": sql_area_intersect(),
-        "rel_members": sql_rel_members(),
-        "pip_line": sql_pip_line(),
-        "covered_by": sql_covered_by(),
-        "minhash_pairs": sql_minhash_pairs(),
-        "simhash_dups": sql_simhash_dups(),
-        "raster_roundtrip": sql_raster_roundtrip(),
-        "ann_topk": sql_ann_topk(),
-        "ann_ivf": sql_ann_ivf(),
-        "clip_gate": sql_clip_gate(),
-        "emb_dups": sql_emb_dups(),
-        "video_frames": sql_video_frames(),
-        "audio_features": sql_audio_features(),
-        "phash_clusters": sql_phash_clusters(),
-        "hilbert": sql_hilbert(),
-        "salt_plan": sql_salt_plan(),
-        "wkb_pip": sql_wkb_pip(),
-        "filter_funnel": sql_filter_funnel(),
-        "pip_anti": sql_pip_anti(),
-        "wkb_points": sql_wkb_points(),
-        "dirty_tiles": sql_dirty_tiles(),
-        "ar_bucket": sql_ar_bucket(),
-        "corrupt_scan": sql_corrupt_scan(),
-        "image_meta": sql_image_meta(),
-        "image_canonical": sql_image_canonical(),
-        "multimodal_dups": sql_multimodal_dups(),
-        "geo_dedup": sql_geo_dedup(),
-        "upsert": sql_upsert(),
-        "image_quality": sql_image_quality(),
-        "resize_check": sql_resize_check(),
-        "letterbox_check": sql_letterbox_check(),
-        "orientation_check": sql_orientation_check(),
-        "augment_check": sql_augment_check(),
-        "grayscale_check": sql_grayscale_check(),
-        "patchify_check": sql_patchify_check(),
-        "channel_stats": sql_channel_stats(),
-        "mixup_check": sql_mixup_check(),
-        "shard_roundtrip": sql_shard_roundtrip(),
-        "caption_check": sql_caption_check(),
-        "sessionize": sql_sessionize(),
-        "funnel": sql_funnel(),
-        "retention": sql_retention(),
-        "concurrency": sql_concurrency(),
-        "kmv_distinct": sql_kmv_distinct(),
-        "kmv_setops": sql_kmv_setops(),
-        "grouped_topk": sql_grouped_topk(),
-        "sel_quantiles": sql_sel_quantiles(),
-        "bloom_prune": sql_bloom_prune(),
-        "cm_counts": sql_cm_counts(),
-        "analyze": sql_analyze(),
-        "fuzzy_join": sql_fuzzy_join(),
-        "hot_ngrams": sql_hot_ngrams(),
-        "weighted_sample": sql_weighted_sample(),
-        "bpe_encode": sql_bpe_encode(),
-        "heat_grid": sql_heat_grid(),
-        "decontam": sql_decontam(),
-        "pii_redact": sql_pii_redact(),
-        "stratified": sql_stratified(),
-        "cube_stats": sql_cube_stats(),
-        "domain_cap": sql_domain_cap(),
-        "corpus_shuffle": sql_corpus_shuffle(),
-        "pack_blocks": sql_pack_blocks(),
-        "length_median": sql_length_median(),
-        "hash_split": sql_hash_split(),
-        "mixture": sql_mixture(),
-        "zorder_layout": sql_zorder_layout(),
-        "line_clip": sql_line_clip(),
-        "getdata_lookup": sql_getdata_lookup(),
-        "label_centroid": sql_label_centroid(),
-        "simplify": sql_simplify(),
-        "asof_join": sql_asof_join(),
-        "interval_join": sql_interval_join(),
-        "boilerplate": sql_boilerplate(),
-    }
+    return {name: sql() for name, (_, sql) in REGISTRY.items()}

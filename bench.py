@@ -2,10 +2,11 @@
 local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Headline set = the engine's core operator families (SURVEY.md §2) + the
-flagship image->tile pipeline, whose throughput (tiles/sec,
-images-assigned/sec) is the BASELINE.json target metric (reported in the
-"extras" field).
+Headline set = every registered query (``__spark_entry__.REGISTRY``)
+except an explicit skip set, + the flagship image -> z12 cell pipeline,
+whose throughput (images-assigned/sec, and distinct z12 cells/sec from a
+``groupBy().count()`` -- cells, not encoded MVT tiles) is the
+BASELINE.json target metric (reported in the "extras" field).
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ def main():
     from pyspark.sql import functions as F
 
     import __spark_entry__ as E
-    from tilemaker_spark.session import get_spark
+    from tilemaker_spark.session import get_spark, release_storage
     from tilemaker_spark.sources.synth import images_df, grid_polygons_df
     from tilemaker_spark.operators import spatial_join
     from tilemaker_spark.sql import tile_exprs as TE
@@ -34,34 +35,21 @@ def main():
     spark = get_spark(cpus=cpus, shuffle_partitions=max(cpus, 16))
 
     qs = E.queries()
-    headline = [
-        "tile_assign", "quadkey", "geohash", "hilbert", "cell_index",
-        "hex_index", "s2_cells", "adaptive_cells", "geo_corpus", "kmv_distinct", "kmv_setops", "grouped_topk", "sel_quantiles", "bloom_prune", "cm_counts", "analyze", "fuzzy_join", "hot_ngrams", "weighted_sample", "bpe_encode", "pip_broadcast",
-        "pip_cell", "pip_anti", "knn", "radius_join", "salt_plan", "wkb_points",
-        "wkb_pip", "dirty_tiles",
-        "way_assembly", "zorder_topk", "tiles_rollup", "pricing_summary",
-        "shipping_priority", "dedup_exact", "text_stats", "ngram_jaccard",
-        "jaccard_prefix", "minhash_pairs", "dedup_clusters",
-        "corpus_dedup",
-        "phash_clusters", "sessionize", "sliding_users", "asof_join",
-        "interval_join", "hash_split", "bpe_tokens",
-        "repetition", "bpe_pairs", "substring_dups", "boilerplate",
-        "tfidf_terms",
-        "decontam", "stratified", "pii_redact", "pack_blocks", "length_median",
-        "scd2", "chunk_docs", "lm_surprise",
-        "ann_topk", "ann_ivf", "retrieval_eval",
-        "channel_stats", "mixup_check", "shard_roundtrip", "grayscale_check",
-        "ar_bucket", "filter_funnel", "corrupt_scan", "image_canonical", "multimodal_dups",
-        "image_meta", "geo_dedup", "corpus_shuffle", "zonal_stats", "clip_gate", "domain_cap", "tile_budget",
-        # emb_dups is deliberately absent: it is the DECLARED O(n²)
+    # registered queries left out of the headline sweep
+    not_benched = {
+        "spherical_area", "minzoom_filter", "combine_points", "area_filter",
+        "events_window", "lang_id", "fingerprint", "dedup_canonical",
+        "simhash_dups", "video_frames", "audio_features", "image_quality",
+        "resize_check", "augment_check", "patchify_check", "caption_check",
+        "mixture", "zorder_layout", "getdata_lookup", "label_centroid",
+        "raster_roundtrip", "simplify",
+        # emb_dups is deliberately skipped: it is the DECLARED O(n²)
         # exact ground-truth baseline (oracle-checked at sf0.01); at
         # sf0.1 its 12.5M-pair broadcast loop costs ~12s by design and
         # would read as a headline regression rather than a baseline
-        "upsert", "letterbox_check", "orientation_check", "cube_stats", "funnel", "heat_grid", "retention", "concurrency",
-        "cover_large", "poly_union",
-        "area_intersect",
-        "rel_members", "pip_line", "covered_by", "line_clip",
-    ]
+        "emb_dups",
+    }
+    headline = [name for name in qs if name not in not_benched]
     # best-of-N with INTERLEAVED rounds (run the whole list, then run it
     # again): single-shot numbers on this noisy shared host drift 20-50%
     # between rounds, which made round-over-round comparisons meaningless
@@ -91,23 +79,6 @@ def main():
          .mapInPandas(touch, "id long").count())
         return round(time.time() - t0, 3)
 
-    def release_storage():
-        """Between-queries hygiene: each headline query is an independent
-        job (a real pipeline runs one per driver), but the bench reuses
-        one session — so caches and eager localCheckpoint blocks from
-        iterative operators (connected components, the prefix join)
-        would otherwise accumulate in executor storage and degrade every
-        LATER query's execution memory.  Release both.
-
-        Invariant: callers must have FULLY consumed the query's result
-        first — localCheckpoint blocks have truncated lineage, so a
-        DataFrame reused after this release fails with missing blocks
-        rather than recomputing."""
-        spark.catalog.clearCache()
-        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jrdds.keySet().toArray()):
-            jrdds.get(rid).unpersist(False)
-
     def flagship() -> tuple[float, int]:
         t0 = time.time()
         img = images_df(spark, n_images, with_bytes=False,
@@ -117,21 +88,21 @@ def main():
             img.select("image_id", "lon", "lat"), grid,
             poly_cols=("poly_id",), index_zoom=6)
         z = 12
-        tiles = (
+        cells = (
             assigned.select(
                 TE.lon2tilex(F.col("lon"), z).alias("x"),
                 TE.lat2tiley(F.col("lat"), z).alias("y"))
             .groupBy("x", "y").agg(F.count("*").alias("n"))
         )
-        n_tiles = tiles.count()
-        return time.time() - t0, n_tiles
+        n_cells = cells.count()
+        return time.time() - t0, n_cells
 
-    n_tiles = 0
+    n_cells = 0
     round_totals: list[float] = []
     prewarm_secs: list[float] = []
 
     def run_round(rnd: int) -> float:
-        nonlocal n_tiles
+        nonlocal n_cells
         pw = prewarm()
         prewarm_secs.append(pw)
         print(f"# r{rnd} prewarm (fixed calibration job): {pw}s",
@@ -145,14 +116,14 @@ def main():
             if name not in timings or sec < timings[name]:
                 timings[name] = sec
             print(f"# r{rnd} {name}: {n} rows in {sec}s", file=sys.stderr)
-            release_storage()
-        pipe_sec, n_tiles = flagship()
+            release_storage(spark)
+        pipe_sec, n_cells = flagship()
         total += pipe_sec
         if ("image_pipeline" not in timings
                 or pipe_sec < timings["image_pipeline"]):
             timings["image_pipeline"] = round(pipe_sec, 3)
-        print(f"# r{rnd} image_pipeline: {n_images} images -> {n_tiles} "
-              f"tiles in {pipe_sec:.1f}s", file=sys.stderr)
+        print(f"# r{rnd} image_pipeline: {n_images} images -> {n_cells} "
+              f"z12 cells in {pipe_sec:.1f}s", file=sys.stderr)
         return total
 
     for rnd in range(rounds):
@@ -170,7 +141,7 @@ def main():
 
     pipe_sec = timings["image_pipeline"]
     images_per_sec = round(n_images / pipe_sec, 1)
-    tiles_per_sec = round(n_tiles / pipe_sec, 1)
+    z12_cells_per_sec = round(n_cells / pipe_sec, 1)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -190,7 +161,7 @@ def main():
             "n_benched_queries": len(headline) + 1,
             "bench_images": n_images,
             "images_assigned_per_sec": images_per_sec,
-            "tiles_per_sec": tiles_per_sec,
+            "z12_cells_per_sec": z12_cells_per_sec,
             "prewarm_sec_per_round": prewarm_secs,
         },
     }

@@ -17,9 +17,11 @@ The BASELINE north rule requires the pipeline to "run via spark-submit
 level (id-deduplicated) before assembly, mirroring the reference's
 repeated --input (src/tilemaker.cpp:296-326).
 
-Unlike the test harness (tilemaker_spark.session.get_spark, which pins
-master=local[N]), this entry takes the master from spark-submit and only
-sets tuning config, so the same file runs on local[*], YARN, or k8s.
+Unlike tilemaker_spark.session.get_spark (which pins master=local[N]
+for tests, benches and tools), this entry takes the master from
+spark-submit and sets only the shared engine config
+(tilemaker_spark.session.ENGINE_CONF), so the same file runs on
+local[*], YARN, or k8s.
 Executors import tilemaker_spark from the shipped zip; nothing here
 depends on the driver's filesystem layout.
 
@@ -46,20 +48,6 @@ except ModuleNotFoundError:  # to the repo next to this file
     # python workers inherit the env, not the driver's sys.path
     os.environ["PYTHONPATH"] = (
         _repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
-
-
-def make_session(app_name: str = "tilemaker_spark_build") -> SparkSession:
-    """Cluster-friendly session: master comes from spark-submit / env;
-    only engine tuning is set here (same knobs as session.get_spark)."""
-    return (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
 
 
 def read_features(spark: SparkSession, paths: list[str] | str,
@@ -152,7 +140,9 @@ def main(argv=None) -> int:
     ap.add_argument("--verbose", action="store_true")
     args = ap.parse_args(argv)
 
-    spark = make_session()
+    from tilemaker_spark.session import ENGINE_CONF
+    spark = (SparkSession.builder.appName("tilemaker_spark_build")
+             .config(map=ENGINE_CONF).getOrCreate())
     if args.quiet:
         spark.sparkContext.setLogLevel("ERROR")
     elif args.verbose:

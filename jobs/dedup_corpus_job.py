@@ -23,7 +23,8 @@ parquet partitioned by split, with the dedup metadata columns
 columns.
 
 Like build_tiles_job, this takes the master from spark-submit and only
-sets tuning config, so the same file runs on local[*], YARN, or k8s.
+sets the shared engine config (tilemaker_spark.session.ENGINE_CONF),
+so the same file runs on local[*], YARN, or k8s.
 Prints one summary line: kept/input counts per split.
 """
 
@@ -66,9 +67,9 @@ def main(argv: list[str] | None = None) -> int:
                          " position column 'pos'")
     args = ap.parse_args(argv)
 
+    from tilemaker_spark.session import ENGINE_CONF
     spark = (SparkSession.builder.appName("tilemaker_spark.dedup_corpus")
-             .config("spark.sql.adaptive.enabled", "true")
-             .getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
     from tilemaker_spark.operators import pipeline as pipeline_ops
     from tilemaker_spark.operators import sampling as sampling_ops
 

@@ -18,7 +18,8 @@ speculative duplicates can't tear a shard.  Prints the manifest
 total as the job's one-line summary.
 
 Like build_tiles_job, this takes the master from spark-submit and only
-sets tuning config, so the same file runs on local[*], YARN, or k8s.
+sets the shared engine config (tilemaker_spark.session.ENGINE_CONF),
+so the same file runs on local[*], YARN, or k8s.
 """
 
 from __future__ import annotations
@@ -48,9 +49,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--caption-col", default="caption")
     args = ap.parse_args(argv)
 
+    from tilemaker_spark.session import ENGINE_CONF
     spark = (SparkSession.builder.appName("tilemaker_spark.export_shards")
-             .config("spark.sql.adaptive.enabled", "true")
-             .getOrCreate())
+             .config(map=ENGINE_CONF).getOrCreate())
     from tilemaker_spark.sinks import shards
 
     df = spark.read.parquet(args.input)

@@ -1,8 +1,16 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+# the reference tilemaker checkout, next to this repo, ships this extract
+MONACO = os.path.join(os.path.dirname(REPO), "reference", "test",
+                      "monaco.pbf")
+requires_monaco = pytest.mark.skipif(
+    not os.path.exists(MONACO), reason=f"monaco fixture not at {MONACO}")
 
 
 @pytest.fixture(scope="session")

@@ -18,9 +18,11 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-MONACO = "/root/reference/test/monaco.pbf"
+from conftest import MONACO, requires_monaco
+
+pytestmark = requires_monaco
+
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden",
                       "monaco_z14_counts.json")
 

@@ -2,16 +2,12 @@
 the exact corpus statistics the reference asserts in its own test suite
 (/root/reference/test/pbf_reader.test.cpp:19-119)."""
 
-import os
-
 import pytest
 
+from conftest import MONACO, requires_monaco
 from tilemaker_spark.kernels import pbf
 
-MONACO = "/root/reference/test/monaco.pbf"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(MONACO), reason="monaco fixture not available")
+pytestmark = requires_monaco
 
 
 @pytest.fixture(scope="module")
@@ -77,9 +73,8 @@ def test_blob_type_ranges_prune():
     test above via read_pbf)."""
     from tilemaker_spark.sources import pbf as P
     from tilemaker_spark.kernels import pbf as K
-    path = "/root/reference/test/monaco.pbf"
-    n_data = sum(1 for r in K.scan_blobs(path) if r.kind == "OSMData")
-    r = P.blob_type_ranges(path)
+    n_data = sum(1 for r in K.scan_blobs(MONACO) if r.kind == "OSMData")
+    r = P.blob_type_ranges(MONACO)
     assert r is not None
     total_scanned = sum(hi - lo + 1 for lo, hi in r.values())
     assert total_scanned < 3 * n_data  # strictly fewer than 3 full scans

@@ -1,10 +1,10 @@
 """Profile-tier features: significant-tag filters, typed attributes,
 attribute minzoom, LayerAsCentroid."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import MONACO, requires_monaco
 from tilemaker_spark.config import Config, LayerDef
 from tilemaker_spark.kernels import mvt
 from tilemaker_spark.operators import tiling
@@ -190,13 +190,13 @@ def test_get_data_expr(spark, tagged):
     assert d == {"FR": "France", "MC": "Monaco"}
 
 
+@requires_monaco
 def test_used_closure_prunes_nodes(spark):
     """usedNodes/usedWays (reference include/osm_store.h:270-300): nodes
     are kept iff referenced by a used way, listed by an accepted
     relation's member way, or passing node_keys."""
     from tilemaker_spark.sources import pbf as pbf_src
-    nodes, ways, rels = pbf_src.read_pbf(
-        spark, "/root/reference/test/monaco.pbf")
+    nodes, ways, rels = pbf_src.read_pbf(spark, MONACO)
     n_all = nodes.count()
     nu, wu = prof.used_closure(
         nodes, ways,

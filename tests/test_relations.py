@@ -5,15 +5,15 @@ docs/RELATIONS.md:60-109, src/osm_lua_processing.cpp:1044-1108)."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import MONACO, requires_monaco
 from tilemaker_spark.operators import relations as R
 from tilemaker_spark.sources import pbf as pbf_src
-
-MONACO = "/root/reference/test/monaco.pbf"
 
 REL_SCHEMA = ("id long, members array<struct<mtype:int,ref:long,"
               "role:string>>, tags map<string,string>")
 
 
+@requires_monaco
 def test_monaco_member_ways_see_parent_relation(spark):
     """Reference fixture: relation 1124039 (Monaco boundary, 17 members,
     test/pbf_reader.test.cpp:95-103) is visible from its member ways."""
@@ -34,6 +34,7 @@ def test_monaco_member_ways_see_parent_relation(spark):
     assert lone > 0
 
 
+@requires_monaco
 def test_parent_relations_respects_accept(spark):
     _, ways, rels = pbf_src.read_pbf(spark, MONACO)
     none_accepted = R.accept_relations(

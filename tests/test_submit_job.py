@@ -1,7 +1,10 @@
 """North-rule packaging check: the pipeline runs via
 ``spark-submit --py-files dist/tilemaker_spark.zip`` as a fresh driver
 process whose executors import the package from the shipped zip (no
-repo on sys.path), producing a valid mbtiles from the monaco fixture."""
+repo on sys.path), producing a valid mbtiles from the monaco fixture and
+from a synthetic extract.  The fresh driver is also the one place the
+jobs' own session config (session.ENGINE_CONF) takes effect: the
+in-process ``main`` tests below reuse the test session."""
 
 import os
 import sqlite3
@@ -10,15 +13,26 @@ import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-MONACO = "/root/reference/test/monaco.pbf"
+from conftest import MONACO, REPO, requires_monaco
 
 
-@pytest.mark.skipif(not os.path.exists(MONACO), reason="no monaco fixture")
-def test_spark_submit_pyfiles(tmp_path):
+def _synth_pbf(tmp_path):
+    from tilemaker_spark.sources.synth_osm import write_synth_pbf
+    path = str(tmp_path / "country.pbf")
+    write_synth_pbf(path, seed=42, scale=0.02)
+    return path
+
+
+@pytest.mark.parametrize("extract", [
+    pytest.param(lambda tmp_path: MONACO, id="monaco",
+                 marks=requires_monaco),
+    pytest.param(_synth_pbf, id="synth"),
+])
+def test_spark_submit_pyfiles(tmp_path, extract):
     sys.path.insert(0, REPO)
     from tools.package_pyfiles import build
     zip_path = build(str(tmp_path / "tilemaker_spark.zip"))
+    pbf = extract(tmp_path)
 
     spark_home = os.environ.get("SPARK_HOME")
     if not spark_home:
@@ -28,7 +42,7 @@ def test_spark_submit_pyfiles(tmp_path):
     if not os.path.exists(submit):
         pytest.skip("no spark-submit binary")
 
-    out = str(tmp_path / "monaco.mbtiles")
+    out = str(tmp_path / "out.mbtiles")
     # cwd=tmp_path so the job CANNOT import tilemaker_spark from the
     # repo checkout — only from the --py-files zip
     env = dict(os.environ)
@@ -36,7 +50,7 @@ def test_spark_submit_pyfiles(tmp_path):
     r = subprocess.run(
         [submit, "--master", "local[8]", "--py-files", zip_path,
          os.path.join(REPO, "jobs", "build_tiles_job.py"),
-         "--input", MONACO, "--output", out, "--maxzoom", "10"],
+         "--input", pbf, "--output", out, "--maxzoom", "10"],
         capture_output=True, text=True, timeout=600, cwd=str(tmp_path),
         env=env)
     assert r.returncode == 0, r.stderr[-3000:]
@@ -46,7 +60,7 @@ def test_spark_submit_pyfiles(tmp_path):
     n = conn.execute("SELECT count(*) FROM tiles").fetchone()[0]
     meta = dict(conn.execute("SELECT name, value FROM metadata"))
     conn.close()
-    assert n >= 5  # pyramid zooms 4..10 over Monaco
+    assert n >= 5  # pyramid zooms 4..10 over the extract
     assert meta["format"] == "pbf"
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .proj import RADIUS_METER, lat2latp, lat2tileyf, lon2tilexf
+from .proj import RADIUS_METER, lat2tileyf, lon2tilexf
 
 # geometry kind codes, matching reference include/output_object.h:13
 POINT, LINESTRING, MULTILINESTRING, POLYGON = 0, 1, 2, 3
@@ -127,13 +127,6 @@ def ring_bbox(ring):
     return ring[:, 0].min(), ring[:, 1].min(), ring[:, 0].max(), ring[:, 1].max()
 
 
-def mp_bbox(mp):
-    outers = [p[0] for p in mp]
-    xs = np.concatenate([r[:, 0] for r in outers])
-    ys = np.concatenate([r[:, 1] for r in outers])
-    return xs.min(), ys.min(), xs.max(), ys.max()
-
-
 def signed_ring_area_planar(ring):
     """Shoelace area (planar); positive = counter-clockwise."""
     x, y = ring[:, 0], ring[:, 1]
@@ -164,10 +157,6 @@ def polygon_area_sq_m(poly):
     for hole in poly[1:]:
         a -= ring_area_sq_m(hole)
     return a
-
-
-def multipolygon_area_sq_m(mp):
-    return float(sum(polygon_area_sq_m(p) for p in mp))
 
 
 def line_length_m(line):

@@ -375,37 +375,6 @@ def encode_jpeg(pixels: np.ndarray, quality: int = 95,
 # Decoder
 # --------------------------------------------------------------------------
 
-class _BitReader:
-    """MSB-first bit reader over an entropy segment (already unstuffed)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0          # bit position
-
-    def peek16(self) -> int:
-        byte = self.pos >> 3
-        chunk = self.data[byte:byte + 4]
-        v = int.from_bytes(chunk.ljust(4, b"\x00"), "big")
-        return (v >> (16 - (self.pos & 7))) & 0xFFFF
-
-    def skip(self, n: int):
-        self.pos += n
-
-    def receive(self, n: int) -> int:
-        if n == 0:
-            return 0
-        v = self.peek16() >> (16 - n)
-        self.pos += n
-        return v
-
-
-def _extend(v: int, size: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map magnitude bits to signed value."""
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
 def _unstuff(data: bytes):
     """Remove 0x00 after 0xFF and split at RST markers.
     Returns list of entropy segments (restart intervals).

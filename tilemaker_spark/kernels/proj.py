@@ -51,10 +51,6 @@ def lon2tilex(lon, z):
     return np.floor(lon2tilexf(lon, z)).astype(np.int64)
 
 
-def latp2tiley(latp, z):
-    return np.floor(latp2tileyf(latp, z)).astype(np.int64)
-
-
 def lat2tiley(lat, z):
     return np.floor(lat2tileyf(lat, z)).astype(np.int64)
 
@@ -69,15 +65,6 @@ def tiley2latp(y, z):
 
 def tiley2lat(y, z):
     return latp2lat(tiley2latp(y, z))
-
-
-def degp2meter(degp, latp):
-    """Projected-degree length -> meters at latp (src/coordinates.cpp:45)."""
-    return (
-        RADIUS_METER
-        * np.radians(np.asarray(degp, dtype=np.float64))
-        * np.cos(np.radians(latp2lat(latp)))
-    )
 
 
 def meter2degp(meter, latp):
@@ -130,11 +117,6 @@ def cell_id(lon, lat, cell_zoom=6):
     y = np.clip(lat2tiley(np.clip(np.asarray(lat, np.float64), -MAX_LAT, MAX_LAT),
                           cell_zoom), 0, m)
     return tile_id(cell_zoom, x, y)
-
-
-def parent_tile(x, y, dz):
-    """Ancestor tile dz levels up (reference tiles-at-zoom rollup x/=2;y/=2)."""
-    return np.asarray(x, dtype=np.int64) >> dz, np.asarray(y, dtype=np.int64) >> dz
 
 
 def zorder_encode(v):

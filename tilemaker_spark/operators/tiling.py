@@ -579,23 +579,6 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
     return M.build_tile(live, compress=cfg.compress)
 
 
-def _tile_intersects_bbox(z_col, x_col, y_col, bbox) -> "F.Column":
-    """Column predicate: tile (z, x, y) intersects the lon/lat bbox
-    (reference clipping-box tile skip, src/tilemaker.cpp:368-379)."""
-    minlon, minlat, maxlon, maxlat = bbox
-    min_latp = float(P.lat2latp(minlat))
-    max_latp = float(P.lat2latp(maxlat))
-    span = F.lit(360.0) / F.pow(F.lit(2.0), z_col.cast("double"))
-    tminlon = x_col.cast("double") * span - F.lit(180.0)
-    tmaxlatp = F.lit(180.0) - y_col.cast("double") * span
-    return (
-        (tminlon + span >= F.lit(float(minlon)))
-        & (tminlon <= F.lit(float(maxlon)))
-        & (tmaxlatp >= F.lit(min_latp))
-        & (tmaxlatp - span <= F.lit(max_latp))
-    )
-
-
 def build_tiles(covered: DataFrame, cfg: Config,
                 base_zoom: int = 14) -> DataFrame:
     """Covered features -> (z, x, y, tile binary) for zooms

@@ -35,10 +35,6 @@ def holds(key: str) -> Column:
         F.col("tags").getItem(key) != "")
 
 
-def has_tags() -> Column:
-    return F.size("tags") > 0
-
-
 def significant_tags(filters: list[str]) -> Column:
     """The node_keys / way_keys significant-tag filter as a Column
     predicate (reference src/significant_tags.cpp:5-90).

@@ -16,7 +16,6 @@ Two builders:
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import pandas as pd
@@ -102,8 +101,3 @@ def infer_vector_layers(tiles: DataFrame) -> list:
          "minzoom": int(r["minzoom"]), "maxzoom": int(r["maxzoom"])}
         for r in sorted(merged, key=lambda r: r["layer"])
     ]
-
-
-def metadata_json(vlayers: list) -> str:
-    """The mbtiles/pmtiles ``json`` metadata value."""
-    return json.dumps({"vector_layers": vlayers})

@@ -17,7 +17,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..kernels import pbf as K
 
@@ -28,11 +27,6 @@ RELS_SCHEMA = (
     "members array<struct<mtype: tinyint, ref: long, role: string>>, "
     "tags map<string,string>"
 )
-
-
-def blob_index_df(spark: SparkSession, path: str) -> DataFrame:
-    refs = [(path, r.offset, r.size, r.kind) for r in K.scan_blobs(path)]
-    return spark.createDataFrame(refs, "path string, offset long, size long, kind string")
 
 
 def _tags_arrow(d: dict) -> dict:

@@ -87,15 +87,6 @@ def cell_id_sql(lon: str, lat: str, cell_zoom: int = 6) -> str:
     return tile_id_sql(cell_zoom, x, y)
 
 
-def parent_tile_x(x: Column, dz: int) -> Column:
-    """Ancestor tile coordinate dz zoom levels up (x >> dz)."""
-    return F.floor(x / F.lit(float(1 << dz))).cast("long")
-
-
-def parent_tile_x_sql(x: str, dz: int) -> str:
-    return f"cast(floor({x} / {float(1 << dz)}) as bigint)"
-
-
 def zorder_encode(v: Column) -> Column:
     """Reference ZOrder compression (include/output_object.h:54-62)."""
     pos = F.sqrt((v - F.lit(1000.0)) * F.lit(10.0)) + F.lit(10000.0)

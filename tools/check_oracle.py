@@ -49,22 +49,13 @@ def main():
 
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
-    from tilemaker_spark.session import get_spark
+    from tilemaker_spark.session import get_spark, release_storage
 
     spark = get_spark(cpus=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
-    def release_storage():
-        # caches + eager localCheckpoint blocks from iterative operators
-        # (connected components, the prefix join) would otherwise pile up
-        # across the 50-query sweep in this one shared session
-        spark.catalog.clearCache()
-        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jrdds.keySet().toArray()):
-            jrdds.get(rid).unpersist(False)
 
     qs = E.queries()
     oracles = E.oracle_sql()
@@ -81,7 +72,7 @@ def main():
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            release_storage()
+            release_storage(spark)
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex}")
             failures.append(name)
