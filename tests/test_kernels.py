@@ -114,6 +114,46 @@ class TestGeom:
                 np.testing.assert_array_equal(parts[0][0], pa[i])
                 np.testing.assert_array_equal(parts[0][-1], pb[i])
 
+    def test_clip_line_chaining_matches_per_segment_rule(self):
+        # the vectorized continuity mask re-chains exactly like the
+        # per-segment np.allclose(previous end, next start) walk, on
+        # random polylines whose vertices sit on box edges and corners
+        # and repeat (zero-length segments)
+        def per_segment(line, box):
+            p = np.asarray(line, np.float64)
+            ok, pas, pbs = geom.clip_segments_to_box(p[:-1], p[1:], *box)
+            parts, cur = [], []
+            for i in range(len(ok)):
+                if not ok[i]:
+                    if len(cur) >= 2:
+                        parts.append(np.asarray(cur))
+                    cur = []
+                elif cur and np.allclose(cur[-1], pas[i]):
+                    cur.append(pbs[i])
+                else:
+                    if len(cur) >= 2:
+                        parts.append(np.asarray(cur))
+                    cur = [pas[i], pbs[i]]
+            if len(cur) >= 2:
+                parts.append(np.asarray(cur))
+            return parts
+
+        rng = np.random.default_rng(7)
+        box = (0.0, 0.0, 1.0, 1.0)
+        snap = np.array([-0.5, 0.0, 0.5, 1.0, 1.5])
+        for _ in range(400):
+            n = int(rng.integers(2, 12))
+            pts = rng.uniform(-0.6, 1.6, (n, 2))
+            on = rng.random((n, 2)) < 0.5
+            pts[on] = rng.choice(snap, on.sum())    # edges and corners
+            rep = np.flatnonzero(rng.random(n - 1) < 0.2)
+            pts[rep + 1] = pts[rep]                 # zero-length segments
+            got = geom.clip_line_to_box(pts, *box)
+            want = per_segment(pts, box)
+            assert len(got) == len(want)
+            for g, w in zip(got, want):
+                np.testing.assert_array_equal(g, w)
+
     def test_douglas_peucker(self):
         line = np.array([[0, 0], [1, 0.001], [2, 0], [3, 1]], float)
         out = geom.douglas_peucker(line, 0.01)

@@ -10,8 +10,10 @@ structure) end-to-end job; the full 1M-node job is gated behind
 SPARK_GRAFT_SLOW=1 (runs several minutes) and locks tile-count goldens.
 """
 
+import hashlib
 import os
 import sqlite3
+import struct
 import subprocess
 import sys
 
@@ -68,6 +70,16 @@ def test_pbf_write_roundtrip(tmp_path):
     # type-sorted file -> blob pruning index present
     from tilemaker_spark.sources.pbf import blob_type_ranges
     assert blob_type_ranges(p) is not None
+
+
+def tiles_sha256(rows) -> str:
+    """sha256 over (z, x, y, tile) rows in (z, x, y) order: pins tile
+    bytes, not just counts."""
+    h = hashlib.sha256()
+    for z, x, y, tile in sorted(rows, key=lambda r: r[:3]):
+        h.update(struct.pack("<iiiI", z, x, y, len(tile)))
+        h.update(bytes(tile))
+    return h.hexdigest()
 
 
 @pytest.fixture(scope="module")
@@ -147,8 +159,13 @@ def test_synth_small_job_e2e(spark, synth_small, tmp_path):
     conn = sqlite3.connect(out)
     zooms = [z for (z,) in conn.execute(
         "SELECT DISTINCT zoom_level FROM tiles ORDER BY 1")]
+    digest = tiles_sha256(conn.execute(
+        "SELECT zoom_level, tile_column, (1 << zoom_level) - 1 - tile_row, "
+        "tile_data FROM tiles"))
     conn.close()
     assert zooms[-1] == 12 and len(zooms) >= 4
+    assert digest == ("15b612e87a821aefe6b016d91c5921a5"
+                      "96736088b9a3ae4a1b85681b79da6f5e")
 
     # one z12 tile decodes back with multiple layers present
     from tilemaker_spark.kernels import mvt
@@ -156,6 +173,24 @@ def test_synth_small_job_e2e(spark, synth_small, tmp_path):
     import gzip
     layers = mvt.decode_tile(gzip.decompress(bytes(row["tile"])))
     assert len(layers) >= 2
+
+
+def test_synth_small_z14_tile_bytes(spark, synth_small):
+    """The benchmark's osm_z14 build (seed 42, scale 0.02, z0-14, 4096
+    extent) pinned byte for byte: every tile's bytes, not just counts."""
+    path, _ = synth_small
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.operators.tiling import generate_tiles
+
+    features, cfg = J.read_features(spark, path)
+    cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 14, 14
+    cfg.high_resolution = False
+    rows = [tuple(r) for r in generate_tiles(features, cfg).select(
+        "z", "x", "y", "tile").collect()]
+    assert len(rows) == 200
+    assert tiles_sha256(rows) == ("43063a75a49785659ee09e89f11db1ec"
+                                  "14dcbdef98abbc36004568f0b5f20e18")
 
 
 @pytest.mark.skipif(not os.environ.get("SPARK_GRAFT_SLOW"),

@@ -274,6 +274,37 @@ def test_low_zoom_tiles_parallel_groups(spark):
     assert {k[0] for k in tiles} == set(range(15))
 
 
+def test_cover_one_task_per_core(spark, features):
+    """cover_features runs defaultParallelism Python tasks whatever the
+    input's partitioning: a union of many small inputs must not cost one
+    worker round trip per input partition."""
+    wide = features.repartition(48)
+    assert wide.rdd.getNumPartitions() == 48
+    cov = tiling.cover_features(wide, 14)
+    assert (cov.rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)
+    key = lambda r: (r["feature_id"], r["bx"], r["by"])  # noqa: E731
+    assert (sorted(map(key, cov.collect()))
+            == sorted(map(key, tiling.cover_features(features, 14).collect())))
+
+
+def test_build_tiles_runs_no_job(spark, features):
+    """Building the tile plan, low zooms included, is lazy: no Spark job
+    starts until the tiles are read (no eager checkpoint or cache)."""
+    cfg0 = Config(layers={
+        "poi": LayerDef("poi", minzoom=0, maxzoom=14),
+        "roads": LayerDef("roads", minzoom=0, maxzoom=14),
+        "land": LayerDef("land", minzoom=3, maxzoom=14),
+    }, minzoom=0, maxzoom=14)
+    cov = tiling.cover_features(features, 14)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    tiles = tiling.build_tiles(cov, cfg0, 14)
+    assert set(tracker.getJobIdsForGroup()) == before
+    # the road is under one pixel long at z0, so z0 has no tile
+    assert {r["z"] for r in tiles.select("z").collect()} == set(range(1, 15))
+
+
 def test_combine_polygons_below_unions_same_attr(spark):
     """Adjacent same-attribute polygons union into one feature per tile
     when z < combine_polygons_below (reference tile_worker.cpp:393-404);

@@ -280,33 +280,23 @@ def clip_line_to_box(line, minx, miny, maxx, maxy):
 
     Mirrors the reference's segment-wise linestring clip
     (src/tile_data.cpp:254-293): each segment is clipped independently
-    (Liang–Barsky) and consecutive surviving segments are re-chained.
+    (Liang–Barsky) and consecutive surviving segments are re-chained
+    while one ends where the next starts (``np.isclose`` at
+    ``np.allclose``'s default tolerance).
     """
     p = np.asarray(line, np.float64)
     if len(p) < 2:
         return []
-    a, b = p[:-1], p[1:]
-    parts, cur = [], []
-    ok, pas, pbs = clip_segments_to_box(a, b, minx, miny, maxx, maxy)
-    for i in range(len(a)):
-        if not ok[i]:
-            if len(cur) >= 2:
-                parts.append(np.asarray(cur))
-            cur = []
-            continue
-        pa = pas[i]
-        pb = pbs[i]
-        if not cur:
-            cur = [pa, pb]
-        elif np.allclose(cur[-1], pa):
-            cur.append(pb)
-        else:
-            if len(cur) >= 2:
-                parts.append(np.asarray(cur))
-            cur = [pa, pb]
-    if len(cur) >= 2:
-        parts.append(np.asarray(cur))
-    return parts
+    ok, pas, pbs = clip_segments_to_box(p[:-1], p[1:], minx, miny, maxx, maxy)
+    joined = np.zeros(len(ok), bool)
+    joined[1:] = ok[:-1] & ok[1:] & np.isclose(
+        pbs[:-1], pas[1:], rtol=1e-5, atol=1e-8).all(axis=1)
+    # a part starts at each surviving segment that doesn't continue the
+    # previous one and runs up to the next segment that doesn't join
+    starts = np.flatnonzero(ok & ~joined)
+    breaks = np.append(np.flatnonzero(~joined), len(ok))
+    ends = breaks[np.searchsorted(breaks, starts, side="right")]
+    return [np.vstack((pas[s], pbs[s:e])) for s, e in zip(starts, ends)]
 
 
 def remove_spikes(ring, eps=0.0):

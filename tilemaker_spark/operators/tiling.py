@@ -5,16 +5,20 @@ src/tile_worker.cpp) re-expressed as two DataFrame jobs:
 
 1. **cover** — every feature explodes to its base-zoom covering tiles
    (point: 1 tile; line: supercover; polygon: boundary + fill — the
-   object->tile fan-out of src/tile_data.cpp:495-608).  Pure shuffle-free
-   ``mapInPandas`` producing (bx, by, feature) rows keyed by the z6
-   ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12).
+   object->tile fan-out of src/tile_data.cpp:495-608).  One
+   ``mapInPandas`` task per core (the input is repartitioned to
+   ``defaultParallelism``) producing (bx, by, feature) rows keyed by the
+   z6 ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12).
 
 2. **build** — group by z6 subtree; one Arrow batch holds all of a
    subtree's features, and the pandas worker materializes every tile for
    zooms 6..basezoom top-down (the clip-pyramid locality the reference
    gets from its tile iteration order, src/tile_sorting.cpp:98-152).
-   Zooms 0..5 come from a second, much smaller pass grouped at z0 (the
-   reference's separate low-zoom object list, include/tile_data.h:115-147).
+   Zooms 0..5 come from one more, much smaller grouped pass keyed by
+   (z, x, y) (the reference's separate low-zoom object list,
+   include/tile_data.h:115-147).  Both passes are lazy: building the
+   plan runs no Spark job.  Workers pull each column out of the batch
+   once and select, filter and sort rows with numpy index arrays.
 
 Per-tile semantics mirror tile_worker.cpp: layer zoom-range + per-feature
 minzoom filters, z-order sort (+ feature_limit top-k), combine of
@@ -71,6 +75,17 @@ def _bbox_tile_span(pts: np.ndarray, z: int) -> int:
     return int((tx.max() - tx.min() + 1) * (ty.max() - ty.min() + 1))
 
 
+def _cover(kind, coords, ring_sizes, poly_ring_counts, z: int) -> np.ndarray:
+    """(n, 2) covering tiles of one line or polygon feature at zoom z."""
+    if kind in (G.LINESTRING, G.MULTILINESTRING):
+        lines = G.unpack_lines(coords, np.asarray(ring_sizes, np.int64))
+        return np.unique(np.concatenate([
+            G.covering_tiles_line(l, z) for l in lines]), axis=0)
+    mp = G.unpack_multipolygon(coords, np.asarray(ring_sizes, np.int64),
+                               np.asarray(poly_ring_counts, np.int64))
+    return G.covering_tiles_polygon(mp, z)
+
+
 def cover_features(features: DataFrame, base_zoom: int = 14,
                    large_threshold: int | None = LARGE_THRESHOLD
                    ) -> DataFrame:
@@ -90,68 +105,44 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
     out_schema = FEATURE_SCHEMA + ", bx long, by long, coarse boolean"
     dz = base_zoom - CLUSTER_ZOOM
     dual = large_threshold is not None and dz > 0
-    # spread the input first: single-file feature tables would otherwise
-    # run the whole covering fan-out on one core
-    parallelism = features.sparkSession.sparkContext.defaultParallelism
-    if features.rdd.getNumPartitions() < parallelism:
-        features = features.repartition(parallelism)
+    # one task per core: a single-file feature table would otherwise run
+    # the whole fan-out on one core, and a union of many small inputs
+    # would pay a Python worker round trip per input partition.  Always
+    # repartition: asking the input for its partition count runs every
+    # shuffle stage above it.
+    features = features.repartition(
+        features.sparkSession.sparkContext.defaultParallelism)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            reps, bxs, bys, crs = [], [], [], []
-            for i in range(len(pdf)):
-                kind = pdf["kind"].iloc[i]
-                coords = np.asarray(pdf["coords"].iloc[i], np.float64)
+            cells, coarse = [], np.zeros(len(pdf), bool)
+            for i, (kind, coords, rs, prc) in enumerate(zip(
+                    pdf["kind"].to_numpy(), pdf["coords"].to_numpy(),
+                    pdf["ring_sizes"].to_numpy(),
+                    pdf["poly_ring_counts"].to_numpy())):
+                coords = np.asarray(coords, np.float64)
                 pts = coords.reshape(-1, 2)
-                coarse = False
                 if kind == G.POINT:
                     # multipoint: cover every point's tile (not just pts[0])
-                    cells = np.unique(np.concatenate([
+                    cells.append(np.unique(np.concatenate([
                         G.covering_tiles_point(p[0], p[1], base_zoom)
                         for p in pts
                     ]), axis=0) if len(pts) > 1 else G.covering_tiles_point(
-                        pts[0, 0], pts[0, 1], base_zoom)
+                        pts[0, 0], pts[0, 1], base_zoom))
                 elif dual and _bbox_tile_span(
                         pts, base_zoom) >= large_threshold:
-                    coarse = True
-                    if kind in (G.LINESTRING, G.MULTILINESTRING):
-                        lines = G.unpack_lines(
-                            coords, np.asarray(pdf["ring_sizes"].iloc[i],
-                                               np.int64))
-                        cells = np.unique(np.concatenate([
-                            G.covering_tiles_line(l, CLUSTER_ZOOM)
-                            for l in lines
-                        ]), axis=0)
-                    else:
-                        mp = G.unpack_multipolygon(
-                            coords,
-                            np.asarray(pdf["ring_sizes"].iloc[i], np.int64),
-                            np.asarray(pdf["poly_ring_counts"].iloc[i],
-                                       np.int64))
-                        cells = G.covering_tiles_polygon(mp, CLUSTER_ZOOM)
-                    cells = cells << dz  # cell -> its first base tile
-                elif kind in (G.LINESTRING, G.MULTILINESTRING):
-                    lines = G.unpack_lines(
-                        coords, np.asarray(pdf["ring_sizes"].iloc[i],
-                                           np.int64))
-                    cells = np.unique(np.concatenate([
-                        G.covering_tiles_line(l, base_zoom) for l in lines
-                    ]), axis=0)
+                    coarse[i] = True
+                    cells.append(  # cell -> its first base tile
+                        _cover(kind, coords, rs, prc, CLUSTER_ZOOM) << dz)
                 else:
-                    mp = G.unpack_multipolygon(
-                        coords,
-                        np.asarray(pdf["ring_sizes"].iloc[i], np.int64),
-                        np.asarray(pdf["poly_ring_counts"].iloc[i], np.int64))
-                    cells = G.covering_tiles_polygon(mp, base_zoom)
-                reps.append(len(cells))
-                bxs.append(cells[:, 0])
-                bys.append(cells[:, 1])
-                crs.append(np.full(len(cells), coarse))
+                    cells.append(_cover(kind, coords, rs, prc, base_zoom))
+            reps = [len(c) for c in cells]
             out = pdf.loc[pdf.index.repeat(reps)].reset_index(drop=True)
-            out["bx"] = np.concatenate(bxs) if bxs else np.zeros(0, np.int64)
-            out["by"] = np.concatenate(bys) if bys else np.zeros(0, np.int64)
-            out["coarse"] = (np.concatenate(crs) if crs
-                             else np.zeros(0, bool))
+            xy = (np.concatenate(cells) if cells
+                  else np.zeros((0, 2), np.int64))
+            out["bx"] = xy[:, 0]
+            out["by"] = xy[:, 1]
+            out["coarse"] = np.repeat(coarse, reps)
             yield out[cols + ["bx", "by", "coarse"]]
 
     return features.mapInPandas(gen, schema=out_schema)
@@ -166,56 +157,39 @@ def _expand_coarse_rows(pdf: pd.DataFrame, base_zoom: int) -> pd.DataFrame:
     if "coarse" not in pdf.columns or not pdf["coarse"].any():
         return pdf
     dz = base_zoom - CLUSTER_ZOOM
-    small = pdf[~pdf["coarse"]]
     big = pdf[pdf["coarse"]]
-    out_rows = [small]
-    reps, bxs, bys = [], [], []
-    for i in range(len(big)):
-        row = big.iloc[i]
-        cx, cy = int(row["bx"]) >> dz, int(row["by"]) >> dz
-        x0, x1 = cx << dz, ((cx + 1) << dz) - 1
-        y0, y1 = cy << dz, ((cy + 1) << dz) - 1
+    cells = []
+    for bx, by, kind, coords, rs, prc in zip(
+            big["bx"].to_numpy(), big["by"].to_numpy(),
+            big["kind"].to_numpy(), big["coords"].to_numpy(),
+            big["ring_sizes"].to_numpy(),
+            big["poly_ring_counts"].to_numpy()):
+        cx, cy = int(bx) >> dz, int(by) >> dz
         minlon, minlatp, maxlon, maxlatp = _tile_bbox(
             CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
-        minlat = float(P.latp2lat(minlatp))
-        maxlat = float(P.latp2lat(maxlatp))
-        coords = np.asarray(row["coords"], np.float64)
-        kind = row["kind"]
+        box = (minlon, float(P.latp2lat(minlatp)),
+               maxlon, float(P.latp2lat(maxlatp)))
+        coords = np.asarray(coords, np.float64)
         if kind in (G.LINESTRING, G.MULTILINESTRING):
-            lines = G.unpack_lines(
-                coords, np.asarray(row["ring_sizes"], np.int64))
-            parts = []
-            for l in lines:
-                parts.extend(G.clip_line_to_box(
-                    l, minlon, minlat, maxlon, maxlat))
-            if not parts:
-                reps.append(0)
-                continue
-            cells = np.unique(np.concatenate([
-                G.covering_tiles_line(p, base_zoom) for p in parts
-            ]), axis=0)
+            parts = [part for l in G.unpack_lines(
+                coords, np.asarray(rs, np.int64))
+                for part in G.clip_line_to_box(l, *box)]
+            c = np.unique(np.concatenate([
+                G.covering_tiles_line(part, base_zoom) for part in parts
+            ]), axis=0) if parts else np.zeros((0, 2), np.int64)
         else:
-            mp = G.unpack_multipolygon(
-                coords, np.asarray(row["ring_sizes"], np.int64),
-                np.asarray(row["poly_ring_counts"], np.int64))
-            clipped = G.clip_multipolygon_to_box(
-                mp, minlon, minlat, maxlon, maxlat)
-            if not clipped:
-                reps.append(0)
-                continue
-            cells = G.covering_tiles_polygon(clipped, base_zoom)
-        keep = ((cells[:, 0] >= x0) & (cells[:, 0] <= x1)
-                & (cells[:, 1] >= y0) & (cells[:, 1] <= y1))
-        cells = cells[keep]
-        reps.append(len(cells))
-        bxs.append(cells[:, 0])
-        bys.append(cells[:, 1])
-    exp = big.loc[big.index.repeat(reps)].copy()
-    exp["bx"] = np.concatenate(bxs) if bxs else np.zeros(0, np.int64)
-    exp["by"] = np.concatenate(bys) if bys else np.zeros(0, np.int64)
+            clipped = G.clip_multipolygon_to_box(G.unpack_multipolygon(
+                coords, np.asarray(rs, np.int64),
+                np.asarray(prc, np.int64)), *box)
+            c = (G.covering_tiles_polygon(clipped, base_zoom) if clipped
+                 else np.zeros((0, 2), np.int64))
+        cells.append(c[((c[:, 0] >> dz) == cx) & ((c[:, 1] >> dz) == cy)])
+    exp = big.loc[big.index.repeat([len(c) for c in cells])].copy()
+    xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
+    exp["bx"] = xy[:, 0]
+    exp["by"] = xy[:, 1]
     exp["coarse"] = False
-    out_rows.append(exp)
-    return pd.concat(out_rows, ignore_index=True)
+    return pd.concat([pdf[~pdf["coarse"]], exp], ignore_index=True)
 
 
 def expand_coarse(covered: DataFrame, base_zoom: int = 14) -> DataFrame:
@@ -337,13 +311,47 @@ def _coerce_attr(v, typ: str | None):
     return v
 
 
-def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
-                    cfg: Config, geom_in=None,
+def _tile_columns(pdf: pd.DataFrame, cfg: Config) -> dict:
+    """Take a batch's columns out once, as numpy arrays, for
+    :func:`_build_one_tile`; adds each row's layer code, layer
+    definition's zoom range and output (``write_to``) layer."""
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    codes, names = pd.factorize(pdf["layer"], use_na_sentinel=False)
+    lds = [cfg.layers.get(n, LayerDef(n)) for n in names]
+    cols["layer_code"] = codes
+    cols["layer_defs"] = lds
+    cols["target"] = np.array(
+        [ld.write_to or n for n, ld in zip(names, lds)], object)[codes]
+    cols["layer_minzoom"] = np.array([ld.minzoom for ld in lds],
+                                     np.int64)[codes]
+    cols["layer_maxzoom"] = np.array([ld.maxzoom for ld in lds],
+                                     np.int64)[codes]
+    return cols
+
+
+def _tile_groups(tkey: np.ndarray, fid: np.ndarray, layer: np.ndarray):
+    """Yield (tile key, row indices) per distinct key, keys ascending.  A
+    (feature_id, layer) pair keeps only its first row in each tile, and
+    a tile's rows stay in input order."""
+    order = np.lexsort((layer, fid, tkey))
+    t, f, l = tkey[order], fid[order], layer[order]
+    first = np.ones(len(order), bool)
+    first[1:] = (t[1:] != t[:-1]) | (f[1:] != f[:-1]) | (l[1:] != l[:-1])
+    keep = np.sort(order[first])
+    keep = keep[np.argsort(tkey[keep], kind="stable")]
+    for rows in np.split(keep, np.flatnonzero(np.diff(tkey[keep])) + 1):
+        if len(rows):
+            yield int(tkey[rows[0]]), rows
+
+
+def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
+                    cfg: Config, clip_in: dict | None = None,
                     clip_out: dict | None = None) -> bytes | None:
-    """All features already known to touch (z,x,y) -> MVT tile bytes.
+    """The features at ``rows`` of ``cols`` (see :func:`_tile_columns`),
+    all already known to touch (z,x,y) -> MVT tile bytes.
 
     Clip-pyramid reuse (reference include/clip_cache.h:21-37): when
-    ``geom_in`` is given, geom_in((feature_id, layer)) may return the
+    ``clip_in`` is given, clip_in[(feature_id, layer code)] may hold the
     feature's geometry already clipped to the PARENT tile's box (a
     superset of this tile's box+margin) — clipping proceeds from that
     much smaller input instead of the original geometry.  When
@@ -353,49 +361,46 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
     minlat = float(P.latp2lat(minlatp))
     maxlat = float(P.latp2lat(maxlatp))
     builders: dict[str, M.LayerBuilder] = {}
+    fids, kinds, zorders, lays = (
+        cols[c] for c in ("feature_id", "kind", "zorder", "layer_code"))
+    # zoom-visibility filter BEFORE feature_limit truncation (reference
+    # filters the per-tile object list by zoom before featureLimit) —
+    # invisible features must not consume limit slots
+    rows = rows[(cols["layer_minzoom"][rows] <= z)
+                & (z <= cols["layer_maxzoom"][rows])
+                & (cols["minzoom"][rows] <= z)]
+    targets = cols["target"][rows]
 
-    # z-order sort within layer (reference src/tile_sorting.cpp:76-96)
     for layer_name in cfg.layer_order():
-        sub = group[group["_target"] == layer_name]
+        sub = rows[targets == layer_name]
         if len(sub) == 0:
             continue
         ld0 = cfg.layers.get(layer_name, LayerDef(layer_name))
-        asc = ld0.z_order_ascending
-        sub = sub.sort_values(
-            ["zorder", "kind", "feature_id"],
-            ascending=[asc, True, True], kind="mergesort")
-        # zoom-visibility filter BEFORE feature_limit truncation (reference
-        # filters the per-tile object list by zoom before featureLimit) —
-        # invisible features must not consume limit slots
-        vis = np.fromiter(
-            ((cfg.layers.get(sub["layer"].iloc[i], ld0).minzoom <= z
-              <= cfg.layers.get(sub["layer"].iloc[i], ld0).maxzoom)
-             and sub["minzoom"].iloc[i] <= z
-             for i in range(len(sub))), dtype=bool, count=len(sub))
-        sub = sub[vis]
-        if len(sub) == 0:
-            continue
+        # stable z-order sort within layer (reference
+        # src/tile_sorting.cpp:76-96): zorder, then kind, then feature id
+        zo = zorders[sub]
+        sub = sub[np.lexsort((fids[sub], kinds[sub],
+                              zo if ld0.z_order_ascending else -zo))]
         if ld0.feature_limit > 0 and (ld0.feature_limit_below <= 0
                                       or z < ld0.feature_limit_below):
-            sub = sub.iloc[: ld0.feature_limit]
+            sub = sub[: ld0.feature_limit]
 
         lb = builders.setdefault(
             layer_name, M.LayerBuilder(layer_name, extent=cfg.extent))
 
         # combine compatible features (same attrs+kind), reference
         # tile_worker.cpp:323-404
-        tol_cache: dict[str, float] = {}
+        tol_cache: dict[int, float] = {}
         point_groups: dict = {}
         line_groups: dict = {}
         poly_groups: dict = {}
-        for i in range(len(sub)):
-            row = sub.iloc[i]
-            ld = cfg.layers.get(row["layer"], ld0)
-            if not (ld.minzoom <= z <= ld.maxzoom):
-                continue
-            if row["minzoom"] > z:
-                continue
-            attrs = dict(row["attrs"]) if row["attrs"] is not None else {}
+        for i, row in enumerate(sub):
+            lay = lays[row]
+            ld = cols["layer_defs"][lay]
+            fid = fids[row]
+            kind = kinds[row]
+            attrs = cols["attrs"][row]
+            attrs = dict(attrs) if attrs is not None else {}
             if ld.attr_minzoom:
                 # attribute minzoom (reference output_object.cpp:42)
                 attrs = {k: v for k, v in attrs.items()
@@ -403,24 +408,23 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
             if ld.attr_types:
                 attrs = {k: _coerce_attr(v, ld.attr_types.get(k))
                          for k, v in attrs.items()}
-            akey = (row["kind"], tuple(sorted(attrs.items())), row["zorder"])
-            coords = np.asarray(row["coords"], np.float64).reshape(-1, 2)
-            kind = row["kind"]
+            akey = (kind, tuple(sorted(attrs.items())), zorders[row])
+            coords = np.asarray(cols["coords"][row], np.float64).reshape(-1, 2)
             if kind == G.POINT:
                 # multipoint-aware: keep every point (geojson can emit
                 # kind=POINT with N>1 points)
                 if ld.combine_points:
-                    point_groups.setdefault(akey, ([], attrs, row))[0].extend(
+                    point_groups.setdefault(akey, ([], attrs, fid))[0].extend(
                         coords)
                 else:
                     point_groups.setdefault(
-                        (akey, i), ([], attrs, row))[0].extend(coords)
+                        (akey, i), ([], attrs, fid))[0].extend(coords)
             elif kind in (G.LINESTRING, G.MULTILINESTRING):
-                gkey = (row["feature_id"], row["layer"])
-                cached = geom_in(gkey) if geom_in is not None else None
+                gkey = (fid, lay)
+                cached = clip_in.get(gkey) if clip_in else None
                 lines = cached if cached is not None else G.unpack_lines(
                     coords.reshape(-1),
-                    np.asarray(row["ring_sizes"], np.int64))
+                    np.asarray(cols["ring_sizes"][row], np.int64))
                 parts = []
                 for l in lines:
                     parts.extend(G.clip_line_to_box(
@@ -430,7 +434,7 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
                 if not parts:
                     continue
                 tol = tol_cache.setdefault(
-                    row["layer"], _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
+                    lay, _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
                 if tol > 0:
                     parts = [
                         (G.douglas_peucker(p, tol)
@@ -439,22 +443,21 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
                         for p in parts
                     ]
                 if ld.combine_lines_below > 0 and z < ld.combine_lines_below:
-                    line_groups.setdefault(akey, ([], attrs, row))[0].extend(
+                    line_groups.setdefault(akey, ([], attrs, fid))[0].extend(
                         parts)
                 else:
                     frac = [_to_tile_frac(p, z, x, y) for p in parts]
                     cmds = M.encode_line_geom(frac, cfg.extent)
                     lb.add_feature(
                         M.GEOM_LINESTRING, cmds, attrs,
-                        feature_id=int(row["feature_id"])
-                        if cfg.include_ids else None)
+                        feature_id=int(fid) if cfg.include_ids else None)
             else:  # polygon
-                gkey = (row["feature_id"], row["layer"])
-                cached = geom_in(gkey) if geom_in is not None else None
+                gkey = (fid, lay)
+                cached = clip_in.get(gkey) if clip_in else None
                 mp = cached if cached is not None else G.unpack_multipolygon(
                     coords.reshape(-1),
-                    np.asarray(row["ring_sizes"], np.int64),
-                    np.asarray(row["poly_ring_counts"], np.int64))
+                    np.asarray(cols["ring_sizes"][row], np.int64),
+                    np.asarray(cols["poly_ring_counts"][row], np.int64))
                 clipped = G.clip_multipolygon_to_box(
                     mp, minlon, minlat, maxlon, maxlat)
                 if clip_out is not None:
@@ -492,7 +495,7 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
                         else:
                             continue
                 tol = tol_cache.setdefault(
-                    row["layer"], _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
+                    lay, _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
                 if tol > 0 and ld.simplify_algorithm == "buildings":
                     # rectilinear building simplification (reference
                     # tile_worker.cpp:231-235, simplify_buildings.cpp)
@@ -529,7 +532,7 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
                     # same-attribute polygons union per tile (reference
                     # src/tile_worker.cpp:393-404, geom.cpp:232-290)
                     poly_groups.setdefault(
-                        akey, ([], attrs, row))[0].append(clipped)
+                        akey, ([], attrs, fid))[0].append(clipped)
                     continue
                 frac_mp = [
                     [_to_tile_frac(r, z, x, y) for r in poly]
@@ -538,10 +541,9 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
                 cmds = M.encode_polygon_geom(frac_mp, cfg.extent)
                 lb.add_feature(
                     M.GEOM_POLYGON, cmds, attrs,
-                    feature_id=int(row["feature_id"])
-                    if cfg.include_ids else None)
+                    feature_id=int(fid) if cfg.include_ids else None)
 
-        for (key, (pts, attrs, row)) in point_groups.items():
+        for pts, attrs, fid in point_groups.values():
             arr = np.asarray(pts)
             inside = (
                 (arr[:, 0] >= minlon) & (arr[:, 0] <= maxlon)
@@ -553,15 +555,15 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
             cmds = M.encode_point_geom(frac, cfg.extent)
             lb.add_feature(
                 M.GEOM_POINT, cmds, attrs,
-                feature_id=int(row["feature_id"]) if cfg.include_ids else None)
-        for (key, (parts, attrs, row)) in line_groups.items():
+                feature_id=int(fid) if cfg.include_ids else None)
+        for parts, attrs, fid in line_groups.values():
             merged = _merge_lines(parts)
             frac = [_to_tile_frac(p, z, x, y) for p in merged]
             cmds = M.encode_line_geom(frac, cfg.extent)
             lb.add_feature(
                 M.GEOM_LINESTRING, cmds, attrs,
-                feature_id=int(row["feature_id"]) if cfg.include_ids else None)
-        for (key, (mps, attrs, row)) in poly_groups.items():
+                feature_id=int(fid) if cfg.include_ids else None)
+        for mps, attrs, fid in poly_groups.values():
             merged = OV.union_many(mps) if len(mps) > 1 else mps[0]
             if not merged:
                 continue
@@ -571,7 +573,7 @@ def _build_one_tile(group: pd.DataFrame, z: int, x: int, y: int,
             cmds = M.encode_polygon_geom(frac_mp, cfg.extent)
             lb.add_feature(
                 M.GEOM_POLYGON, cmds, attrs,
-                feature_id=int(row["feature_id"]) if cfg.include_ids else None)
+                feature_id=int(fid) if cfg.include_ids else None)
 
     live = [lb for lb in builders.values() if lb.features]
     if not live:
@@ -610,121 +612,79 @@ def build_tiles(covered: DataFrame, cfg: Config,
     ).withColumn("_cy", F.shiftright(F.col("by"), dz))
 
     lo = max(cfg.minzoom, CLUSTER_ZOOM)
-    layer_targets = {
-        name: (ld.write_to or name) for name, ld in cfg.layers.items()
-    }
+    schema = "z int, x int, y int, tile binary"
 
     def build_subtree(pdf: pd.DataFrame) -> pd.DataFrame:
         # refine coarse (large-object) rows to exact tiles, in-worker
-        pdf = _expand_coarse_rows(pdf.copy(), base_zoom)
-        pdf["_target"] = pdf["layer"].map(
-            lambda n: layer_targets.get(n, n))
-        pdf = pdf.drop_duplicates(subset=["feature_id", "layer", "bx", "by"])
-        out_z, out_x, out_y, out_b = [], [], [], []
+        pdf = _expand_coarse_rows(pdf, base_zoom).drop_duplicates(
+            subset=["feature_id", "layer", "bx", "by"])
+        cols = _tile_columns(pdf, cfg)
+        out = []
         # clip pyramid (reference include/clip_cache.h:21-37): each tile
-        # caches its pre-simplify clip keyed by (feature, tile); the four
-        # children at z+1 clip from the parent's clip, not the original
+        # keeps its pre-simplify clips; the four children at z+1 clip
+        # from their parent's clip, not the original
         prev_clips: dict = {}
         for z in range(lo, base_zoom + 1):
             shift = base_zoom - z
-            tx = pdf["bx"].to_numpy() >> shift
-            ty = pdf["by"].to_numpy() >> shift
-            key = (tx.astype(np.int64) << 32) | ty.astype(np.int64)
-            pdf["_tkey"] = key
+            tkey = ((cols["bx"] >> shift) << 32) | (cols["by"] >> shift)
             cur_clips: dict = {}
-            for tkey, group in pdf.groupby("_tkey"):
-                x = int(tkey >> 32)
-                y = int(tkey & 0xFFFFFFFF)
-                g = group.drop_duplicates(subset=["feature_id", "layer"])
-                px, py = x >> 1, y >> 1
-                geom_in = (
-                    (lambda gkey, _px=px, _py=py:
-                     prev_clips.get((gkey, _px, _py)))
-                    if z > lo else None)
-                clip_out: dict = {}
-                blob = _build_one_tile(g, z, x, y, cfg,
-                                       geom_in=geom_in, clip_out=clip_out)
-                if z < base_zoom:
-                    for gkey, geomv in clip_out.items():
-                        cur_clips[(gkey, x, y)] = geomv
+            for key, rows in _tile_groups(tkey, cols["feature_id"],
+                                          cols["layer_code"]):
+                x, y = key >> 32, key & 0xFFFFFFFF
+                clip_out = {} if z < base_zoom else None
+                blob = _build_one_tile(cols, rows, z, x, y, cfg,
+                                       clip_in=prev_clips.get((x >> 1,
+                                                               y >> 1)),
+                                       clip_out=clip_out)
+                if clip_out is not None:
+                    cur_clips[(x, y)] = clip_out
                 if blob is not None:
-                    out_z.append(z); out_x.append(x); out_y.append(y)
-                    out_b.append(blob)
+                    out.append((z, x, y, blob))
             prev_clips = cur_clips
-        return pd.DataFrame({"z": out_z, "x": out_x, "y": out_y,
-                             "tile": out_b})
+        return pd.DataFrame(out, columns=["z", "x", "y", "tile"])
 
-    high = (
-        with_cell.groupBy("_cx", "_cy")
-        .applyInPandas(build_subtree, schema="z int, x int, y int, tile binary")
-    )
-
-    if cfg.minzoom >= CLUSTER_ZOOM:
+    high = with_cell.groupBy("_cx", "_cy").applyInPandas(build_subtree,
+                                                         schema=schema)
+    zooms = range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1))
+    if not zooms:
         return high
 
     # low-zoom pass: only features visible below CLUSTER_ZOOM (per-layer
     # and per-feature minzoom), pre-deduped to z5 tile granularity — the
-    # full base-zoom fanout never moves.  Each zoom is its own job grouped
-    # by the tile key, so z0-5 tiles build in parallel across tiles (the
-    # single z0 tile is irreducible, but its group holds only its own
-    # features, not the whole planet's fanout).  Coarse (large-object)
-    # rows need no expansion here: their z6-cell bx/by is exact membership
-    # for every z<=6 ancestor tile.
+    # full base-zoom fanout never moves.  One job for every z<6 tile:
+    # each row explodes to its ancestor tile at every low zoom and the
+    # build groups by (z, x, y), so low tiles build in parallel across
+    # tiles (the single z0 tile is irreducible, but its group holds only
+    # its own features, not the whole planet's fanout).  Coarse
+    # (large-object) rows need no expansion here: their z6-cell bx/by is
+    # exact membership for every z<=6 ancestor tile.
     low_visible_layers = [
         name for name, ld in cfg.layers.items() if ld.minzoom < CLUSTER_ZOOM
     ]
 
+    def build_low_tile(key, pdf):
+        z, x, y = (int(k) for k in key)
+        blob = _build_one_tile(_tile_columns(pdf, cfg), np.arange(len(pdf)),
+                               z, x, y, cfg)
+        return pd.DataFrame([(z, x, y, blob)] if blob is not None else [],
+                            columns=["z", "x", "y", "tile"])
+
     dz5 = base_zoom - (CLUSTER_ZOOM - 1)
-    low_in = (
+    low = (
         with_cell
         .filter(F.col("layer").isin(low_visible_layers)
                 if low_visible_layers else F.lit(False))
         .filter(F.col("minzoom") < CLUSTER_ZOOM)
-        # dedupe to z5 granularity first: the per-(feature, z5-tile)
-        # width is what z<6 tiles actually need
         .withColumn("_p5x", F.shiftright(F.col("bx"), dz5))
         .withColumn("_p5y", F.shiftright(F.col("by"), dz5))
         .dropDuplicates(["feature_id", "layer", "_p5x", "_p5y"])
-        .drop("_p5x", "_p5y")
-        .persist()  # read once per low zoom below, tiny after the dedup
+        .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
+        .withColumn("_tx", F.expr(f"shiftright(bx, {base_zoom} - _z)"))
+        .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
+        .dropDuplicates(["feature_id", "layer", "_z", "_tx", "_ty"])
+        .groupBy("_z", "_tx", "_ty")
+        .applyInPandas(build_low_tile, schema=schema)
     )
-
-    def build_low_tile(z: int):
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            x = int(pdf["_tx"].iloc[0])
-            y = int(pdf["_ty"].iloc[0])
-            g = pdf.copy()
-            g["_target"] = g["layer"].map(lambda n: layer_targets.get(n, n))
-            g = g.drop_duplicates(subset=["feature_id", "layer"])
-            blob = _build_one_tile(g, z, x, y, cfg)
-            if blob is None:
-                return pd.DataFrame(columns=["z", "x", "y", "tile"])
-            return pd.DataFrame({"z": [z], "x": [x], "y": [y],
-                                 "tile": [blob]})
-        return fn
-
-    low = None
-    for z in range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1)):
-        shift = base_zoom - z
-        part = (
-            low_in
-            .withColumn("_tx", F.shiftright(F.col("bx"), shift))
-            .withColumn("_ty", F.shiftright(F.col("by"), shift))
-            .dropDuplicates(["feature_id", "layer", "_tx", "_ty"])
-            .groupBy("_tx", "_ty")
-            .applyInPandas(build_low_tile(z),
-                           schema="z int, x int, y int, tile binary")
-        )
-        low = part if low is None else low.unionByName(part)
-    if low is None:
-        low_in.unpersist()
-        return high
-    # materialize the low union now (bounded: < 4^CLUSTER_ZOOM tiles) so
-    # low_in's cache can be released — a lazy return would leak the
-    # persisted blocks for the whole session; the checkpoint RDD itself is
-    # GC-managed by Spark's ContextCleaner once the result is dropped
-    low = low.localCheckpoint(eager=True)
-    low_in.unpersist()
     return high.unionByName(low)
 
 
