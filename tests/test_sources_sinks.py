@@ -291,12 +291,36 @@ def test_vector_layers_metadata(spark, tmp_path):
     assert inferred[0]["minzoom"] == 6 and inferred[0]["maxzoom"] == 6
 
 
+def _entries_per_tile(tids, offs, lens):
+    """Reference RLE rule, one entry at a time (the reference's
+    appendWithRLE, src/pmtiles.cpp:102-111): an entry whose tile id
+    continues the previous run AND shares its data offset extends that
+    run."""
+    entries: list[list[int]] = []
+    for tid, off, ln in zip(tids, offs, lens):
+        if (entries and entries[-1][1] == off
+                and entries[-1][0] + entries[-1][3] == tid):
+            entries[-1][3] += 1
+        else:
+            entries.append([tid, off, ln, 1])
+    return [tuple(e) for e in entries]
+
+
 def test_pmtiles_dense_sparse_equivalence(spark, tmp_path):
-    """Dense (vectorized whole-index RLE) and sparse (per-entry append)
-    index assembly emit byte-identical archives — dense is the scale
-    path, not a format change (reference keeps one serialization for
-    both, src/pmtiles.cpp:28-46)."""
+    """The vectorized whole-index RLE pass emits the same entries as the
+    reference's per-entry append, on seeded runs with gaps, repeated
+    offsets and an empty index; archives built with it read back."""
     import gzip
+    rng = np.random.default_rng(11)
+    assert pmtiles._rle_entries([], [], []) == _entries_per_tile([], [], [])
+    for _ in range(50):
+        n = int(rng.integers(1, 300))
+        tids = np.cumsum(rng.integers(1, 3, n))       # gaps of one id
+        fresh = rng.random(n) < 0.4                   # else reuse offset
+        offs = np.cumsum(np.where(fresh, rng.integers(1, 50, n), 0))
+        lens = rng.integers(1, 50, n)
+        args = (tids.tolist(), offs.tolist(), lens.tolist())
+        assert pmtiles._rle_entries(*args) == _entries_per_tile(*args)
     rng_rows = []
     sea = gzip.compress(b"", 6, mtime=0)  # one shared empty-sea blob
     for x in range(40):
@@ -305,20 +329,11 @@ def test_pmtiles_dense_sparse_equivalence(spark, tmp_path):
                     gzip.compress(f"land-{x}-{y}".encode(), 6, mtime=0))
             rng_rows.append((8, x, y, blob))
     tiles = spark.createDataFrame(rng_rows, "z int, x int, y int, tile binary")
-    p_sparse = str(tmp_path / "s.pmtiles")
-    p_dense = str(tmp_path / "d.pmtiles")
-    n1 = pmtiles.write_pmtiles(tiles, p_sparse, dense=False)
-    n2 = pmtiles.write_pmtiles(tiles, p_dense, dense=True)
-    assert n1 == n2 == 1600
-    with open(p_sparse, "rb") as f:
-        b1 = f.read()
-    with open(p_dense, "rb") as f:
-        b2 = f.read()
-    assert b1 == b2
-    # round-trip reads on the dense-mode archive
+    path = str(tmp_path / "d.pmtiles")
+    assert pmtiles.write_pmtiles(tiles, path) == 1600
     assert gzip.decompress(
-        pmtiles.read_pmtiles_tile(p_dense, 8, 3, 6)) == b"land-3-6"
-    assert pmtiles.read_pmtiles_tile(p_dense, 8, 1, 0) == sea
+        pmtiles.read_pmtiles_tile(path, 8, 3, 6)) == b"land-3-6"
+    assert pmtiles.read_pmtiles_tile(path, 8, 1, 0) == sea
 
 
 def test_pmtiles_rle_and_tiny_dedup(spark, tmp_path):
@@ -371,23 +386,6 @@ def test_pmtiles_nonadjacent_reuse_unclusters(spark, tmp_path):
     assert st["n_contents"] == 2
     assert not st["clustered"]
     assert pmtiles.read_pmtiles_tile(path, 8, 0, 1) == sea
-
-
-def test_pmtiles_auto_dense_rule(spark, tmp_path):
-    """dense=None applies the reference auto rule (> 100 covered z6
-    tiles -> dense, src/tilemaker.cpp:381-385); both autos match the
-    forced modes byte-for-byte."""
-    import gzip
-    # 121 z6 tiles covered -> auto dense
-    rows = [(6, x, y, gzip.compress(f"{x}/{y}".encode(), 6, mtime=0))
-            for x in range(11) for y in range(11)]
-    tiles = spark.createDataFrame(rows, "z int, x int, y int, tile binary")
-    p_auto = str(tmp_path / "auto.pmtiles")
-    p_forced = str(tmp_path / "forced.pmtiles")
-    pmtiles.write_pmtiles(tiles, p_auto)            # auto -> dense
-    pmtiles.write_pmtiles(tiles, p_forced, dense=True)
-    with open(p_auto, "rb") as f1, open(p_forced, "rb") as f2:
-        assert f1.read() == f2.read()
 
 
 def test_wkb_point_roundtrip_both_endians(spark):

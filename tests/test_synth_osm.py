@@ -20,24 +20,50 @@ import sys
 import numpy as np
 import pytest
 
-from tilemaker_spark.kernels import pbf, pbf_write as W
+from tilemaker_spark.kernels import mvt, pbf, pbf_write as W, wire
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_varint_pack_roundtrip():
     rng = np.random.default_rng(7)
-    edge_u = np.array([0, 1, 127, 128, 300, 2**32, 2**56 + 5, 2**63],
-                      dtype=np.uint64)
+    edge_u = np.array([0, 1, 127, 128, 300, 2**32, 2**56 + 5, 2**63,
+                       2**64 - 1], dtype=np.uint64)
     rand_u = rng.integers(0, 2**62, 500).astype(np.uint64)
     for arr in (edge_u, rand_u):
-        assert pbf._packed_varints(W.pack_uvarints(arr)) == arr.tolist()
+        assert wire.packed_varints(wire.pack_uvarints(arr)) == arr.tolist()
+        for v in arr.tolist():
+            assert wire.varint(v) == wire.pack_uvarints([v])
     edge_s = np.array([0, -1, 1, -64, 64, -(2**40), 2**40, -(2**62)],
                       dtype=np.int64)
     rand_s = rng.integers(-2**40, 2**40, 500).astype(np.int64)
     for arr in (edge_s, rand_s):
-        assert pbf._packed_varints(W.pack_svarints(arr),
+        assert wire.packed_varints(wire.pack_svarints(arr),
                                    signed=True) == arr.tolist()
+        for v in arr.tolist():
+            assert wire.unzigzag(wire.zigzag(v)) == v
+    # a negative int64 is its 64-bit two's complement: ten bytes
+    assert len(wire.varint(-1)) == 10
+    assert wire.read_varint(wire.varint(-1), 0) == (2**64 - 1, 10)
+
+
+def test_wire_fields():
+    import struct
+    msg = (wire.field_varint(1, 300)
+           + wire.tag(2, 1) + struct.pack("<d", 1.5)
+           + wire.field_bytes(3, b"abc")
+           + wire.tag(4, 5) + struct.pack("<f", 2.5))
+    got = list(wire.fields(msg))
+    assert [(f, w) for f, w, _ in got] == [(1, 0), (2, 1), (3, 2), (4, 5)]
+    assert got[0][2] == 300
+    assert struct.unpack("<d", got[1][2]) == (1.5,)
+    assert got[2][2] == b"abc"
+    assert struct.unpack("<f", got[3][2]) == (2.5,)
+    with pytest.raises(ValueError):
+        list(wire.fields(wire.tag(5, 3)))
+    # an MVT tile holds only length-delimited layers
+    with pytest.raises(ValueError, match="tile level"):
+        mvt.decode_tile(wire.field_varint(3, 1))
 
 
 def test_pbf_write_roundtrip(tmp_path):

@@ -387,6 +387,46 @@ def test_clip_bbox_limits_tiles(spark):
     assert len(dec["poi"]["features"]) == 1
 
 
+def test_clip_bbox_prunes_coarse_rows(spark):
+    """A polygon large enough for the coarse (z6-cell) cover path, built
+    under a box that cuts through its z6 cells, gives exactly the
+    unclipped tile set filtered to the box: in the vector pyramid and in
+    the raster tiles alike."""
+    from tilemaker_spark.operators import raster as RO
+    zoom = 8
+    box = (2.0, 42.0, 6.0, 46.0)
+    coords = [0.0, 40.0, 10.0, 40.0, 10.0, 50.0, 0.0, 50.0, 0.0, 40.0]
+    feats = spark.createDataFrame(
+        [(1, "land", 3, 0, 0, {}, coords, [5], [1])], tiling.FEATURE_SCHEMA)
+    cov = tiling.cover_features(feats, base_zoom=zoom)
+    assert all(r["coarse"] for r in cov.collect())
+    x0, x1 = (int(proj.lon2tilexf(lon, zoom)) for lon in (box[0], box[2]))
+    y0, y1 = (int(proj.lat2tileyf(lat, zoom)) for lat in (box[3], box[1]))
+
+    def in_box(z, x, y):
+        s = zoom - z
+        return x0 >> s <= x <= x1 >> s and y0 >> s <= y <= y1 >> s
+
+    def vector(clip):
+        cfgv = Config(layers={"land": LayerDef("land", minzoom=0,
+                                               maxzoom=zoom)},
+                      minzoom=0, maxzoom=zoom, basezoom=zoom,
+                      clip_bbox=clip)
+        return {(r["z"], r["x"], r["y"])
+                for r in tiling.generate_tiles(feats, cfgv).collect()}
+
+    full = vector(None)
+    assert any(not in_box(*t) for t in full if t[0] == zoom)
+    assert vector(box) == {t for t in full if in_box(*t)}
+
+    def raster(clip):
+        return {(r["z"], r["x"], r["y"]) for r in RO.render_raster_tiles(
+            feats, zoom=zoom, size=16, clip_bbox=clip).collect()}
+
+    full = raster(None)
+    assert raster(box) == {t for t in full if in_box(*t)}
+
+
 def test_cover_kernel_microbench_golden_opcounts():
     """Wall-clock-free cover-kernel micro-bench (round-4 judge ask #8):
     a seeded fixed fixture through the exact kernels the cover_large

@@ -1,8 +1,9 @@
 """Mapbox Vector Tile (MVT 2.1) encoder, pure Python.
 
-Implements the public vector-tile spec (protobuf wire format written by
-hand — no protobuf lib needed).  Mirrors the reference engine's encode
-rules (src/tile_worker.cpp:98-301 via vtzero): integer grid of
+Implements the public vector-tile spec; the protobuf wire format comes
+from :mod:`tilemaker_spark.kernels.wire` (no protobuf lib needed).
+Mirrors the reference engine's encode rules (src/tile_worker.cpp:98-301
+via vtzero): integer grid of
 ``extent`` (4096, or 8192 "high resolution"), zigzag deltas, skip
 zero-length segments, a ring needs >=4 points and a line >=2, inner rings
 immediately follow their outer, per-layer shared key/value dictionaries.
@@ -21,43 +22,11 @@ from typing import Any
 
 import numpy as np
 
+from .wire import (field_bytes, field_varint, fields, packed_varints, tag,
+                   unzigzag, varint, zigzag)
+
 MOVETO, LINETO, CLOSEPATH = 1, 2, 7
 GEOM_UNKNOWN, GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON = 0, 1, 2, 3
-
-
-# ---------------- protobuf wire primitives ----------------
-
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    v &= (1 << 64) - 1
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63) if v < 0 else v << 1
-
-
-def _tag(field: int, wire: int) -> bytes:
-    return _varint((field << 3) | wire)
-
-
-def _field_varint(field: int, v: int) -> bytes:
-    return _tag(field, 0) + _varint(v)
-
-
-def _field_bytes(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
-
-
-def _field_str(field: int, s: str) -> bytes:
-    return _field_bytes(field, s.encode("utf-8"))
 
 
 def encode_value(v: Any) -> bytes:
@@ -67,12 +36,12 @@ def encode_value(v: Any) -> bytes:
     (include/attribute_store.h:45-175); we write double for floats.
     """
     if isinstance(v, bool):
-        return _field_varint(7, 1 if v else 0)
+        return field_varint(7, 1 if v else 0)
     if isinstance(v, (int, np.integer)):
-        return _field_varint(4, int(v) & ((1 << 64) - 1))
+        return field_varint(4, int(v))
     if isinstance(v, (float, np.floating)):
-        return _tag(3, 1) + struct.pack("<d", float(v))
-    return _field_str(1, str(v))
+        return tag(3, 1) + struct.pack("<d", float(v))
+    return field_bytes(1, str(v).encode("utf-8"))
 
 
 # ---------------- geometry command encoding ----------------
@@ -95,8 +64,8 @@ def encode_point_geom(points: np.ndarray, extent: int) -> list[int]:
     cmds = [(MOVETO) | (len(g) << 3)]
     cx = cy = 0
     for x, y in g:
-        cmds.append(_zigzag(int(x - cx)))
-        cmds.append(_zigzag(int(y - cy)))
+        cmds.append(zigzag(int(x - cx)))
+        cmds.append(zigzag(int(y - cy)))
         cx, cy = x, y
     return cmds
 
@@ -109,13 +78,13 @@ def encode_line_geom(lines: list[np.ndarray], extent: int) -> list[int]:
         if len(g) < 2:
             continue
         cmds.append(MOVETO | (1 << 3))
-        cmds.append(_zigzag(int(g[0, 0] - cx)))
-        cmds.append(_zigzag(int(g[0, 1] - cy)))
+        cmds.append(zigzag(int(g[0, 0] - cx)))
+        cmds.append(zigzag(int(g[0, 1] - cy)))
         cx, cy = int(g[0, 0]), int(g[0, 1])
         cmds.append(LINETO | ((len(g) - 1) << 3))
         for x, y in g[1:]:
-            cmds.append(_zigzag(int(x - cx)))
-            cmds.append(_zigzag(int(y - cy)))
+            cmds.append(zigzag(int(x - cx)))
+            cmds.append(zigzag(int(y - cy)))
             cx, cy = int(x), int(y)
     return cmds
 
@@ -142,13 +111,13 @@ def encode_polygon_geom(mp: list[list[np.ndarray]], extent: int) -> list[int]:
             if want_cw != is_cw:
                 g = g[::-1]
             cmds.append(MOVETO | (1 << 3))
-            cmds.append(_zigzag(int(g[0, 0] - cx)))
-            cmds.append(_zigzag(int(g[0, 1] - cy)))
+            cmds.append(zigzag(int(g[0, 0] - cx)))
+            cmds.append(zigzag(int(g[0, 1] - cy)))
             cx, cy = int(g[0, 0]), int(g[0, 1])
             cmds.append(LINETO | ((len(g) - 1) << 3))
             for px, py in g[1:]:
-                cmds.append(_zigzag(int(px - cx)))
-                cmds.append(_zigzag(int(py - cy)))
+                cmds.append(zigzag(int(px - cx)))
+                cmds.append(zigzag(int(py - cy)))
                 cx, cy = int(px), int(py)
             cmds.append(CLOSEPATH | (1 << 3))
     return cmds
@@ -188,7 +157,7 @@ class LayerBuilder:
             return False
         body = b""
         if feature_id is not None:
-            body += _field_varint(1, int(feature_id))
+            body += field_varint(1, int(feature_id))
         if attrs:
             tag_ints: list[int] = []
             for k, v in attrs.items():
@@ -197,36 +166,32 @@ class LayerBuilder:
                 tag_ints.append(self._key(k))
                 tag_ints.append(self._value(v))
             if tag_ints:
-                body += _field_bytes(2, b"".join(_varint(t) for t in tag_ints))
-        body += _field_varint(3, geom_type)
-        body += _field_bytes(4, b"".join(_varint(c) for c in cmds))
+                body += field_bytes(2, b"".join(varint(t) for t in tag_ints))
+        body += field_varint(3, geom_type)
+        body += field_bytes(4, b"".join(varint(c) for c in cmds))
         self.features.append(body)
         return True
 
     def build(self) -> bytes:
-        out = _field_varint(15, 2)          # version
-        out += _field_str(1, self.name)
+        out = field_varint(15, 2)          # version
+        out += field_bytes(1, self.name.encode("utf-8"))
         for f in self.features:
-            out += _field_bytes(2, f)
+            out += field_bytes(2, f)
         for k in self.keys:
-            out += _field_str(3, k)
+            out += field_bytes(3, k.encode("utf-8"))
         for v in self.values:
-            out += _field_bytes(4, v)
-        out += _field_varint(5, self.extent)
+            out += field_bytes(4, v)
+        out += field_varint(5, self.extent)
         return out
 
 
 def build_tile(layers: list[LayerBuilder], compress: str = "gzip") -> bytes:
-    raw = b"".join(_field_bytes(3, lb.build()) for lb in layers if lb.features)
+    raw = b"".join(field_bytes(3, lb.build()) for lb in layers if lb.features)
     if compress == "gzip":
         return gzip.compress(raw, 6, mtime=0)
     if compress == "deflate":
         return zlib.compress(raw, 6)
     return raw
-
-
-def _unzigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
 
 
 def _rescale_cmds(cmds: list[int], num: int, den: int) -> list[int]:
@@ -246,13 +211,13 @@ def _rescale_cmds(cmds: list[int], num: int, den: int) -> list[int]:
         if op == 7:  # ClosePath carries no params
             continue
         for _ in range(count):
-            cx += _unzigzag(cmds[i])
-            cy += _unzigzag(cmds[i + 1])
+            cx += unzigzag(cmds[i])
+            cy += unzigzag(cmds[i + 1])
             i += 2
             nx = round(cx * num / den)
             ny = round(cy * num / den)
-            out.append(_zigzag(nx - ox))
-            out.append(_zigzag(ny - oy))
+            out.append(zigzag(nx - ox))
+            out.append(zigzag(ny - oy))
             ox, oy = nx, ny
     return out
 
@@ -286,18 +251,7 @@ def merge_tile_blobs(old_blob: bytes, new_blob: bytes,
     return build_tile(builders, compress=compress)
 
 
-# ---------------- decoder (for tests / parity checks) ----------------
-
-def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
-    shift = v = 0
-    while True:
-        b = buf[i]
-        i += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, i
-        shift += 7
-
+# ---------------- decoder (round-trip tests, --merge) ----------------
 
 def decode_tile(blob: bytes) -> dict[str, dict]:
     """Minimal MVT decoder: returns {layer: {extent, features:[{type, id,
@@ -307,99 +261,61 @@ def decode_tile(blob: bytes) -> dict[str, dict]:
     elif blob[:1] == b"\x78":
         blob = zlib.decompress(blob)
     out: dict[str, dict] = {}
-    i = 0
-    while i < len(blob):
-        tag, i = _read_varint(blob, i)
-        field, wire = tag >> 3, tag & 7
+    for field, wire, payload in fields(blob):
+        # --merge decodes tiles read from an existing archive: reject a
+        # blob that is not a sequence of length-delimited layers
         if wire != 2:
             raise ValueError("unexpected wire type at tile level")
-        ln, i = _read_varint(blob, i)
-        payload = blob[i:i + ln]
-        i += ln
-        if field != 3:
-            continue
-        layer = _decode_layer(payload)
-        out[layer["name"]] = layer
+        if field == 3:
+            layer = _decode_layer(payload)
+            out[layer["name"]] = layer
     return out
 
 
 def _decode_value(buf: bytes) -> Any:
-    i = 0
-    tag, i = _read_varint(buf, i)
-    field, wire = tag >> 3, tag & 7
-    if field == 1:
-        ln, i = _read_varint(buf, i)
-        return buf[i:i + ln].decode("utf-8")
-    if field == 3:
-        return struct.unpack("<d", buf[i:i + 8])[0]
-    if field in (4, 5):
-        v, i = _read_varint(buf, i)
-        return v
-    if field == 6:
-        v, i = _read_varint(buf, i)
-        return (v >> 1) ^ -(v & 1)
-    if field == 7:
-        v, i = _read_varint(buf, i)
-        return bool(v)
-    raise ValueError(f"value field {field}")
+    for field, _, v in fields(buf):
+        if field == 1:
+            return v.decode("utf-8")
+        if field == 3:
+            return struct.unpack("<d", v)[0]
+        if field in (4, 5):
+            return v
+        if field == 6:
+            return unzigzag(v)
+        if field == 7:
+            return bool(v)
+        raise ValueError(f"value field {field}")
 
 
 def _decode_layer(buf: bytes) -> dict:
-    name = ""
-    extent = 4096
-    keys: list[str] = []
-    values: list[Any] = []
+    layer = {"name": "", "extent": 4096, "keys": [], "values": [],
+             "features": []}
     raw_features: list[bytes] = []
-    i = 0
-    while i < len(buf):
-        tag, i = _read_varint(buf, i)
-        field, wire = tag >> 3, tag & 7
-        if wire == 0:
-            v, i = _read_varint(buf, i)
-            if field == 5:
-                extent = v
-            continue
-        ln, i = _read_varint(buf, i)
-        payload = buf[i:i + ln]
-        i += ln
+    for field, _, v in fields(buf):
         if field == 1:
-            name = payload.decode("utf-8")
+            layer["name"] = v.decode("utf-8")
         elif field == 2:
-            raw_features.append(payload)
+            raw_features.append(v)
         elif field == 3:
-            keys.append(payload.decode("utf-8"))
+            layer["keys"].append(v.decode("utf-8"))
         elif field == 4:
-            values.append(_decode_value(payload))
-    feats = []
+            layer["values"].append(_decode_value(v))
+        elif field == 5:
+            layer["extent"] = v
+    # features reference the key/value tables, which follow them
+    keys, values = layer["keys"], layer["values"]
     for fb in raw_features:
         f: dict = {"id": None, "attrs": {}, "type": 0, "cmds": []}
-        j = 0
-        while j < len(fb):
-            tag, j = _read_varint(fb, j)
-            field, wire = tag >> 3, tag & 7
-            if wire == 0:
-                v, j = _read_varint(fb, j)
-                if field == 1:
-                    f["id"] = v
-                elif field == 3:
-                    f["type"] = v
-            else:
-                ln, j = _read_varint(fb, j)
-                payload = fb[j:j + ln]
-                j += ln
-                if field == 2:
-                    k = 0
-                    ints = []
-                    while k < len(payload):
-                        v, k = _read_varint(payload, k)
-                        ints.append(v)
-                    for a in range(0, len(ints), 2):
-                        f["attrs"][keys[ints[a]]] = values[ints[a + 1]]
-                elif field == 4:
-                    k = 0
-                    while k < len(payload):
-                        v, k = _read_varint(payload, k)
-                        f["cmds"].append(v)
-        feats.append(f)
-    return {"name": name, "extent": extent, "keys": keys,
-            "values": values, "features": feats}
+        for field, _, v in fields(fb):
+            if field == 1:
+                f["id"] = v
+            elif field == 2:
+                ints = packed_varints(v)
+                for a in range(0, len(ints), 2):
+                    f["attrs"][keys[ints[a]]] = values[ints[a + 1]]
+            elif field == 3:
+                f["type"] = v
+            elif field == 4:
+                f["cmds"] = packed_varints(v)
+        layer["features"].append(f)
+    return layer

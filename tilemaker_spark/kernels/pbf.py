@@ -6,7 +6,8 @@ ways (id, refs, tags), relations (id, members, tags).  Dense nodes are
 delta-decoded, tags resolved through the per-block string table, coordinates
 scaled by granularity/offset — same semantics as the reference's reader,
 reimplemented from the published .proto definitions (osmformat.proto /
-fileformat.proto are public domain).
+fileformat.proto are public domain).  The protobuf wire decoding
+(varints, zigzag, the field iterator) is :mod:`tilemaker_spark.kernels.wire`.
 
 The file is split into independently decodable blobs; :func:`scan_blobs`
 enumerates (offset, size, type) so a Spark job can fan blob decoding out
@@ -19,56 +20,9 @@ import struct
 import zlib
 from dataclasses import dataclass, field
 
+from .wire import fields, packed_varints, unzigzag
+
 MEMBER_NODE, MEMBER_WAY, MEMBER_RELATION = 0, 1, 2
-
-
-def _read_varint(buf, i):
-    shift = v = 0
-    while True:
-        b = buf[i]
-        i += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, i
-        shift += 7
-
-
-def _zz(v):  # zigzag decode
-    return (v >> 1) ^ -(v & 1)
-
-
-def _packed_varints(payload, signed=False):
-    out = []
-    i = 0
-    n = len(payload)
-    while i < n:
-        v, i = _read_varint(payload, i)
-        out.append(_zz(v) if signed else v)
-    return out
-
-
-def _fields(buf):
-    """Iterate (field_no, wire_type, value_or_payload) over a message."""
-    i = 0
-    n = len(buf)
-    while i < n:
-        tag, i = _read_varint(buf, i)
-        f, w = tag >> 3, tag & 7
-        if w == 0:
-            v, i = _read_varint(buf, i)
-            yield f, w, v
-        elif w == 2:
-            ln, i = _read_varint(buf, i)
-            yield f, w, buf[i:i + ln]
-            i += ln
-        elif w == 5:
-            yield f, w, buf[i:i + 4]
-            i += 4
-        elif w == 1:
-            yield f, w, buf[i:i + 8]
-            i += 8
-        else:
-            raise ValueError(f"wire type {w}")
 
 
 # ---------------- file level ----------------
@@ -92,7 +46,7 @@ def scan_blobs(path: str) -> list[BlobRef]:
             hlen = struct.unpack(">I", lenbuf)[0]
             header = f.read(hlen)
             kind, datasize = "", 0
-            for fno, _, val in _fields(header):
+            for fno, _, val in fields(header):
                 if fno == 1:
                     kind = val.decode()
                 elif fno == 3:
@@ -107,7 +61,7 @@ def read_blob(path: str, ref: BlobRef) -> bytes:
         f.seek(ref.offset)
         body = f.read(ref.size)
     raw = None
-    for fno, _, val in _fields(body):
+    for fno, _, val in fields(body):
         if fno == 1:
             raw = val
         elif fno == 3:
@@ -121,18 +75,18 @@ def decode_header(raw: bytes) -> dict:
     """HeaderBlock -> {bbox: (minlon, minlat, maxlon, maxlat) | None}."""
     bbox = None
     features = []
-    for fno, _, val in _fields(raw):
+    for fno, _, val in fields(raw):
         if fno == 1:
             left = right = top = bottom = 0
-            for bf, _, bv in _fields(val):
+            for bf, _, bv in fields(val):
                 if bf == 1:
-                    left = _zz(bv)
+                    left = unzigzag(bv)
                 elif bf == 2:
-                    right = _zz(bv)
+                    right = unzigzag(bv)
                 elif bf == 3:
-                    top = _zz(bv)
+                    top = unzigzag(bv)
                 elif bf == 4:
-                    bottom = _zz(bv)
+                    bottom = unzigzag(bv)
             bbox = (left / 1e9, bottom / 1e9, right / 1e9, top / 1e9)
         elif fno in (4, 5):
             features.append(val.decode())
@@ -154,9 +108,9 @@ def decode_block(raw: bytes) -> BlockEntities:
     strings: list[str] = []
     groups: list[bytes] = []
     granularity, lat_off, lon_off = 100, 0, 0
-    for fno, _, val in _fields(raw):
+    for fno, _, val in fields(raw):
         if fno == 1:
-            for sf, _, sv in _fields(val):
+            for sf, _, sv in fields(val):
                 if sf == 1:
                     strings.append(sv.decode("utf-8", "replace"))
         elif fno == 2:
@@ -172,19 +126,19 @@ def decode_block(raw: bytes) -> BlockEntities:
     scale = 1e-9 * granularity
 
     for g in groups:
-        for fno, _, val in _fields(g):
+        for fno, _, val in fields(g):
             if fno == 2:  # DenseNodes
                 ids = lats = lons = None
                 kvs: list[int] = []
-                for df, _, dv in _fields(val):
+                for df, _, dv in fields(val):
                     if df == 1:
-                        ids = _packed_varints(dv, signed=True)
+                        ids = packed_varints(dv, signed=True)
                     elif df == 8:
-                        lats = _packed_varints(dv, signed=True)
+                        lats = packed_varints(dv, signed=True)
                     elif df == 9:
-                        lons = _packed_varints(dv, signed=True)
+                        lons = packed_varints(dv, signed=True)
                     elif df == 10:
-                        kvs = _packed_varints(dv)
+                        kvs = packed_varints(dv)
                 if not ids:
                     continue
                 cid = clat = clon = 0
@@ -208,17 +162,17 @@ def decode_block(raw: bytes) -> BlockEntities:
                 nid = 0
                 lat = lon = 0
                 keys = vals = []
-                for nf, _, nv in _fields(val):
+                for nf, _, nv in fields(val):
                     if nf == 1:
                         nid = nv
                     elif nf == 2:
-                        keys = _packed_varints(nv)
+                        keys = packed_varints(nv)
                     elif nf == 3:
-                        vals = _packed_varints(nv)
+                        vals = packed_varints(nv)
                     elif nf == 8:
-                        lat = _zz(nv)
+                        lat = unzigzag(nv)
                     elif nf == 9:
-                        lon = _zz(nv)
+                        lon = unzigzag(nv)
                 tags = {strings[k]: strings[v] for k, v in zip(keys, vals)}
                 out.nodes.append((
                     nid, lon_off * 1e-9 + lon * scale,
@@ -227,15 +181,15 @@ def decode_block(raw: bytes) -> BlockEntities:
             elif fno == 3:  # Way
                 wid = 0
                 keys = vals = refs = []
-                for wf, _, wv in _fields(val):
+                for wf, _, wv in fields(val):
                     if wf == 1:
                         wid = wv
                     elif wf == 2:
-                        keys = _packed_varints(wv)
+                        keys = packed_varints(wv)
                     elif wf == 3:
-                        vals = _packed_varints(wv)
+                        vals = packed_varints(wv)
                     elif wf == 8:
-                        refs = _packed_varints(wv, signed=True)
+                        refs = packed_varints(wv, signed=True)
                 acc = 0
                 abs_refs = []
                 for d in refs:
@@ -246,19 +200,19 @@ def decode_block(raw: bytes) -> BlockEntities:
             elif fno == 4:  # Relation
                 rid = 0
                 keys = vals = roles = memids = types = []
-                for rf, _, rv in _fields(val):
+                for rf, _, rv in fields(val):
                     if rf == 1:
                         rid = rv
                     elif rf == 2:
-                        keys = _packed_varints(rv)
+                        keys = packed_varints(rv)
                     elif rf == 3:
-                        vals = _packed_varints(rv)
+                        vals = packed_varints(rv)
                     elif rf == 8:
-                        roles = _packed_varints(rv)
+                        roles = packed_varints(rv)
                     elif rf == 9:
-                        memids = _packed_varints(rv, signed=True)
+                        memids = packed_varints(rv, signed=True)
                     elif rf == 10:
-                        types = _packed_varints(rv)
+                        types = packed_varints(rv)
                 acc = 0
                 members = []
                 for mi, d in enumerate(memids):

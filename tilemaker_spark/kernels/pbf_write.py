@@ -6,12 +6,14 @@ tags) nodes, (id, refs, tags) ways and (id, members, tags) relations into
 string tables, zlib blob compression — exactly the wire format the decoder
 (and the reference's reader, /root/reference/include/pbf_reader.h) consumes.
 Reimplemented from the published .proto definitions (osmformat.proto /
-fileformat.proto are public domain); no protobuf library needed.
+fileformat.proto are public domain); the protobuf wire encoding is
+:mod:`tilemaker_spark.kernels.wire`, no protobuf library needed.
 
 Purpose: synthesize deterministic country-scale fixtures (~1M nodes) for
 end-to-end tests without network access — the sandbox cannot download a
 real Geofabrik extract.  The hot integer arrays (dense node ids/lats/lons,
-way refs) are packed with a vectorized numpy varint encoder, so writing a
+way refs) are packed with the vectorized numpy varint encoder
+(:func:`~tilemaker_spark.kernels.wire.pack_uvarints`), so writing a
 million nodes takes seconds, not minutes.
 
 Files are written in ``Sort.Type_then_ID`` order (all node blobs, then way
@@ -27,71 +29,10 @@ import zlib
 
 import numpy as np
 
+from .wire import (field_bytes, field_varint, pack_svarints, pack_uvarints,
+                   zigzag)
+
 _GRANULARITY = 100  # nanodegrees per unit — the default every encoder uses
-
-
-# ---------------- protobuf primitives ----------------
-
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _tag(field: int, wire: int) -> bytes:
-    return _varint((field << 3) | wire)
-
-
-def _field_varint(field: int, v: int) -> bytes:
-    return _tag(field, 0) + _varint(v)
-
-
-def _field_svarint(field: int, v: int) -> bytes:
-    return _tag(field, 0) + _varint((v << 1) ^ (v >> 63) if v < 0
-                                    else v << 1)
-
-
-def _field_bytes(field: int, payload: bytes) -> bytes:
-    return _tag(field, 2) + _varint(len(payload)) + payload
-
-
-def pack_uvarints(vals) -> bytes:
-    """Vectorized packed-varint encode of unsigned ints (numpy).
-
-    Builds an (n, 10) byte matrix — 10 bytes is the max varint length for
-    64-bit values — then masks each row down to its true length.  ~50x
-    faster than a per-value Python loop on million-element arrays.
-    """
-    u = np.asarray(vals, dtype=np.uint64)
-    if u.size == 0:
-        return b""
-    n = u.size
-    lengths = np.ones(n, dtype=np.int64)
-    for k in range(1, 10):
-        lengths += (u >> np.uint64(7 * k)) != 0
-    out = np.zeros((n, 10), dtype=np.uint8)
-    tmp = u.copy()
-    for k in range(10):
-        out[:, k] = (tmp & np.uint64(0x7F)).astype(np.uint8)
-        tmp >>= np.uint64(7)
-    cols = np.arange(10)
-    cont = cols[None, :] < (lengths - 1)[:, None]
-    out |= cont.astype(np.uint8) << 7
-    keep = cols[None, :] < lengths[:, None]
-    return out[keep].tobytes()
-
-
-def pack_svarints(vals) -> bytes:
-    """Vectorized packed zigzag-varint encode of signed ints."""
-    v = np.asarray(vals, dtype=np.int64)
-    zz = ((v << 1) ^ (v >> 63)).view(np.uint64)
-    return pack_uvarints(zz)
 
 
 def _delta(vals: np.ndarray) -> np.ndarray:
@@ -121,7 +62,7 @@ class _StringTable:
 
     def encode(self) -> bytes:
         return b"".join(
-            _field_bytes(1, s.encode("utf-8")) for s in self.strings)
+            field_bytes(1, s.encode("utf-8")) for s in self.strings)
 
 
 # ---------------- primitive blocks ----------------
@@ -146,15 +87,15 @@ def encode_dense_block(nodes: list) -> bytes:
                 kvs.append(st.add(k))
                 kvs.append(st.add(v))
         kvs.append(0)
-    dense = (_field_bytes(1, pack_svarints(_delta(ids)))
-             + _field_bytes(8, pack_svarints(_delta(lats)))
-             + _field_bytes(9, pack_svarints(_delta(lons))))
+    dense = (field_bytes(1, pack_svarints(_delta(ids)))
+             + field_bytes(8, pack_svarints(_delta(lats)))
+             + field_bytes(9, pack_svarints(_delta(lons))))
     if any_tags:
-        dense += _field_bytes(10, pack_uvarints(np.array(kvs,
-                                                         dtype=np.uint64)))
-    group = _field_bytes(2, dense)
-    return (_field_bytes(1, st.encode()) + _field_bytes(2, group)
-            + _field_varint(17, _GRANULARITY))
+        dense += field_bytes(10, pack_uvarints(np.array(kvs,
+                                                        dtype=np.uint64)))
+    group = field_bytes(2, dense)
+    return (field_bytes(1, st.encode()) + field_bytes(2, group)
+            + field_varint(17, _GRANULARITY))
 
 
 def encode_way_block(ways: list) -> bytes:
@@ -162,19 +103,19 @@ def encode_way_block(ways: list) -> bytes:
     st = _StringTable()
     msgs = []
     for wid, refs, tags in ways:
-        body = _field_varint(1, wid)
+        body = field_varint(1, wid)
         if tags:
-            body += _field_bytes(2, pack_uvarints(
+            body += field_bytes(2, pack_uvarints(
                 np.array([st.add(k) for k in tags], dtype=np.uint64)))
-            body += _field_bytes(3, pack_uvarints(
+            body += field_bytes(3, pack_uvarints(
                 np.array([st.add(v) for v in tags.values()],
                          dtype=np.uint64)))
-        body += _field_bytes(8, pack_svarints(
+        body += field_bytes(8, pack_svarints(
             _delta(np.asarray(refs, dtype=np.int64))))
-        msgs.append(_field_bytes(3, body))
+        msgs.append(field_bytes(3, body))
     group = b"".join(msgs)
-    return (_field_bytes(1, st.encode()) + _field_bytes(2, group)
-            + _field_varint(17, _GRANULARITY))
+    return (field_bytes(1, st.encode()) + field_bytes(2, group)
+            + field_varint(17, _GRANULARITY))
 
 
 def encode_relation_block(relations: list) -> bytes:
@@ -183,11 +124,11 @@ def encode_relation_block(relations: list) -> bytes:
     st = _StringTable()
     msgs = []
     for rid, members, tags in relations:
-        body = _field_varint(1, rid)
+        body = field_varint(1, rid)
         if tags:
-            body += _field_bytes(2, pack_uvarints(
+            body += field_bytes(2, pack_uvarints(
                 np.array([st.add(k) for k in tags], dtype=np.uint64)))
-            body += _field_bytes(3, pack_uvarints(
+            body += field_bytes(3, pack_uvarints(
                 np.array([st.add(v) for v in tags.values()],
                          dtype=np.uint64)))
         roles = np.array([st.add(role) for _, _, role in members],
@@ -195,28 +136,27 @@ def encode_relation_block(relations: list) -> bytes:
         memids = _delta(np.array([ref for _, ref, _ in members],
                                  dtype=np.int64))
         types = np.array([t for t, _, _ in members], dtype=np.uint64)
-        body += _field_bytes(8, pack_uvarints(roles))
-        body += _field_bytes(9, pack_svarints(memids))
-        body += _field_bytes(10, pack_uvarints(types))
-        msgs.append(_field_bytes(4, body))
+        body += field_bytes(8, pack_uvarints(roles))
+        body += field_bytes(9, pack_svarints(memids))
+        body += field_bytes(10, pack_uvarints(types))
+        msgs.append(field_bytes(4, body))
     group = b"".join(msgs)
-    return (_field_bytes(1, st.encode()) + _field_bytes(2, group)
-            + _field_varint(17, _GRANULARITY))
+    return (field_bytes(1, st.encode()) + field_bytes(2, group)
+            + field_varint(17, _GRANULARITY))
 
 
 def encode_header_block(bbox, features=("OsmSchema-V0.6", "DenseNodes"),
                         optional=("Sort.Type_then_ID",)) -> bytes:
     """HeaderBlock bytes; bbox = (minlon, minlat, maxlon, maxlat) deg."""
     minlon, minlat, maxlon, maxlat = bbox
-    hb = (_field_svarint(1, int(round(minlon * 1e9)))
-          + _field_svarint(2, int(round(maxlon * 1e9)))
-          + _field_svarint(3, int(round(maxlat * 1e9)))
-          + _field_svarint(4, int(round(minlat * 1e9))))
-    out = _field_bytes(1, hb)
+    hb = b"".join(field_varint(f, zigzag(int(round(deg * 1e9))))
+                  for f, deg in ((1, minlon), (2, maxlon), (3, maxlat),
+                                 (4, minlat)))
+    out = field_bytes(1, hb)
     for f in features:
-        out += _field_bytes(4, f.encode())
+        out += field_bytes(4, f.encode())
     for f in optional:
-        out += _field_bytes(5, f.encode())
+        out += field_bytes(5, f.encode())
     return out
 
 
@@ -225,8 +165,8 @@ def encode_header_block(bbox, features=("OsmSchema-V0.6", "DenseNodes"),
 def _frame_blob(kind: str, raw: bytes) -> bytes:
     """raw PrimitiveBlock/HeaderBlock -> length-prefixed BlobHeader+Blob."""
     z = zlib.compress(raw, 6)
-    blob = _field_varint(2, len(raw)) + _field_bytes(3, z)
-    header = _field_bytes(1, kind.encode()) + _field_varint(3, len(blob))
+    blob = field_varint(2, len(raw)) + field_bytes(3, z)
+    header = field_bytes(1, kind.encode()) + field_varint(3, len(blob))
     return struct.pack(">I", len(header)) + header + blob
 
 

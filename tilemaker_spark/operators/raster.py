@@ -31,7 +31,8 @@ from ..kernels import geom as G
 from ..kernels import png as PNG
 from ..kernels import proj as P
 from ..kernels import raster as R
-from .tiling import FEATURE_SCHEMA, cover_features, expand_coarse
+from .tiling import (FEATURE_SCHEMA, cover_features, expand_coarse,
+                     prune_cover_to_bbox)
 
 
 def _pixel_coords(flat: np.ndarray, z: int, x: int, y: int,
@@ -61,30 +62,12 @@ def render_raster_tiles(features: DataFrame, zoom: int,
     raster tiles too."""
     covered = cover_features(features, base_zoom=zoom)
     if clip_bbox is not None:
-        minlon, minlat, maxlon, maxlat = clip_bbox
-        m = (1 << zoom) - 1
-        x0 = max(0, min(m, int(P.lon2tilexf(minlon, zoom))))
-        x1 = max(0, min(m, int(P.lon2tilexf(maxlon, zoom))))
-        y0 = max(0, min(m, int(P.lat2tileyf(maxlat, zoom))))
-        y1 = max(0, min(m, int(P.lat2tileyf(minlat, zoom))))
-        exact_ok = (F.col("bx").between(x0, x1)
-                    & F.col("by").between(y0, y1))
-        if "coarse" in covered.columns:
-            # coarse rows sit at a z6 anchor covering a 2^dz-wide block
-            width = 1 << max(0, zoom - 6)
-            coarse_ok = ((F.col("bx") <= x1)
-                         & (F.col("bx") + width - 1 >= x0)
-                         & (F.col("by") <= y1)
-                         & (F.col("by") + width - 1 >= y0))
-            covered = covered.filter(
-                F.when(F.col("coarse"), coarse_ok).otherwise(exact_ok))
-        else:
-            covered = covered.filter(exact_ok)
+        covered = prune_cover_to_bbox(covered, clip_bbox, zoom)
     covered = expand_coarse(covered, zoom)
     if clip_bbox is not None:
-        # exact post-expand prune (coarse blocks may overhang the box)
-        covered = covered.filter(F.col("bx").between(x0, x1)
-                                 & F.col("by").between(y0, y1))
+        # large features refine to every tile of their z6 cell, which
+        # may overhang the box
+        covered = prune_cover_to_bbox(covered, clip_bbox, zoom)
 
     def render_group(pdf: pd.DataFrame) -> pd.DataFrame:
         x = int(pdf["bx"].iloc[0])

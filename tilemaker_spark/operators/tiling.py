@@ -205,6 +205,36 @@ def expand_coarse(covered: DataFrame, base_zoom: int = 14) -> DataFrame:
     return covered.mapInPandas(gen, schema=schema)
 
 
+def _bbox_tile_range(bbox: tuple, zoom: int) -> tuple[int, int, int, int]:
+    """Inclusive (x0, x1, y0, y1) range of the ``zoom`` tiles that
+    intersect ``bbox`` (minlon, minlat, maxlon, maxlat)."""
+    minlon, minlat, maxlon, maxlat = bbox
+    m = (1 << zoom) - 1
+    x0 = max(0, min(m, int(P.lon2tilexf(minlon, zoom))))
+    x1 = max(0, min(m, int(P.lon2tilexf(maxlon, zoom))))
+    y0 = max(0, min(m, int(P.lat2tileyf(maxlat, zoom))))
+    y1 = max(0, min(m, int(P.lat2tileyf(minlat, zoom))))
+    return x0, x1, y0, y1
+
+
+def prune_cover_to_bbox(covered: DataFrame, bbox: tuple,
+                        zoom: int) -> DataFrame:
+    """Keep the cover rows that can reach a tile intersecting ``bbox``
+    (minlon, minlat, maxlon, maxlat) at ``zoom`` (reference --bbox,
+    src/tilemaker.cpp:368-379): an exact row when its tile lies in the
+    box's tile range, a coarse row when its z6 cell's block of
+    ``1 << (zoom - CLUSTER_ZOOM)`` base tiles overlaps that range."""
+    x0, x1, y0, y1 = _bbox_tile_range(bbox, zoom)
+    exact_ok = F.col("bx").between(x0, x1) & F.col("by").between(y0, y1)
+    if "coarse" not in covered.columns:
+        return covered.filter(exact_ok)
+    width = 1 << max(0, zoom - CLUSTER_ZOOM)
+    coarse_ok = ((F.col("bx") <= x1) & (F.col("bx") + width - 1 >= x0)
+                 & (F.col("by") <= y1) & (F.col("by") + width - 1 >= y0))
+    return covered.filter(
+        F.when(F.col("coarse"), coarse_ok).otherwise(exact_ok))
+
+
 # ---------------------------------------------------------------------------
 # stage 2: per-subtree tile builder
 # ---------------------------------------------------------------------------
@@ -588,25 +618,10 @@ def build_tiles(covered: DataFrame, cfg: Config,
     With cfg.clip_bbox set, out-of-box cover rows are pruned before the
     shuffle and only tiles intersecting the box are emitted."""
     dz = base_zoom - CLUSTER_ZOOM
+    box = None
     if cfg.clip_bbox is not None:
-        # prune cover rows early: exact rows at base-tile granularity,
-        # coarse rows at their z6 cell's tile range
-        minlon, minlat, maxlon, maxlat = cfg.clip_bbox
-        m = (1 << base_zoom) - 1
-        x0 = max(0, min(m, int(P.lon2tilexf(minlon, base_zoom))))
-        x1 = max(0, min(m, int(P.lon2tilexf(maxlon, base_zoom))))
-        y0 = max(0, min(m, int(P.lat2tileyf(maxlat, base_zoom))))
-        y1 = max(0, min(m, int(P.lat2tileyf(minlat, base_zoom))))
-        width = 1 << dz
-        exact_ok = (F.col("bx").between(x0, x1)
-                    & F.col("by").between(y0, y1))
-        coarse_ok = ((F.col("bx") <= x1)
-                     & (F.col("bx") + width - 1 >= x0)
-                     & (F.col("by") <= y1)
-                     & (F.col("by") + width - 1 >= y0))
-        covered = covered.filter(
-            F.when(F.col("coarse"), coarse_ok).otherwise(exact_ok)
-            if "coarse" in covered.columns else exact_ok)
+        covered = prune_cover_to_bbox(covered, cfg.clip_bbox, base_zoom)
+        box = _bbox_tile_range(cfg.clip_bbox, base_zoom)
     with_cell = covered.withColumn(
         "_cx", F.shiftright(F.col("bx"), dz)
     ).withColumn("_cy", F.shiftright(F.col("by"), dz))
@@ -618,6 +633,11 @@ def build_tiles(covered: DataFrame, cfg: Config,
         # refine coarse (large-object) rows to exact tiles, in-worker
         pdf = _expand_coarse_rows(pdf, base_zoom).drop_duplicates(
             subset=["feature_id", "layer", "bx", "by"])
+        if box is not None:
+            # a refined large feature covers its whole z6 cell, which
+            # may overhang the box
+            x0, x1, y0, y1 = box
+            pdf = pdf[pdf["bx"].between(x0, x1) & pdf["by"].between(y0, y1)]
         cols = _tile_columns(pdf, cfg)
         out = []
         # clip pyramid (reference include/clip_cache.h:21-37): each tile

@@ -12,11 +12,14 @@ computed distributed and streamed to the writer ordered by tile id
 from __future__ import annotations
 
 import gzip
+import itertools
 import json
 import struct
 
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..kernels.wire import pack_uvarints, packed_varints
 
 MAGIC = b"PMTiles"
 HEADER_SIZE = 127
@@ -53,105 +56,51 @@ def tile_id(z: int, x: int, y: int) -> int:
     return base + hilbert_d(z, x, y)
 
 
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _encode_directory(entries) -> bytes:
     """entries: sorted [(tile_id, offset, length, run_length)] -> serialized
-    dir.  run_length=1 for tile entries, run_length=0 marks a leaf-directory
-    pointer (PMTiles v3 spec; reference pmtiles.hpp leaf root entries)."""
-    out = bytearray()
-    out += _varint(len(entries))
+    dir: the entry count, then four varint columns — tile id deltas, run
+    lengths, lengths, offsets (0 = contiguous with the previous entry,
+    else offset + 1).  run_length=1 for tile entries, run_length=0 marks
+    a leaf-directory pointer (PMTiles v3 spec; reference pmtiles.hpp leaf
+    root entries)."""
+    vals = [len(entries)]
     last = 0
     for tid, _, _, _ in entries:
-        out += _varint(tid - last)
+        vals.append(tid - last)
         last = tid
-    for _, _, _, rl in entries:
-        out += _varint(rl)
-    for _, _, ln, _ in entries:
-        out += _varint(ln)
-    prev_off = prev_len = None
+    vals += [rl for _, _, _, rl in entries]
+    vals += [ln for _, _, ln, _ in entries]
+    prev_end = None
     for _, off, ln, _ in entries:
-        if prev_off is not None and off == prev_off + prev_len:
-            out += _varint(0)  # contiguous
-        else:
-            out += _varint(off + 1)
-        prev_off, prev_len = off, ln
-    return bytes(out)
+        vals.append(0 if off == prev_end else off + 1)
+        prev_end = off + ln
+    return pack_uvarints(vals)
 
 
 def _decode_directory(buf: bytes):
-    pos = 0
-
-    def rv():
-        nonlocal pos
-        shift = v = 0
-        while True:
-            b = buf[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return v
-            shift += 7
-
-    n = rv()
-    tids, runs, lens, offs = [], [], [], []
-    last = 0
-    for _ in range(n):
-        last += rv()
-        tids.append(last)
-    for _ in range(n):
-        runs.append(rv())
-    for _ in range(n):
-        lens.append(rv())
-    prev_off = prev_len = 0
-    for i in range(n):
-        v = rv()
-        if v == 0:
-            offs.append(prev_off + prev_len)
-        else:
-            offs.append(v - 1)
-        prev_off, prev_len = offs[-1], lens[i]
+    vals = packed_varints(buf)
+    n = vals[0]
+    tids = list(itertools.accumulate(vals[1:n + 1]))
+    runs = vals[n + 1:2 * n + 1]
+    lens = vals[2 * n + 1:3 * n + 1]
+    offs = []
+    prev_end = 0
+    for v, ln in zip(vals[3 * n + 1:4 * n + 1], lens):
+        offs.append(prev_end if v == 0 else v - 1)
+        prev_end = offs[-1] + ln
     return list(zip(tids, offs, lens, runs))
 
 
 # reference writer constants (/root/reference/include/pmtiles.h:17-27)
 TINY_LENGTH = 100       # blobs under this are dedup candidates
 TINY_MAX_SIZE = 10000   # dedup cache bound
-DENSE_Z6_THRESHOLD = 100  # auto dense index above this z6 coverage
-                          # (/root/reference/src/tilemaker.cpp:381-385)
 
 
-def _entries_sparse(tids, offs, lens):
-    """Per-entry RLE append (the reference's appendWithRLE,
-    src/pmtiles.cpp:102-111): an entry whose tile id continues the
+def _rle_entries(tids, offs, lens):
+    """Run-length entries over the whole (tid-sorted) index in one numpy
+    pass — the reference's appendWithRLE (src/pmtiles.cpp:102-111) rule
+    applied to every tile at once: an entry whose tile id continues the
     previous run AND shares its data offset extends that run."""
-    entries: list[list[int]] = []
-    for tid, off, ln in zip(tids, offs, lens):
-        if (entries and entries[-1][1] == off
-                and entries[-1][0] + entries[-1][3] == tid):
-            entries[-1][3] += 1
-        else:
-            entries.append([tid, off, ln, 1])
-    return [tuple(e) for e in entries]
-
-
-def _entries_dense(tids, offs, lens):
-    """Vectorized RLE over the whole (tid-sorted) index — the dense-index
-    analogue of the reference's denseIndex vector walk
-    (src/pmtiles.cpp:52-55): one numpy pass instead of a per-tile append,
-    the scale path for planet-size contiguous tile sets.  Produces
-    entries IDENTICAL to :func:`_entries_sparse` (property-tested)."""
-    import numpy as np
     tid = np.asarray(tids, np.int64)
     off = np.asarray(offs, np.int64)
     ln = np.asarray(lens, np.int64)
@@ -168,8 +117,7 @@ def _entries_dense(tids, offs, lens):
 
 def write_pmtiles(tiles: DataFrame, path: str,
                   metadata: dict | None = None,
-                  vector_layers: list | None = None,
-                  dense: bool | None = None) -> int:
+                  vector_layers: list | None = None) -> int:
     """tiles(z, x, y, tile) -> .pmtiles. Tile blobs must already be gzip
     (the engine's default tile compression). Returns tile count.
     ``vector_layers`` goes into the JSON metadata blob (spec/TileJSON;
@@ -180,13 +128,7 @@ def write_pmtiles(tiles: DataFrame, path: str,
       written once and shared by offset (saveTile's tinyCache),
     * adjacent tile ids sharing one offset collapse into run-length
       entries (appendWithRLE) — together these shrink planet archives
-      where sea tiles dominate,
-    * ``dense`` picks the vectorized whole-index RLE pass (the
-      reference's dense std::vector index, chosen for large contiguous
-      areas at src/tilemaker.cpp:381-385: > 100 covered z6 tiles);
-      ``None`` applies the same auto rule from the tile set itself.
-      Both paths emit byte-identical archives — dense is the
-      memory/speed scale path, not a format change.
+      where sea tiles dominate.
     """
     if vector_layers is not None:
         metadata = dict(metadata or {})
@@ -198,17 +140,12 @@ def write_pmtiles(tiles: DataFrame, path: str,
     rows = tiles.select("z", "x", "y", "tile").toLocalIterator()
     items = []
     minz, maxz = 99, 0
-    z6_cover = set()
     for r in rows:
         z = r["z"]
         items.append((tile_id(z, r["x"], r["y"]), bytes(r["tile"])))
         minz = min(minz, z)
         maxz = max(maxz, z)
-        if z >= 6:
-            z6_cover.add((r["x"] >> (z - 6), r["y"] >> (z - 6)))
     items.sort(key=lambda t: t[0])
-    if dense is None:
-        dense = len(z6_cover) > DENSE_Z6_THRESHOLD
 
     # data section in tile-id order, identical tiny blobs deduplicated
     blobs = bytearray()
@@ -238,8 +175,7 @@ def write_pmtiles(tiles: DataFrame, path: str,
         offs.append(off)
         lens.append(ln)
     n_addressed = len(items)
-    entries = (_entries_dense if dense else _entries_sparse)(
-        tids, offs, lens)
+    entries = _rle_entries(tids, offs, lens)
 
     root = gzip.compress(_encode_directory(entries), 6, mtime=0)
     leaves = b""

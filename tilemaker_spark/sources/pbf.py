@@ -29,11 +29,6 @@ RELS_SCHEMA = (
 )
 
 
-def _tags_arrow(d: dict) -> dict:
-    # PySpark's Arrow conversion expects MapType values as dicts
-    return d
-
-
 def _decode_blobs(batches: Iterator[pd.DataFrame], which: str):
     for pdf in batches:
         out_nodes, out_ways, out_rels = [], [], []
@@ -57,13 +52,13 @@ def _decode_blobs(batches: Iterator[pd.DataFrame], which: str):
                 "id": [n[0] for n in out_nodes],
                 "lon": [n[1] for n in out_nodes],
                 "lat": [n[2] for n in out_nodes],
-                "tags": [_tags_arrow(n[3]) for n in out_nodes],
+                "tags": [n[3] for n in out_nodes],
             })
         elif which == "ways" and out_ways:
             yield pd.DataFrame({
                 "id": [w[0] for w in out_ways],
                 "refs": [w[1] for w in out_ways],
-                "tags": [_tags_arrow(w[2]) for w in out_ways],
+                "tags": [w[2] for w in out_ways],
             })
         elif which == "relations" and out_rels:
             yield pd.DataFrame({
@@ -73,7 +68,7 @@ def _decode_blobs(batches: Iterator[pd.DataFrame], which: str):
                      for m in r[1]]
                     for r in out_rels
                 ],
-                "tags": [_tags_arrow(r[2]) for r in out_rels],
+                "tags": [r[2] for r in out_rels],
             })
 
 
