@@ -133,7 +133,9 @@ def main(argv=None) -> int:
                          "(minzoom/maxzoom/hires/compress/name) apply "
                          "unless overridden by the flags above")
     ap.add_argument("--skip-integrity", action="store_true",
-                    help="don't check that all way nodes are present")
+                    help="keep ways that reference missing nodes, "
+                         "built from the nodes found (default: drop "
+                         "such ways)")
     ap.add_argument("--threads", type=int, default=None,
                     help="shuffle-partition cap (0/None = Spark default)")
     ap.add_argument("--quiet", action="store_true")

@@ -22,5 +22,16 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def synth_pbf(tmp_path_factory):
+    """The seed-42, scale-0.02 synthetic extract (sources/synth_osm): the
+    Monaco-free stand-in for relation and closure tests.  Its route
+    relations 21-24 each list five road ways as members."""
+    from tilemaker_spark.sources.synth_osm import write_synth_pbf
+    path = str(tmp_path_factory.mktemp("synth_pbf") / "s42.osm.pbf")
+    write_synth_pbf(path, seed=42, scale=0.02)
+    return path
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

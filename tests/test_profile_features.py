@@ -219,6 +219,31 @@ def test_used_closure_prunes_nodes(spark):
     assert wu2.count() > w_used
 
 
+def test_synth_used_closure_prunes_nodes(spark, synth_pbf):
+    """Synthetic twin of the Monaco test above.  The extract is
+    referentially complete, so every used way's refs survive the
+    pruning; multipolygon relations pull in their landuse member ways,
+    which the highway way_keys reject."""
+    from tilemaker_spark.sources import pbf as pbf_src
+    nodes, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    n_all = nodes.count()
+    nu, wu = prof.used_closure(
+        nodes, ways,
+        way_filter=prof.significant_tags(["highway"]),
+        node_filter=prof.significant_tags(["place"]))
+    n_used, w_used = nu.count(), wu.count()
+    assert w_used < ways.count()
+    assert n_used < n_all
+    ref_ids = wu.select(F.explode("refs").alias("id")).distinct()
+    kept = ref_ids.join(nu, "id", "left_semi").count()
+    assert kept == ref_ids.count()
+    nu2, wu2 = prof.used_closure(
+        nodes, ways, relations=rels,
+        way_filter=prof.significant_tags(["highway"]),
+        relation_pred=F.col("tags")["type"] == "multipolygon")
+    assert wu2.count() > w_used
+
+
 def test_modify_id(spark):
     way_geoms = spark.createDataFrame(
         [(7, {"highway": "path"}, [0.0, 0.0, 1.0, 1.0], False)],

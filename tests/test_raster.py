@@ -157,6 +157,33 @@ class TestOperators:
         assert px[(1, 1)].any(axis=2).mean() == pytest.approx(0.5,
                                                               abs=0.03)
 
+    def test_render_multilinestring_matches_its_parts(self, spark):
+        """A MultiLineString renders as its parts drawn as LineStrings of
+        the same layer: strokes, not vertex dots."""
+        from tilemaker_spark.operators import raster as RO
+        a = [-80.0, 10.0, -10.0, 50.0]
+        b = [-80.0, 50.0, -40.0, 30.0, -10.0, 10.0]
+        schema = ("feature_id long, layer string, kind tinyint, "
+                  "minzoom int, zorder long, attrs map<string,string>, "
+                  "coords array<double>, ring_sizes array<int>, "
+                  "poly_ring_counts array<int>")
+        multi = spark.createDataFrame(
+            [(1, "roads", G.MULTILINESTRING, 0, 0, {}, a + b, [2, 3], [])],
+            schema)
+        parts = spark.createDataFrame(
+            [(1, "roads", G.LINESTRING, 0, 0, {}, a, [2], []),
+             (2, "roads", G.LINESTRING, 0, 0, {}, b, [3], [])], schema)
+
+        def pixels(df):
+            return {(r["x"], r["y"]): PNG.decode_png(bytes(r["png"]))
+                    for r in RO.render_raster_tiles(
+                        df, zoom=2, size=64).collect()}
+
+        got, want = pixels(multi), pixels(parts)
+        assert set(got) == set(want) and (1, 1) in got
+        for key in want:
+            assert (got[key] == want[key]).all()
+
     def test_raster_vector_round_trip(self, spark, box_features):
         from tilemaker_spark.operators import raster as RO
         tiles = RO.render_raster_tiles(box_features, zoom=2, size=64)

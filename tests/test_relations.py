@@ -43,6 +43,32 @@ def test_parent_relations_respects_accept(spark):
     assert out.filter(F.size("rels") > 0).count() == 0
 
 
+def test_synth_member_ways_see_parent_relation(spark, synth_pbf):
+    """Synthetic twin of the Monaco test above: route relation 21
+    ("route 0") lists ways 1-5, and each sees it as its parent."""
+    _, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    accepted = R.accept_relations(rels, F.col("tags")["type"] == "route")
+    out = R.parent_relations(ways, accepted, mtype=1)
+    got = {r["id"]: r["rels"] for r in out.filter(
+        F.col("id").between(1, 6)).collect()}
+    for wid in range(1, 6):
+        assert [p["rel_id"] for p in got[wid]] == [21]
+        assert got[wid][0]["role"] == ""
+        assert got[wid][0]["rel_tags"]["name"] == "route 0"
+    # way 6 is in no accepted relation: an empty array
+    assert got[6] == []
+    assert out.filter(F.size("rels") > 0).count() == 20
+
+
+def test_synth_parent_relations_respects_accept(spark, synth_pbf):
+    _, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    none_accepted = R.accept_relations(
+        rels, F.col("tags")["type"] == "nonexistent")
+    out = R.parent_relations(ways, none_accepted, mtype=1)
+    assert out.filter(F.size("rels") > 0).count() == 0
+    assert out.count() == ways.count()
+
+
 @pytest.fixture(scope="module")
 def nested_rels(spark):
     # superroute 1 -> route 2 -> (way member 100); plus standalone route 3

@@ -28,6 +28,13 @@ def test_geojson_jsonl_roundtrip(spark, tmp_path):
                                        [0, 0]],
                                       [[1, 1], [2, 1], [2, 2], [1, 2],
                                        [1, 1]]]}},
+        {"type": "Feature", "id": 4, "properties": {},
+         "geometry": {"type": "MultiPoint",
+                      "coordinates": [[1, 2], [3, 4], [5, 6]]}},
+        {"type": "Feature", "id": 5, "properties": {},
+         "geometry": {"type": "MultiLineString",
+                      "coordinates": [[[0, 0], [1, 1]],
+                                      [[2, 2], [3, 3], [4, 2]]]}},
     ]
     p = tmp_path / "f.jsonl"
     p.write_text("\n".join(json.dumps(f) for f in feats))
@@ -41,23 +48,60 @@ def test_geojson_jsonl_roundtrip(spark, tmp_path):
     assert rows[3]["ring_sizes"] == [5, 5]
     assert rows[3]["poly_ring_counts"] == [2]
 
-    # write back out and re-read
+    assert rows[4]["kind"] == G.POINT
+    assert rows[4]["ring_sizes"] == [3]
+    assert rows[5]["kind"] == G.MULTILINESTRING
+    assert rows[5]["ring_sizes"] == [2, 3]
+
+    # write back out and re-read: every kind keeps its geometry
     out = tmp_path / "o.jsonl"
     geojson.write_geojson(df, str(out))
-    again = geojson.read_geojson(spark, str(out), layer="ext")
-    assert again.count() == 3
+    again = {r["feature_id"]: r for r in geojson.read_geojson(
+        spark, str(out), layer="ext").collect()}
+    assert sorted(again) == [1, 2, 3, 4, 5]
+    for fid, r in rows.items():
+        for c in ("kind", "coords", "ring_sizes"):
+            assert again[fid][c] == r[c], (fid, c)
+
+
+def _read_feature_collection(spark, tmp_path, ids):
+    """Point features numbered a=0.. carrying ``ids`` (None: no "id")
+    -> {a: feature_id} read back through a FeatureCollection file."""
+    feats = []
+    for a, fid in enumerate(ids):
+        ft = {"type": "Feature", "properties": {"a": str(a)},
+              "geometry": {"type": "Point", "coordinates": [a, 2.0]}}
+        if fid is not None:
+            ft["id"] = fid
+        feats.append(ft)
+    p = tmp_path / "fc.geojson"
+    p.write_text(json.dumps({"type": "FeatureCollection",
+                             "features": feats}))
+    rows = geojson.read_geojson(spark, str(p)).collect()
+    assert sorted(r["coords"][0] for r in rows) == list(range(len(ids)))
+    return {int(r["attrs"]["a"]): r["feature_id"] for r in rows}
 
 
 def test_geojson_featurecollection(spark, tmp_path):
-    doc = {"type": "FeatureCollection", "features": [
-        {"type": "Feature", "properties": {"a": "1"},
-         "geometry": {"type": "Point", "coordinates": [1.0, 2.0]}},
-    ]}
-    p = tmp_path / "fc.geojson"
-    p.write_text(json.dumps(doc))
-    df = geojson.read_geojson(spark, str(p))
-    assert df.count() == 1
-    assert df.first()["coords"] == [1.0, 2.0]
+    # every feature has its own integer id (a numeric string counts): the
+    # ids win, as in the JSONL reader
+    assert _read_feature_collection(spark, tmp_path, [7, "12"]) == \
+        {0: 7, 1: 12}
+
+
+def test_geojson_id_fallback(spark, tmp_path):
+    # the index numbers every feature when any id is missing, not an
+    # integer or repeated, so (feature_id, layer) stays unique in a file
+    for ids in ([None, 0], [0, "way/123"], [5, 5], [None, True]):
+        assert _read_feature_collection(spark, tmp_path, ids) == \
+            {0: 0, 1: 1}, ids
+    # JSONL: a string id (RFC 7946 allows one) falls back to the line id
+    p = tmp_path / "s.jsonl"
+    p.write_text(json.dumps({"type": "Feature", "id": "way/123",
+                             "properties": {}, "geometry": {
+                                 "type": "Point", "coordinates": [1, 2]}}))
+    assert [r["feature_id"] for r in
+            geojson.read_geojson(spark, str(p)).collect()] == [0]
 
 
 def _write_test_shapefile(path):

@@ -143,6 +143,25 @@ def test_geom_join_line_intersects(spark):
     assert got == {1, 2, 5}
 
 
+def test_geom_join_builds_no_job(spark):
+    """Building the geom_join plan starts no Spark job, even over a
+    grouped probe table whose partition count AQE only knows by running
+    it."""
+    from tilemaker_spark.operators.spatial_join import geom_join
+    probes = spark.createDataFrame([
+        (1, 1, [-5.0, 5.0, 5.0, 5.0], [2], []),
+        (2, 1, [20.0, 20.0, 30.0, 30.0], [2], []),
+    ], PROBE_SCHEMA).groupBy("feature_id").agg(*[
+        F.first(c).alias(c)
+        for c in ("kind", "coords", "ring_sizes", "poly_ring_counts")])
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = geom_join(probes, _box_poly_df(spark), predicate="intersects",
+                    index_zoom=4)
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert {r["feature_id"] for r in out.collect()} == {1}
+
+
 def test_geom_join_covered_by(spark):
     from tilemaker_spark.operators.spatial_join import geom_join
     probes = spark.createDataFrame([
@@ -186,17 +205,17 @@ def test_geom_join_area_intersecting(spark):
 def test_pairwise_kernels():
     line = np.array([[1.0, 1.0], [2.0, 2.0]])
     box = [[np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], float)]]
-    assert G.line_intersects_multipolygon(line, box)
-    assert G.line_covered_by_multipolygon(line, box)
+    assert G.lines_intersect_multipolygon_batch([line], box)[0]
+    assert G.lines_covered_by_multipolygon_batch([line], box)[0]
     crossing = np.array([[-5.0, 5.0], [5.0, 5.0]])
-    assert G.line_intersects_multipolygon(crossing, box)
-    assert not G.line_covered_by_multipolygon(crossing, box)
+    assert G.lines_intersect_multipolygon_batch([crossing], box)[0]
+    assert not G.lines_covered_by_multipolygon_batch([crossing], box)[0]
     far = np.array([[20.0, 20.0], [30.0, 20.0]])
-    assert not G.line_intersects_multipolygon(far, box)
+    assert not G.lines_intersect_multipolygon_batch([far], box)[0]
     small = [[np.array([[1, 1], [3, 1], [3, 3], [1, 3], [1, 1]], float)]]
-    assert G.multipolygon_intersects_multipolygon(small, box)
-    assert G.multipolygon_covered_by(small, box)
-    assert not G.multipolygon_covered_by(box, small)
+    assert G.mps_intersect_multipolygon_batch([small], box)[0]
+    assert G.mps_covered_by_batch([small], box)[0]
+    assert not G.mps_covered_by_batch([box], small)[0]
     # multi-part probe whose SECOND component lies wholly inside box with
     # no boundary crossing (first is far away) — containment must be
     # tested per component, not just on the first vertex of part 0
@@ -205,8 +224,8 @@ def test_pairwise_kernels():
                   float)],
         [np.array([[4, 4], [5, 4], [5, 5], [4, 5], [4, 4]], float)],
     ]
-    assert G.multipolygon_intersects_multipolygon(multi, box)
-    assert G.multipolygon_intersects_multipolygon(box, multi)
+    assert G.mps_intersect_multipolygon_batch([multi], box)[0]
+    assert G.mps_intersect_multipolygon_batch([box], multi)[0]
 
 
 def test_knn_cell_audit(spark):

@@ -10,9 +10,10 @@ Geometry representation used across the engine ("packed rings"):
 In DataFrames the same shapes are stored columnar as
 ``coords: array<double>`` (flat x0,y0,x1,y1,...) plus
 ``ring_sizes: array<int>`` and ``poly_ring_counts: array<int>`` — see
-:func:`pack_multipolygon` / :func:`unpack_multipolygon`.  This keeps Arrow
-transfer zero-copy-ish and lets every kernel work on contiguous numpy
-arrays.
+:func:`pack_multipolygon`; :func:`unpack` turns one such row back into
+geometry by its ``kind`` and :func:`covering_tiles` covers it with tiles.
+This keeps Arrow transfer zero-copy-ish and lets every kernel work on
+contiguous numpy arrays.
 
 Algorithms mirror the reference engine's semantics (cited per-function)
 without porting its code: Sutherland–Hodgman box clipping with escalation
@@ -84,6 +85,17 @@ def unpack_lines(flat, sizes):
     return out
 
 
+def unpack(kind, coords, ring_sizes, poly_ring_counts):
+    """One packed row -> geometry by ``kind``: an (n, 2) point array for
+    POINT, a list of (n, 2) lines for LINESTRING / MULTILINESTRING, a
+    multipolygon for POLYGON."""
+    if kind == POINT:
+        return np.asarray(coords, np.float64).reshape(-1, 2)
+    if kind in (LINESTRING, MULTILINESTRING):
+        return unpack_lines(coords, ring_sizes)
+    return unpack_multipolygon(coords, ring_sizes, poly_ring_counts)
+
+
 # ---------------------------------------------------------------------------
 # Predicates
 # ---------------------------------------------------------------------------
@@ -150,13 +162,6 @@ def ring_area_sq_m(ring):
     s = np.sin(phi)
     terms = (np.roll(lam, -1) - lam) * (2.0 + s + np.roll(s, -1))
     return abs(terms.sum()) * RADIUS_METER * RADIUS_METER / 2.0
-
-
-def polygon_area_sq_m(poly):
-    a = ring_area_sq_m(poly[0])
-    for hole in poly[1:]:
-        a -= ring_area_sq_m(hole)
-    return a
 
 
 def line_length_m(line):
@@ -405,44 +410,6 @@ def multipolygon_is_simple(mp) -> bool:
 # via boost::geometry intersects/covered_by/intersection)
 # ---------------------------------------------------------------------------
 
-def _any_segment_crossing(a: np.ndarray, b: np.ndarray) -> bool:
-    """True if any segment of polyline a intersects any segment of
-    polyline b (touching counts).  Vectorized O(n*m)."""
-    if len(a) < 2 or len(b) < 2:
-        return False
-    a1, a2 = a[:-1], a[1:]
-    b1, b2 = b[:-1], b[1:]
-
-    def cross(ox, oy, ax, ay, bx, by):
-        return (ax - ox) * (by - oy) - (ay - oy) * (bx - ox)
-
-    A1x = a1[:, 0][:, None]; A1y = a1[:, 1][:, None]
-    A2x = a2[:, 0][:, None]; A2y = a2[:, 1][:, None]
-    B1x = b1[:, 0][None, :]; B1y = b1[:, 1][None, :]
-    B2x = b2[:, 0][None, :]; B2y = b2[:, 1][None, :]
-    d1 = cross(B1x, B1y, B2x, B2y, A1x, A1y)
-    d2 = cross(B1x, B1y, B2x, B2y, A2x, A2y)
-    d3 = cross(A1x, A1y, A2x, A2y, B1x, B1y)
-    d4 = cross(A1x, A1y, A2x, A2y, B2x, B2y)
-    proper = (((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0)))
-    if proper.any():
-        return True
-    # touching / collinear-overlap: any endpoint of one on the other
-    deg = ((d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0))
-    if not deg.any():
-        return False
-    for i, j in zip(*np.nonzero(deg)):
-        for (p, s1, s2) in ((a1[i], b1[j], b2[j]), (a2[i], b1[j], b2[j]),
-                            (b1[j], a1[i], a2[i]), (b2[j], a1[i], a2[i])):
-            d = (s2[0] - s1[0]) * (p[1] - s1[1]) \
-                - (s2[1] - s1[1]) * (p[0] - s1[0])
-            if d == 0 and (min(s1[0], s2[0]) <= p[0] <= max(s1[0], s2[0])
-                           and min(s1[1], s2[1]) <= p[1]
-                           <= max(s1[1], s2[1])):
-                return True
-    return False
-
-
 def _mp_rings(mp) -> list:
     return [r for poly in mp for r in poly]
 
@@ -509,8 +476,8 @@ def _mp_boundary_segments(mp) -> tuple:
 
 
 def lines_intersect_multipolygon_batch(lines: list, mp) -> np.ndarray:
-    """Vectorized twin of :func:`line_intersects_multipolygon` over MANY
-    probe lines against ONE multipolygon: one crossing matrix + one
+    """Line/polygon Intersects, boundary crossing OR line inside, for
+    MANY probe lines against ONE multipolygon: one crossing matrix + one
     batched ray cast instead of per-line Python."""
     n = len(lines)
     a1, a2, owner = _batch_segments(lines)
@@ -528,7 +495,8 @@ def lines_intersect_multipolygon_batch(lines: list, mp) -> np.ndarray:
 
 
 def lines_covered_by_multipolygon_batch(lines: list, mp) -> np.ndarray:
-    """Vectorized twin of :func:`line_covered_by_multipolygon`."""
+    """Line CoveredBy polygon, per probe line: all vertices inside and no
+    boundary crossing (boost covered_by semantics for simple inputs)."""
     n = len(lines)
     pts = np.concatenate(lines)
     powner = np.repeat(np.arange(n), [len(l) for l in lines])
@@ -544,8 +512,12 @@ def lines_covered_by_multipolygon_batch(lines: list, mp) -> np.ndarray:
 
 
 def mps_intersect_multipolygon_batch(probes: list, mp) -> np.ndarray:
-    """Vectorized twin of :func:`multipolygon_intersects_multipolygon`
-    over many probe multipolygons vs one polygon."""
+    """Polygon/polygon Intersects, per probe multipolygon against one
+    multipolygon: boundary crossing OR containment either way.
+    Containment is tested per COMPONENT (one representative outer-ring
+    vertex of each polygon part) — a multi-part geometry can have a
+    non-first part wholly inside the other polygon with no boundary
+    crossing anywhere."""
     n = len(probes)
     rings = [(i, r) for i, p in enumerate(probes) for r in _mp_rings(p)]
     a1, a2, owner = _batch_segments([r for _, r in rings])
@@ -576,7 +548,10 @@ def mps_intersect_multipolygon_batch(probes: list, mp) -> np.ndarray:
 
 
 def mps_covered_by_batch(probes: list, mp) -> np.ndarray:
-    """Vectorized twin of :func:`multipolygon_covered_by`."""
+    """Polygon CoveredBy polygon, per probe multipolygon against one
+    multipolygon ``mp``: every probe vertex inside ``mp``, no boundary
+    crossing, and no hole of ``mp`` pokes into the probe
+    (hole-vertex-in-probe check)."""
     n = len(probes)
     rings = [(i, r) for i, p in enumerate(probes) for r in _mp_rings(p)]
     pts = np.concatenate([r for _, r in rings])
@@ -600,59 +575,6 @@ def mps_covered_by_batch(probes: list, mp) -> np.ndarray:
                 ok[i] = False
                 break
     return ok
-
-
-def line_intersects_multipolygon(line: np.ndarray, mp) -> bool:
-    """Line/polygon Intersects: boundary crossing OR line inside."""
-    for r in _mp_rings(mp):
-        if _any_segment_crossing(line, r):
-            return True
-    return bool(points_in_multipolygon(
-        line[:1, 0], line[:1, 1], mp)[0])
-
-
-def multipolygon_intersects_multipolygon(a, b) -> bool:
-    """Polygon/polygon Intersects: boundary crossing OR containment
-    either way.  Containment is tested per COMPONENT (one representative
-    outer-ring vertex of each polygon part) — a multi-part geometry can
-    have a non-first part wholly inside the other polygon with no
-    boundary crossing anywhere."""
-    ra, rb = _mp_rings(a), _mp_rings(b)
-    for x in ra:
-        for y in rb:
-            if _any_segment_crossing(x, y):
-                return True
-    if any(bool(points_in_multipolygon(
-            poly[0][:1, 0], poly[0][:1, 1], b)[0]) for poly in a):
-        return True
-    return any(bool(points_in_multipolygon(
-        poly[0][:1, 0], poly[0][:1, 1], a)[0]) for poly in b)
-
-
-def line_covered_by_multipolygon(line: np.ndarray, mp) -> bool:
-    """Line CoveredBy polygon: all vertices inside and no boundary
-    crossing (boost covered_by semantics for simple inputs)."""
-    if not points_in_multipolygon(line[:, 0], line[:, 1], mp).all():
-        return False
-    return not any(_any_segment_crossing(line, r) for r in _mp_rings(mp))
-
-
-def multipolygon_covered_by(a, b) -> bool:
-    """Polygon a CoveredBy polygon b: every a-vertex inside b, no boundary
-    crossing, and no b-hole pokes into a (hole-vertex-in-a check)."""
-    ra = _mp_rings(a)
-    for r in ra:
-        if not points_in_multipolygon(r[:, 0], r[:, 1], b).all():
-            return False
-    for x in ra:
-        for y in _mp_rings(b):
-            if _any_segment_crossing(x, y):
-                return False
-    for poly in b:
-        for hole in poly[1:]:
-            if points_in_multipolygon(hole[:, 0], hole[:, 1], a).any():
-                return False
-    return True
 
 
 # ---------------------------------------------------------------------------
@@ -1123,10 +1045,29 @@ def covering_tiles_polygon(mp, z):
 
 
 def covering_tiles_point(lon, lat, z):
+    """The (1, 2) int64 tile holding one point at zoom z, clamped to the
+    grid."""
     x = int(np.floor(lon2tilexf(lon, z)))
     y = int(np.floor(lat2tileyf(lat, z)))
     m = (1 << z) - 1
     return np.asarray([[min(max(x, 0), m), min(max(y, 0), m)]], np.int64)
+
+
+def covering_tiles(kind, geom, z):
+    """Unique (n, 2) int64 tiles at zoom z covered by ``geom``, a geometry
+    of ``kind`` in the shape :func:`unpack` returns.  An empty geometry
+    covers no tile."""
+    if len(geom) == 0:
+        return np.zeros((0, 2), np.int64)
+    if kind == POINT:
+        if len(geom) == 1:  # np.unique(axis=0) costs more than the cover
+            return covering_tiles_point(geom[0, 0], geom[0, 1], z)
+        return np.unique(np.concatenate([
+            covering_tiles_point(x, y, z) for x, y in geom]), axis=0)
+    if kind in (LINESTRING, MULTILINESTRING):
+        return np.unique(np.concatenate([
+            covering_tiles_line(l, z) for l in geom]), axis=0)
+    return covering_tiles_polygon(geom, z)
 
 
 # ---------------------------------------------------------------------------

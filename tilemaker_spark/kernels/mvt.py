@@ -22,6 +22,7 @@ from typing import Any
 
 import numpy as np
 
+from . import geom as G
 from .wire import (field_bytes, field_varint, fields, packed_varints, tag,
                    unzigzag, varint, zigzag)
 
@@ -103,11 +104,10 @@ def encode_polygon_geom(mp: list[list[np.ndarray]], extent: int) -> list[int]:
                 if ri == 0:
                     break  # degenerate outer -> whole polygon vanishes
                 continue
-            # screen-space shoelace (y grows down): CW outer => positive
-            x, y = g[:, 0].astype(float), g[:, 1].astype(float)
-            area2 = float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
+            # screen-space shoelace (y grows down): a screen-CW ring has
+            # positive signed area
             want_cw = ri == 0
-            is_cw = area2 > 0  # screen-CW ring (y down) has positive shoelace sum
+            is_cw = G.signed_ring_area_planar(g.astype(float)) > 0
             if want_cw != is_cw:
                 g = g[::-1]
             cmds.append(MOVETO | (1 << 3))

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import geom as G
+
 # default integer grid: fine enough that snapping is far below output
 # resolution (tiles encode at 4096; callers pass tile-sized coords)
 DEFAULT_SCALE = 1 << 20
@@ -271,11 +273,6 @@ def _stitch(directed: list[tuple]) -> list[np.ndarray]:
     return rings
 
 
-def _ring_area2(r: np.ndarray) -> float:
-    x, y = r[:, 0], r[:, 1]
-    return float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
-
-
 # ---------------------------------------------------------------------------
 # public API
 # ---------------------------------------------------------------------------
@@ -346,7 +343,7 @@ def _overlay(mps: list, predicate, scale: float | None = None) -> list:
     rings = _stitch(directed)
     outers, holes = [], []
     for r in rings:
-        a2 = _ring_area2(r)
+        a2 = 2.0 * G.signed_ring_area_planar(r)
         if abs(a2) < 1e-9:
             continue
         rr = np.vstack([r, r[:1]])
@@ -358,7 +355,7 @@ def _overlay(mps: list, predicate, scale: float | None = None) -> list:
     # assign holes to the smallest containing outer
     polys = [[o] for o in outers]
     if holes and outers:
-        areas = [abs(_ring_area2(o)) for o in outers]
+        areas = [abs(G.signed_ring_area_planar(o)) for o in outers]
         order = np.argsort(areas)
         for h in holes:
             hx, hy = h[0, 0], h[0, 1]
@@ -448,6 +445,6 @@ def area_planar(mp: list) -> float:
                 pass
             else:
                 r = np.vstack([r, r[:1]])
-            a = abs(_ring_area2(r)) / 2.0
+            a = abs(G.signed_ring_area_planar(r))
             tot += a if ri == 0 else -a
     return tot

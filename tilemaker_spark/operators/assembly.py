@@ -32,9 +32,10 @@ def assemble_way_geometries(ways: DataFrame, nodes: DataFrame,
     """ways(id, refs, tags) ⋈ nodes(id, lon, lat) -> way geometries.
 
     Output: (id, tags, coords array<double> flat lon/lat in ref order,
-    n_refs, n_found, is_closed).  With ``skip_integrity=False`` missing
-    nodes raise (reference errors unless --skip-integrity,
-    src/pbf_processor.cpp:131-140); otherwise ways keep the nodes found.
+    n_refs, n_found, is_closed).  With ``skip_integrity=False`` a way
+    that references a missing node is silently dropped (the reference
+    errors instead unless --skip-integrity, src/pbf_processor.cpp:131-140);
+    otherwise ways keep the nodes found.
     """
     exploded = ways.select(
         F.col("id").alias("way_id"),
@@ -71,9 +72,9 @@ def assemble_way_geometries(ways: DataFrame, nodes: DataFrame,
         out = out.withColumn(
             "_ok", F.col("n_found") == F.col("n_refs")
         )
-        # enforce integrity lazily: a filter that keeps everything when ok
-        # and lets callers assert count parity (raising inside Catalyst is
-        # not expressible; the source job validates counts)
+        # enforce integrity lazily: drop every way with a missing node
+        # (raising inside Catalyst is not expressible, and no caller
+        # checks the counts)
         out = out.filter(F.col("_ok")).drop("_ok")
     return out
 

@@ -37,11 +37,11 @@ from .tiling import (FEATURE_SCHEMA, cover_features, expand_coarse,
 
 def _pixel_coords(flat: np.ndarray, z: int, x: int, y: int,
                   size: int) -> np.ndarray:
-    """lon/lat flat pairs -> (n, 2) tile-local pixel coords (y down)."""
+    """lon/lat flat pairs -> flat tile-local pixel coords (y down)."""
     pts = np.asarray(flat, np.float64).reshape(-1, 2)
     px = (P.lon2tilexf(pts[:, 0], z) - x) * size
     py = (P.latp2tileyf(P.lat2latp(pts[:, 1]), z) - y) * size
-    return np.column_stack([px, py])
+    return np.column_stack([px, py]).reshape(-1)
 
 
 def render_raster_tiles(features: DataFrame, zoom: int,
@@ -73,35 +73,24 @@ def render_raster_tiles(features: DataFrame, zoom: int,
         x = int(pdf["bx"].iloc[0])
         y = int(pdf["by"].iloc[0])
         rows = []
-        for i in range(len(pdf)):
-            kind = int(pdf["kind"].iloc[i])
-            layer = pdf["layer"].iloc[i]
-            pix = _pixel_coords(pdf["coords"].iloc[i], zoom, x, y, size)
-            if kind == 3:
-                mp = G.unpack_multipolygon(
-                    np.asarray(pdf["coords"].iloc[i], np.float64),
-                    np.asarray(pdf["ring_sizes"].iloc[i], np.int64),
-                    np.asarray(pdf["poly_ring_counts"].iloc[i], np.int64))
-                k = 0
-                pix_mp = []
-                for poly in mp:
-                    pix_poly = []
-                    for ring in poly:
-                        n = len(ring)
-                        pix_poly.append(pix[k:k + n])
-                        k += n
-                    pix_mp.append(pix_poly)
-                rows.append((layer, 3, pix_mp))
-            elif kind == 1:
-                parts = G.clip_line_to_box(pix, 0.0, 0.0,
-                                           float(size), float(size))
+        for kind, layer, coords, rs, prc in zip(
+                pdf["kind"].to_numpy(), pdf["layer"].to_numpy(),
+                pdf["coords"].to_numpy(), pdf["ring_sizes"].to_numpy(),
+                pdf["poly_ring_counts"].to_numpy()):
+            geom = G.unpack(kind, _pixel_coords(coords, zoom, x, y, size),
+                            rs, prc)
+            if kind == G.POLYGON:
+                rows.append((layer, G.POLYGON, geom))
+            elif kind in (G.LINESTRING, G.MULTILINESTRING):
+                parts = [part for l in geom for part in G.clip_line_to_box(
+                    l, 0.0, 0.0, float(size), float(size))]
                 if parts:
-                    rows.append((layer, 1, parts))
+                    rows.append((layer, G.LINESTRING, parts))
             else:
-                inside = ((pix[:, 0] >= 0) & (pix[:, 0] < size)
-                          & (pix[:, 1] >= 0) & (pix[:, 1] < size))
+                inside = ((geom[:, 0] >= 0) & (geom[:, 0] < size)
+                          & (geom[:, 1] >= 0) & (geom[:, 1] < size))
                 if inside.any():
-                    rows.append((layer, 0, pix[inside]))
+                    rows.append((layer, G.POINT, geom[inside]))
         canvas = R.render_features(rows, size=size)
         return pd.DataFrame({
             "z": [zoom], "x": [x], "y": [y],

@@ -6,9 +6,9 @@ with its filter-refine strategy (z15 candidate pre-filter then exact test,
 src/shp_mem_tiles.cpp:58-127) as one Spark plan with two physical
 strategies:
 
-1. polygons explode to their covering cells at ``index_zoom`` (a pandas
-   UDF over the small polygon side only — the covering raster needs
-   imperative code);
+1. polygons explode to their covering cells at ``index_zoom`` (the
+   packed-geometry cell UDF :func:`geometry_cells_udf` over the small
+   polygon side only — the covering raster needs imperative code);
 2. points compute one cell id each — a pure Catalyst expression;
 3. an equi-join on the cell key builds candidates: ``broadcast`` strategy
    broadcasts the exploded polygon-cell table (the R-tree analogue for
@@ -26,10 +26,6 @@ Polygon DataFrame contract (packed-ring schema, ``kernels.geom``):
 ``poly_id``, ``coords array<double>`` (flat lon/lat, rings closed),
 ``ring_sizes array<int>``, ``poly_ring_counts array<int>``; optional
 ``minlon/minlat/maxlon/maxlat`` enable a cheap bbox pre-test.
-
-A legacy Arrow-probe implementation (``pip_join_mappandas``) is kept for
-cross-checking in tests; the expression path is the production one — it
-removed the JVM<->Python Arrow hop that capped multi-core scaling.
 """
 
 from __future__ import annotations
@@ -92,18 +88,16 @@ def points_in_mp_expr(px: Column, py: Column, coords: Column,
     return total % 2 == 1
 
 
-def polygon_cells_udf(index_zoom: int):
-    """array<long> covering-cell ids per polygon (small side only)."""
+def geometry_cells_udf(index_zoom: int):
+    """array<long> covering-cell ids for ANY packed geometry (point /
+    line / polygon by ``kind``): probes and polygons alike."""
 
     @F.pandas_udf("array<long>")
-    def cells(coords: pd.Series, ring_sizes: pd.Series,
+    def cells(kind: pd.Series, coords: pd.Series, ring_sizes: pd.Series,
               poly_counts: pd.Series) -> pd.Series:
         out = []
-        for c, rs, pc in zip(coords, ring_sizes, poly_counts):
-            mp = G.unpack_multipolygon(
-                np.asarray(c, np.float64), np.asarray(rs, np.int64),
-                np.asarray(pc, np.int64))
-            cc = G.covering_tiles_polygon(mp, index_zoom)
+        for k, c, rs, pc in zip(kind, coords, ring_sizes, poly_counts):
+            cc = G.covering_tiles(k, G.unpack(k, c, rs, pc), index_zoom)
             out.append(P.tile_id(index_zoom, cc[:, 0], cc[:, 1]).tolist())
         return pd.Series(out)
 
@@ -136,7 +130,7 @@ def pip_join(
     which is O(cols) and fragile for NaN-bearing floats.
     """
     iz = index_zoom
-    cells = polygon_cells_udf(iz)
+    cells = geometry_cells_udf(iz)
     geom_cols = ["coords", "ring_sizes", "poly_ring_counts"]
     has_bbox = all(c in polygons.columns
                    for c in ("minlon", "minlat", "maxlon", "maxlat"))
@@ -145,8 +139,8 @@ def pip_join(
         + (["minlon", "minlat", "maxlon", "maxlat"] if has_bbox else [])))
     poly_exploded = polygons.select(
         *keep,
-        F.explode(cells("coords", "ring_sizes", "poly_ring_counts"))
-        .alias("_cell"),
+        F.explode(cells(F.lit(G.POLYGON), "coords", "ring_sizes",
+                        "poly_ring_counts")).alias("_cell"),
     )
     pts = points.withColumn(
         "_cell", TE.cell_id(F.col(lon_col), F.col(lat_col), iz))
@@ -237,37 +231,6 @@ def pip_join_cell(points: DataFrame, polygons: DataFrame, **kw):
 # (reference src/osm_lua_processing.cpp:409-502)
 # ---------------------------------------------------------------------------
 
-def geometry_cells_udf(index_zoom: int):
-    """array<long> covering-cell ids for ANY packed geometry (point /
-    line / polygon by ``kind``) — the probe-side twin of
-    :func:`polygon_cells_udf`."""
-
-    @F.pandas_udf("array<long>")
-    def cells(kind: pd.Series, coords: pd.Series, ring_sizes: pd.Series,
-              poly_counts: pd.Series) -> pd.Series:
-        out = []
-        for k, c, rs, pc in zip(kind, coords, ring_sizes, poly_counts):
-            arr = np.asarray(c, np.float64)
-            pts = arr.reshape(-1, 2)
-            if k == G.POINT:
-                cc = np.unique(np.concatenate([
-                    G.covering_tiles_point(p[0], p[1], index_zoom)
-                    for p in pts]), axis=0)
-            elif k in (G.LINESTRING, G.MULTILINESTRING):
-                lines = G.unpack_lines(arr, np.asarray(rs, np.int64))
-                cc = np.unique(np.concatenate([
-                    G.covering_tiles_line(l, index_zoom) for l in lines
-                ]), axis=0)
-            else:
-                mp = G.unpack_multipolygon(
-                    arr, np.asarray(rs, np.int64), np.asarray(pc, np.int64))
-                cc = G.covering_tiles_polygon(mp, index_zoom)
-            out.append(P.tile_id(index_zoom, cc[:, 0], cc[:, 1]).tolist())
-        return pd.Series(out)
-
-    return cells
-
-
 def _refine_batch(pdf: pd.DataFrame, predicate: str,
                   probe_cols: list, poly_cols: list) -> pd.DataFrame:
     """Refine one Arrow batch of candidate rows: group by polygon (by the
@@ -277,24 +240,22 @@ def _refine_batch(pdf: pd.DataFrame, predicate: str,
     n = len(pdf)
     keep = np.zeros(n, bool)
     areas = np.zeros(n, np.float64)
-    kinds = pdf["kind"].to_numpy()
+    kinds, coords, rsz, prc, pcoords, prsz, pprc = (
+        pdf[c].to_numpy() for c in (
+            "kind", "coords", "ring_sizes", "poly_ring_counts",
+            "_pcoords", "_pring_sizes", "_ppoly_ring_counts"))
     is_line = np.isin(kinds, (G.LINESTRING, G.MULTILINESTRING))
     for _, idx in pdf.groupby(list(poly_cols), sort=False).indices.items():
         idx = np.asarray(idx)
-        r0 = pdf.iloc[idx[0]]
-        mpb = G.unpack_multipolygon(
-            np.asarray(r0["_pcoords"], np.float64),
-            np.asarray(r0["_pring_sizes"], np.int64),
-            np.asarray(r0["_ppoly_ring_counts"], np.int64))
+        i0 = idx[0]
+        mpb = G.unpack(G.POLYGON, pcoords[i0], prsz[i0], pprc[i0])
         lpos = idx[is_line[idx]]
         ppos = idx[~is_line[idx]]
         if len(lpos):
             # flatten each probe's component lines; reduce back per probe
             probe_lines, owner = [], []
             for j, i in enumerate(lpos):
-                ls = G.unpack_lines(
-                    np.asarray(pdf["coords"].iloc[i], np.float64),
-                    np.asarray(pdf["ring_sizes"].iloc[i], np.int64))
+                ls = G.unpack(kinds[i], coords[i], rsz[i], prc[i])
                 probe_lines.extend(ls)
                 owner.extend([j] * len(ls))
             owner = np.asarray(owner, np.int64)
@@ -312,11 +273,8 @@ def _refine_batch(pdf: pd.DataFrame, predicate: str,
                 agg = np.zeros(len(lpos), bool)
             keep[lpos] = agg
         if len(ppos):
-            mps = [G.unpack_multipolygon(
-                np.asarray(pdf["coords"].iloc[i], np.float64),
-                np.asarray(pdf["ring_sizes"].iloc[i], np.int64),
-                np.asarray(pdf["poly_ring_counts"].iloc[i], np.int64))
-                for i in ppos]
+            mps = [G.unpack(G.POLYGON, coords[i], rsz[i], prc[i])
+                   for i in ppos]
             if predicate == "intersects":
                 keep[ppos] = G.mps_intersect_multipolygon_batch(mps, mpb)
             elif predicate == "covered_by":
@@ -357,23 +315,19 @@ def geom_join(
     poly_ring_counts) + ``probe_cols`` identifying columns.
     Output: probe_cols + poly_cols (+ ``area_deg2`` for predicate='area').
     """
-    gcells = geometry_cells_udf(index_zoom)
-    pcells = polygon_cells_udf(index_zoom)
-    # spread the probe side if it arrives under-partitioned (single-file
-    # tables would run the covering UDF and refine on one core); keep the
-    # existing partitioning when it is already adequate — an unconditional
-    # repartition forces a shuffle that hurts N->4N scaling on small inputs
-    parallelism = probes.sparkSession.sparkContext.defaultParallelism
-    if probes.rdd.getNumPartitions() < parallelism:
-        probes = probes.repartition(parallelism)
+    cells = geometry_cells_udf(index_zoom)
+    # one task per core: a single-file probe table would otherwise run the
+    # covering UDF and refine on one core.  Always repartition: asking the
+    # input for its partition count runs every shuffle stage above it.
+    probes = probes.repartition(
+        probes.sparkSession.sparkContext.defaultParallelism)
     geom_cols = ["kind", "coords", "ring_sizes", "poly_ring_counts"]
     pr_ids = probes.select(
         *probe_cols,
-        F.explode(gcells(*geom_cols)).alias("_cell"))
+        F.explode(cells(*geom_cols)).alias("_cell"))
     po_ids = polygons.select(
         *poly_cols,
-        F.explode(pcells("coords", "ring_sizes", "poly_ring_counts"))
-        .alias("_cell"))
+        F.explode(cells(F.lit(G.POLYGON), *geom_cols[1:])).alias("_cell"))
     right = F.broadcast(po_ids) if strategy == "broadcast" else po_ids
     cand_ids = (
         pr_ids.join(right, on="_cell", how="inner")
@@ -406,104 +360,3 @@ def geom_join(
                 yield _refine_batch(pdf, predicate, pc_l, pl_l)
 
     return cand.mapInPandas(refine, schema=out_schema)
-
-
-# ---------------------------------------------------------------------------
-# legacy Arrow-probe implementation (kept for cross-checks/tests)
-# ---------------------------------------------------------------------------
-
-def _poly_rows_to_index(rows, index_zoom: int):
-    index: dict[int, list] = {}
-    polys = {}
-    for r in rows:
-        mp = G.unpack_multipolygon(
-            np.asarray(r["coords"], np.float64),
-            np.asarray(r["ring_sizes"], np.int64),
-            np.asarray(r["poly_ring_counts"], np.int64),
-        )
-        polys[r["poly_id"]] = mp
-        cc = G.covering_tiles_polygon(mp, index_zoom)
-        keys = P.tile_id(index_zoom, cc[:, 0], cc[:, 1])
-        for key in keys.tolist():
-            index.setdefault(key, []).append(r["poly_id"])
-    return index, polys
-
-
-def pip_join_mappandas(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    index_zoom: int = 7,
-    poly_cols: tuple = ("poly_id",),
-) -> DataFrame:
-    """Arrow-probe variant: polygons collected into a grid-bucket index,
-    broadcast, probed batch-wise with numpy ray casts inside mapInPandas.
-    Same results as pip_join (tested); superseded by the expression path,
-    which avoids the JVM<->Python hop on the big side."""
-    from typing import Iterator
-
-    spark = points.sparkSession
-    rows = [r.asDict() for r in polygons.collect()]
-    index, polys = _poly_rows_to_index(rows, index_zoom)
-    extras = {
-        r["poly_id"]: {c: r[c] for c in poly_cols if c != "poly_id"}
-        for r in rows
-    }
-    b = spark.sparkContext.broadcast((index, polys, extras))
-
-    out_fields = [f"{f.name} {f.dataType.simpleString()}"
-                  for f in points.schema.fields]
-    poly_schema = {f.name: f.dataType.simpleString()
-                   for f in polygons.schema.fields}
-    for c in poly_cols:
-        out_fields.append(f"{c} {poly_schema[c]}")
-    out_schema = ", ".join(out_fields)
-    pt_names = [f.name for f in points.schema.fields]
-    iz = index_zoom
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index, polys, extras = b.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            lon = pdf[lon_col].to_numpy(np.float64)
-            lat = np.clip(pdf[lat_col].to_numpy(np.float64),
-                          -P.MAX_LAT, P.MAX_LAT)
-            n = 1 << iz
-            cx = np.clip(P.lon2tilex(lon, iz), 0, n - 1)
-            cy = np.clip(P.lat2tiley(lat, iz), 0, n - 1)
-            keys = P.tile_id(iz, cx, cy)
-            order = np.argsort(keys, kind="stable")
-            match_pt: list[np.ndarray] = []
-            match_poly: list = []
-            uniq, starts = np.unique(keys[order], return_index=True)
-            bounds = np.append(starts, len(order))
-            for ui, key in enumerate(uniq.tolist()):
-                cand = index.get(key)
-                if not cand:
-                    continue
-                sel = order[bounds[ui]:bounds[ui + 1]]
-                for pid in cand:
-                    hitv = G.points_in_multipolygon(
-                        lon[sel], lat[sel], polys[pid])
-                    if hitv.any():
-                        match_pt.append(sel[hitv])
-                        match_poly.append(pid)
-            if match_pt:
-                idx = np.concatenate(match_pt)
-                pids = np.concatenate([
-                    np.full(len(m), pid, dtype=object)
-                    for m, pid in zip(match_pt, match_poly)
-                ])
-            else:
-                idx = np.zeros(0, np.int64)
-                pids = np.zeros(0, object)
-            matched = pdf.iloc[idx][pt_names].reset_index(drop=True)
-            matched["poly_id"] = pids
-            for c in poly_cols:
-                if c != "poly_id":
-                    matched[c] = [extras[p][c] for p in pids]
-            yield matched
-
-    return points.mapInPandas(probe, schema=out_schema)

@@ -75,17 +75,6 @@ def _bbox_tile_span(pts: np.ndarray, z: int) -> int:
     return int((tx.max() - tx.min() + 1) * (ty.max() - ty.min() + 1))
 
 
-def _cover(kind, coords, ring_sizes, poly_ring_counts, z: int) -> np.ndarray:
-    """(n, 2) covering tiles of one line or polygon feature at zoom z."""
-    if kind in (G.LINESTRING, G.MULTILINESTRING):
-        lines = G.unpack_lines(coords, np.asarray(ring_sizes, np.int64))
-        return np.unique(np.concatenate([
-            G.covering_tiles_line(l, z) for l in lines]), axis=0)
-    mp = G.unpack_multipolygon(coords, np.asarray(ring_sizes, np.int64),
-                               np.asarray(poly_ring_counts, np.int64))
-    return G.covering_tiles_polygon(mp, z)
-
-
 def cover_features(features: DataFrame, base_zoom: int = 14,
                    large_threshold: int | None = LARGE_THRESHOLD
                    ) -> DataFrame:
@@ -120,22 +109,15 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
                     pdf["kind"].to_numpy(), pdf["coords"].to_numpy(),
                     pdf["ring_sizes"].to_numpy(),
                     pdf["poly_ring_counts"].to_numpy())):
-                coords = np.asarray(coords, np.float64)
-                pts = coords.reshape(-1, 2)
-                if kind == G.POINT:
-                    # multipoint: cover every point's tile (not just pts[0])
-                    cells.append(np.unique(np.concatenate([
-                        G.covering_tiles_point(p[0], p[1], base_zoom)
-                        for p in pts
-                    ]), axis=0) if len(pts) > 1 else G.covering_tiles_point(
-                        pts[0, 0], pts[0, 1], base_zoom))
-                elif dual and _bbox_tile_span(
-                        pts, base_zoom) >= large_threshold:
+                geom = G.unpack(kind, coords, rs, prc)
+                if (dual and kind != G.POINT and _bbox_tile_span(
+                        np.asarray(coords, np.float64).reshape(-1, 2),
+                        base_zoom) >= large_threshold):
                     coarse[i] = True
                     cells.append(  # cell -> its first base tile
-                        _cover(kind, coords, rs, prc, CLUSTER_ZOOM) << dz)
+                        G.covering_tiles(kind, geom, CLUSTER_ZOOM) << dz)
                 else:
-                    cells.append(_cover(kind, coords, rs, prc, base_zoom))
+                    cells.append(G.covering_tiles(kind, geom, base_zoom))
             reps = [len(c) for c in cells]
             out = pdf.loc[pdf.index.repeat(reps)].reset_index(drop=True)
             xy = (np.concatenate(cells) if cells
@@ -169,20 +151,13 @@ def _expand_coarse_rows(pdf: pd.DataFrame, base_zoom: int) -> pd.DataFrame:
             CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
         box = (minlon, float(P.latp2lat(minlatp)),
                maxlon, float(P.latp2lat(maxlatp)))
-        coords = np.asarray(coords, np.float64)
+        geom = G.unpack(kind, coords, rs, prc)
         if kind in (G.LINESTRING, G.MULTILINESTRING):
-            parts = [part for l in G.unpack_lines(
-                coords, np.asarray(rs, np.int64))
-                for part in G.clip_line_to_box(l, *box)]
-            c = np.unique(np.concatenate([
-                G.covering_tiles_line(part, base_zoom) for part in parts
-            ]), axis=0) if parts else np.zeros((0, 2), np.int64)
+            geom = [part for l in geom
+                    for part in G.clip_line_to_box(l, *box)]
         else:
-            clipped = G.clip_multipolygon_to_box(G.unpack_multipolygon(
-                coords, np.asarray(rs, np.int64),
-                np.asarray(prc, np.int64)), *box)
-            c = (G.covering_tiles_polygon(clipped, base_zoom) if clipped
-                 else np.zeros((0, 2), np.int64))
+            geom = G.clip_multipolygon_to_box(geom, *box)
+        c = G.covering_tiles(kind, geom, base_zoom)
         cells.append(c[((c[:, 0] >> dz) == cx) & ((c[:, 1] >> dz) == cy)])
     exp = big.loc[big.index.repeat([len(c) for c in cells])].copy()
     xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
@@ -452,9 +427,9 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
             elif kind in (G.LINESTRING, G.MULTILINESTRING):
                 gkey = (fid, lay)
                 cached = clip_in.get(gkey) if clip_in else None
-                lines = cached if cached is not None else G.unpack_lines(
-                    coords.reshape(-1),
-                    np.asarray(cols["ring_sizes"][row], np.int64))
+                lines = cached if cached is not None else G.unpack(
+                    kind, coords, cols["ring_sizes"][row],
+                    cols["poly_ring_counts"][row])
                 parts = []
                 for l in lines:
                     parts.extend(G.clip_line_to_box(
@@ -484,10 +459,9 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
             else:  # polygon
                 gkey = (fid, lay)
                 cached = clip_in.get(gkey) if clip_in else None
-                mp = cached if cached is not None else G.unpack_multipolygon(
-                    coords.reshape(-1),
-                    np.asarray(cols["ring_sizes"][row], np.int64),
-                    np.asarray(cols["poly_ring_counts"][row], np.int64))
+                mp = cached if cached is not None else G.unpack(
+                    kind, coords, cols["ring_sizes"][row],
+                    cols["poly_ring_counts"][row])
                 clipped = G.clip_multipolygon_to_box(
                     mp, minlon, minlat, maxlon, maxlat)
                 if clip_out is not None:

@@ -200,10 +200,9 @@ def _polygons_to_label_points(features: DataFrame,
                         rs_o.append([1])
                         pc_o.append([])
                         continue
-                mp = G.unpack_multipolygon(
-                    np.asarray(pdf["coords"].iloc[i], np.float64),
-                    np.asarray(pdf["ring_sizes"].iloc[i], np.int64),
-                    np.asarray(pdf["poly_ring_counts"].iloc[i], np.int64))
+                mp = G.unpack(G.POLYGON, pdf["coords"].iloc[i],
+                              pdf["ring_sizes"].iloc[i],
+                              pdf["poly_ring_counts"].iloc[i])
                 if algorithm == "centroid":
                     x, y = G.multipolygon_centroid(mp)
                 else:

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import json
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +48,19 @@ def _pack_geometry(gtype: str, coords) -> tuple:
     return (G.POLYGON, flat, sizes, counts)
 
 
+def _feature_id(ft: dict):
+    """A Feature's ``"id"`` as an int, or None when it has none or it is
+    not an integer (RFC 7946 also allows string ids such as
+    ``"way/123"``)."""
+    fid = ft.get("id")
+    if isinstance(fid, str) and fid.isascii() and fid.isdigit():
+        fid = int(fid)
+    if (isinstance(fid, bool) or not isinstance(fid, int)
+            or not -2**63 <= fid < 2**63):
+        return None
+    return fid
+
+
 def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
                  minzoom: int = 0, attribute_function=None) -> DataFrame:
     """JSONL (one Feature per line) or FeatureCollection file -> features
@@ -69,14 +81,19 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
         with open(path) as f:
             doc = json.load(f)
         feats = doc.get("features", [])
+        # (feature_id, layer) is a feature's identity in the tile build:
+        # number by index unless every feature has its own integer id
+        ids = [_feature_id(ft) for ft in feats]
+        if None in ids or len(set(ids)) < len(ids):
+            ids = range(len(feats))
         rows = []
-        for i, ft in enumerate(feats):
+        for fid, ft in zip(ids, feats):
             kind, flat, sizes, counts = _pack_geometry(
                 ft["geometry"]["type"], ft["geometry"]["coordinates"])
             props, fmz = apply_attribute_function(
                 ft.get("properties") or {}, layer, minzoom,
                 attribute_function)
-            rows.append((i, layer, kind, fmz, 0, props, flat, sizes,
+            rows.append((fid, layer, kind, fmz, 0, props, flat, sizes,
                          counts))
         from ..operators.tiling import FEATURE_SCHEMA
         return spark.createDataFrame(rows, FEATURE_SCHEMA)
@@ -105,7 +122,8 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
                 props, fmz = apply_attribute_function(
                     ft.get("properties") or {}, layer, minzoom,
                     attribute_function)
-                out["feature_id"].append(int(ft.get("id", lid)))
+                fid = _feature_id(ft)
+                out["feature_id"].append(lid if fid is None else fid)
                 out["layer"].append(layer)
                 out["kind"].append(kind)
                 out["minzoom"].append(fmz)
@@ -126,25 +144,23 @@ def write_geojson(features: DataFrame, path: str) -> None:
     JSONL of GeoJSON Features (driver-side; debugging tool)."""
     with open(path, "w") as f:
         for r in features.toLocalIterator():
-            mp = G.unpack_multipolygon(
-                np.asarray(r["coords"]), np.asarray(r["ring_sizes"]),
-                np.asarray(r["poly_ring_counts"])) if r["kind"] == G.POLYGON \
-                else None
-            if r["kind"] == G.POINT:
-                geom = {"type": "Point", "coordinates": list(r["coords"][:2])}
-            elif r["kind"] in (G.LINESTRING, G.MULTILINESTRING):
-                lines = G.unpack_lines(np.asarray(r["coords"]),
-                                       np.asarray(r["ring_sizes"]))
-                if len(lines) == 1:
-                    geom = {"type": "LineString",
-                            "coordinates": lines[0].tolist()}
-                else:
-                    geom = {"type": "MultiLineString",
-                            "coordinates": [l.tolist() for l in lines]}
+            kind = r["kind"]
+            geom = G.unpack(kind, r["coords"], r["ring_sizes"],
+                            r["poly_ring_counts"])
+            if kind == G.POINT:
+                geom = ({"type": "Point", "coordinates": geom[0].tolist()}
+                        if len(geom) == 1 else
+                        {"type": "MultiPoint", "coordinates": geom.tolist()})
+            elif kind == G.LINESTRING and len(geom) == 1:
+                geom = {"type": "LineString",
+                        "coordinates": geom[0].tolist()}
+            elif kind in (G.LINESTRING, G.MULTILINESTRING):
+                geom = {"type": "MultiLineString",
+                        "coordinates": [l.tolist() for l in geom]}
             else:
                 geom = {"type": "MultiPolygon",
                         "coordinates": [[rg.tolist() for rg in poly]
-                                        for poly in mp]}
+                                        for poly in geom]}
             f.write(json.dumps({
                 "type": "Feature", "id": r["feature_id"],
                 "properties": dict(r["attrs"] or {}), "geometry": geom,
