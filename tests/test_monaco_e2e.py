@@ -34,7 +34,7 @@ def monaco_tiles(spark):
         assemble_way_geometries, assemble_relation_multipolygons)
     from tilemaker_spark.plans.profile import openmaptiles_lite
     from tilemaker_spark.operators import tiling
-    nodes, ways, rels = pbf_src.read_pbf(spark, MONACO)
+    nodes, ways, rels = pbf_src.read_pbf_multi(spark, [MONACO])
     wg = assemble_way_geometries(ways, nodes, skip_integrity=True).cache()
     rg = assemble_relation_multipolygons(
         rels.filter("tags['type'] = 'multipolygon'"), wg)

@@ -64,20 +64,3 @@ def test_golden_relation(decoded):
     assert rel[1][2][0] == pbf.MEMBER_WAY
     assert rel[1][16][0] == pbf.MEMBER_RELATION
 
-
-def test_blob_type_ranges_prune():
-    """Sort.Type_then_ID pruning (reference src/pbf_processor.cpp:545-591):
-    each phase's blob range is a strict subset of the full data-blob list,
-    boundaries overlap by at most the one-blob slack, and the pruned
-    read_pbf still yields the golden entity counts (checked by the e2e
-    test above via read_pbf)."""
-    from tilemaker_spark.sources import pbf as P
-    from tilemaker_spark.kernels import pbf as K
-    n_data = sum(1 for r in K.scan_blobs(MONACO) if r.kind == "OSMData")
-    r = P.blob_type_ranges(MONACO)
-    assert r is not None
-    total_scanned = sum(hi - lo + 1 for lo, hi in r.values())
-    assert total_scanned < 3 * n_data  # strictly fewer than 3 full scans
-    assert r["nodes"][0] == 0 and r["relations"][1] == n_data - 1
-    assert r["nodes"][1] >= r["ways"][0]       # 1-blob boundary slack
-    assert r["ways"][1] >= r["relations"][0]

@@ -196,7 +196,7 @@ def test_used_closure_prunes_nodes(spark):
     are kept iff referenced by a used way, listed by an accepted
     relation's member way, or passing node_keys."""
     from tilemaker_spark.sources import pbf as pbf_src
-    nodes, ways, rels = pbf_src.read_pbf(spark, MONACO)
+    nodes, ways, rels = pbf_src.read_pbf_multi(spark, [MONACO])
     n_all = nodes.count()
     nu, wu = prof.used_closure(
         nodes, ways,
@@ -225,7 +225,7 @@ def test_synth_used_closure_prunes_nodes(spark, synth_pbf):
     pruning; multipolygon relations pull in their landuse member ways,
     which the highway way_keys reject."""
     from tilemaker_spark.sources import pbf as pbf_src
-    nodes, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    nodes, ways, rels = pbf_src.read_pbf_multi(spark, [synth_pbf])
     n_all = nodes.count()
     nu, wu = prof.used_closure(
         nodes, ways,

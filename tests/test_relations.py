@@ -17,7 +17,7 @@ REL_SCHEMA = ("id long, members array<struct<mtype:int,ref:long,"
 def test_monaco_member_ways_see_parent_relation(spark):
     """Reference fixture: relation 1124039 (Monaco boundary, 17 members,
     test/pbf_reader.test.cpp:95-103) is visible from its member ways."""
-    _, ways, rels = pbf_src.read_pbf(spark, MONACO)
+    _, ways, rels = pbf_src.read_pbf_multi(spark, [MONACO])
     accepted = R.accept_relations(
         rels, F.col("tags")["boundary"] == "administrative")
     out = R.parent_relations(ways, accepted, mtype=1)
@@ -36,7 +36,7 @@ def test_monaco_member_ways_see_parent_relation(spark):
 
 @requires_monaco
 def test_parent_relations_respects_accept(spark):
-    _, ways, rels = pbf_src.read_pbf(spark, MONACO)
+    _, ways, rels = pbf_src.read_pbf_multi(spark, [MONACO])
     none_accepted = R.accept_relations(
         rels, F.col("tags")["type"] == "nonexistent")
     out = R.parent_relations(ways, none_accepted, mtype=1)
@@ -46,7 +46,7 @@ def test_parent_relations_respects_accept(spark):
 def test_synth_member_ways_see_parent_relation(spark, synth_pbf):
     """Synthetic twin of the Monaco test above: route relation 21
     ("route 0") lists ways 1-5, and each sees it as its parent."""
-    _, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    _, ways, rels = pbf_src.read_pbf_multi(spark, [synth_pbf])
     accepted = R.accept_relations(rels, F.col("tags")["type"] == "route")
     out = R.parent_relations(ways, accepted, mtype=1)
     got = {r["id"]: r["rels"] for r in out.filter(
@@ -61,7 +61,7 @@ def test_synth_member_ways_see_parent_relation(spark, synth_pbf):
 
 
 def test_synth_parent_relations_respects_accept(spark, synth_pbf):
-    _, ways, rels = pbf_src.read_pbf(spark, synth_pbf)
+    _, ways, rels = pbf_src.read_pbf_multi(spark, [synth_pbf])
     none_accepted = R.accept_relations(
         rels, F.col("tags")["type"] == "nonexistent")
     out = R.parent_relations(ways, none_accepted, mtype=1)

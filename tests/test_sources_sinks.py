@@ -95,13 +95,16 @@ def test_geojson_id_fallback(spark, tmp_path):
     for ids in ([None, 0], [0, "way/123"], [5, 5], [None, True]):
         assert _read_feature_collection(spark, tmp_path, ids) == \
             {0: 0, 1: 1}, ids
-    # JSONL: a string id (RFC 7946 allows one) falls back to the line id
+    # JSONL: a string id (RFC 7946 allows one) falls back to the line's
+    # hash, an integer id is kept
     p = tmp_path / "s.jsonl"
-    p.write_text(json.dumps({"type": "Feature", "id": "way/123",
-                             "properties": {}, "geometry": {
-                                 "type": "Point", "coordinates": [1, 2]}}))
-    assert [r["feature_id"] for r in
-            geojson.read_geojson(spark, str(p)).collect()] == [0]
+    p.write_text("\n".join(json.dumps(
+        {"type": "Feature", "id": fid, "properties": {"a": str(a)},
+         "geometry": {"type": "Point", "coordinates": [1, 2]}})
+        for a, fid in enumerate(["way/123", 5])))
+    got = {int(r["attrs"]["a"]): r["feature_id"]
+           for r in geojson.read_geojson(spark, str(p)).collect()}
+    assert got[1] == 5 and 0 <= got[0] < 2**63 and got[0] != 5
 
 
 def _write_test_shapefile(path):
@@ -517,3 +520,32 @@ def test_geojson_jsonl_fallback_ids_unique_across_partitions(spark, tmp_path):
     ids = [r["feature_id"] for r in df.select("feature_id").collect()]
     assert len(ids) == 200
     assert len(set(ids)) == 200
+
+
+def test_geojson_jsonl_fallback_ids_ignore_read_splits(spark, tmp_path):
+    """An id-less line's fallback id is the same however the read splits
+    the file into partitions; identical id-less lines are one feature."""
+    feats = [{"type": "Feature", "properties": {"i": str(i % 30)},
+              "geometry": {"type": "Point", "coordinates": [0.0, 0.0]}}
+             for i in range(40)]  # lines 30-39 repeat lines 0-9
+    p = tmp_path / "f.jsonl"
+    p.write_text("\n".join(json.dumps(f) for f in feats))
+
+    def ids():
+        df = geojson.read_geojson(spark, str(p))
+        rows = df.select("feature_id", "attrs").collect()
+        return df.rdd.getNumPartitions(), sorted(
+            (int(r["attrs"]["i"]), r["feature_id"]) for r in rows)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    parts, default = ids()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "300")
+    try:
+        split_parts, split = ids()
+    finally:
+        spark.conf.set(key, old)
+    assert parts == 1 and split_parts > 4
+    assert split == default
+    assert len({fid for _, fid in default}) == 30
+    assert all(0 <= fid < 2**63 for _, fid in default)

@@ -93,9 +93,49 @@ def test_pbf_write_roundtrip(tmp_path):
         (20, [(1, 10, "outer"), (1, 11, "inner"), (0, 5, "label")],
          {"type": "multipolygon"})]
 
-    # type-sorted file -> blob pruning index present
-    from tilemaker_spark.sources.pbf import blob_type_ranges
-    assert blob_type_ranges(p) is not None
+
+KINDS = ("nodes", "ways", "relations")
+
+
+def _assert_kind_selective(raw: bytes):
+    """decode_block(raw, kind) is exactly kind's list of the full decode,
+    with the other kinds' lists left empty."""
+    full = pbf.decode_block(raw)
+    for kind in KINDS:
+        part = pbf.decode_block(raw, kind)
+        for other in KINDS:
+            want = getattr(full, kind) if other == kind else []
+            assert getattr(part, other) == want, (kind, other)
+
+
+def test_decode_block_kind_selective(synth_pbf):
+    data = [r for r in pbf.scan_blobs(synth_pbf) if r.kind == "OSMData"]
+    assert len(data) == 5
+    for ref in data:
+        _assert_kind_selective(pbf.read_blob(synth_pbf, ref))
+
+
+def test_decode_block_kind_selective_mixed_block():
+    """One block holding a DenseNodes group and a Way group over one
+    string table: each kind decodes on its own."""
+    strings = ["", "amenity", "cafe", "highway", "primary"]
+    dense = (wire.field_bytes(1, wire.pack_svarints([7, 1]))    # ids 7, 8
+             + wire.field_bytes(8, wire.pack_svarints([100, 5]))
+             + wire.field_bytes(9, wire.pack_svarints([200, -5]))
+             + wire.field_bytes(10, wire.pack_uvarints([1, 2, 0, 0])))
+    way = (wire.field_varint(1, 30)
+           + wire.field_bytes(2, wire.pack_uvarints([3]))
+           + wire.field_bytes(3, wire.pack_uvarints([4]))
+           + wire.field_bytes(8, wire.pack_svarints([7, 1])))
+    raw = (wire.field_bytes(1, b"".join(wire.field_bytes(1, s.encode())
+                                        for s in strings))
+           + wire.field_bytes(2, wire.field_bytes(2, dense))
+           + wire.field_bytes(2, wire.field_bytes(3, way)))
+    full = pbf.decode_block(raw)
+    assert [(n[0], n[3]) for n in full.nodes] == [(7, {"amenity": "cafe"}),
+                                                   (8, {})]
+    assert full.ways == [(30, [7, 8], {"highway": "primary"})]
+    _assert_kind_selective(raw)
 
 
 def tiles_sha256(rows) -> str:
@@ -217,6 +257,21 @@ def test_synth_small_z14_tile_bytes(spark, synth_small):
     assert len(rows) == 200
     assert tiles_sha256(rows) == ("43063a75a49785659ee09e89f11db1ec"
                                   "14dcbdef98abbc36004568f0b5f20e18")
+
+
+def test_read_features_job_count(spark, synth_pbf):
+    """PBF -> features runs in a bounded number of Spark jobs: the three
+    entity phases share one blob-ref exchange and no blob is decoded
+    while the plan is built (every AQE stage and plan-time action is one
+    more job)."""
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    features, _ = J.read_features(spark, synth_pbf)
+    assert features.count() == 3105
+    assert len(set(tracker.getJobIdsForGroup()) - before) <= 14
 
 
 @pytest.mark.skipif(not os.environ.get("SPARK_GRAFT_SLOW"),

@@ -11,7 +11,8 @@ fileformat.proto are public domain).  The protobuf wire decoding
 
 The file is split into independently decodable blobs; :func:`scan_blobs`
 enumerates (offset, size, type) so a Spark job can fan blob decoding out
-across executors (one Arrow batch per blob).
+across executors, and :func:`decode_block` can decode one entity kind of
+a blob and skip the rest.
 """
 
 from __future__ import annotations
@@ -104,7 +105,17 @@ class BlockEntities:
     n_strings: int = 0
 
 
-def decode_block(raw: bytes) -> BlockEntities:
+# PrimitiveGroup field numbers of each entity kind: 1 Node, 2 DenseNodes,
+# 3 Way, 4 Relation (osmformat.proto)
+_GROUP_FIELDS = {"nodes": (1, 2), "ways": (3,), "relations": (4,)}
+
+
+def decode_block(raw: bytes, kind: str | None = None) -> BlockEntities:
+    """Decode one PrimitiveBlock.  ``kind`` ("nodes", "ways" or
+    "relations") decodes only that kind's primitive groups and skips the
+    others by field number, leaving their lists empty; the default
+    decodes every kind."""
+    wanted = _GROUP_FIELDS[kind] if kind else (1, 2, 3, 4)
     strings: list[str] = []
     groups: list[bytes] = []
     granularity, lat_off, lon_off = 100, 0, 0
@@ -127,6 +138,8 @@ def decode_block(raw: bytes) -> BlockEntities:
 
     for g in groups:
         for fno, _, val in fields(g):
+            if fno not in wanted:
+                continue
             if fno == 2:  # DenseNodes
                 ids = lats = lons = None
                 kvs: list[int] = []

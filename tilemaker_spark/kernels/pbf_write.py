@@ -17,9 +17,8 @@ way refs) are packed with the vectorized numpy varint encoder
 million nodes takes seconds, not minutes.
 
 Files are written in ``Sort.Type_then_ID`` order (all node blobs, then way
-blobs, then relation blobs) and declare that optional feature, so
-:func:`tilemaker_spark.sources.pbf.blob_type_ranges` can prune blob scans
-per entity type just like on a real planet extract.
+blobs, then relation blobs) and declare that optional feature, like a real
+planet extract; each blob holds one entity kind.
 """
 
 from __future__ import annotations

@@ -68,6 +68,11 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
     (spark.read.text per-line parse); FeatureCollection falls back to a
     driver-side parse (it is one JSON document by construction).
 
+    A JSONL feature without an integer ``"id"`` gets a non-negative
+    63-bit hash of its file path and line text as its id, the same
+    however the read splits the file; two identical id-less lines in one
+    file are therefore one feature.
+
     ``attribute_function(attrs, layer) -> dict`` remaps each feature's
     properties (reference src/shp_processor.cpp:47-84 — same hook as the
     shapefile source); a returned ``_minzoom`` key sets the feature's
@@ -98,11 +103,9 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
         from ..operators.tiling import FEATURE_SCHEMA
         return spark.createDataFrame(rows, FEATURE_SCHEMA)
 
-    # the id fallback must be unique ACROSS partitions — a per-batch
-    # counter would collide between chunks of a big file, so ship a
-    # globally-unique line id (partition-offset encoded) with each line
     lines = spark.read.text(path).withColumn(
-        "__lid", F.monotonically_increasing_id())
+        "__lid", F.xxhash64(F.input_file_name(), "value")
+        .bitwiseAND(F.lit(2**63 - 1)))
 
     def parse(batches):
         from ..operators.tiling import FEATURE_SCHEMA  # noqa: F401

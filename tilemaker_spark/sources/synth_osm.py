@@ -8,7 +8,7 @@ buildings, landuse/water areas and multipolygon relations inside a
 Liechtenstein-sized bbox, and :func:`write_synth_pbf` serializes them
 through :mod:`tilemaker_spark.kernels.pbf_write` into a real .osm.pbf
 (DenseNodes, Sort.Type_then_ID, zlib blobs) that the normal source path
-(`sources.pbf.read_pbf`) decodes like any planet extract.
+(`sources.pbf.read_pbf_multi`) decodes like any planet extract.
 
 Realism properties that matter for the pipeline under test:
 
