@@ -197,7 +197,10 @@ def main(argv=None) -> int:
             v = sink.vacuum()
             print(f"vacuumed {v['deleted_files']} checkpoint files "
                   f"(horizon {v['min_as_of']})")
-        tiles = sink.read(spark).select("z", "x", "y", "tile")
+        # a build with no tiles commits nothing, and an empty sink reads
+        # back as a bare pk column: keep the (empty) tile frame then
+        if sink.committed_keys():
+            tiles = sink.read(spark).select("z", "x", "y", "tile")
 
     if args.output.endswith(".mbtiles"):
         # metadata block per the reference (src/shared_data.cpp:21-36):
@@ -233,7 +236,8 @@ def main(argv=None) -> int:
             rpk = (F.shiftright(F.col("x"), rdz) * 64
                    + F.shiftright(F.col("y"), rdz)).cast("long")
             rsink.write_partitioned(rt.withColumn("pk", rpk), "pk")
-            rt = rsink.read(spark).select("z", "x", "y", "tile")
+            if rsink.committed_keys():
+                rt = rsink.read(spark).select("z", "x", "y", "tile")
         rpath = os.path.splitext(args.output)[0] + ".raster.mbtiles"
         rn = MB.write_mbtiles(rt, rpath, metadata={"format": "png"})
         print(f"wrote {rn} raster tiles -> {rpath}")

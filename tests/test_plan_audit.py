@@ -53,6 +53,9 @@ BUDGETS = {
     # broadcast is the point, zero shuffles, zero Python
     "emb_dups": (0, 1, 0),
     "pip_cell": (0, 2, 1),
+    # raster_roundtrip: cover + coarse refine + per-tile render + trace
+    # = 4 Arrow nodes; exchanges = cover's repartition + the tile group
+    "raster_roundtrip": (2, 0, 4),
     "dedup_exact": (1, 0, 0),
     "zorder_topk": (1, 0, 0),
     "line_clip": (0, 0, 1),

@@ -342,7 +342,8 @@ def test_streaming_scd2_sorts_across_arrow_chunks(spark, tmp_path):
 def test_streaming_scd2_null_attr_matches_batch(spark, tmp_path):
     """Null event_type follows the batch twin's SQL-null lag filter: a
     null after a value is dropped, the row after a null is kept, and a
-    leading null opens version 1."""
+    leading null opens version 1.  A null ts sorts first and gives a
+    NULL valid_from_us."""
     import pandas as pd
 
     rows = [
@@ -356,6 +357,8 @@ def test_streaming_scd2_null_attr_matches_batch(spark, tmp_path):
          "event_type": None},          # leading null: v1
         {"event_id": 5, "ts": "2024-01-01 00:00:05", "user_id": 2,
          "event_type": "y"},           # after null: kept
+        {"event_id": 6, "ts": None, "user_id": 1,
+         "event_type": "w"},           # null ts: sorts first, NULL from
     ]
     src = tmp_path / "scd2_nulls"
     src.mkdir()
@@ -369,8 +372,8 @@ def test_streaming_scd2_null_attr_matches_batch(spark, tmp_path):
     try:
         q.processAllAvailable()
         got = sorted(
-            (r["user_id"], r["version"], r["event_type"]) for r in
-            spark.sql("SELECT * FROM scd2_nulls").collect())
+            (r["user_id"], r["version"], r["event_type"], r["valid_from_us"])
+            for r in spark.sql("SELECT * FROM scd2_nulls").collect())
     finally:
         q.stop()
 
@@ -379,7 +382,10 @@ def test_streaming_scd2_null_attr_matches_batch(spark, tmp_path):
     pdf = pd.DataFrame(rows)
     pdf["ts"] = pd.to_datetime(pdf["ts"])
     batch = sorted(
-        (r["user_id"], r["version"], r["event_type"]) for r in
-        temporal.scd2_history(spark.createDataFrame(pdf)).collect())
+        (r["user_id"], r["version"], r["event_type"], r["valid_from_us"])
+        for r in temporal.scd2_history(spark.createDataFrame(pdf)).collect())
     assert got == batch
-    assert got == [(1, 1, "x"), (1, 2, "x"), (2, 1, None), (2, 2, "y")]
+    s = 1704067200 * 10**6  # 2024-01-01 00:00:00 UTC in µs
+    assert got == [(1, 1, "w", None), (1, 2, "x", s + 1_000_000),
+                   (1, 3, "x", s + 3_000_000), (2, 1, None, s + 4_000_000),
+                   (2, 2, "y", s + 5_000_000)]

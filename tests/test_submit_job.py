@@ -117,6 +117,22 @@ def test_job_checkpoint_resume(spark, tmp_path):
     assert lin.count() == len(sink.committed_keys())
 
 
+def test_job_checkpoint_empty_build(spark, synth_pbf, tmp_path):
+    """--checkpoint with a --bbox that misses the data: nothing is
+    committed, and the job still writes an empty archive."""
+    import sys as _sys
+    _sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+
+    out = str(tmp_path / "empty.mbtiles")
+    assert J.main(["--input", synth_pbf, "--output", out, "--maxzoom", "10",
+                   "--bbox=-10,-10,-9,-9",
+                   "--checkpoint", str(tmp_path / "ckpt")]) == 0
+    conn = sqlite3.connect(out)
+    assert conn.execute("SELECT count(*) FROM tiles").fetchone()[0] == 0
+    conn.close()
+
+
 def test_job_raster_sink_clips_and_resumes(spark, tmp_path):
     """--raster-zoom honors --bbox (no world-spanning raster tiles) and
     routes through the checkpoint sink (second run rewrites nothing)."""

@@ -259,6 +259,61 @@ def test_synth_small_z14_tile_bytes(spark, synth_small):
                                   "14dcbdef98abbc36004568f0b5f20e18")
 
 
+def _feature_rich_config(cfg):
+    """The openmaptiles-lite config with every ``_build_one_tile`` branch
+    it leaves off turned on: typed and zoom-gated attributes, uncombined
+    points, polygon union, Visvalingam and building simplification, a
+    line-layer feature limit, write_to, ids, a clip box and the 8192
+    extent."""
+    L = cfg.layers
+    L["place"].attr_types = {"name": "Boolean"}
+    L["place"].attr_minzoom = {"name": 10}
+    L["place"].write_to = "poi"
+    L["poi"].combine_points = False
+    L["poi"].attr_minzoom = {"name": 14}
+    L["landuse"].combine_polygons_below = 13
+    L["transportation"].simplify_algorithm = "visvalingam"
+    L["transportation"].feature_limit = 12
+    L["transportation"].feature_limit_below = 14
+    L["landuse"].simplify_algorithm = "buildings"
+    cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 14, 14
+    cfg.include_ids = True
+    cfg.high_resolution = True
+    cfg.clip_bbox = (9.50, 47.08, 9.60, 47.22)
+    return cfg
+
+
+def test_synth_feature_rich_tile_bytes(spark, synth_small):
+    """Tile bytes pinned under a config that reaches every per-tile
+    branch the default profile skips (see _feature_rich_config)."""
+    path, _ = synth_small
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.operators.tiling import generate_tiles
+
+    features, cfg = J.read_features(spark, path)
+    cfg = _feature_rich_config(cfg)
+    rows = [tuple(r) for r in generate_tiles(features, cfg).select(
+        "z", "x", "y", "tile").collect()]
+    assert tiles_sha256(rows) == ("d639f0a52968da4f8112e5f0282fd2ae"
+                                  "03300affe42c18b1f83c9abfa0a01e91")
+
+
+def test_synth_raster_tile_bytes(spark, synth_small):
+    """z12 PNG raster tiles of the seed-42 extract pinned byte for byte."""
+    path, _ = synth_small
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.operators.raster import render_raster_tiles
+
+    features, _ = J.read_features(spark, path)
+    rows = [tuple(r) for r in render_raster_tiles(features, zoom=12).select(
+        "z", "x", "y", "png").collect()]
+    assert rows
+    assert tiles_sha256(rows) == ("b4fbba13a87c321d79e0a08704b09379"
+                                  "d8836c6e8c1330f6f33215ae075c650c")
+
+
 def test_read_features_job_count(spark, synth_pbf):
     """PBF -> features runs in a bounded number of Spark jobs: the three
     entity phases share one blob-ref exchange and no blob is decoded

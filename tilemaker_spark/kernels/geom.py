@@ -10,10 +10,9 @@ Geometry representation used across the engine ("packed rings"):
 In DataFrames the same shapes are stored columnar as
 ``coords: array<double>`` (flat x0,y0,x1,y1,...) plus
 ``ring_sizes: array<int>`` and ``poly_ring_counts: array<int>`` — see
-:func:`pack_multipolygon`; :func:`unpack` turns one such row back into
-geometry by its ``kind`` and :func:`covering_tiles` covers it with tiles.
-This keeps Arrow transfer zero-copy-ish and lets every kernel work on
-contiguous numpy arrays.
+:func:`pack_multipolygon`; :func:`packed_views` reads them out of an Arrow
+batch as per-row views, :func:`unpack` turns one row back into geometry
+by its ``kind`` and :func:`covering_tiles` covers it with tiles.
 
 Algorithms mirror the reference engine's semantics (cited per-function)
 without porting its code: Sutherland–Hodgman box clipping with escalation
@@ -52,20 +51,18 @@ def pack_multipolygon(mp):
     return flat, np.asarray(ring_sizes, np.int32), np.asarray(poly_counts, np.int32)
 
 
+def _runs(seq, sizes) -> list:
+    """``seq`` cut into consecutive runs of the given ``sizes``."""
+    out, off = [], 0
+    for n in np.asarray(sizes, np.int64).tolist():
+        out.append(seq[off:off + n])
+        off += n
+    return out
+
+
 def unpack_multipolygon(flat, ring_sizes, poly_ring_counts):
     """Inverse of :func:`pack_multipolygon`."""
-    flat = np.asarray(flat, np.float64)
-    pts = flat.reshape(-1, 2)
-    rings = []
-    off = 0
-    for n in np.asarray(ring_sizes, np.int64):
-        rings.append(pts[off:off + n])
-        off += n
-    mp, roff = [], 0
-    for c in np.asarray(poly_ring_counts, np.int64):
-        mp.append(rings[roff:roff + c])
-        roff += c
-    return mp
+    return _runs(unpack_lines(flat, ring_sizes), poly_ring_counts)
 
 
 def pack_lines(lines):
@@ -77,11 +74,25 @@ def pack_lines(lines):
 
 
 def unpack_lines(flat, sizes):
-    pts = np.asarray(flat, np.float64).reshape(-1, 2)
-    out, off = [], 0
-    for n in np.asarray(sizes, np.int64):
-        out.append(pts[off:off + n])
-        off += n
+    """Inverse of :func:`pack_lines`."""
+    return _runs(np.asarray(flat, np.float64).reshape(-1, 2), sizes)
+
+
+PACKED = ("coords", "ring_sizes", "poly_ring_counts")  # the list columns
+
+
+def packed_views(batch, columns=PACKED):
+    """Per-row read-only numpy views of an Arrow RecordBatch's or Table's
+    list ``columns``, one list per column; zipped, they are the rows
+    :func:`unpack` takes.  Copies only a Table column of several chunks."""
+    out = []
+    for name in columns:
+        col = batch.column(name)
+        if hasattr(col, "chunks"):  # a Table's ChunkedArray
+            col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+        vals = col.values.to_numpy(zero_copy_only=False)
+        off = col.offsets.to_numpy().tolist()
+        out.append([vals[a:b] for a, b in zip(off[:-1], off[1:])])
     return out
 
 

@@ -11,20 +11,27 @@ DataFrame plans:
   join multiplicity).
 
 * relation multipolygons: relations explode to (way, role) members, join
-  the assembled way geometries, then one ``applyInPandas`` per relation
-  stitches open ways into closed rings by endpoint matching with reversal
-  (the reference's iterative seeding semantics), assigns holes to outers
-  by point-in-polygon, and fixes winding.
+  the assembled way geometries, then one ``applyInArrow`` call per
+  relation stitches open ways into closed rings by endpoint matching with
+  reversal (the reference's iterative seeding semantics), assigns holes
+  to outers by point-in-polygon, and fixes winding.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels import geom as G
+
+STITCHED_ARROW = pa.schema([
+    ("rel_id", pa.int64()), ("tags", pa.map_(pa.string(), pa.string())),
+    ("coords", pa.list_(pa.float64())), ("ring_sizes", pa.list_(pa.int32())),
+    ("poly_ring_counts", pa.list_(pa.int32())),
+    ("n_outers", pa.int32()), ("n_inners", pa.int32())])
 
 
 def assemble_way_geometries(ways: DataFrame, nodes: DataFrame,
@@ -110,46 +117,33 @@ def assemble_relation_multipolygons(relations: DataFrame,
         on="way_id", how="inner",
     )
 
-    schema = (
-        "rel_id long, tags map<string,string>, coords array<double>, "
-        "ring_sizes array<int>, poly_ring_counts array<int>, "
-        "n_outers int, n_inners int"
-    )
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rel_id = pdf["rel_id"].iloc[0]
-        tags = pdf["tags"].iloc[0]
-        outers = stitch_rings([
-            np.asarray(c, np.float64).reshape(-1, 2)
-            for c, r in zip(pdf["coords"], pdf["role"]) if r == "outer"
-        ])
-        inners = stitch_rings([
-            np.asarray(c, np.float64).reshape(-1, 2)
-            for c, r in zip(pdf["coords"], pdf["role"]) if r == "inner"
-        ])
+    def stitch(table):
+        ways = {"outer": [], "inner": []}
+        for coords, role in zip(G.packed_views(table, ("coords",))[0],
+                                table.column("role").to_pylist()):
+            ways[role].append(coords.reshape(-1, 2))
+        outers, inners = stitch_rings(ways["outer"]), stitch_rings(
+            ways["inner"])
         if not outers:
-            return pd.DataFrame(columns=[
-                "rel_id", "tags", "coords", "ring_sizes",
-                "poly_ring_counts", "n_outers", "n_inners"])
-        polys = assign_holes(outers, inners)
-        flat, ring_sizes, poly_counts = G.pack_multipolygon(polys)
-        return pd.DataFrame({
-            "rel_id": [rel_id], "tags": [tags],
-            "coords": [flat.tolist()],
-            "ring_sizes": [ring_sizes.tolist()],
-            "poly_ring_counts": [poly_counts.tolist()],
-            "n_outers": [len(outers)], "n_inners": [len(inners)],
-        })
+            return STITCHED_ARROW.empty_table()
+        flat, ring_sizes, poly_counts = G.pack_multipolygon(
+            assign_holes(outers, inners))
+        head = table.slice(0, 1)
+        return pa.Table.from_arrays([
+            head.column("rel_id"), head.column("tags"),
+            pa.array([flat]), pa.array([ring_sizes]), pa.array([poly_counts]),
+            pa.array([len(outers)], pa.int32()),
+            pa.array([len(inners)], pa.int32())], schema=STITCHED_ARROW)
 
     return (
         joined.groupBy("rel_id")
-        .applyInPandas(stitch, schema=schema)
+        .applyInArrow(stitch, from_arrow_schema(STITCHED_ARROW))
         .withColumnRenamed("rel_id", "id")
     )
 
 
 # ---------------------------------------------------------------------------
-# pure-python stitching kernels (called inside the pandas UDF)
+# pure-python stitching kernels (called inside the Arrow worker)
 # ---------------------------------------------------------------------------
 
 def stitch_rings(segments: list[np.ndarray]) -> list[np.ndarray]:

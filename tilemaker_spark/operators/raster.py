@@ -8,7 +8,7 @@ cover -> shuffle-on-tile -> per-tile worker plan, operators/tiling.py):
 - ``render_raster_tiles``: features (FEATURE_SCHEMA) -> (z, x, y, png).
   One ``cover_features`` pass assigns features to tiles (identical
   partitioning to the vector path, so at 100 TB both sinks share the
-  same shuffle), then one applyInPandas renders each tile group with
+  same shuffle), then one ``applyInArrow`` renders each tile group with
   the numpy scanline kernels (kernels/raster.py) and encodes with the
   repo's own PNG codec.  Write with
   ``sinks.mbtiles.write_mbtiles(tiles.withColumnRenamed('png','tile'),
@@ -20,25 +20,27 @@ cover -> shuffle-on-tile -> per-tile worker plan, operators/tiling.py):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernels import geom as G
 from ..kernels import png as PNG
 from ..kernels import proj as P
 from ..kernels import raster as R
-from .tiling import (FEATURE_SCHEMA, cover_features, expand_coarse,
-                     prune_cover_to_bbox)
+from .tiling import (FEATURE_ARROW, cover_features, expand_coarse,
+                     prune_cover_to_bbox, rows_table)
+
+RASTER_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
+                          ("y", pa.int64()), ("png", pa.binary())])
+TRACED_ARROW = pa.schema(list(RASTER_ARROW)[:3] + list(FEATURE_ARROW))
 
 
 def _pixel_coords(flat: np.ndarray, z: int, x: int, y: int,
                   size: int) -> np.ndarray:
     """lon/lat flat pairs -> flat tile-local pixel coords (y down)."""
-    pts = np.asarray(flat, np.float64).reshape(-1, 2)
+    pts = flat.reshape(-1, 2)
     px = (P.lon2tilexf(pts[:, 0], z) - x) * size
     py = (P.latp2tileyf(P.lat2latp(pts[:, 1]), z) - y) * size
     return np.column_stack([px, py]).reshape(-1)
@@ -69,14 +71,13 @@ def render_raster_tiles(features: DataFrame, zoom: int,
         # may overhang the box
         covered = prune_cover_to_bbox(covered, clip_bbox, zoom)
 
-    def render_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        x = int(pdf["bx"].iloc[0])
-        y = int(pdf["by"].iloc[0])
+    def render_group(table):
+        x, y = table.column("bx")[0].as_py(), table.column("by")[0].as_py()
         rows = []
         for kind, layer, coords, rs, prc in zip(
-                pdf["kind"].to_numpy(), pdf["layer"].to_numpy(),
-                pdf["coords"].to_numpy(), pdf["ring_sizes"].to_numpy(),
-                pdf["poly_ring_counts"].to_numpy()):
+                np.asarray(table.column("kind")),
+                table.column("layer").to_pylist(),
+                *G.packed_views(table)):
             geom = G.unpack(kind, _pixel_coords(coords, zoom, x, y, size),
                             rs, prc)
             if kind == G.POLYGON:
@@ -92,14 +93,11 @@ def render_raster_tiles(features: DataFrame, zoom: int,
                 if inside.any():
                     rows.append((layer, G.POINT, geom[inside]))
         canvas = R.render_features(rows, size=size)
-        return pd.DataFrame({
-            "z": [zoom], "x": [x], "y": [y],
-            "png": [PNG.encode_png(canvas)],
-        })
+        return rows_table([(zoom, x, y, PNG.encode_png(canvas))],
+                          RASTER_ARROW)
 
     return (covered.groupBy("bx", "by")
-            .applyInPandas(render_group,
-                           "z int, x long, y long, png binary"))
+            .applyInArrow(render_group, from_arrow_schema(RASTER_ARROW)))
 
 
 def raster_to_features(tiles: DataFrame,
@@ -108,21 +106,14 @@ def raster_to_features(tiles: DataFrame,
 
     Any non-background pixel counts as filled; rings come from the
     boundary tracer and are grouped into polygons with holes.  Linear in
-    tiles (mapInPandas, no shuffle); feature_id = packed tile id so the
+    tiles (mapInArrow, no shuffle); feature_id = packed tile id so the
     output is deterministic."""
-    out_schema = "z int, x long, y long, " + FEATURE_SCHEMA
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("z", "x", "y", "feature_id", "layer",
-                                   "kind", "minzoom", "zorder", "attrs",
-                                   "coords", "ring_sizes",
-                                   "poly_ring_counts")}
-            for i in range(len(pdf)):
-                z = int(pdf["z"].iloc[i])
-                x = int(pdf["x"].iloc[i])
-                y = int(pdf["y"].iloc[i])
-                pixels = PNG.decode_png(bytes(pdf["png"].iloc[i]))
+    def gen(batches):
+        for batch in batches:
+            out = []
+            for z, x, y, png in zip(*(batch.column(c).to_pylist()
+                                      for c in RASTER_ARROW.names)):
+                pixels = PNG.decode_png(png)
                 mask = pixels.any(axis=2)
                 ph, pw = mask.shape    # tile size comes from the PNG
                 polys = R.rings_to_multipolygon(R.trace_mask(mask))
@@ -141,24 +132,14 @@ def raster_to_features(tiles: DataFrame,
                         lon = P.tilex2lon(x + ring[:, 0] / pw, z)
                         lat = P.latp2lat(P.tiley2latp(y + ring[:, 1] / ph,
                                                       z))
-                        flat.extend(np.column_stack([lon, lat])
-                                    .reshape(-1).tolist())
+                        flat.append(np.column_stack([lon, lat]).reshape(-1))
                         rs.append(len(ring))
-                out["z"].append(z)
-                out["x"].append(x)
-                out["y"].append(y)
-                out["feature_id"].append((z << 58) | (x << 29) | y)
-                out["layer"].append(layer)
-                out["kind"].append(3)
-                out["minzoom"].append(0)
-                out["zorder"].append(0)
                 # traced area is exposed for oracle checks: for
                 # axis-aligned inputs it has a closed-form SQL twin
-                out["attrs"].append(
-                    {"area_px": str(int(round(-signed_px)))})
-                out["coords"].append(flat)
-                out["ring_sizes"].append(rs)
-                out["poly_ring_counts"].append(pc)
-            yield pd.DataFrame(out)
+                out.append((z, x, y, (z << 58) | (x << 29) | y, layer,
+                            G.POLYGON, 0, 0,
+                            {"area_px": str(int(round(-signed_px)))},
+                            np.concatenate(flat), rs, pc))
+            yield from rows_table(out, TRACED_ARROW).to_batches()
 
-    return tiles.mapInPandas(gen, out_schema)
+    return tiles.mapInArrow(gen, from_arrow_schema(TRACED_ARROW))

@@ -6,26 +6,26 @@ src/tile_worker.cpp) re-expressed as two DataFrame jobs:
 1. **cover** — every feature explodes to its base-zoom covering tiles
    (point: 1 tile; line: supercover; polygon: boundary + fill — the
    object->tile fan-out of src/tile_data.cpp:495-608).  One
-   ``mapInPandas`` task per core (the input is repartitioned to
+   ``mapInArrow`` task per core (the input is repartitioned to
    ``defaultParallelism``) producing (bx, by, feature) rows keyed by the
    z6 ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12).
 
-2. **build** — group by z6 subtree; one Arrow batch holds all of a
-   subtree's features, and the pandas worker materializes every tile for
-   zooms 6..basezoom top-down (the clip-pyramid locality the reference
-   gets from its tile iteration order, src/tile_sorting.cpp:98-152).
+2. **build** — group by z6 subtree; one Arrow table holds all of a
+   subtree's features, and the ``applyInArrow`` worker materializes every
+   tile for zooms 6..basezoom top-down (the clip-pyramid locality the
+   reference gets from its tile iteration order, src/tile_sorting.cpp:98-152).
    Zooms 0..5 come from one more, much smaller grouped pass keyed by
    (z, x, y) (the reference's separate low-zoom object list,
    include/tile_data.h:115-147).  Both passes are lazy: building the
-   plan runs no Spark job.  Workers pull each column out of the batch
-   once and select, filter and sort rows with numpy index arrays.
+   plan runs no Spark job.  Workers pull each Arrow column out once
+   (geometry as ``geom.packed_views``) and select rows with numpy indices.
 
 Per-tile semantics mirror tile_worker.cpp: layer zoom-range + per-feature
 minzoom filters, z-order sort (+ feature_limit top-k), combine of
 compatible points/lines, zoom-scaled simplification, box clip with 0.5%
 margin, area filter, MVT encode, gzip.
 
-Feature schema (the engine's OutputObject analogue):
+Feature schema (the engine's OutputObject analogue, ``FEATURE_ARROW``):
   feature_id long, layer string, kind tinyint (0 pt / 1 line / 3 poly),
   minzoom int, zorder long, attrs map<string,string>,
   coords array<double>, ring_sizes array<int>, poly_ring_counts array<int>
@@ -33,12 +33,12 @@ Feature schema (the engine's OutputObject analogue):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..config import Config, LayerDef
 from ..kernels import geom as G
@@ -46,11 +46,17 @@ from ..kernels import mvt as M
 from ..kernels import overlay as OV
 from ..kernels import proj as P
 
-FEATURE_SCHEMA = (
-    "feature_id long, layer string, kind tinyint, minzoom int, zorder long, "
-    "attrs map<string,string>, coords array<double>, ring_sizes array<int>, "
-    "poly_ring_counts array<int>"
-)
+FEATURE_ARROW = pa.schema([
+    ("feature_id", pa.int64()), ("layer", pa.string()), ("kind", pa.int8()),
+    ("minzoom", pa.int32()), ("zorder", pa.int64()),
+    ("attrs", pa.map_(pa.string(), pa.string())),
+    ("coords", pa.list_(pa.float64())), ("ring_sizes", pa.list_(pa.int32())),
+    ("poly_ring_counts", pa.list_(pa.int32()))])
+COVERED_ARROW = pa.schema(list(FEATURE_ARROW) + [
+    ("bx", pa.int64()), ("by", pa.int64()), ("coarse", pa.bool_())])
+TILE_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int32()),
+                        ("y", pa.int32()), ("tile", pa.binary())])
+FEATURE_SCHEMA = from_arrow_schema(FEATURE_ARROW)
 
 CLUSTER_ZOOM = 6  # reference include/tile_data_base.h:10-12
 
@@ -75,6 +81,26 @@ def _bbox_tile_span(pts: np.ndarray, z: int) -> int:
     return int((tx.max() - tx.min() + 1) * (ty.max() - ty.min() + 1))
 
 
+def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
+    """Python row tuples -> one Arrow table of ``schema``: how workers
+    hand back rows they compute one at a time."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _with_tiles(batch, rows, cells: list, coarse: np.ndarray) -> pa.Table:
+    """Row ``rows[i]`` of ``batch`` once per tile of ``cells[i]`` (an
+    (n, 2) array), with the tile appended as (bx, by) and ``coarse[i]``:
+    the one row-repeat step of cover and of the coarse refine."""
+    reps = [len(c) for c in cells]
+    xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
+    cols = batch.select(FEATURE_ARROW.names).take(np.repeat(rows, reps))
+    return pa.Table.from_arrays(
+        [*cols.columns, pa.array(xy[:, 0]), pa.array(xy[:, 1]),
+         pa.array(np.repeat(coarse, reps))], schema=COVERED_ARROW)
+
+
 def cover_features(features: DataFrame, base_zoom: int = 14,
                    large_threshold: int | None = LARGE_THRESHOLD
                    ) -> DataFrame:
@@ -90,10 +116,10 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
     :func:`_expand_coarse_rows` (clip to cell bbox, cover the clip) —
     the clip-pyramid refine the reference gets from its R-tree walk.
     """
-    cols = features.columns
-    out_schema = FEATURE_SCHEMA + ", bx long, by long, coarse boolean"
     dz = base_zoom - CLUSTER_ZOOM
     dual = large_threshold is not None and dz > 0
+    features = features.select(  # the worker's FEATURE_ARROW columns
+        *[F.col(f.name).cast(f.dataType) for f in FEATURE_SCHEMA])
     # one task per core: a single-file feature table would otherwise run
     # the whole fan-out on one core, and a union of many small inputs
     # would pay a Python worker round trip per input partition.  Always
@@ -102,50 +128,41 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
     features = features.repartition(
         features.sparkSession.sparkContext.defaultParallelism)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cells, coarse = [], np.zeros(len(pdf), bool)
+    def gen(batches):
+        for batch in batches:
+            kinds = np.asarray(batch.column("kind"))
+            cells, coarse = [], np.zeros(len(kinds), bool)
             for i, (kind, coords, rs, prc) in enumerate(zip(
-                    pdf["kind"].to_numpy(), pdf["coords"].to_numpy(),
-                    pdf["ring_sizes"].to_numpy(),
-                    pdf["poly_ring_counts"].to_numpy())):
+                    kinds, *G.packed_views(batch))):
                 geom = G.unpack(kind, coords, rs, prc)
                 if (dual and kind != G.POINT and _bbox_tile_span(
-                        np.asarray(coords, np.float64).reshape(-1, 2),
-                        base_zoom) >= large_threshold):
+                        coords.reshape(-1, 2), base_zoom) >= large_threshold):
                     coarse[i] = True
                     cells.append(  # cell -> its first base tile
                         G.covering_tiles(kind, geom, CLUSTER_ZOOM) << dz)
                 else:
                     cells.append(G.covering_tiles(kind, geom, base_zoom))
-            reps = [len(c) for c in cells]
-            out = pdf.loc[pdf.index.repeat(reps)].reset_index(drop=True)
-            xy = (np.concatenate(cells) if cells
-                  else np.zeros((0, 2), np.int64))
-            out["bx"] = xy[:, 0]
-            out["by"] = xy[:, 1]
-            out["coarse"] = np.repeat(coarse, reps)
-            yield out[cols + ["bx", "by", "coarse"]]
+            yield from _with_tiles(batch, np.arange(len(kinds)), cells,
+                                   coarse).to_batches()
 
-    return features.mapInPandas(gen, schema=out_schema)
+    return features.mapInArrow(gen, from_arrow_schema(COVERED_ARROW))
 
 
-def _expand_coarse_rows(pdf: pd.DataFrame, base_zoom: int) -> pd.DataFrame:
+def _expand_coarse_rows(batch, base_zoom: int) -> pa.Table:
     """Refine coarse (cell-granularity) rows to exact per-base-tile rows:
     clip each geometry to its z6 cell bbox (one base-tile margin so edge
     supercover matches the global cover), cover the clipped geometry at
-    base_zoom, keep cells inside the z6 cell's tile range.  Runs inside
-    the subtree worker — the fan-out never crosses a shuffle."""
-    if "coarse" not in pdf.columns or not pdf["coarse"].any():
-        return pdf
+    base_zoom, keep cells inside the z6 cell's tile range.  The exact
+    rows come first, then the refined ones.  Runs inside the subtree
+    worker — the fan-out never crosses a shuffle."""
     dz = base_zoom - CLUSTER_ZOOM
-    big = pdf[pdf["coarse"]]
-    cells = []
-    for bx, by, kind, coords, rs, prc in zip(
-            big["bx"].to_numpy(), big["by"].to_numpy(),
-            big["kind"].to_numpy(), big["coords"].to_numpy(),
-            big["ring_sizes"].to_numpy(),
-            big["poly_ring_counts"].to_numpy()):
+    coarse = np.asarray(batch.column("coarse"))
+    exact, big = np.flatnonzero(~coarse), np.flatnonzero(coarse)
+    xy = np.column_stack([batch.column("bx"), batch.column("by")])
+    cells = list(xy[exact, None])  # an exact row keeps its one tile
+    for (bx, by), kind, coords, rs, prc in zip(
+            xy[big], np.asarray(batch.column("kind"))[big],
+            *G.packed_views(batch.take(big))):
         cx, cy = int(bx) >> dz, int(by) >> dz
         minlon, minlatp, maxlon, maxlatp = _tile_bbox(
             CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
@@ -159,25 +176,19 @@ def _expand_coarse_rows(pdf: pd.DataFrame, base_zoom: int) -> pd.DataFrame:
             geom = G.clip_multipolygon_to_box(geom, *box)
         c = G.covering_tiles(kind, geom, base_zoom)
         cells.append(c[((c[:, 0] >> dz) == cx) & ((c[:, 1] >> dz) == cy)])
-    exp = big.loc[big.index.repeat([len(c) for c in cells])].copy()
-    xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
-    exp["bx"] = xy[:, 0]
-    exp["by"] = xy[:, 1]
-    exp["coarse"] = False
-    return pd.concat([pdf[~pdf["coarse"]], exp], ignore_index=True)
+    return _with_tiles(batch, np.concatenate([exact, big]), cells,
+                       np.zeros(len(cells), bool))
 
 
 def expand_coarse(covered: DataFrame, base_zoom: int = 14) -> DataFrame:
     """DataFrame twin of :func:`_expand_coarse_rows` for consumers that
     need exact per-tile rows outside the subtree worker (e.g.
     :func:`tile_assignments` — whose output is inherently per-tile)."""
-    schema = covered.schema
+    def gen(batches):
+        for batch in batches:
+            yield from _expand_coarse_rows(batch, base_zoom).to_batches()
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _expand_coarse_rows(pdf, base_zoom)
-
-    return covered.mapInPandas(gen, schema=schema)
+    return covered.mapInArrow(gen, from_arrow_schema(COVERED_ARROW))
 
 
 def _bbox_tile_range(bbox: tuple, zoom: int) -> tuple[int, int, int, int]:
@@ -316,12 +327,17 @@ def _coerce_attr(v, typ: str | None):
     return v
 
 
-def _tile_columns(pdf: pd.DataFrame, cfg: Config) -> dict:
-    """Take a batch's columns out once, as numpy arrays, for
-    :func:`_build_one_tile`; adds each row's layer code, layer
+def _tile_columns(table: pa.Table, cfg: Config) -> dict:
+    """Take a table's columns out once, as numpy arrays and packed views,
+    for :func:`_build_one_tile`; adds each row's layer code, layer
     definition's zoom range and output (``write_to``) layer."""
-    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-    codes, names = pd.factorize(pdf["layer"], use_na_sentinel=False)
+    cols = {c: np.asarray(table.column(c))
+            for c in ("feature_id", "kind", "minzoom", "zorder", "bx", "by")}
+    cols.update(zip(G.PACKED, G.packed_views(table)))
+    cols["attrs"] = table.column("attrs").to_pylist()
+    layer = table.column("layer").combine_chunks().dictionary_encode(
+        null_encoding="encode")
+    codes, names = np.asarray(layer.indices), layer.dictionary.to_pylist()
     lds = [cfg.layers.get(n, LayerDef(n)) for n in names]
     cols["layer_code"] = codes
     cols["layer_defs"] = lds
@@ -414,7 +430,7 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
                 attrs = {k: _coerce_attr(v, ld.attr_types.get(k))
                          for k, v in attrs.items()}
             akey = (kind, tuple(sorted(attrs.items())), zorders[row])
-            coords = np.asarray(cols["coords"][row], np.float64).reshape(-1, 2)
+            coords = cols["coords"][row].reshape(-1, 2)
             if kind == G.POINT:
                 # multipoint-aware: keep every point (geojson can emit
                 # kind=POINT with N>1 points)
@@ -601,18 +617,20 @@ def build_tiles(covered: DataFrame, cfg: Config,
     ).withColumn("_cy", F.shiftright(F.col("by"), dz))
 
     lo = max(cfg.minzoom, CLUSTER_ZOOM)
-    schema = "z int, x int, y int, tile binary"
+    schema = from_arrow_schema(TILE_ARROW)
 
-    def build_subtree(pdf: pd.DataFrame) -> pd.DataFrame:
-        # refine coarse (large-object) rows to exact tiles, in-worker
-        pdf = _expand_coarse_rows(pdf, base_zoom).drop_duplicates(
-            subset=["feature_id", "layer", "bx", "by"])
+    def build_subtree(table):  # unannotated: applyInArrow reads hints
+        # refine coarse (large-object) rows to exact tiles, in-worker;
+        # _tile_groups keeps one row per (feature_id, layer) and tile
+        table = _expand_coarse_rows(table, base_zoom)
         if box is not None:
             # a refined large feature covers its whole z6 cell, which
             # may overhang the box
             x0, x1, y0, y1 = box
-            pdf = pdf[pdf["bx"].between(x0, x1) & pdf["by"].between(y0, y1)]
-        cols = _tile_columns(pdf, cfg)
+            bx, by = pc.field("bx"), pc.field("by")
+            table = table.filter((bx >= x0) & (bx <= x1) & (by >= y0)
+                                 & (by <= y1))
+        cols = _tile_columns(table, cfg)
         out = []
         # clip pyramid (reference include/clip_cache.h:21-37): each tile
         # keeps its pre-simplify clips; the four children at z+1 clip
@@ -635,10 +653,10 @@ def build_tiles(covered: DataFrame, cfg: Config,
                 if blob is not None:
                     out.append((z, x, y, blob))
             prev_clips = cur_clips
-        return pd.DataFrame(out, columns=["z", "x", "y", "tile"])
+        return rows_table(out, TILE_ARROW)
 
-    high = with_cell.groupBy("_cx", "_cy").applyInPandas(build_subtree,
-                                                         schema=schema)
+    high = with_cell.groupBy("_cx", "_cy").applyInArrow(build_subtree,
+                                                        schema=schema)
     zooms = range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1))
     if not zooms:
         return high
@@ -656,12 +674,12 @@ def build_tiles(covered: DataFrame, cfg: Config,
         name for name, ld in cfg.layers.items() if ld.minzoom < CLUSTER_ZOOM
     ]
 
-    def build_low_tile(key, pdf):
-        z, x, y = (int(k) for k in key)
-        blob = _build_one_tile(_tile_columns(pdf, cfg), np.arange(len(pdf)),
-                               z, x, y, cfg)
-        return pd.DataFrame([(z, x, y, blob)] if blob is not None else [],
-                            columns=["z", "x", "y", "tile"])
+    def build_low_tile(key, table):
+        z, x, y = (k.as_py() for k in key)
+        blob = _build_one_tile(_tile_columns(table, cfg),
+                               np.arange(table.num_rows), z, x, y, cfg)
+        return rows_table([(z, x, y, blob)] if blob is not None else [],
+                          TILE_ARROW)
 
     dz5 = base_zoom - (CLUSTER_ZOOM - 1)
     low = (
@@ -677,7 +695,7 @@ def build_tiles(covered: DataFrame, cfg: Config,
         .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
         .dropDuplicates(["feature_id", "layer", "_z", "_tx", "_ty"])
         .groupBy("_z", "_tx", "_ty")
-        .applyInPandas(build_low_tile, schema=schema)
+        .applyInArrow(build_low_tile, schema=schema)
     )
     return high.unionByName(low)
 

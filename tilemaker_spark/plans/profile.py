@@ -18,8 +18,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..kernels import geom as G
 
@@ -176,51 +179,36 @@ def _polygons_to_label_points(features: DataFrame,
     label_cols=(lon_col, lat_col): rows where these are non-null take the
     pre-resolved role-member label point instead (reference's node-member
     role path); the columns are dropped from the output."""
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
-
     if algorithm not in ("polylabel", "centroid"):
         raise ValueError(f"unknown centroid algorithm: {algorithm}")
-    out_fields = [f for f in features.schema.fields
-                  if label_cols is None or f.name not in label_cols]
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in out_fields)
-    out_names = [f.name for f in out_fields]
+    schema = StructType([f for f in features.schema.fields
+                         if label_cols is None or f.name not in label_cols])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            coords_o, rs_o, pc_o = [], [], []
-            for i in range(len(pdf)):
-                if label_cols is not None:
-                    llon = pdf[label_cols[0]].iloc[i]
-                    llat = pdf[label_cols[1]].iloc[i]
-                    if llon is not None and not pd.isna(llon):
-                        coords_o.append([float(llon), float(llat)])
-                        rs_o.append([1])
-                        pc_o.append([])
-                        continue
-                mp = G.unpack(G.POLYGON, pdf["coords"].iloc[i],
-                              pdf["ring_sizes"].iloc[i],
-                              pdf["poly_ring_counts"].iloc[i])
+    def gen(batches):
+        for batch in batches:
+            n = batch.num_rows
+            pts = np.full((n, 2), np.nan)
+            if label_cols is not None:  # a null label reads as NaN
+                pts[:, 0] = np.asarray(batch.column(label_cols[0]))
+                pts[:, 1] = np.asarray(batch.column(label_cols[1]))
+            coords, rs, prc = G.packed_views(batch)
+            for i in np.flatnonzero(np.isnan(pts[:, 0])):
+                mp = G.unpack(G.POLYGON, coords[i], rs[i], prc[i])
                 if algorithm == "centroid":
-                    x, y = G.multipolygon_centroid(mp)
+                    pts[i] = G.multipolygon_centroid(mp)
                 else:
-                    biggest = max(
-                        mp,
-                        key=lambda p: abs(G.signed_ring_area_planar(p[0])))
-                    x, y = G.polylabel(biggest)
-                coords_o.append([x, y])
-                rs_o.append([1])
-                pc_o.append([])
-            out = pdf.copy()
-            out["kind"] = np.int8(G.POINT)
-            out["coords"] = coords_o
-            out["ring_sizes"] = rs_o
-            out["poly_ring_counts"] = pc_o
-            yield out[out_names]
+                    pts[i] = G.polylabel(max(mp, key=lambda p: abs(
+                        G.signed_ring_area_planar(p[0]))))
+            ints = pa.list_(pa.int32())
+            point = {"kind": pa.array([G.POINT] * n, pa.int8()),
+                     "coords": pa.array(list(pts), pa.list_(pa.float64())),
+                     "ring_sizes": pa.array([[1]] * n, ints),
+                     "poly_ring_counts": pa.array([[]] * n, ints)}
+            yield pa.RecordBatch.from_arrays(
+                [point.get(f.name, batch.column(f.name)) for f in schema],
+                names=schema.names)
 
-    return features.mapInPandas(gen, schema=schema)
+    return features.mapInArrow(gen, schema)
 
 
 class Profile:

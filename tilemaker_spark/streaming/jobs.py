@@ -262,6 +262,8 @@ def streaming_scd2(spark: SparkSession, input_dir: str,
     exactly: a null is kept only when the previous row's value is
     missing-or-null (the lag-isNull branch), and any row FOLLOWING a
     null is kept (null != x is SQL-null, so the batch filter keeps it).
+    A null ``ts`` sorts first and gives a NULL ``valid_from_us``, as the
+    batch twin's ascending window order and ``unix_micros`` do.
 
     Requires a UTC session timezone (this repo's session.py default):
     pandas receives session-local naive timestamps, so a non-UTC
@@ -291,17 +293,18 @@ def streaming_scd2(spark: SparkSession, input_dir: str,
         if not chunks:  # timeout-only invocation: nothing to apply
             return
         pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]).sort_values(["ts", "event_id"])
-        ts_us = pdf["ts"].astype("int64") // 1000
+               else chunks[0]).sort_values(["ts", "event_id"],
+                                           na_position="first")
+        ts_us = pdf["ts"].astype("int64") // 1000  # NaT: int64-min
         out = []
-        for attr, t in zip(pdf["event_type"], ts_us):
+        for attr, t, nat in zip(pdf["event_type"], ts_us, pdf["ts"].isna()):
             attr = None if pd.isna(attr) else attr
             # batch filter: lag(attr) IS NULL OR lag(attr) != attr,
             # with SQL null semantics (null != x -> null -> dropped)
             if (not started) or prev is None or (
                     attr is not None and attr != prev):
                 version += 1
-                out.append((key[0], attr, int(t), version))
+                out.append((key[0], attr, None if nat else int(t), version))
             prev, started = attr, True
         state.update((prev, version))
         if out:

@@ -9,8 +9,9 @@ command line) this prints, from the formatted physical plan:
 - broadcasts: BroadcastExchange / BroadcastHashJoin nodes (small dims
   must broadcast, never shuffle the big side)
 - codegen: WholeStageCodegen span count (JVM-side expression work)
-- python: ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas nodes
-  (the declared Arrow escape hatches — anything else Python is a bug)
+- python: ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas /
+  MapInArrow / FlatMapGroupsInArrow nodes (the declared Arrow escape
+  hatches — anything else Python is a bug)
 - scan columns: ReadSchema width per parquet scan (column pruning —
   a scan reading all columns for a narrow projection is wrong)
 
@@ -43,7 +44,8 @@ def audit_plan(df) -> dict:
         "codegen": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
         "python": len(re.findall(
             r"^\(\d+\) (?:ArrowEvalPython|MapInPandas|"
-            r"FlatMapGroupsInPandas|MapInArrow|BatchEvalPython)",
+            r"FlatMapGroupsInPandas|MapInArrow|FlatMapGroupsInArrow|"
+            r"BatchEvalPython)",
             plan, re.MULTILINE)),
         "row_at_a_time_python": len(re.findall(
             r"^\(\d+\) BatchEvalPython", plan, re.MULTILINE)),
