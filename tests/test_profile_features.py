@@ -254,3 +254,103 @@ def test_modify_id(spark):
         feature_id=lambda: F.col("id") * 2 + 1)]
     out = prof.Profile(rules).apply(way_geoms=way_geoms).collect()
     assert out[0]["feature_id"] == 15
+
+
+def _entity_tables(spark):
+    """One small table per profile source: way 10 is closed and tagged
+    for a line rule and two area rules, way 11 is open, relation 30 has a
+    ``label`` member node and relation 31 has none."""
+    sq = [0.0, 0.0, 2.0, 0.0, 2.0, 2.0, 0.0, 2.0, 0.0, 0.0]
+    nodes = spark.createDataFrame(
+        [(1, 5.0, 5.0, {"amenity": "cafe", "name": "c"}),
+         (2, 6.0, 6.0, {}), (3, 0.5, 0.5, {})],
+        "id long, lon double, lat double, tags map<string,string>")
+    way_geoms = spark.createDataFrame(
+        [(10, {"highway": "pedestrian", "landuse": "basin"}, sq, True),
+         (11, {"highway": "path", "landuse": "basin"},
+          [0.0, 0.0, 1.0, 1.0], False),
+         (12, {"building": "yes"}, sq, True)],
+        "id long, tags map<string,string>, coords array<double>, "
+        "is_closed boolean")
+    rel_geoms = spark.createDataFrame(
+        [(30, {"type": "boundary", "name": "A"}, sq, [5], [1]),
+         (31, {"type": "boundary", "natural": "water"}, sq, [5], [1])],
+        "id long, tags map<string,string>, coords array<double>, "
+        "ring_sizes array<int>, poly_ring_counts array<int>")
+    relations = spark.createDataFrame(
+        [(30, [(0, 3, "label"), (1, 12, "outer")], {"type": "boundary"}),
+         (31, [(1, 10, "outer")], {"type": "boundary"})],
+        "id long, members array<struct<mtype:int,ref:long,role:string>>, "
+        "tags map<string,string>")
+    return dict(nodes=nodes, way_geoms=way_geoms, rel_geoms=rel_geoms,
+                relations=relations)
+
+
+def test_one_pass_matches_single_rule_union(spark):
+    """All of a table's rules run in one projection; that emits the same
+    multiset of rows as running each rule on its own and taking the
+    union — across all four sources, a way hit by line and area rules,
+    landuse=basin hitting water and landuse, a relation label member, a
+    feature_id override and a node rule."""
+    rules = [
+        prof.LayerRule(layer="transportation", source="way_line",
+                       match=lambda: prof.holds("highway"),
+                       attrs={"class": lambda: prof.find("highway")},
+                       minzoom=lambda: F.when(
+                           prof.find("highway") == "path", F.lit(12))
+                       .otherwise(F.lit(9))),
+        prof.LayerRule(layer="water", source="way_area",
+                       match=lambda: prof.find("landuse") == "basin",
+                       attrs={"class": lambda: F.lit("lake")}),
+        prof.LayerRule(layer="landuse", source="way_area",
+                       match=lambda: prof.holds("landuse"),
+                       attrs={"class": lambda: prof.find("landuse")},
+                       feature_id=lambda: F.col("id") * 2 + 1, zorder=5),
+        prof.LayerRule(layer="building", source="way_area",
+                       match=lambda: prof.holds("building"),
+                       as_centroid=True, centroid_algorithm="centroid"),
+        prof.LayerRule(layer="place", source="relation",
+                       match=lambda: prof.holds("type"),
+                       attrs={"name": lambda: prof.find("name")},
+                       as_centroid=True, centroid_roles=("label",)),
+        prof.LayerRule(layer="water", source="relation",
+                       match=lambda: prof.find("natural") == "water"),
+        prof.LayerRule(layer="poi", source="node",
+                       match=lambda: prof.holds("amenity"),
+                       attrs={"name": lambda: prof.find("name")},
+                       minzoom=14),
+    ]
+    tables = _entity_tables(spark)
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    one = prof.Profile(rules).apply(**tables)
+    each = [prof.Profile([r]).apply(**tables) for r in rules]
+    union = each[0]
+    for df in each[1:]:
+        union = union.unionByName(df)
+    got = rows(one)
+    assert got == rows(union)
+    by_key = {(r["layer"], r["feature_id"]): r for r in one.collect()}
+    # way 10: one line and two areas (landuse under its id override);
+    # open way 11: the line rule only
+    assert len(got) == 9 and set(by_key) == {
+        ("transportation", 10), ("water", 10), ("landuse", 21),
+        ("transportation", 11), ("building", 12), ("place", 30),
+        ("place", 31), ("water", 31), ("poi", 1)}
+    assert by_key[("landuse", 21)]["zorder"] == 5
+    assert by_key[("building", 12)]["coords"] == [1.0, 1.0]
+    assert by_key[("place", 30)]["coords"] == [0.5, 0.5]   # label member
+    assert by_key[("place", 31)]["kind"] == 0
+    assert by_key[("water", 31)]["kind"] == 3              # not a centroid
+    assert dict(by_key[("poi", 1)]["attrs"]) == {"name": "c"}
+
+
+def test_unknown_centroid_algorithm_raises(spark):
+    rules = [prof.LayerRule(layer="place", source="way_area",
+                            match=lambda: F.lit(True), as_centroid=True,
+                            centroid_algorithm="median")]
+    with pytest.raises(ValueError, match="unknown centroid algorithm"):
+        prof.Profile(rules).apply(
+            way_geoms=_entity_tables(spark)["way_geoms"])

@@ -153,31 +153,8 @@ def knn_cell_audit(
     ``under_filled`` queries may have missed true neighbors outside the
     ring.  Aggregate ``sum(under_filled)`` for the runtime counter the
     operator's docstring promises."""
-    nmax = (1 << cell_zoom) - 1
-    span = 360.0 / (1 << cell_zoom)
-    qx = F.least(F.greatest(TE.lon2tilex(F.col(q_lon), cell_zoom), F.lit(0)),
-                 F.lit(nmax))
-    qy = F.least(F.greatest(TE.lat2tiley(F.col(q_lat), cell_zoom), F.lit(0)),
-                 F.lit(nmax))
-    # ring boundary in lon / latp degrees: x in [qx-1, qx+2], y likewise
-    lon_lo = (qx - 1).cast("double") * F.lit(span) - F.lit(180.0)
-    lon_hi = (qx + 2).cast("double") * F.lit(span) - F.lit(180.0)
-    latp_hi = F.lit(180.0) - (qy - 1).cast("double") * F.lit(span)
-    latp_lo = F.lit(180.0) - (qy + 2).cast("double") * F.lit(span)
-    # latp -> lat: lat = 2*atan(exp(rad(latp))) - pi/2, in degrees
-    lat_of = (lambda latp: F.degrees(
-        F.lit(2.0) * F.atan(F.exp(F.radians(latp))) - F.lit(3.141592653589793 / 2)))
-    lat_lo = lat_of(latp_lo)
-    lat_hi = lat_of(latp_hi)
-    lon = F.col(q_lon)
-    lat = F.col(q_lat)
-    # nearest points on the 4 ring edges (clamp the free coordinate)
-    guard = F.least(
-        TE.haversine_m(lon, lat, lon_lo, lat),
-        TE.haversine_m(lon, lat, lon_hi, lat),
-        TE.haversine_m(lon, lat, lon, lat_lo),
-        TE.haversine_m(lon, lat, lon, lat_hi),
-    ).alias("guard_m")
+    guard = _ring_guard_m(F.col(q_lon), F.col(q_lat),
+                          cell_zoom).alias("guard_m")
     qg = queries.select(F.col(query_id).alias("query_id"), guard)
     per_q = result.groupBy("query_id").agg(
         F.count("*").alias("n_found"),
@@ -204,13 +181,16 @@ def _ring_guard_m(lon, lat, cell_zoom: int):
                  F.lit(nmax))
     qy = F.least(F.greatest(TE.lat2tiley(lat, cell_zoom), F.lit(0)),
                  F.lit(nmax))
+    # ring boundary in lon / latp degrees: x in [qx-1, qx+2], y likewise
     lon_lo = (qx - 1).cast("double") * F.lit(span) - F.lit(180.0)
     lon_hi = (qx + 2).cast("double") * F.lit(span) - F.lit(180.0)
     latp_hi = F.lit(180.0) - (qy - 1).cast("double") * F.lit(span)
     latp_lo = F.lit(180.0) - (qy + 2).cast("double") * F.lit(span)
+    # latp -> lat: lat = 2*atan(exp(rad(latp))) - pi/2, in degrees
     lat_of = (lambda latp: F.degrees(
         F.lit(2.0) * F.atan(F.exp(F.radians(latp)))
         - F.lit(3.141592653589793 / 2)))
+    # nearest points on the 4 ring edges (clamp the free coordinate)
     return F.least(
         TE.haversine_m(lon, lat, lon_lo, lat),
         TE.haversine_m(lon, lat, lon_hi, lat),

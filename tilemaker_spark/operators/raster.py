@@ -73,6 +73,10 @@ def render_raster_tiles(features: DataFrame, zoom: int,
 
     def render_group(table):
         x, y = table.column("bx")[0].as_py(), table.column("by")[0].as_py()
+        # paint in a fixed order, not in the order rows reached the group
+        table = table.sort_by([("layer", "ascending"),
+                               ("zorder", "ascending"),
+                               ("feature_id", "ascending")])
         rows = []
         for kind, layer, coords, rs, prc in zip(
                 np.asarray(table.column("kind")),

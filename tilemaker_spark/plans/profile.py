@@ -1,11 +1,12 @@
 """Profiles: declarative per-entity feature rules.
 
-The reference's "query language" is a per-row Lua flatMap
-(/root/reference/src/osm_lua_processing.cpp:1076-1239: node_function /
-way_function emit 0..N (layer, geomType, attributes) rows).  Here a
-profile is a list of :class:`LayerRule` objects that compile to one
-``select+filter+union`` plan per rule — fully Catalyst-optimizable,
-zero per-row Python (SURVEY.md §2.9 tier 1).
+The reference's "query language" is a per-row Lua flatMap (reference
+src/osm_lua_processing.cpp:1076-1239: node_function / way_function run
+once per entity and emit 0..N (layer, geomType, attributes) rows).  Here
+a profile is a list of :class:`LayerRule` objects, and all the rules
+over one entity table compile to ONE projection of it: an ``explode``
+of the non-null ``when(match, struct)`` elements, one per rule — each
+table is read once, with zero per-row Python (SURVEY.md §2.9 tier 1).
 
 Tag predicates map 1:1 to the reference host functions:
 ``Find(k)`` -> ``element_at(tags, k)``; ``Holds(k)`` ->
@@ -16,10 +17,11 @@ column; ``Attribute(...)`` -> entries of the ``attrs`` map column.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
-import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -166,117 +168,124 @@ def used_closure(nodes: DataFrame, ways: DataFrame,
     return n, w
 
 
-def _polygons_to_label_points(features: DataFrame,
-                              algorithm: str = "polylabel",
-                              label_cols: tuple | None = None) -> DataFrame:
-    """LayerAsCentroid: replace each polygon feature's geometry with its
-    label point (reference src/osm_lua_processing.cpp:749-943).
+# LayerRule.source -> (Profile.apply argument, feature kind, a column that
+# must hold besides the rule's match, SQL for the geom.PACKED columns)
+_SOURCES = {
+    "node": ("nodes", G.POINT, None, (
+        "array(lon, lat)", "array(1)", "cast(array() as array<int>)")),
+    "way_line": ("way_geoms", G.LINESTRING, None, (
+        "coords", "array(int(size(coords) / 2))",
+        "cast(array() as array<int>)")),
+    "way_area": ("way_geoms", G.POLYGON, "is_closed", (
+        "coords", "array(int(size(coords) / 2))", "array(1)")),
+    "relation": ("rel_geoms", G.POLYGON, None, G.PACKED),
+}
 
-    algorithm="polylabel": pole of inaccessibility of the largest-area
-    polygon (the reference's polylabel_macro / default).
-    algorithm="centroid": boost-style area centroid of the whole
-    multipolygon (CentroidAlgorithm::Centroid).
-    label_cols=(lon_col, lat_col): rows where these are non-null take the
-    pre-resolved role-member label point instead (reference's node-member
-    role path); the columns are dropped from the output."""
-    if algorithm not in ("polylabel", "centroid"):
-        raise ValueError(f"unknown centroid algorithm: {algorithm}")
+# LayerRule.centroid_algorithm -> label point of an unpacked multipolygon
+_LABEL_POINT = {
+    "polylabel": lambda mp: G.polylabel(max(mp, key=lambda p: abs(
+        G.signed_ring_area_planar(p[0])))),
+    "centroid": G.multipolygon_centroid,
+}
+
+# per-row LayerAsCentroid fields: algorithm, role-member label point
+_LABEL_COLS = ("_centroid", "_label")
+
+
+def _polygons_to_label_points(features: DataFrame) -> DataFrame:
+    """LayerAsCentroid: replace the geometry of each row whose
+    ``_centroid`` names an algorithm with its label point (reference
+    src/osm_lua_processing.cpp:749-943): ``_label`` if non-null (the
+    role-member path), else the algorithm's point.  Rows with a null
+    ``_centroid`` pass through; both columns are dropped."""
     schema = StructType([f for f in features.schema.fields
-                         if label_cols is None or f.name not in label_cols])
+                         if f.name not in _LABEL_COLS])
 
     def gen(batches):
         for batch in batches:
+            algos, labels = (batch.column(c).to_pylist()
+                             for c in _LABEL_COLS)
+            # each LayerAsCentroid row's label point, None on the others
+            pts = [algo and (label or list(_LABEL_POINT[algo](
+                G.unpack(G.POLYGON, coords, rs, prc))))
+                for algo, label, coords, rs, prc in zip(
+                    algos, labels, *G.packed_views(batch))]
             n = batch.num_rows
-            pts = np.full((n, 2), np.nan)
-            if label_cols is not None:  # a null label reads as NaN
-                pts[:, 0] = np.asarray(batch.column(label_cols[0]))
-                pts[:, 1] = np.asarray(batch.column(label_cols[1]))
-            coords, rs, prc = G.packed_views(batch)
-            for i in np.flatnonzero(np.isnan(pts[:, 0])):
-                mp = G.unpack(G.POLYGON, coords[i], rs[i], prc[i])
-                if algorithm == "centroid":
-                    pts[i] = G.multipolygon_centroid(mp)
-                else:
-                    pts[i] = G.polylabel(max(mp, key=lambda p: abs(
-                        G.signed_ring_area_planar(p[0]))))
-            ints = pa.list_(pa.int32())
-            point = {"kind": pa.array([G.POINT] * n, pa.int8()),
-                     "coords": pa.array(list(pts), pa.list_(pa.float64())),
-                     "ring_sizes": pa.array([[1]] * n, ints),
-                     "poly_ring_counts": pa.array([[]] * n, ints)}
+            point = {"kind": [G.POINT] * n, "coords": pts,
+                     "ring_sizes": [[1]] * n, "poly_ring_counts": [[]] * n}
+            is_label = pc.is_valid(batch.column("_centroid"))
+            cols = [batch.column(f.name) for f in schema]
             yield pa.RecordBatch.from_arrays(
-                [point.get(f.name, batch.column(f.name)) for f in schema],
+                [pc.if_else(is_label, pa.array(point[f.name], c.type), c)
+                 if f.name in point else c for f, c in zip(schema, cols)],
                 names=schema.names)
 
     return features.mapInArrow(gen, schema)
+
+
+def _with_label_points(rel_geoms: DataFrame, relations: DataFrame,
+                       nodes: DataFrame, roles: tuple,
+                       name: str) -> DataFrame:
+    """``rel_geoms`` plus column ``name``: the [lon, lat] of each
+    relation's best label member node (null if it has none).  Node
+    members whose role matches ``roles`` qualify, preferred in the order
+    given, ties broken by member ref (reference
+    src/osm_lua_processing.cpp:749-812)."""
+    from pyspark.sql import Window
+    pref = F.array(*[F.lit(r) for r in roles])
+    mem = (
+        relations.select(F.col("id").alias("_rid"),
+                         F.explode("members").alias("m"))
+        .filter((F.col("m.mtype") == F.lit(0))
+                & F.col("m.role").isin(*roles))
+        .select("_rid", F.col("m.ref").alias("_nid"),
+                F.array_position(pref, F.col("m.role")).alias("_pri"))
+    )
+    mem = mem.join(
+        nodes.select(F.col("id").alias("_nid"),
+                     F.array("lon", "lat").alias(name)),
+        on="_nid", how="inner")
+    w = Window.partitionBy("_rid").orderBy("_pri", "_nid")
+    best = (mem.withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") == 1).select("_rid", name))
+    return rel_geoms.join(best, F.col("id") == F.col("_rid"),
+                          "left").drop("_rid")
+
+
+def _feature_struct(rule: LayerRule, kind: int, packed: tuple,
+                    algorithm: str | None, label: str | None) -> Column:
+    """One feature row of ``rule`` as a struct: FEATURE_SCHEMA's columns
+    plus the ``_LABEL_COLS`` (``label`` names a rel_geoms column)."""
+    def col(v):    # a LayerRule field: Column factory or constant
+        return v() if callable(v) else F.lit(v)
+
+    attrs = F.create_map(*[c for k, v in rule.attrs.items()
+                           for c in (F.lit(k), v().cast("string"))])
+    return F.struct(
+        col(rule.feature_id or F.col("id")).cast("long").alias("feature_id"),
+        F.lit(rule.layer).alias("layer"),
+        F.lit(kind).cast("tinyint").alias("kind"),
+        col(rule.minzoom).cast("int").alias("minzoom"),
+        col(rule.zorder).cast("long").alias("zorder"),
+        F.map_filter(attrs.cast("map<string,string>"),
+                     lambda k, v: v.isNotNull() & (v != "")).alias("attrs"),
+        *[F.expr(sql).alias(c) for c, sql in zip(G.PACKED, packed)],
+        F.lit(algorithm).cast("string").alias("_centroid"),
+        (F.col(label) if label else F.lit(None).cast("array<double>"))
+        .alias("_label"),
+    )
 
 
 class Profile:
     def __init__(self, rules: list[LayerRule]):
         self.rules = rules
 
-    def _emit(self, df: DataFrame, rule: LayerRule, kind: int,
-              coords: Column, ring_sizes: Column,
-              poly_counts: Column, extra_cols: tuple = ()) -> DataFrame:
-        mz = rule.minzoom() if callable(rule.minzoom) else F.lit(rule.minzoom)
-        zo = rule.zorder() if callable(rule.zorder) else F.lit(rule.zorder)
-        if rule.attrs:
-            attr_col = F.map_filter(
-                F.map_from_arrays(
-                    F.array(*[F.lit(k) for k in rule.attrs]),
-                    F.array(*[v().cast("string") for v in rule.attrs.values()]),
-                ),
-                lambda k, v: v.isNotNull() & (v != ""),
-            )
-        else:
-            attr_col = F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<string>"))
-        fid = (rule.feature_id() if rule.feature_id is not None
-               else F.col("id"))
-        return df.filter(rule.match()).select(
-            fid.cast("long").alias("feature_id"),
-            F.lit(rule.layer).alias("layer"),
-            F.lit(kind).cast("tinyint").alias("kind"),
-            mz.cast("int").alias("minzoom"),
-            zo.cast("long").alias("zorder"),
-            attr_col.alias("attrs"),
-            coords.alias("coords"),
-            ring_sizes.alias("ring_sizes"),
-            poly_counts.alias("poly_ring_counts"),
-            *[F.col(c) for c in extra_cols],
-        )
-
-    def _label_member_points(self, relations: DataFrame, nodes: DataFrame,
-                             roles: tuple) -> DataFrame:
-        """Per relation, the lon/lat of its best label member node:
-        node members whose role matches ``roles``, preferred in the order
-        given, ties broken by member ref (reference
-        src/osm_lua_processing.cpp:749-812)."""
-        from pyspark.sql import Window
-        pref = F.array(*[F.lit(r) for r in roles])
-        mem = (
-            relations.select(F.col("id").alias("_rid"),
-                             F.explode("members").alias("m"))
-            .filter((F.col("m.mtype") == F.lit(0))
-                    & F.col("m.role").isin(*roles))
-            .select("_rid", F.col("m.ref").alias("_nid"),
-                    F.array_position(pref, F.col("m.role")).alias("_pri"))
-        )
-        mem = mem.join(
-            nodes.select(F.col("id").alias("_nid"),
-                         F.col("lon").alias("_label_lon"),
-                         F.col("lat").alias("_label_lat")),
-            on="_nid", how="inner")
-        w = Window.partitionBy("_rid").orderBy("_pri", "_nid")
-        return (mem.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select("_rid", "_label_lon", "_label_lat"))
-
     def apply(self, nodes: DataFrame | None = None,
               way_geoms: DataFrame | None = None,
               rel_geoms: DataFrame | None = None,
               relations: DataFrame | None = None) -> DataFrame:
-        """Build the features table from entity DataFrames.
+        """Build the features table from entity DataFrames: each table's
+        rules run in one projection, so rows come out grouped by table.
 
         nodes: (id, lon, lat, tags); way_geoms: assembly output
         (id, tags, coords, is_closed, ...); rel_geoms: multipolygon
@@ -284,55 +293,44 @@ class Profile:
         relations: raw relations (id, members, tags) — needed only for
         rules with ``centroid_roles`` (role-based label members).
         """
-        outs: list[DataFrame] = []
-        empty_i = F.array().cast("array<int>")
+        tables = {"nodes": nodes, "way_geoms": way_geoms,
+                  "rel_geoms": rel_geoms}
+        labels: dict[tuple, str] = {}  # centroid_roles -> rel_geoms column
+        if rel_geoms is not None and relations is not None \
+                and nodes is not None:
+            for roles in dict.fromkeys(
+                    r.centroid_roles for r in self.rules
+                    if r.source == "relation" and r.as_centroid
+                    and r.centroid_roles):
+                labels[roles] = name = f"_label{len(labels)}"
+                tables["rel_geoms"] = _with_label_points(
+                    tables["rel_geoms"], relations, nodes, roles, name)
+        rows: dict[str, list[Column]] = {}
+        any_centroid = False
         for rule in self.rules:
-            if rule.source == "node" and nodes is not None:
-                outs.append(self._emit(
-                    nodes, rule, G.POINT,
-                    F.array("lon", "lat"),
-                    F.array(F.lit(1)), empty_i))
-            elif rule.source == "way_line" and way_geoms is not None:
-                outs.append(self._emit(
-                    way_geoms, rule, G.LINESTRING,
-                    F.col("coords"),
-                    F.array((F.size("coords") / 2).cast("int")), empty_i))
-            elif rule.source == "way_area" and way_geoms is not None:
-                closed = way_geoms.filter(F.col("is_closed"))
-                emitted = self._emit(
-                    closed, rule, G.POLYGON,
-                    F.col("coords"),
-                    F.array((F.size("coords") / 2).cast("int")),
-                    F.array(F.lit(1)))
-                outs.append(_polygons_to_label_points(
-                    emitted, algorithm=rule.centroid_algorithm)
-                    if rule.as_centroid else emitted)
-            elif rule.source == "relation" and rel_geoms is not None:
-                src = rel_geoms
-                label_cols = None
-                if (rule.as_centroid and rule.centroid_roles
-                        and relations is not None and nodes is not None):
-                    best = self._label_member_points(
-                        relations, nodes, rule.centroid_roles)
-                    src = rel_geoms.join(
-                        best, rel_geoms["id"] == best["_rid"], "left"
-                    ).drop("_rid")
-                    label_cols = ("_label_lon", "_label_lat")
-                emitted = self._emit(
-                    src, rule, G.POLYGON,
-                    F.col("coords"), F.col("ring_sizes"),
-                    F.col("poly_ring_counts"),
-                    extra_cols=label_cols or ())
-                outs.append(_polygons_to_label_points(
-                    emitted, algorithm=rule.centroid_algorithm,
-                    label_cols=label_cols)
-                    if rule.as_centroid else emitted)
-        if not outs:
+            table, kind, guard, packed = _SOURCES[rule.source]
+            if tables[table] is None:
+                continue
+            algo = (rule.centroid_algorithm
+                    if rule.as_centroid and kind == G.POLYGON else None)
+            if algo is not None and algo not in _LABEL_POINT:
+                raise ValueError(f"unknown centroid algorithm: {algo}")
+            any_centroid |= algo is not None
+            match = rule.match()
+            match = match if guard is None else F.col(guard) & match
+            label = labels.get(rule.centroid_roles) \
+                if table == "rel_geoms" else None
+            rows.setdefault(table, []).append(F.when(
+                match, _feature_struct(rule, kind, packed, algo, label)))
+        if not rows:
             raise ValueError("profile emitted no rules for given inputs")
-        res = outs[0]
-        for o in outs[1:]:
-            res = res.unionByName(o)
-        return res
+        res = reduce(DataFrame.unionByName, [
+            tables[table].select(F.explode(F.array_compact(F.array(*structs)))
+                                 .alias("f")).select("f.*")
+            for table, structs in rows.items()])
+        if any_centroid:
+            return _polygons_to_label_points(res)
+        return res.drop(*_LABEL_COLS)
 
 
 def openmaptiles_lite() -> tuple[Profile, "Config"]:
