@@ -152,7 +152,7 @@ def main(argv=None) -> int:
     if args.threads:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.threads))
     from tilemaker_spark.config import Config, LayerDef
-    from tilemaker_spark.operators.tiling import generate_tiles
+    from tilemaker_spark.operators.tiling import CLUSTER_ZOOM, generate_tiles
     from tilemaker_spark.sinks import mbtiles as MB
 
     features, cfg = read_features(spark, args.input,
@@ -182,11 +182,14 @@ def main(argv=None) -> int:
     if args.checkpoint:
         from tilemaker_spark.lineage import CheckpointedSink
         sink = CheckpointedSink(args.checkpoint)
-        # z6 subtree = the tile builder's work unit = the resume unit;
-        # zooms < 6 form one extra group (they are one plan anyway)
+        # the tile builder's work unit (the CLUSTER_ZOOM subtree) is the
+        # resume unit; lower zooms form one extra group (they are one
+        # plan anyway)
+        cz = CLUSTER_ZOOM
         pk = F.when(
-            F.col("z") >= 6,
-            F.expr("shiftright(x, z - 6) * 64 + shiftright(y, z - 6)"),
+            F.col("z") >= cz,
+            F.expr(f"shiftright(x, z - {cz}) * {1 << cz}"
+                   f" + shiftright(y, z - {cz})"),
         ).otherwise(F.lit(-1)).cast("long")
         sink.write_partitioned(tiles.withColumn("pk", pk), "pk")
         if args.compact_checkpoint:
@@ -231,9 +234,8 @@ def main(argv=None) -> int:
             from tilemaker_spark.lineage import CheckpointedSink
             rsink = CheckpointedSink(
                 os.path.join(args.checkpoint, "raster"))
-            rz = args.raster_zoom
-            rdz = max(0, rz - 6)
-            rpk = (F.shiftright(F.col("x"), rdz) * 64
+            rdz = max(0, args.raster_zoom - CLUSTER_ZOOM)
+            rpk = (F.shiftright(F.col("x"), rdz) * (1 << CLUSTER_ZOOM)
                    + F.shiftright(F.col("y"), rdz)).cast("long")
             rsink.write_partitioned(rt.withColumn("pk", rpk), "pk")
             if rsink.committed_keys():

@@ -126,3 +126,18 @@ def test_way_assembly_skip_integrity_drops_missing(spark):
     assert out[0]["n_found"] == 3
     assert None not in coords
     assert coords == [0.0, 0.0, 1.0, 0.0, 1.0, 1.0]
+
+
+def test_stitch_rings_stops_at_closed_ring():
+    """Stitching stops as soon as a ring closes: a way leaving the
+    ring's start is left over (and dropped, being unclosable), and a
+    second ring seeds from the next unused way."""
+    a = np.array([[0, 0], [1, 0], [1, 1]], float)
+    b = np.array([[1, 1], [0, 1], [0, 0]], float)
+    spur = np.array([[0, 0], [-1, -1]], float)
+    c = np.array([[5, 5], [6, 5], [6, 6]], float)
+    d = np.array([[5, 5], [5, 6], [6, 6]], float)   # reversed to close c
+    rings = assembly.stitch_rings([a, b, spur, c, d])
+    assert [r.tolist() for r in rings] == [
+        [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0]],
+        [[5, 5], [6, 5], [6, 6], [5, 6], [5, 5]]]

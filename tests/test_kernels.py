@@ -308,3 +308,38 @@ def test_simplify_buildings_collinear():
         [0, 0], [5, 0.01], [10, 0], [10, 10], [0, 10], [0, 0]], float)
     out = G.simplify_buildings([[ring]], max_distance=0.5)
     assert len(out[0][0]) == 5
+
+
+def test_merge_lines_reverses_at_both_ends():
+    """Lines chain end-to-start, reversed where needed, at either end of
+    the chain (reference ReorderMultiLinestring, tile_worker.cpp:29-77)."""
+    seed = np.array([[1, 0], [2, 0]], float)
+    tail = np.array([[3, 0], [2, 0]], float)   # its end meets seed's end
+    head = np.array([[1, 0], [0, 0]], float)   # its start meets seed's start
+    lone = np.array([[9, 9], [8, 8]], float)
+    out = G.merge_lines([seed, tail, lone, head])
+    assert len(out) == 2
+    assert out[0].tolist() == [[0, 0], [1, 0], [2, 0], [3, 0]]
+    assert out[1].tolist() == lone.tolist()
+
+
+def test_merge_lines_point_cap():
+    """A chain stops growing once it holds 6000 points; the next line
+    seeds a chain of its own."""
+    xs = np.arange(7001, dtype=float)
+    run = lambda a, b: np.column_stack([xs[a:b], np.zeros(b - a)])  # noqa: E731
+    out = G.merge_lines([run(0, 3001), run(3000, 6001), run(6000, 7001)])
+    assert [len(l) for l in out] == [6001, 1001]
+    assert out[0][:, 0].tolist() == xs[:6001].tolist()
+
+
+def test_merge_lines_runs_past_a_closed_ring():
+    """Line merge stops only at the point cap, so a chain that closes
+    keeps growing: a third line leaving the ring's start joins it."""
+    a = np.array([[0, 0], [1, 0], [1, 1]], float)
+    b = np.array([[1, 1], [0, 1], [0, 0]], float)
+    spur = np.array([[0, 0], [-1, -1]], float)
+    out = G.merge_lines([a, b, spur])
+    assert len(out) == 1
+    assert out[0].tolist() == [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0],
+                               [-1, -1]]

@@ -354,6 +354,29 @@ def test_read_features_job_count(spark, synth_pbf):
     assert len(set(tracker.getJobIdsForGroup()) - before) <= 9
 
 
+def test_generate_tiles_job_count(spark, synth_pbf):
+    """PBF -> z0-14 tiles runs in a bounded number of Spark jobs, and its
+    plan holds a bounded number of exchanges and Python nodes.  The z0-5
+    pass and its second cover run are about half of the exchanges and
+    Python nodes (with cfg.minzoom = 6 the same count takes 11 jobs, 20
+    exchanges and 11 Python nodes)."""
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.operators.tiling import generate_tiles
+    from tools.plan_audit import audit_plan
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    features, cfg = J.read_features(spark, synth_pbf)
+    cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 14, 14
+    tiles = generate_tiles(features, cfg)
+    audit = audit_plan(tiles)
+    assert audit["python"] <= 22
+    assert audit["exchanges"] <= 42
+    assert tiles.count() == 200
+    assert len(set(tracker.getJobIdsForGroup()) - before) <= 14
+
+
 @pytest.mark.skipif(not os.environ.get("SPARK_GRAFT_SLOW"),
                     reason="several-minute 1M-node run; set "
                            "SPARK_GRAFT_SLOW=1 to enable")

@@ -338,6 +338,68 @@ def test_combine_polygons_below_unions_same_attr(spark):
     assert found_wood == 1  # c separate
 
 
+def _moveto_count(cmds) -> int:
+    """MoveTo commands in an MVT geometry command list."""
+    n, i = 0, 0
+    while i < len(cmds):
+        op, count = cmds[i] & 7, cmds[i] >> 3
+        n += op == 1
+        i += 1 + (2 * count if op in (1, 2) else 0)
+    return n
+
+
+def test_combine_lines_below_merges_shared_endpoint(spark):
+    """Two same-attribute lines that share an endpoint merge into one
+    feature with one MoveTo when z < combine_lines_below (reference
+    tile_worker.cpp:380-392); a line with other attributes stays a
+    feature of its own.  Coordinates are binary fractions, so the clip
+    keeps the shared endpoint bit-exact."""
+    a = [7.40625, 43.75, 7.421875, 43.734375]
+    b = [7.421875, 43.734375, 7.4375, 43.71875]
+    c = [7.40625, 43.71875, 7.4375, 43.75]
+    rows = [
+        (1, "roads", 1, 0, 0, {"class": "primary"}, a, [2], []),
+        (2, "roads", 1, 0, 0, {"class": "primary"}, b, [2], []),
+        (3, "roads", 1, 0, 0, {"class": "minor"}, c, [2], []),
+    ]
+    feats = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
+    cfgl = Config(layers={
+        "roads": LayerDef("roads", minzoom=10, maxzoom=10,
+                          combine_lines_below=11),
+    }, minzoom=10, maxzoom=10)
+    tiles = tiling.generate_tiles(feats, cfgl).collect()
+    assert [(r["z"], r["x"], r["y"]) for r in tiles] == [(10, 533, 373)]
+    got = sorted((f["attrs"]["class"], _moveto_count(f["cmds"]))
+                 for f in mvt.decode_tile(
+                     bytes(tiles[0]["tile"]))["roads"]["features"])
+    assert got == [("minor", 1), ("primary", 1)]
+
+
+def test_same_id_features_in_one_layer_both_render(spark):
+    """A way and a relation that share an OSM id and a layer are two
+    features: both reach every tile they touch, at the base zoom and in
+    the z < 6 pass alike."""
+    way = [7.40, 43.72, 7.45, 43.72, 7.45, 43.76, 7.40, 43.76, 7.40, 43.72]
+    rel = [7.42, 43.73, 7.47, 43.73, 7.47, 43.77, 7.42, 43.77, 7.42, 43.73]
+    rows = [
+        (7, "water", 3, 0, 0, {"src": "way"}, way, [5], [1]),
+        (7, "water", 3, 0, 0, {"src": "relation"}, rel, [5], [1]),
+    ]
+    feats = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
+    cfgw = Config(layers={"water": LayerDef("water", minzoom=0,
+                                            maxzoom=14)},
+                  minzoom=0, maxzoom=14, include_ids=True)
+    srcs = {}
+    for r in tiling.generate_tiles(feats, cfgw).collect():
+        fs = mvt.decode_tile(bytes(r["tile"]))["water"]["features"]
+        assert {f["id"] for f in fs} == {7}
+        srcs[(r["z"], r["x"], r["y"])] = sorted(
+            f["attrs"]["src"] for f in fs)
+    both = ["relation", "way"]
+    assert srcs[(3, 4, 2)] == both
+    assert any(z == 14 and s == both for (z, _, _), s in srcs.items())
+
+
 def test_repair_bowtie_polygon(spark):
     """Self-intersecting input polygon is repaired (robust even-odd
     re-intersection, reference src/tile_data.cpp:380-426) instead of

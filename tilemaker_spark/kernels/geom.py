@@ -315,6 +315,64 @@ def clip_line_to_box(line, minx, miny, maxx, maxy):
     return [np.vstack((pas[s], pbs[s:e])) for s, e in zip(starts, ends)]
 
 
+def clip_to_box(kind, geom, minx, miny, maxx, maxy):
+    """Clip a geometry of ``kind`` in the shape :func:`unpack` returns:
+    LINESTRING / MULTILINESTRING lines -> a list of line parts, POLYGON
+    -> a multipolygon.  Either may come back empty."""
+    if kind in (LINESTRING, MULTILINESTRING):
+        return [part for line in geom
+                for part in clip_line_to_box(line, minx, miny, maxx, maxy)]
+    return clip_multipolygon_to_box(geom, minx, miny, maxx, maxy)
+
+
+def chain_segments(segments, done):
+    """Greedy end-to-start chaining of polylines, reversal allowed: each
+    unused segment seeds a chain, which takes the first unused segment
+    that meets either of its ends until ``done(start, end, npts)`` holds
+    or no segment meets it.  Segments under 2 points are skipped.
+    Returns the chains as (N, 2) arrays in seed order (the chain loop of
+    the reference's ReorderMultiLinestring, src/tile_worker.cpp:29-77,
+    and of its multipolygon ring stitch, src/osm_store.cpp:123-227)."""
+    segs = [s for s in segments if len(s) >= 2]
+    heads = [tuple(s[0]) for s in segs]
+    tails = [tuple(s[-1]) for s in segs]
+    used = [False] * len(segs)
+    out = []
+    for seed in range(len(segs)):
+        if used[seed]:
+            continue
+        used[seed] = True
+        chain = [segs[seed]]
+        start, end, npts = heads[seed], tails[seed], len(segs[seed])
+        while not done(start, end, npts):
+            for j, s in enumerate(segs):
+                if used[j]:
+                    continue
+                if heads[j] == end:
+                    chain.append(s[1:]); end = tails[j]
+                elif tails[j] == end:
+                    chain.append(s[::-1][1:]); end = heads[j]
+                elif tails[j] == start:
+                    chain.insert(0, s[:-1]); start = heads[j]
+                elif heads[j] == start:
+                    chain.insert(0, s[::-1][:-1]); start = tails[j]
+                else:
+                    continue
+                used[j] = True
+                npts += len(s) - 1
+                break
+            else:
+                break
+        out.append(np.vstack(chain))
+    return out
+
+
+def merge_lines(lines, cap=6000):
+    """Chain same-attribute lines end-to-start until a chain holds
+    ``cap`` points (reference ReorderMultiLinestring)."""
+    return chain_segments(lines, lambda start, end, npts: npts >= cap)
+
+
 def remove_spikes(ring, eps=0.0):
     """Drop consecutive-duplicate points and A->B->A spikes (reference uses
     boost remove_spikes before validity repair, src/tile_worker.cpp:239)."""

@@ -218,8 +218,10 @@ def trace_mask(mask: np.ndarray):
 def rings_to_multipolygon(rings):
     """Group traced rings into polygons: negative-area rings (holes in
     array coords, given trace_mask's winding) are attached to the
-    smallest enclosing outer ring — the same containment rule as the
-    multipolygon assembly operator (operators/assembly.py)."""
+    smallest enclosing outer ring, tested even with a single outer.  The
+    multipolygon assembly operator (operators/assembly.assign_holes)
+    differs: it takes the first containing outer and skips the test when
+    there is only one."""
     outers, holes = [], []
     for r in rings:
         a = G.signed_ring_area_planar(r)

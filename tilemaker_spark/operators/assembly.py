@@ -151,46 +151,9 @@ def stitch_rings(segments: list[np.ndarray]) -> list[np.ndarray]:
     reversal; iteratively seeds a new ring from any unused segment
     (reference src/osm_store.cpp:123-227 semantics). Unclosable leftovers
     are dropped. Returns list of closed (N,2) rings."""
-    segs = [s for s in segments if len(s) >= 2]
-    used = [False] * len(segs)
-    rings: list[np.ndarray] = []
-    for seed in range(len(segs)):
-        if used[seed]:
-            continue
-        used[seed] = True
-        chain = [segs[seed]]
-        start = tuple(segs[seed][0])
-        end = tuple(segs[seed][-1])
-        while start != end:
-            found = False
-            for j in range(len(segs)):
-                if used[j]:
-                    continue
-                s = segs[j]
-                if tuple(s[0]) == end:
-                    chain.append(s[1:])
-                    end = tuple(s[-1])
-                elif tuple(s[-1]) == end:
-                    chain.append(s[::-1][1:])
-                    end = tuple(s[0])
-                elif tuple(s[-1]) == start:
-                    chain.insert(0, s[:-1])
-                    start = tuple(s[0])
-                elif tuple(s[0]) == start:
-                    chain.insert(0, s[::-1][:-1])
-                    start = tuple(s[-1])
-                else:
-                    continue
-                used[j] = True
-                found = True
-                break
-            if not found:
-                break
-        if start == end:
-            ring = np.vstack(chain)
-            if len(ring) >= 4:
-                rings.append(ring)
-    return rings
+    return [r for r in G.chain_segments(
+        segments, lambda start, end, npts: start == end)
+        if len(r) >= 4 and tuple(r[0]) == tuple(r[-1])]
 
 
 def assign_holes(outers: list[np.ndarray],

@@ -29,8 +29,8 @@ from ..kernels import geom as G
 from ..kernels import png as PNG
 from ..kernels import proj as P
 from ..kernels import raster as R
-from .tiling import (FEATURE_ARROW, cover_features, expand_coarse,
-                     prune_cover_to_bbox, rows_table)
+from .tiling import (FEATURE_ARROW, _to_tile_frac, cover_features,
+                     expand_coarse, prune_cover_to_bbox, rows_table)
 
 RASTER_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
                           ("y", pa.int64()), ("png", pa.binary())])
@@ -40,10 +40,7 @@ TRACED_ARROW = pa.schema(list(RASTER_ARROW)[:3] + list(FEATURE_ARROW))
 def _pixel_coords(flat: np.ndarray, z: int, x: int, y: int,
                   size: int) -> np.ndarray:
     """lon/lat flat pairs -> flat tile-local pixel coords (y down)."""
-    pts = flat.reshape(-1, 2)
-    px = (P.lon2tilexf(pts[:, 0], z) - x) * size
-    py = (P.latp2tileyf(P.lat2latp(pts[:, 1]), z) - y) * size
-    return np.column_stack([px, py]).reshape(-1)
+    return (_to_tile_frac(flat.reshape(-1, 2), z, x, y) * size).reshape(-1)
 
 
 def render_raster_tiles(features: DataFrame, zoom: int,
@@ -87,8 +84,8 @@ def render_raster_tiles(features: DataFrame, zoom: int,
             if kind == G.POLYGON:
                 rows.append((layer, G.POLYGON, geom))
             elif kind in (G.LINESTRING, G.MULTILINESTRING):
-                parts = [part for l in geom for part in G.clip_line_to_box(
-                    l, 0.0, 0.0, float(size), float(size))]
+                parts = G.clip_to_box(kind, geom, 0.0, 0.0, float(size),
+                                      float(size))
                 if parts:
                     rows.append((layer, G.LINESTRING, parts))
             else:

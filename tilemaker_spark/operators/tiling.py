@@ -29,6 +29,11 @@ Feature schema (the engine's OutputObject analogue, ``FEATURE_ARROW``):
   feature_id long, layer string, kind tinyint (0 pt / 1 line / 3 poly),
   minzoom int, zorder long, attrs map<string,string>,
   coords array<double>, ring_sizes array<int>, poly_ring_counts array<int>
+
+The cover adds ``uid``, one id per feature row: a way and a relation
+may share an OSM id (and one way may be both a line and an area in one
+layer), so the build keys its per-tile dedupe and clip pyramid on
+``uid``, not on ``(feature_id, layer)``.
 """
 
 from __future__ import annotations
@@ -36,6 +41,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
@@ -53,6 +59,7 @@ FEATURE_ARROW = pa.schema([
     ("coords", pa.list_(pa.float64())), ("ring_sizes", pa.list_(pa.int32())),
     ("poly_ring_counts", pa.list_(pa.int32()))])
 COVERED_ARROW = pa.schema(list(FEATURE_ARROW) + [
+    ("uid", pa.int64()),
     ("bx", pa.int64()), ("by", pa.int64()), ("coarse", pa.bool_())])
 TILE_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int32()),
                         ("y", pa.int32()), ("tile", pa.binary())])
@@ -90,12 +97,13 @@ def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
 
 
 def _with_tiles(batch, rows, cells: list, coarse: np.ndarray) -> pa.Table:
-    """Row ``rows[i]`` of ``batch`` once per tile of ``cells[i]`` (an
-    (n, 2) array), with the tile appended as (bx, by) and ``coarse[i]``:
-    the one row-repeat step of cover and of the coarse refine."""
+    """Row ``rows[i]`` of ``batch`` (its feature columns and ``uid``)
+    once per tile of ``cells[i]`` (an (n, 2) array), with the tile
+    appended as (bx, by) and ``coarse[i]``: the one row-repeat step of
+    cover and of the coarse refine."""
     reps = [len(c) for c in cells]
     xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
-    cols = batch.select(FEATURE_ARROW.names).take(np.repeat(rows, reps))
+    cols = batch.select(COVERED_ARROW.names[:-3]).take(np.repeat(rows, reps))
     return pa.Table.from_arrays(
         [*cols.columns, pa.array(xy[:, 0]), pa.array(xy[:, 1]),
          pa.array(np.repeat(coarse, reps))], schema=COVERED_ARROW)
@@ -129,8 +137,15 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
         features.sparkSession.sparkContext.defaultParallelism)
 
     def gen(batches):
+        # uid: the partition id over a row counter, the bit layout of
+        # F.monotonically_increasing_id
+        uid = TaskContext.get().partitionId() << 33
         for batch in batches:
             kinds = np.asarray(batch.column("kind"))
+            batch = pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(uid + np.arange(len(kinds)))],
+                names=[*batch.schema.names, "uid"])
+            uid += len(kinds)
             cells, coarse = [], np.zeros(len(kinds), bool)
             for i, (kind, coords, rs, prc) in enumerate(zip(
                     kinds, *G.packed_views(batch))):
@@ -164,16 +179,8 @@ def _expand_coarse_rows(batch, base_zoom: int) -> pa.Table:
             xy[big], np.asarray(batch.column("kind"))[big],
             *G.packed_views(batch.take(big))):
         cx, cy = int(bx) >> dz, int(by) >> dz
-        minlon, minlatp, maxlon, maxlatp = _tile_bbox(
-            CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
-        box = (minlon, float(P.latp2lat(minlatp)),
-               maxlon, float(P.latp2lat(maxlatp)))
-        geom = G.unpack(kind, coords, rs, prc)
-        if kind in (G.LINESTRING, G.MULTILINESTRING):
-            geom = [part for l in geom
-                    for part in G.clip_line_to_box(l, *box)]
-        else:
-            geom = G.clip_multipolygon_to_box(geom, *box)
+        box = _tile_bbox(CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
+        geom = G.clip_to_box(kind, G.unpack(kind, coords, rs, prc), *box)
         c = G.covering_tiles(kind, geom, base_zoom)
         cells.append(c[((c[:, 0] >> dz) == cx) & ((c[:, 1] >> dz) == cy)])
     return _with_tiles(batch, np.concatenate([exact, big]), cells,
@@ -225,15 +232,16 @@ def prune_cover_to_bbox(covered: DataFrame, bbox: tuple,
 # stage 2: per-subtree tile builder
 # ---------------------------------------------------------------------------
 
-def _tile_bbox(z: int, x: int, y: int, margin: float = 0.005):
-    """Tile lon/latp-degree box with 0.5% margin (reference TileBbox,
-    src/coordinates_geom.cpp:9-31). Returns (minlon, minlatp, maxlon,
-    maxlatp, spanlon, spanlatp) — y axis in latp, flipped later."""
+def _tile_bbox(z: int, x: int, y: int, margin: float = 0.005) -> tuple:
+    """Tile (minlon, minlat, maxlon, maxlat) box with 0.5% margin
+    (reference TileBbox, src/coordinates_geom.cpp:9-31): the margin is
+    taken in lon/latp degrees, then the latp edges turn into latitudes."""
     span = 360.0 / (1 << z)
     minlon = x * span - 180.0
     maxlatp = 180.0 - y * span
     m = span * margin
-    return minlon - m, maxlatp - span - m, minlon + span + m, maxlatp + m
+    return (minlon - m, float(P.latp2lat(maxlatp - span - m)),
+            minlon + span + m, float(P.latp2lat(maxlatp + m)))
 
 
 def _to_tile_frac(pts: np.ndarray, z: int, x: int, y: int) -> np.ndarray:
@@ -271,43 +279,67 @@ def _area_threshold(ld: LayerDef, z: int, latp: float = 0.0) -> float:
         2.0 ** (ld.filter_below - 1 - z))
 
 
-def _merge_lines(lines: list[np.ndarray], cap: int = 6000) -> list[np.ndarray]:
-    """Chain same-attribute linestrings end-to-start with a point cap
-    (reference ReorderMultiLinestring, src/tile_worker.cpp:29-77)."""
-    segs = [l for l in lines if len(l) >= 2]
-    used = [False] * len(segs)
+def _simplify_lines(parts: list, tol: float, algorithm: str) -> list:
+    """Zoom-scaled line simplify: Visvalingam when asked for, else
+    Douglas-Peucker."""
+    if tol <= 0:
+        return parts
+    if algorithm == "visvalingam":
+        return [G.visvalingam(p, tol * tol) for p in parts]
+    return [G.douglas_peucker(p, tol) for p in parts]
+
+
+def _repair(clipped: list, source: list, box: tuple, guard: float) -> list:
+    """A clipped multipolygon made simple, or [] to drop the feature
+    (escalation chain of reference src/tile_data.cpp:380-426,
+    src/geom.cpp:140-224): remove spikes first; if rings still
+    self-intersect, re-intersect ``source`` with the tile ``box`` by the
+    robust even-odd overlay, kept only if at least ``guard`` of the
+    naive clip's area survives."""
+    if G.multipolygon_is_simple(clipped):
+        return clipped
+    despiked = []
+    for poly in clipped:
+        rings = [r for r in map(G.remove_spikes, poly) if len(r) >= 4]
+        if rings:
+            despiked.append(rings)
+    if despiked and G.multipolygon_is_simple(despiked):
+        return despiked
+    minx, miny, maxx, maxy = box
+    rect = [[np.array([[minx, miny], [maxx, miny], [maxx, maxy],
+                       [minx, maxy], [minx, miny]], np.float64)]]
+    naive = sum(abs(G.signed_ring_area_planar(p[0]))
+                for p in (despiked or clipped))
+    robust = OV.intersection(source, rect)
+    if robust and OV.area_planar(robust) >= guard * naive:
+        return robust
+    return []
+
+
+def _simplify_polygons(mp: list, tol: float, algorithm: str) -> list:
+    """Zoom-scaled polygon simplify: rectilinear building simplification
+    (reference tile_worker.cpp:231-235, simplify_buildings.cpp), or a
+    per-ring simplify that drops degenerate rings.  The holes of a
+    dropped outer are not simplified."""
+    if tol <= 0:
+        return mp
+    if algorithm == "buildings":
+        if sum(len(p[0]) for p in mp) > 5 or len(mp) > 1:
+            return G.simplify_buildings(mp, tol)
+        return mp
     out = []
-    for i in range(len(segs)):
-        if used[i]:
-            continue
-        used[i] = True
-        chain = [segs[i]]
-        npts = len(segs[i])
-        end = tuple(segs[i][-1])
-        start = tuple(segs[i][0])
-        grew = True
-        while grew and npts < cap:
-            grew = False
-            for j in range(len(segs)):
-                if used[j]:
-                    continue
-                s = segs[j]
-                if tuple(s[0]) == end:
-                    chain.append(s[1:]); end = tuple(s[-1])
-                elif tuple(s[-1]) == end:
-                    chain.append(s[::-1][1:]); end = tuple(s[0])
-                elif tuple(s[-1]) == start:
-                    chain.insert(0, s[:-1]); start = tuple(s[0])
-                elif tuple(s[0]) == start:
-                    chain.insert(0, s[::-1][:-1]); start = tuple(s[-1])
-                else:
-                    continue
-                used[j] = True
-                npts += len(s) - 1
-                grew = True
-                break
-        out.append(np.vstack(chain))
+    for poly in mp:
+        outer = G.simplify_ring(poly[0], tol, algorithm)
+        if len(outer) >= 4:
+            holes = (G.simplify_ring(h, tol, algorithm) for h in poly[1:])
+            out.append([outer] + [h for h in holes if len(h) >= 4])
     return out
+
+
+def _points_in_box(pts: np.ndarray, minx, miny, maxx, maxy) -> np.ndarray:
+    """The rows of ``pts`` inside the box, edges included."""
+    return pts[(pts[:, 0] >= minx) & (pts[:, 0] <= maxx)
+               & (pts[:, 1] >= miny) & (pts[:, 1] <= maxy)]
 
 
 def _coerce_attr(v, typ: str | None):
@@ -331,8 +363,8 @@ def _tile_columns(table: pa.Table, cfg: Config) -> dict:
     """Take a table's columns out once, as numpy arrays and packed views,
     for :func:`_build_one_tile`; adds each row's layer code, layer
     definition's zoom range and output (``write_to``) layer."""
-    cols = {c: np.asarray(table.column(c))
-            for c in ("feature_id", "kind", "minzoom", "zorder", "bx", "by")}
+    cols = {c: np.asarray(table.column(c)) for c in (
+        "feature_id", "uid", "kind", "minzoom", "zorder", "bx", "by")}
     cols.update(zip(G.PACKED, G.packed_views(table)))
     cols["attrs"] = table.column("attrs").to_pylist()
     layer = table.column("layer").combine_chunks().dictionary_encode(
@@ -350,19 +382,22 @@ def _tile_columns(table: pa.Table, cfg: Config) -> dict:
     return cols
 
 
-def _tile_groups(tkey: np.ndarray, fid: np.ndarray, layer: np.ndarray):
+def _tile_groups(tkey: np.ndarray, uid: np.ndarray):
     """Yield (tile key, row indices) per distinct key, keys ascending.  A
-    (feature_id, layer) pair keeps only its first row in each tile, and
-    a tile's rows stay in input order."""
-    order = np.lexsort((layer, fid, tkey))
-    t, f, l = tkey[order], fid[order], layer[order]
+    feature (``uid``) keeps only its first row in each tile, and a
+    tile's rows stay in input order."""
+    order = np.lexsort((uid, tkey))
+    t, u = tkey[order], uid[order]
     first = np.ones(len(order), bool)
-    first[1:] = (t[1:] != t[:-1]) | (f[1:] != f[:-1]) | (l[1:] != l[:-1])
+    first[1:] = (t[1:] != t[:-1]) | (u[1:] != u[:-1])
     keep = np.sort(order[first])
     keep = keep[np.argsort(tkey[keep], kind="stable")]
     for rows in np.split(keep, np.flatnonzero(np.diff(tkey[keep])) + 1):
         if len(rows):
             yield int(tkey[rows[0]]), rows
+
+
+_RANK = (0, 1, 1, 2)  # kind -> rank: point, line, polygon
 
 
 def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
@@ -371,19 +406,42 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
     """The features at ``rows`` of ``cols`` (see :func:`_tile_columns`),
     all already known to touch (z,x,y) -> MVT tile bytes.
 
+    Every feature takes one path (reference src/tile_worker.cpp:303-418):
+    source geometry, clip, shape (simplify; for polygons also repair and
+    area filter), then emit, or wait in its rank's combine table, which
+    is flushed after the layer's other features: points, then lines,
+    then polygons.
+
     Clip-pyramid reuse (reference include/clip_cache.h:21-37): when
-    ``clip_in`` is given, clip_in[(feature_id, layer code)] may hold the
-    feature's geometry already clipped to the PARENT tile's box (a
-    superset of this tile's box+margin) — clipping proceeds from that
-    much smaller input instead of the original geometry.  When
-    ``clip_out`` is given, this tile's pre-simplify clip is stored under
-    the same key for the four child tiles to consume."""
-    minlon, minlatp, maxlon, maxlatp = _tile_bbox(z, x, y)
-    minlat = float(P.latp2lat(minlatp))
-    maxlat = float(P.latp2lat(maxlatp))
-    builders: dict[str, M.LayerBuilder] = {}
-    fids, kinds, zorders, lays = (
-        cols[c] for c in ("feature_id", "kind", "zorder", "layer_code"))
+    ``clip_in`` is given, clip_in[uid] may hold the feature's geometry
+    already clipped to the PARENT tile's box (a superset of this tile's
+    box+margin) — clipping proceeds from that much smaller input instead
+    of the original geometry.  When ``clip_out`` is given, this tile's
+    pre-simplify clip is stored under the same key for the four child
+    tiles to consume."""
+    box = _tile_bbox(z, x, y)
+    # simplify tolerance and area threshold once per layer definition
+    # (reference src/tile_worker.cpp:472-490)
+    latp = _tile_mid_latp(z, y)
+    tols = [_simplify_tolerance(ld, z, latp) for ld in cols["layer_defs"]]
+    athrs = [_area_threshold(ld, z, latp) for ld in cols["layer_defs"]]
+
+    def frac(pts):
+        return _to_tile_frac(pts, z, x, y)
+
+    encoders = (  # rank -> (MVT geometry type, encoder)
+        (M.GEOM_POINT,
+         lambda pts: M.encode_point_geom(frac(pts), cfg.extent)),
+        (M.GEOM_LINESTRING, lambda parts: M.encode_line_geom(
+            [frac(p) for p in parts], cfg.extent)),
+        (M.GEOM_POLYGON, lambda mp: M.encode_polygon_geom(
+            [[frac(r) for r in poly] for poly in mp], cfg.extent)))
+    merges = (  # rank -> one geometry from a combine group's geometries
+        lambda gs: _points_in_box(np.concatenate(gs), *box),
+        lambda gs: G.merge_lines([p for g in gs for p in g]),
+        OV.union_many)
+    fids, uids, kinds, zorders, lays = (cols[c] for c in (
+        "feature_id", "uid", "kind", "zorder", "layer_code"))
     # zoom-visibility filter BEFORE feature_limit truncation (reference
     # filters the per-tile object list by zoom before featureLimit) —
     # invisible features must not consume limit slots
@@ -391,6 +449,7 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
                 & (z <= cols["layer_maxzoom"][rows])
                 & (cols["minzoom"][rows] <= z)]
     targets = cols["target"][rows]
+    layers = []
 
     for layer_name in cfg.layer_order():
         sub = rows[targets == layer_name]
@@ -405,21 +464,20 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
         if ld0.feature_limit > 0 and (ld0.feature_limit_below <= 0
                                       or z < ld0.feature_limit_below):
             sub = sub[: ld0.feature_limit]
+        lb = M.LayerBuilder(layer_name, extent=cfg.extent)
+        layers.append(lb)
 
-        lb = builders.setdefault(
-            layer_name, M.LayerBuilder(layer_name, extent=cfg.extent))
+        def emit(rank, geom, attrs, fid):
+            typ, encode = encoders[rank]
+            lb.add_feature(typ, encode(geom), attrs,
+                           feature_id=int(fid) if cfg.include_ids else None)
 
-        # combine compatible features (same attrs+kind), reference
-        # tile_worker.cpp:323-404
-        tol_cache: dict[int, float] = {}
-        point_groups: dict = {}
-        line_groups: dict = {}
-        poly_groups: dict = {}
+        # compatible features (same kind, attrs and zorder) combine,
+        # reference tile_worker.cpp:323-404
+        combine = ({}, {}, {})
         for i, row in enumerate(sub):
-            lay = lays[row]
-            ld = cols["layer_defs"][lay]
-            fid = fids[row]
-            kind = kinds[row]
+            lay, kind = lays[row], kinds[row]
+            ld, rank = cols["layer_defs"][lay], _RANK[kind]
             attrs = cols["attrs"][row]
             attrs = dict(attrs) if attrs is not None else {}
             if ld.attr_minzoom:
@@ -429,176 +487,50 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
             if ld.attr_types:
                 attrs = {k: _coerce_attr(v, ld.attr_types.get(k))
                          for k, v in attrs.items()}
+            if rank == 0:
+                # every point of a multipoint stays; the box test waits
+                # for the flush
+                geom = cols["coords"][row].reshape(-1, 2)
+                merge = ld.combine_points
+            else:
+                src = clip_in.get(uids[row]) if clip_in else None
+                if src is None:
+                    src = G.unpack(kind, cols["coords"][row],
+                                   cols["ring_sizes"][row],
+                                   cols["poly_ring_counts"][row])
+                geom = G.clip_to_box(kind, src, *box)
+                if clip_out is not None:
+                    clip_out[uids[row]] = geom
+                if geom and rank == 1:
+                    geom = _simplify_lines(geom, tols[lay],
+                                           ld.simplify_algorithm)
+                elif geom:
+                    if cfg.repair_geometry:
+                        geom = _repair(geom, src, box, cfg.repair_area_guard)
+                    geom = _simplify_polygons(geom, tols[lay],
+                                              ld.simplify_algorithm)
+                    if athrs[lay] > 0:
+                        geom = [p for p in geom if abs(
+                            G.signed_ring_area_planar(p[0])) >= athrs[lay]]
+                if not geom:
+                    continue
+                merge = z < (ld.combine_lines_below if rank == 1
+                             else ld.combine_polygons_below)
+                if not merge:
+                    emit(rank, geom, attrs, fids[row])
+                    continue
             akey = (kind, tuple(sorted(attrs.items())), zorders[row])
-            coords = cols["coords"][row].reshape(-1, 2)
-            if kind == G.POINT:
-                # multipoint-aware: keep every point (geojson can emit
-                # kind=POINT with N>1 points)
-                if ld.combine_points:
-                    point_groups.setdefault(akey, ([], attrs, fid))[0].extend(
-                        coords)
-                else:
-                    point_groups.setdefault(
-                        (akey, i), ([], attrs, fid))[0].extend(coords)
-            elif kind in (G.LINESTRING, G.MULTILINESTRING):
-                gkey = (fid, lay)
-                cached = clip_in.get(gkey) if clip_in else None
-                lines = cached if cached is not None else G.unpack(
-                    kind, coords, cols["ring_sizes"][row],
-                    cols["poly_ring_counts"][row])
-                parts = []
-                for l in lines:
-                    parts.extend(G.clip_line_to_box(
-                        l, minlon, minlat, maxlon, maxlat))
-                if clip_out is not None:
-                    clip_out[gkey] = parts
-                if not parts:
-                    continue
-                tol = tol_cache.setdefault(
-                    lay, _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
-                if tol > 0:
-                    parts = [
-                        (G.douglas_peucker(p, tol)
-                         if ld.simplify_algorithm != "visvalingam"
-                         else G.visvalingam(p, tol * tol))
-                        for p in parts
-                    ]
-                if ld.combine_lines_below > 0 and z < ld.combine_lines_below:
-                    line_groups.setdefault(akey, ([], attrs, fid))[0].extend(
-                        parts)
-                else:
-                    frac = [_to_tile_frac(p, z, x, y) for p in parts]
-                    cmds = M.encode_line_geom(frac, cfg.extent)
-                    lb.add_feature(
-                        M.GEOM_LINESTRING, cmds, attrs,
-                        feature_id=int(fid) if cfg.include_ids else None)
-            else:  # polygon
-                gkey = (fid, lay)
-                cached = clip_in.get(gkey) if clip_in else None
-                mp = cached if cached is not None else G.unpack(
-                    kind, coords, cols["ring_sizes"][row],
-                    cols["poly_ring_counts"][row])
-                clipped = G.clip_multipolygon_to_box(
-                    mp, minlon, minlat, maxlon, maxlat)
-                if clip_out is not None:
-                    clip_out[gkey] = clipped
-                if not clipped:
-                    continue
-                if (cfg.repair_geometry
-                        and not G.multipolygon_is_simple(clipped)):
-                    # escalation chain (reference src/tile_data.cpp:380-426,
-                    # src/geom.cpp:140-224): remove_spikes first; if rings
-                    # still self-intersect, robust even-odd re-intersection
-                    # of the ORIGINAL geometry with the tile box; keep only
-                    # if >= repair_area_guard of the naive area survives,
-                    # else drop the feature (reference drop rule)
-                    despiked = []
-                    for poly in clipped:
-                        rings = [G.remove_spikes(r) for r in poly]
-                        rings = [r for r in rings if len(r) >= 4]
-                        if rings:
-                            despiked.append(rings)
-                    if despiked and G.multipolygon_is_simple(despiked):
-                        clipped = despiked
-                    else:
-                        box = [[np.array(
-                            [[minlon, minlat], [maxlon, minlat],
-                             [maxlon, maxlat], [minlon, maxlat],
-                             [minlon, minlat]], np.float64)]]
-                        naive = sum(
-                            abs(G.signed_ring_area_planar(p[0]))
-                            for p in (despiked or clipped))
-                        robust = OV.intersection(mp, box)
-                        if robust and OV.area_planar(robust) >= (
-                                cfg.repair_area_guard * naive):
-                            clipped = robust
-                        else:
-                            continue
-                tol = tol_cache.setdefault(
-                    lay, _simplify_tolerance(ld, z, _tile_mid_latp(z, y)))
-                if tol > 0 and ld.simplify_algorithm == "buildings":
-                    # rectilinear building simplification (reference
-                    # tile_worker.cpp:231-235, simplify_buildings.cpp)
-                    if sum(len(p[0]) for p in clipped) > 5 or len(
-                            clipped) > 1:
-                        clipped = G.simplify_buildings(clipped, tol)
-                    if not clipped:
-                        continue
-                elif tol > 0:
-                    mp2 = []
-                    for poly in clipped:
-                        outer = G.simplify_ring(poly[0], tol,
-                                                ld.simplify_algorithm)
-                        if len(outer) < 4:
-                            continue
-                        rings = [outer]
-                        for hole in poly[1:]:
-                            hh = G.simplify_ring(hole, tol,
-                                                 ld.simplify_algorithm)
-                            if len(hh) >= 4:
-                                rings.append(hh)
-                        mp2.append(rings)
-                    clipped = mp2
-                athr = _area_threshold(ld, z, _tile_mid_latp(z, y))
-                if athr > 0:
-                    clipped = [
-                        poly for poly in clipped
-                        if abs(G.signed_ring_area_planar(poly[0])) >= athr
-                    ]
-                if not clipped:
-                    continue
-                if (ld.combine_polygons_below > 0
-                        and z < ld.combine_polygons_below):
-                    # same-attribute polygons union per tile (reference
-                    # src/tile_worker.cpp:393-404, geom.cpp:232-290)
-                    poly_groups.setdefault(
-                        akey, ([], attrs, fid))[0].append(clipped)
-                    continue
-                frac_mp = [
-                    [_to_tile_frac(r, z, x, y) for r in poly]
-                    for poly in clipped
-                ]
-                cmds = M.encode_polygon_geom(frac_mp, cfg.extent)
-                lb.add_feature(
-                    M.GEOM_POLYGON, cmds, attrs,
-                    feature_id=int(fid) if cfg.include_ids else None)
+            combine[rank].setdefault(akey if merge else (akey, i),
+                                     ([], attrs, fids[row]))[0].append(geom)
+        for rank, table in enumerate(combine):
+            for geoms, attrs, fid in table.values():
+                geom = merges[rank](geoms)
+                if len(geom):
+                    emit(rank, geom, attrs, fid)
 
-        for pts, attrs, fid in point_groups.values():
-            arr = np.asarray(pts)
-            inside = (
-                (arr[:, 0] >= minlon) & (arr[:, 0] <= maxlon)
-                & (arr[:, 1] >= minlat) & (arr[:, 1] <= maxlat))
-            arr = arr[inside]
-            if len(arr) == 0:
-                continue
-            frac = _to_tile_frac(arr, z, x, y)
-            cmds = M.encode_point_geom(frac, cfg.extent)
-            lb.add_feature(
-                M.GEOM_POINT, cmds, attrs,
-                feature_id=int(fid) if cfg.include_ids else None)
-        for parts, attrs, fid in line_groups.values():
-            merged = _merge_lines(parts)
-            frac = [_to_tile_frac(p, z, x, y) for p in merged]
-            cmds = M.encode_line_geom(frac, cfg.extent)
-            lb.add_feature(
-                M.GEOM_LINESTRING, cmds, attrs,
-                feature_id=int(fid) if cfg.include_ids else None)
-        for mps, attrs, fid in poly_groups.values():
-            merged = OV.union_many(mps) if len(mps) > 1 else mps[0]
-            if not merged:
-                continue
-            frac_mp = [
-                [_to_tile_frac(r, z, x, y) for r in poly] for poly in merged
-            ]
-            cmds = M.encode_polygon_geom(frac_mp, cfg.extent)
-            lb.add_feature(
-                M.GEOM_POLYGON, cmds, attrs,
-                feature_id=int(fid) if cfg.include_ids else None)
-
-    live = [lb for lb in builders.values() if lb.features]
-    if not live:
+    if not any(lb.features for lb in layers):
         return None
-    return M.build_tile(live, compress=cfg.compress)
+    return M.build_tile(layers, compress=cfg.compress)
 
 
 def build_tiles(covered: DataFrame, cfg: Config,
@@ -621,7 +553,7 @@ def build_tiles(covered: DataFrame, cfg: Config,
 
     def build_subtree(table):  # unannotated: applyInArrow reads hints
         # refine coarse (large-object) rows to exact tiles, in-worker;
-        # _tile_groups keeps one row per (feature_id, layer) and tile
+        # _tile_groups keeps one row per feature (uid) and tile
         table = _expand_coarse_rows(table, base_zoom)
         if box is not None:
             # a refined large feature covers its whole z6 cell, which
@@ -640,8 +572,7 @@ def build_tiles(covered: DataFrame, cfg: Config,
             shift = base_zoom - z
             tkey = ((cols["bx"] >> shift) << 32) | (cols["by"] >> shift)
             cur_clips: dict = {}
-            for key, rows in _tile_groups(tkey, cols["feature_id"],
-                                          cols["layer_code"]):
+            for key, rows in _tile_groups(tkey, cols["uid"]):
                 x, y = key >> 32, key & 0xFFFFFFFF
                 clip_out = {} if z < base_zoom else None
                 blob = _build_one_tile(cols, rows, z, x, y, cfg,
@@ -689,11 +620,11 @@ def build_tiles(covered: DataFrame, cfg: Config,
         .filter(F.col("minzoom") < CLUSTER_ZOOM)
         .withColumn("_p5x", F.shiftright(F.col("bx"), dz5))
         .withColumn("_p5y", F.shiftright(F.col("by"), dz5))
-        .dropDuplicates(["feature_id", "layer", "_p5x", "_p5y"])
+        .dropDuplicates(["uid", "_p5x", "_p5y"])
         .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
         .withColumn("_tx", F.expr(f"shiftright(bx, {base_zoom} - _z)"))
         .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
-        .dropDuplicates(["feature_id", "layer", "_z", "_tx", "_ty"])
+        .dropDuplicates(["uid", "_z", "_tx", "_ty"])
         .groupBy("_z", "_tx", "_ty")
         .applyInArrow(build_low_tile, schema=schema)
     )
