@@ -181,10 +181,9 @@ def q_cell_index(spark, sf_dir):
 
 def q_zorder_layout(spark, sf_dir):
     """Morton/Z-order layout key (operators/layout.py): interleave the
-    z12 tile x/y bits into the clustering key that
-    ``cluster_by_zorder`` range-partitions on — the data-skipping
-    layout a 100 TB spatial table is written in (Delta/Iceberg
-    OPTIMIZE ZORDER analogue).  Pure Catalyst bit arithmetic; the
+    z12 tile x/y bits into the clustering key a range partition sorts
+    on — the data-skipping layout a 100 TB spatial table is written in
+    (Delta/Iceberg OPTIMIZE ZORDER analogue).  Pure Catalyst bit arithmetic; the
     oracle runs the identical magic-number spread in SQL."""
     from tilemaker_spark.operators import layout as layout_ops
     c = _t(spark, sf_dir, "customer")
@@ -237,7 +236,7 @@ SELECT cell, count(*) AS n FROM hexfin GROUP BY 1
 
 
 def q_s2_cells(spark, sf_dir):
-    """S2-analogue cell index (sql/tile_exprs.py s2_cell_id — the other
+    """S2-analogue cell index (sql/tile_exprs.py with_s2_cell — the other
     half of the north star's "H3/S2 cells" alongside hex_cell_id): cube
     face via dominant sphere axis, gnomonic (u,v), linear st, per-face
     Hilbert position — all pure Catalyst (trig + one F.aggregate bit
@@ -809,8 +808,7 @@ LIMIT 10
 
 
 def q_events_window(spark, sf_dir):
-    """Tumbling-window aggregation over the events stream table (batch
-    equivalent of the Structured Streaming path; see streaming module)."""
+    """Tumbling-window aggregation over the events stream table."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -2246,10 +2244,7 @@ WHERE levenshtein(a.s, b.s) <= 2
 def q_sessionize(spark, sf_dir):
     """Gap-based sessionization (operators/sessions.py): lag-mark +
     running-sum session numbering over one shuffle on the user key,
-    then a per-session rollup — pure Catalyst, no UDF.  The streaming
-    twin (streaming/jobs.streaming_sessions) uses the native
-    session_window state store; this batch form is the oracle-checkable
-    one."""
+    then a per-session rollup — pure Catalyst, no UDF."""
     from tilemaker_spark.operators import sessions as sessions_ops
     ev = _t(spark, sf_dir, "events")
     return sessions_ops.session_stats(ev, gap_minutes=30.0)
@@ -3064,8 +3059,7 @@ def q_salt_plan(spark, sf_dir):
     synthetic geo distribution is deliberately urban-skewed
     (sources/synth.geo_point_expr), so hot cells genuinely get
     n_salts > 1 here.  ONE map-side-combinable shuffle; output is
-    #cells rows (broadcastable back via apply_salt_plan at any corpus
-    size).  Integer-exact ceil, so the DuckDB twin matches bit-for-bit."""
+    #cells rows (broadcastable back to the rows at any corpus size).  Integer-exact ceil, so the DuckDB twin matches bit-for-bit."""
     from tilemaker_spark.operators import skew as skew_ops
     img = synth.images_df(spark, 20000, with_bytes=False)
     return skew_ops.salt_plan(img, "h3_coarse", target_rows=50)

@@ -91,6 +91,23 @@ def read_features(spark: SparkSession, paths: list[str] | str,
     return features, cfg
 
 
+# LayerDef.attr_types names -> TileJSON field types; other keys are String
+_FIELD_TYPES = {"Integer": "Number", "Number": "Number", "Boolean": "Boolean"}
+
+
+def vector_layers(cfg) -> list:
+    """TileJSON ``vector_layers`` from the config, as the reference's
+    LayerDefinition::serialiseToJSONValue (src/shared_data.cpp:184-209):
+    one {id, fields, minzoom, maxzoom} per output layer, skipping layers
+    that ``write_to`` another.  ``fields`` are the layer's declared
+    attributes (``attr_types`` and ``attr_minzoom`` keys)."""
+    return [{"id": name,
+             "fields": {k: _FIELD_TYPES.get(ld.attr_types.get(k), "String")
+                        for k in sorted({*ld.attr_types, *ld.attr_minzoom})},
+             "minzoom": ld.minzoom, "maxzoom": ld.maxzoom}
+            for name, ld in cfg.layers.items() if not ld.write_to]
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True, action="append",
@@ -152,6 +169,7 @@ def main(argv=None) -> int:
     if args.threads:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.threads))
     from tilemaker_spark.config import Config, LayerDef
+    from tilemaker_spark.kernels.proj import WORLD_BOUNDS
     from tilemaker_spark.operators.tiling import CLUSTER_ZOOM, generate_tiles
     from tilemaker_spark.sinks import mbtiles as MB
 
@@ -205,22 +223,20 @@ def main(argv=None) -> int:
         if sink.committed_keys():
             tiles = sink.read(spark).select("z", "x", "y", "tile")
 
+    # one metadata block for every sink (reference src/shared_data.cpp:
+    # 21-36); each sink applies its own format rules to it
+    metadata = {"name": cfg.name, "format": "pbf",
+                "minzoom": cfg.minzoom, "maxzoom": cfg.maxzoom,
+                "bounds": list(cfg.clip_bbox or WORLD_BOUNDS),
+                "vector_layers": vector_layers(cfg)}
     if args.output.endswith(".mbtiles"):
-        # metadata block per the reference (src/shared_data.cpp:21-36):
-        # name/minzoom/maxzoom/bounds alongside the sink's format/type
-        bounds = cfg.clip_bbox or (-180.0, -85.0511, 180.0, 85.0511)
-        n = MB.write_mbtiles(
-            tiles, args.output, merge=args.merge,
-            metadata={"name": cfg.name,
-                      "minzoom": str(cfg.minzoom),
-                      "maxzoom": str(cfg.maxzoom),
-                      "bounds": ",".join(f"{v:.6f}" for v in bounds)})
+        n = MB.write_mbtiles(tiles, args.output, metadata, merge=args.merge)
     elif args.output.endswith(".pmtiles"):
         from tilemaker_spark.sinks.pmtiles import write_pmtiles
-        n = write_pmtiles(tiles, args.output)
+        n = write_pmtiles(tiles, args.output, metadata)
     else:
         from tilemaker_spark.sinks.filetree import write_filetree
-        n = write_filetree(tiles, args.output)
+        n = write_filetree(tiles, args.output, metadata)
     print(f"wrote {n} vector tiles -> {args.output}")
 
     if args.raster_zoom is not None:

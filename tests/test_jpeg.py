@@ -134,35 +134,22 @@ def test_decode_image_dispatch():
     assert P.psnr_db(px, got) >= 40.0
 
 
-def test_exif_orientation_roundtrip_and_parse():
-    import numpy as np
+def test_decoder_skips_exif_app1_segment():
+    """An EXIF APP1 segment (camera orientation tag, big-endian TIFF)
+    between SOI and the frame is skipped like any unknown segment."""
     import struct
-    from tilemaker_spark.kernels import jpeg as J
     px = (np.arange(16 * 24 * 3, dtype=np.uint8)
           .reshape(16, 24, 3) * 7) % 256
     blob = J.encode_jpeg(px)
-    assert J.parse_exif_orientation(blob) is None  # plain JFIF: no tag
-    for o in range(1, 9):
-        tagged = J.insert_exif_orientation(blob, o)
-        assert J.parse_exif_orientation(tagged) == o
-        # the decoder must skip the APP1 like any unknown segment
-        assert J.decode_jpeg(tagged).shape == px.shape
-    # big-endian TIFF variant parses too (cameras emit both orders)
-    seg = J.exif_app1_segment(6)
-    be_tiff = (b"MM" + struct.pack(">H", 42) + struct.pack(">I", 8)
-               + struct.pack(">H", 1)
-               + struct.pack(">HHI", 0x0112, 3, 1)
-               + struct.pack(">HH", 6, 0) + struct.pack(">I", 0))
-    be_payload = b"Exif\x00\x00" + be_tiff
-    be_seg = b"\xff\xe1" + struct.pack(">H", len(be_payload) + 2) \
-        + be_payload
-    assert len(be_seg) == len(seg)
-    be_blob = blob[:2] + be_seg + blob[2:]
-    assert J.parse_exif_orientation(be_blob) == 6
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        J.exif_app1_segment(9)
-    with _pt.raises(ValueError):
+    tiff = (b"MM" + struct.pack(">H", 42) + struct.pack(">I", 8)
+            + struct.pack(">H", 1)
+            + struct.pack(">HHI", 0x0112, 3, 1)
+            + struct.pack(">HH", 6, 0) + struct.pack(">I", 0))
+    payload = b"Exif\x00\x00" + tiff
+    seg = b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
+    tagged = blob[:2] + seg + blob[2:]
+    assert np.array_equal(J.decode_jpeg(tagged), J.decode_jpeg(blob))
+    with pytest.raises(ValueError):
         J.apply_orientation(px, 0)
 
 

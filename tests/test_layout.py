@@ -1,6 +1,6 @@
-"""Z-order layout clustering: Morton key correctness + locality gain."""
+"""Z-order layout keys: Morton key correctness, SQL twin, quadkey,
+geohash and Hilbert parity."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from tilemaker_spark.operators import layout
@@ -33,33 +33,6 @@ def test_morton_locality_property():
     block = sorted(_morton_py(10 + dx, 20 + dy)
                    for dx in (0, 1) for dy in (0, 1))
     assert block == [base, base + 1, base + 2, base + 3]
-
-
-def test_cluster_by_zorder_improves_locality(spark):
-    """Range-partitioning on the Morton key must shrink the summed
-    per-partition bbox area vs. arrival order — the quantity that
-    drives file skipping for a bbox probe."""
-    n = 20000
-    df = spark.range(n).select(
-        (F.hash(F.col("id")) % 1000 / F.lit(1000.0) * 340 - 170)
-        .alias("lon"),
-        ((F.hash(F.col("id") + 7) % 1000) / F.lit(1000.0) * 160 - 80)
-        .alias("lat"),
-        F.col("id"),
-    ).repartition(16)
-
-    def total_area(extents):
-        return sum((e["max_lon"] - e["min_lon"])
-                   * (e["max_lat"] - e["min_lat"]) for e in extents)
-
-    before = total_area(layout.partition_extents(df))
-    clustered = layout.cluster_by_zorder(df, zoom=10, num_partitions=16)
-    after = total_area(layout.partition_extents(clustered))
-    # arrival order: every partition spans the world (~16 * 54k deg^2);
-    # z-ordered: partitions cover tight extents
-    assert after < before / 4, (before, after)
-    # no rows lost
-    assert clustered.count() == n
 
 
 def test_zorder_key_sql_twin(spark):
@@ -147,28 +120,3 @@ def test_hilbert_bijection_and_unit_steps(spark):
     for d in range(1, n * n):
         (x1, y1), (x2, y2) = by_d[d - 1], by_d[d]
         assert abs(x1 - x2) + abs(y1 - y2) == 1, d
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the same key join with ZERO Exchange on
-    either side (the storage carries the co-partitioning), vs the
-    unbucketed plan which shuffles both."""
-    from tilemaker_spark.operators.layout import write_bucketed
-    a = spark.range(2000).withColumn("v", F.col("id") * 3)
-    b = spark.range(1500).withColumn("w", F.col("id") + 7)
-    write_bucketed(a, "t_bkt_a", "id", n_buckets=8, sorted_by="id")
-    write_bucketed(b, "t_bkt_b", "id", n_buckets=8, sorted_by="id")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("t_bkt_a").join(spark.table("t_bkt_b"), "id")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert j.count() == 1500
-        # control: the same join off plain (unbucketed) frames shuffles
-        plain = a.join(b, "id")
-        pplan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in pplan
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_a")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_b")

@@ -1,14 +1,9 @@
-"""Checkpoint/lineage resume + Structured Streaming tests."""
-
-import json
-import os
-import time
+"""Checkpoint/lineage resume tests."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tilemaker_spark.lineage import CheckpointedSink
-from tilemaker_spark.streaming import jobs as sjobs
 
 
 def test_checkpointed_write_and_resume(spark, tmp_path):
@@ -47,47 +42,6 @@ def test_partial_commit_resume(spark, tmp_path):
     out = sink.read(spark)
     assert out.count() == 100
     assert out.select("id").distinct().count() == 100  # no dupes
-
-
-def test_streaming_tile_counts(spark, tmp_path):
-    src = tmp_path / "stream_in"
-    src.mkdir()
-    rows = [{"id": i, "lon": 7.42, "lat": 43.73,
-             "ts": "2024-01-01T00:00:00Z"} for i in range(10)]
-    with open(src / "batch1.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in rows))
-
-    out = sjobs.streaming_tile_counts(spark, str(src), zoom=14)
-    q = (out.writeStream.format("memory").queryName("tile_counts")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    got = spark.sql("select * from tile_counts").collect()
-    assert len(got) == 1
-    assert (got[0]["x"], got[0]["y"], got[0]["n"]) == (8529, 5974, 10)
-
-
-def test_streaming_event_windows(spark, tmp_path):
-    src = tmp_path / "events_in"
-    src.mkdir()
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T10:05:00Z", "event_type": "a",
-         "value": 1.0},
-        {"event_id": 2, "ts": "2024-01-01T10:55:00Z", "event_type": "a",
-         "value": 2.0},
-        {"event_id": 3, "ts": "2024-01-01T11:05:00Z", "event_type": "a",
-         "value": 4.0},
-    ]
-    with open(src / "b1.json", "w") as f:
-        f.write("\n".join(json.dumps(r) for r in rows))
-    out = sjobs.streaming_event_windows(spark, str(src))
-    q = (out.writeStream.format("memory").queryName("ev_windows")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(60)
-    got = {(str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-           for r in spark.sql("select * from ev_windows").collect()}
-    assert len(got) == 2
-    counts = sorted(v[0] for v in got.values())
-    assert counts == [1, 2]
 
 
 def test_snapshot_time_travel(spark, tmp_path):

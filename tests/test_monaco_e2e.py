@@ -19,7 +19,7 @@ import os
 
 import pytest
 
-from conftest import MONACO, requires_monaco
+from conftest import MONACO, REPO, requires_monaco
 
 pytestmark = requires_monaco
 
@@ -72,16 +72,18 @@ def test_monaco_pyramid_shape(monaco_tiles):
 
 
 def test_monaco_mbtiles_roundtrip(monaco_tiles, spark, tmp_path):
+    import sys
     from tilemaker_spark.sinks import mbtiles
-    from tilemaker_spark.sinks import meta as sink_meta
     from tilemaker_spark.kernels import mvt
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
     rows, cfg = monaco_tiles
     tiles_df = spark.createDataFrame(
         [(r["z"], r["x"], r["y"], bytes(r["tile"])) for r in rows],
         "z int, x int, y int, tile binary")
-    vl = sink_meta.vector_layers(cfg)
+    vl = J.vector_layers(cfg)
     path = str(tmp_path / "monaco.mbtiles")
-    n = mbtiles.write_mbtiles(tiles_df, path, vector_layers=vl)
+    n = mbtiles.write_mbtiles(tiles_df, path, {"vector_layers": vl})
     assert n == len(rows)
     blob = mbtiles.read_mbtiles_tile(path, 14, 8529, 5974)
     dec = mvt.decode_tile(blob)

@@ -1,6 +1,7 @@
-"""Polygon boolean overlay kernel tests (union / intersection /
-difference / make_valid) — reference semantics: union_many
-(/root/reference/src/geom.cpp:232-290), repair chain (src/geom.cpp:140-224).
+"""Polygon boolean overlay kernel tests (union / intersection) —
+reference semantics: union_many (reference src/geom.cpp:232-290),
+repair chain (src/geom.cpp:140-224), which tiling's ``_repair`` runs as
+an even-odd intersection with the tile box.
 """
 
 import numpy as np
@@ -72,17 +73,15 @@ def test_union_tangent_corner_stays_two_faces():
     assert O.area_planar(u) == pytest.approx(2.0, abs=1e-4)
 
 
-def test_intersection_and_difference():
+def test_intersection_overlap_and_disjoint():
     i = O.intersection(sq(0, 0, 1, 1), sq(0.5, 0.5, 1.5, 1.5))
     assert O.area_planar(i) == pytest.approx(0.25, abs=1e-4)
-    d = O.difference(sq(0, 0, 1, 1), sq(0.5, 0.5, 1.5, 1.5))
-    assert O.area_planar(d) == pytest.approx(0.75, abs=1e-4)
     assert O.intersection(sq(0, 0, 1, 1), sq(5, 5, 6, 6)) == []
 
 
-def test_make_valid_bowtie():
+def test_box_intersection_repairs_bowtie():
     bow = [[np.array([[0, 0], [1, 1], [1, 0], [0, 1], [0, 0]], float)]]
-    v = O.make_valid(bow)
+    v = O.intersection(bow, sq(-1, -1, 2, 2))
     assert len(v) == 2  # two triangles
     assert O.area_planar(v) == pytest.approx(0.5, abs=1e-3)
     from tilemaker_spark.kernels import geom as G
@@ -90,11 +89,11 @@ def test_make_valid_bowtie():
     assert G.multipolygon_is_simple(v)
 
 
-def test_make_valid_wrong_winding_hole():
+def test_box_intersection_resolves_wrong_winding_hole():
     # hole wound the same way as the outer: even-odd still resolves it
     mp = [[np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float),
            np.array([[1, 1], [3, 1], [3, 3], [1, 3], [1, 1]], float)]]
-    v = O.make_valid(mp)
+    v = O.intersection(mp, sq(-1, -1, 5, 5))
     assert O.area_planar(v) == pytest.approx(12.0, abs=1e-3)
     assert sum(len(p) - 1 for p in v) == 1
 

@@ -1,10 +1,11 @@
-"""Profile-tier features: significant-tag filters, typed attributes,
-attribute minzoom, LayerAsCentroid."""
+"""Profile-tier features: config parsing, typed attributes, attribute
+minzoom, LayerAsCentroid."""
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import MONACO, requires_monaco
 from tilemaker_spark.config import Config, LayerDef
 from tilemaker_spark.kernels import mvt
 from tilemaker_spark.operators import tiling
@@ -23,32 +24,23 @@ def tagged(spark):
     return spark.createDataFrame(rows, "id long, tags map<string,string>")
 
 
-def test_significant_tags_accept(spark, tagged):
-    """Accept mode: entity passes if any tag matches (reference
-    src/significant_tags.cpp:60-69)."""
-    got = {r["id"] for r in tagged.filter(
-        prof.significant_tags(["highway", "natural"])).collect()}
-    assert got == {2, 4, 5}
-    # value-qualified filter
-    got = {r["id"] for r in tagged.filter(
-        prof.significant_tags(["highway=motorway"])).collect()}
-    assert got == {4}
-
-
-def test_significant_tags_reject(spark, tagged):
-    """Reject mode (~): passes if at least one tag is NOT matched —
-    ~building drops building-ONLY entities (reference :72-90)."""
-    got = {r["id"] for r in tagged.filter(
-        prof.significant_tags(["~building"])).collect()}
-    assert got == {2, 3, 4, 5}   # 1 is building-only; 3 also has name
-    with pytest.raises(ValueError):
-        prof.significant_tags(["~building", "highway"])
-
-
 def _tiles_for(spark, rows, cfg):
     feats = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
     return {(r["z"], r["x"], r["y"]): bytes(r["tile"])
             for r in tiling.generate_tiles(feats, cfg).collect()}
+
+
+def test_config_from_json_ignores_unknown_keys():
+    """Layer keys that are no LayerDef field (the retired external-source
+    keys among them) and settings nothing reads leave the parse as is."""
+    base = {"layers": {"roads": {"minzoom": 6, "maxzoom": 12}},
+            "settings": {"name": "x", "maxzoom": 12}}
+    extra = json.loads(json.dumps(base))
+    extra["layers"]["roads"].update(
+        source="coast.shp", source_columns=["NAME"], frobnicate=1)
+    extra["settings"].update(version="3.0", description="d", frobnicate=1)
+    assert (Config.from_json(json.dumps(extra))
+            == Config.from_json(json.dumps(base)))
 
 
 def test_typed_attributes_and_attr_minzoom(spark):
@@ -188,60 +180,6 @@ def test_get_data_expr(spark, tagged):
         spark.createDataFrame([("FR", "France"), ("MC", "Monaco")],
                               "k string, v string"), "k", "v")
     assert d == {"FR": "France", "MC": "Monaco"}
-
-
-@requires_monaco
-def test_used_closure_prunes_nodes(spark):
-    """usedNodes/usedWays (reference include/osm_store.h:270-300): nodes
-    are kept iff referenced by a used way, listed by an accepted
-    relation's member way, or passing node_keys."""
-    from tilemaker_spark.sources import pbf as pbf_src
-    nodes, ways, rels = pbf_src.read_pbf_multi(spark, [MONACO])
-    n_all = nodes.count()
-    nu, wu = prof.used_closure(
-        nodes, ways,
-        way_filter=prof.significant_tags(["highway"]),
-        node_filter=prof.significant_tags(["place"]))
-    n_used, w_used = nu.count(), wu.count()
-    assert w_used < ways.count()
-    assert n_used < n_all
-    # every used way's refs are present in the pruned node set (minus
-    # extract-boundary missing nodes, which the pbf itself lacks)
-    ref_ids = wu.select(F.explode("refs").alias("id")).distinct()
-    present = ref_ids.join(nodes, "id", "left_semi").count()
-    kept = ref_ids.join(nu, "id", "left_semi").count()
-    assert kept == present
-    # relation closure pulls member ways in even when way_keys reject them
-    nu2, wu2 = prof.used_closure(
-        nodes, ways, relations=rels,
-        way_filter=prof.significant_tags(["highway"]),
-        relation_pred=F.col("tags")["boundary"] == "administrative")
-    assert wu2.count() > w_used
-
-
-def test_synth_used_closure_prunes_nodes(spark, synth_pbf):
-    """Synthetic twin of the Monaco test above.  The extract is
-    referentially complete, so every used way's refs survive the
-    pruning; multipolygon relations pull in their landuse member ways,
-    which the highway way_keys reject."""
-    from tilemaker_spark.sources import pbf as pbf_src
-    nodes, ways, rels = pbf_src.read_pbf_multi(spark, [synth_pbf])
-    n_all = nodes.count()
-    nu, wu = prof.used_closure(
-        nodes, ways,
-        way_filter=prof.significant_tags(["highway"]),
-        node_filter=prof.significant_tags(["place"]))
-    n_used, w_used = nu.count(), wu.count()
-    assert w_used < ways.count()
-    assert n_used < n_all
-    ref_ids = wu.select(F.explode("refs").alias("id")).distinct()
-    kept = ref_ids.join(nu, "id", "left_semi").count()
-    assert kept == ref_ids.count()
-    nu2, wu2 = prof.used_closure(
-        nodes, ways, relations=rels,
-        way_filter=prof.significant_tags(["highway"]),
-        relation_pred=F.col("tags")["type"] == "multipolygon")
-    assert wu2.count() > w_used
 
 
 def test_modify_id(spark):

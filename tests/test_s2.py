@@ -1,4 +1,4 @@
-"""S2-analogue cell index (sql/tile_exprs.py s2_cell_id).
+"""S2-analogue cell index (sql/tile_exprs.py with_s2_cell).
 
 Parity against an INDEPENDENT pure-Python implementation (math module,
 textbook xy2d loop — no shared code with the Catalyst fold), the
@@ -76,9 +76,8 @@ def _pts():
 
 def _spark_cells(spark, pts, level):
     df = spark.createDataFrame(pts, "lon double, lat double")
-    return [r["c"] for r in df.select(
-        TE.s2_cell_id(F.col("lon"), F.col("lat"), level).alias("c")
-    ).collect()]
+    return [r["cell"] for r in
+            TE.with_s2_cell(df, "lon", "lat", level).collect()]
 
 
 def test_matches_independent_python(spark):
@@ -92,23 +91,17 @@ def test_parent_is_coarser_cell(spark):
     # bit-exact: parent(cell@L, dz) == cell@(L-dz), for the subdivision
     # reason documented in tile_exprs.py
     pts = _pts()
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    lon, lat = F.col("lon"), F.col("lat")
+    df = TE.with_s2_cell(spark.createDataFrame(pts, "lon double, lat double"),
+                         "lon", "lat", LEVEL, out="fine")
     for dz in (1, 3):
-        rows = df.select(
-            TE.s2_cell_parent(TE.s2_cell_id(lon, lat, LEVEL), LEVEL, dz)
-            .alias("p"),
-            TE.s2_cell_id(lon, lat, LEVEL - dz).alias("c")).collect()
-        assert all(r["p"] == r["c"] for r in rows)
+        rows = TE.with_s2_cell(df, "lon", "lat", LEVEL - dz).select(
+            TE.s2_cell_parent(F.col("fine"), LEVEL, dz).alias("p"),
+            "cell").collect()
+        assert all(r["p"] == r["cell"] for r in rows)
 
 
 def test_all_faces_covered(spark):
-    pts = _pts()
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    faces = {r["f"] for r in df.select(
-        TE.s2_cell_face(
-            TE.s2_cell_id(F.col("lon"), F.col("lat"), LEVEL), LEVEL
-        ).alias("f")).collect()}
+    faces = {c >> (2 * LEVEL) for c in _spark_cells(spark, _pts(), LEVEL)}
     assert faces == {0, 1, 2, 3, 4, 5}
 
 
@@ -117,7 +110,7 @@ def test_cell_id_range_and_bad_level(spark):
     top = 6 * (1 << (2 * LEVEL))
     assert all(0 <= c < top for c in _spark_cells(spark, pts, LEVEL))
     with pytest.raises(ValueError):
-        TE.s2_cell_id(F.lit(0.0), F.lit(0.0), 31)
+        TE.with_s2_cell(spark.range(1), "id", "id", 31)
     with pytest.raises(ValueError):
         TE.s2_cell_parent(F.lit(0), 5, 6)
 
@@ -135,12 +128,3 @@ def test_duckdb_twin_bit_exact(spark):
         f"WITH RECURSIVE {ctes} SELECT cell FROM s2fin ORDER BY rn"
     ).fetchall()]
     assert got == want
-
-
-def test_with_s2_cell_matches_column_form(spark):
-    pts = _pts()
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    staged = [r["cell"] for r in
-              TE.with_s2_cell(df, "lon", "lat", LEVEL).collect()]
-    fused = _spark_cells(spark, pts, LEVEL)
-    assert staged == fused

@@ -229,11 +229,8 @@ def test_pack_blocks_matches_sequential(spark):
         cum += tok
 
 
-def test_salt_plan_and_apply(spark):
-    """Hot keys get ceil(n/target) salts, cold keys exactly 1; applying
-    the plan spreads the hot key's rows across all its salt buckets
-    deterministically (stable across repartitioning)."""
-    from pyspark.sql import functions as F
+def test_salt_plan_sizes_salts_per_key(spark):
+    """Hot keys get ceil(n/target) salts, cold keys exactly 1."""
     from tilemaker_spark.operators import skew
     rows = ([("hot", f"r{i}") for i in range(500)]
             + [("warm", f"w{i}") for i in range(120)]
@@ -242,20 +239,6 @@ def test_salt_plan_and_apply(spark):
     plan = skew.salt_plan(df, "cell", target_rows=100)
     got = {r["cell"]: (r["n_rows"], r["n_salts"]) for r in plan.collect()}
     assert got == {"hot": (500, 5), "warm": (120, 2), "cold": (7, 1)}
-
-    salted = skew.apply_salt_plan(df, plan, "cell", "rid")
-    per = {(r["cell"], r["salt"]): r["n"]
-           for r in salted.groupBy("cell", "salt")
-           .agg(F.count(F.lit(1)).alias("n")).collect()}
-    # every hot bucket used, and no bucket out of range
-    assert {s for (c, s) in per if c == "hot"} == set(range(5))
-    assert {s for (c, s) in per if c == "cold"} == {0}
-    assert max(n for (c, s), n in per.items() if c == "hot") < 200
-    # determinism across partitioning
-    again = skew.apply_salt_plan(df.repartition(13), plan, "cell", "rid")
-    a = {(r["cell"], r["rid"]): r["salt"] for r in salted.collect()}
-    b = {(r["cell"], r["rid"]): r["salt"] for r in again.collect()}
-    assert a == b
 
 
 def test_salt_plan_rejects_bad_target(spark):

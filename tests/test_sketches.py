@@ -95,54 +95,6 @@ def test_heavy_hitters_bad_ppm(spark):
         sketches.heavy_hitters(df, "k", 0)
 
 
-def test_streaming_kmv_equals_batch_on_prefix(spark, tmp_path):
-    """The KMV sketch is a merge-associative set, so the streaming
-    state (bounded at k hashes per group) must land on BIT-EQUAL
-    estimates to the batch operator over the same rows, regardless of
-    micro-batch boundaries."""
-    import json as _json
-    from tilemaker_spark.streaming.jobs import streaming_kmv_distinct
-
-    src = tmp_path / "kmv_in"
-    src.mkdir()
-    K = 16
-    rows = [{"event_id": i, "user_id": i % 97 if i % 3 else i % 11,
-             "event_type": "click" if i % 2 else "view",
-             "ts": "2024-01-01 00:00:00"}
-            for i in range(600)]
-    # three micro-batches
-    for b in range(3):
-        with open(src / f"b{b}.json", "w") as f:
-            for r in rows[b * 200:(b + 1) * 200]:
-                f.write(_json.dumps(r) + "\n")
-
-    out = streaming_kmv_distinct(spark, str(src), k=K, salt=5)
-    q = (out.writeStream.format("memory").queryName("kmv_stream")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        emitted = spark.sql(
-            "SELECT * FROM kmv_stream").collect()
-    finally:
-        q.stop()
-    # multiple rows per group (one per micro-batch); keep the largest
-    # sketch (the last state) per group
-    last = {}
-    for r in emitted:
-        cur = last.get(r["event_type"])
-        if cur is None or r["sketch_size"] >= cur["sketch_size"]:
-            last[r["event_type"]] = r
-    got = sorted((g, r["est_distinct"], r["sketch_size"])
-                 for g, r in last.items())
-
-    batch = spark.createDataFrame(
-        [(r["event_type"], r["user_id"]) for r in rows],
-        "event_type string, user_id long")
-    want = sorted(map(tuple, sketches.kmv_distinct(
-        batch, "user_id", ["event_type"], k=K, salt=5).collect()))
-    assert got == want
-
-
 def test_kmv_set_ops_exact_below_k(spark):
     # both populations under k: theta = SPACE and every output is the
     # EXACT set algebra
@@ -340,46 +292,6 @@ def test_cm_estimate_bad_params(spark):
         sketches.cm_estimate(df, "k", df, depth=9)
 
 
-def test_streaming_heavy_hitters_superset_invariant(spark, tmp_path):
-    """After every micro-batch, each key holding > 1/(k+1) of the
-    stream so far must be in the MG state (candidates are a superset);
-    with the planted distribution the hot keys also dominate the
-    reported lower bounds."""
-    import json as _json
-    from collections import Counter
-    from tilemaker_spark.streaming.jobs import streaming_heavy_hitters
-
-    src = tmp_path / "hh_in"
-    src.mkdir()
-    K = 8
-    batches = [
-        ["hot"] * 60 + [f"n{i}" for i in range(100)],
-        ["hot"] * 40 + ["warm"] * 50 + [f"m{i}" for i in range(80)],
-        ["hot"] * 30 + ["warm"] * 40 + [f"p{i}" for i in range(60)],
-    ]
-    out = streaming_heavy_hitters(spark, str(src), k=K)
-    q = (out.writeStream.format("memory").queryName("hh_stream")
-         .outputMode("append").start())
-    try:
-        seen: list[str] = []
-        for bi, keys in enumerate(batches):
-            with open(src / f"b{bi}.json", "w") as f:
-                for j, kk in enumerate(keys):
-                    f.write(_json.dumps(
-                        {"doc_id": j, "user_id": 0, "fp": kk,
-                         "ts": "2024-01-01 00:00:00"}) + "\n")
-            q.processAllAvailable()
-            seen += keys
-            counts = Counter(seen)
-            state_keys = {r["key"] for r in spark.sql(
-                "SELECT * FROM hh_stream").collect()}
-            for kk, c in counts.items():
-                if c > len(seen) / (K + 1):
-                    assert kk in state_keys, (bi, kk, c, len(seen))
-    finally:
-        q.stop()
-
-
 def test_kmv_set_ops_missing_tag_is_empty_not_negative(spark):
     rows = [("a", f"u{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "t string, user string")
@@ -400,7 +312,7 @@ def test_bloom_prune_rejects_giant_bitset(spark):
 
 def test_batched_mg_survival_guarantee_property():
     """Property (hypothesis): the BATCHED Misra-Gries decrement used in
-    heavy_hitters / streaming_heavy_hitters (subtract the (len-k)-th
+    heavy_hitters (subtract the (len-k)-th
     smallest count from all, drop <= 0) preserves the classical MG
     guarantee — any key with total count > n/(k+1) survives with a
     positive counter, for any batch split of any stream."""

@@ -1,4 +1,4 @@
-"""GeoJSON/shapefile sources + PMTiles sink round-trips."""
+"""GeoJSON source + PMTiles/MBTiles sink round-trips."""
 
 import json
 import os
@@ -8,12 +8,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import REPO
 from tilemaker_spark.kernels import geom as G
 from tilemaker_spark.sinks import mbtiles, pmtiles
-from tilemaker_spark.sources import geojson, shapefile
+from tilemaker_spark.sources import geojson
 
 
-def test_geojson_jsonl_roundtrip(spark, tmp_path):
+def test_geojson_jsonl_packs_every_kind(spark, tmp_path):
     feats = [
         {"type": "Feature", "id": 1,
          "properties": {"name": "pt"},
@@ -53,15 +54,13 @@ def test_geojson_jsonl_roundtrip(spark, tmp_path):
     assert rows[5]["kind"] == G.MULTILINESTRING
     assert rows[5]["ring_sizes"] == [2, 3]
 
-    # write back out and re-read: every kind keeps its geometry
-    out = tmp_path / "o.jsonl"
-    geojson.write_geojson(df, str(out))
-    again = {r["feature_id"]: r for r in geojson.read_geojson(
-        spark, str(out), layer="ext").collect()}
-    assert sorted(again) == [1, 2, 3, 4, 5]
-    for fid, r in rows.items():
-        for c in ("kind", "coords", "ring_sizes"):
-            assert again[fid][c] == r[c], (fid, c)
+    # every kind keeps its coordinates, rings in input order
+    def flat(c):
+        return [float(c)] if not isinstance(c, list) else \
+            [v for x in c for v in flat(x)]
+    for f in feats:
+        assert rows[f["id"]]["coords"] == flat(
+            f["geometry"]["coordinates"]), f["id"]
 
 
 def _read_feature_collection(spark, tmp_path, ids):
@@ -105,66 +104,6 @@ def test_geojson_id_fallback(spark, tmp_path):
     got = {int(r["attrs"]["a"]): r["feature_id"]
            for r in geojson.read_geojson(spark, str(p)).collect()}
     assert got[1] == 5 and 0 <= got[0] < 2**63 and got[0] != 5
-
-
-def _write_test_shapefile(path):
-    """Minimal .shp with one clockwise square polygon + .dbf with a name."""
-    ring = [(0.0, 0.0), (0.0, 4.0), (4.0, 4.0), (4.0, 0.0), (0.0, 0.0)]  # CW
-    content = struct.pack("<i", 5)
-    content += struct.pack("<dddd", 0, 0, 4, 4)
-    content += struct.pack("<ii", 1, len(ring))
-    content += struct.pack("<i", 0)
-    for x, y in ring:
-        content += struct.pack("<dd", x, y)
-    rec = struct.pack(">ii", 1, len(content) // 2) + content
-    total_len = (100 + len(rec)) // 2
-    header = struct.pack(">iiiiiii", 9994, 0, 0, 0, 0, 0, total_len)
-    header += struct.pack("<ii", 1000, 5)
-    header += struct.pack("<dddddddd", 0, 0, 4, 4, 0, 0, 0, 0)
-    with open(path, "wb") as f:
-        f.write(header + rec)
-    # dbf: one field NAME C(8), one record
-    dbf = path[:-4] + ".dbf"
-    field = b"NAME" + b"\x00" * 7 + b"C" + b"\x00" * 4 + bytes([8]) + \
-        b"\x00" * 15
-    hdr = struct.pack("<BBBBIHH", 3, 24, 1, 1, 1, 32 + 32 + 1, 1 + 8)
-    hdr += b"\x00" * 20
-    with open(dbf, "wb") as f:
-        f.write(hdr + field + b"\r" + b" " + b"ocean   " + b"\x1a")
-
-
-def test_shapefile_polygon(spark, tmp_path):
-    shp = str(tmp_path / "t.shp")
-    _write_test_shapefile(shp)
-    df = shapefile.read_shapefile(spark, shp, layer="ocean")
-    rows = df.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["kind"] == G.POLYGON
-    assert r["attrs"].get("NAME") == "ocean"
-    mp = G.unpack_multipolygon(
-        np.asarray(r["coords"]), np.asarray(r["ring_sizes"]),
-        np.asarray(r["poly_ring_counts"]))
-    assert G.points_in_polygon(np.array([2.0]), np.array([2.0]), mp[0])[0]
-
-
-def test_shapefile_attribute_function(spark, tmp_path):
-    """attribute_function remap (reference src/shp_processor.cpp:47-84):
-    columns are rewritten per feature and the special _minzoom key sets
-    the feature's minzoom instead of becoming an attribute."""
-    shp = str(tmp_path / "t.shp")
-    _write_test_shapefile(shp)
-
-    def remap(attrs, layer):
-        assert layer == "ocean"
-        return {"class": attrs["NAME"].upper(), "_minzoom": 7}
-
-    df = shapefile.read_shapefile(spark, shp, layer="ocean",
-                                  attribute_function=remap)
-    r = df.collect()[0]
-    assert r["attrs"] == {"class": "OCEAN"}
-    assert "NAME" not in r["attrs"] and "_minzoom" not in r["attrs"]
-    assert r["minzoom"] == 7
 
 
 def test_geojson_attribute_function_minzoom_in_tiling(spark, tmp_path):
@@ -232,6 +171,12 @@ def test_geojson_attribute_function_minzoom_in_tiling(spark, tmp_path):
     stats = pmtiles.pmtiles_stats(path)
     assert stats["n_tiles"] == 8
     assert stats["minzoom"] == 3 and stats["maxzoom"] == 4
+    # no bounds given: the world to the Web Mercator latitude limit
+    with open(path, "rb") as f:
+        header = f.read(pmtiles.HEADER_SIZE)
+    assert struct.unpack_from("<iiii", header, 102) == (
+        -1800000000, -850511000, 1800000000, 850511000)
+    assert struct.unpack_from("<Bii", header, 118) == (3, 0, 0)
     blob = pmtiles.read_pmtiles_tile(path, 4, 1, 0)
     assert gzip.decompress(blob) == b"tile-4/1/0"
     assert pmtiles.read_pmtiles_tile(path, 5, 0, 0) is None
@@ -305,20 +250,24 @@ def test_mbtiles_feature_merge(spark, tmp_path):
 
 
 def test_vector_layers_metadata(spark, tmp_path):
+    import sys
     from tilemaker_spark.config import Config, LayerDef
-    from tilemaker_spark.sinks import meta as sink_meta
-    import json as _json
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
     cfg = Config(layers={
-        "roads": LayerDef("roads", minzoom=6, maxzoom=14),
+        "roads": LayerDef("roads", minzoom=6, maxzoom=14,
+                          attr_types={"lanes": "Integer", "oneway": "Boolean",
+                                      "ref": "Text"},
+                          attr_minzoom={"class": 8}),
         "labels": LayerDef("labels", minzoom=10, maxzoom=14,
                            write_to="roads"),
     })
-    vl = sink_meta.vector_layers(cfg, fields={"roads": {"class": "String"}})
+    vl = J.vector_layers(cfg)
     assert [v["id"] for v in vl] == ["roads"]  # write_to layer skipped
-    assert vl[0]["fields"] == {"class": "String"}
+    assert vl[0]["fields"] == {"class": "String", "lanes": "Number",
+                               "oneway": "Boolean", "ref": "String"}
     assert vl[0]["minzoom"] == 6 and vl[0]["maxzoom"] == 14
     # stored under the json metadata key
-    import numpy as np
     from tilemaker_spark.kernels import mvt
     lb = mvt.LayerBuilder("roads")
     lb.add_feature(mvt.GEOM_POINT,
@@ -327,15 +276,10 @@ def test_vector_layers_metadata(spark, tmp_path):
     tiles = spark.createDataFrame([(6, 0, 0, mvt.build_tile([lb]))],
                                   "z int, x int, y int, tile binary")
     path = str(tmp_path / "vl.mbtiles")
-    mbtiles.write_mbtiles(tiles, path, vector_layers=vl)
-    stats = mbtiles.mbtiles_stats(path)
-    stored = _json.loads(stats["metadata"]["json"])
-    assert stored["vector_layers"][0]["id"] == "roads"
-    # inferred variant reads the actual tiles
-    inferred = sink_meta.infer_vector_layers(tiles)
-    assert inferred[0]["id"] == "roads"
-    assert inferred[0]["fields"] == {"class": "String", "lanes": "Number"}
-    assert inferred[0]["minzoom"] == 6 and inferred[0]["maxzoom"] == 6
+    mbtiles.write_mbtiles(tiles, path, {"vector_layers": vl})
+    meta = mbtiles.mbtiles_stats(path)["metadata"]
+    assert json.loads(meta["json"]) == {"vector_layers": vl}
+    assert "vector_layers" not in meta
 
 
 def _entries_per_tile(tids, offs, lens):

@@ -133,6 +133,72 @@ def test_job_checkpoint_empty_build(spark, synth_pbf, tmp_path):
     conn.close()
 
 
+@pytest.mark.parametrize("output", ["out.mbtiles", "out.pmtiles", "tree"])
+def test_job_writes_vector_layers_to_every_sink(spark, synth_pbf, tmp_path,
+                                                capsys, output):
+    """Every sink gets the one metadata block: the profile's six layers
+    as TileJSON vector_layers with their zoom ranges, and the printed
+    tile count is the archive's."""
+    import json
+    import re
+    import sys as _sys
+    _sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.plans.profile import openmaptiles_lite
+    from tilemaker_spark.sinks import mbtiles, pmtiles
+
+    out = str(tmp_path / output)
+    assert J.main(["--input", synth_pbf, "--output", out,
+                   "--maxzoom", "6"]) == 0
+    n = int(re.search(r"wrote (\d+) vector tiles",
+                      capsys.readouterr().out).group(1))
+    if output.endswith(".mbtiles"):
+        st = mbtiles.mbtiles_stats(out)
+        meta, n_archive = st["metadata"], st["total"]
+        layers = json.loads(meta["json"])["vector_layers"]
+        assert meta["format"] == "pbf" and meta["name"] == "tilemaker_spark"
+        assert (meta["minzoom"], meta["maxzoom"]) == ("0", "6")
+        assert meta["bounds"] == "-180.000000,-85.051100,180.000000,85.051100"
+    else:
+        if output.endswith(".pmtiles"):
+            st = pmtiles.pmtiles_stats(out)
+            meta, n_archive = st["metadata"], st["n_tiles"]
+        else:
+            with open(os.path.join(out, "metadata.json")) as f:
+                meta = json.load(f)
+            n_archive = sum(len(fs) for _, _, fs in os.walk(out)) - 1
+        layers = meta["vector_layers"]
+        assert (meta["minzoom"], meta["maxzoom"]) == (0, 6)
+        assert meta["bounds"] == [-180.0, -85.0511, 180.0, 85.0511]
+    assert n == n_archive > 0
+    _, cfg = openmaptiles_lite()
+    assert len(cfg.layers) == 6
+    assert [(v["id"], v["minzoom"], v["maxzoom"]) for v in layers] == [
+        (name, ld.minzoom, ld.maxzoom) for name, ld in cfg.layers.items()]
+
+
+def test_job_bbox_sets_pmtiles_header_bounds(spark, synth_pbf, tmp_path):
+    """--bbox reaches the PMTiles header as E7 bounds with the box's
+    midpoint as center, and the JSON metadata as bounds."""
+    import struct
+    import sys as _sys
+    _sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from tilemaker_spark.sinks import pmtiles
+
+    out = str(tmp_path / "clip.pmtiles")
+    assert J.main(["--input", synth_pbf, "--output", out, "--minzoom", "4",
+                   "--maxzoom", "6", "--bbox=9.5,47.1,9.6,47.2"]) == 0
+    with open(out, "rb") as f:
+        header = f.read(pmtiles.HEADER_SIZE)
+    assert struct.unpack_from("<iiii", header, 102) == (
+        95000000, 471000000, 96000000, 472000000)
+    assert struct.unpack_from("<Bii", header, 118) == (
+        4, 95500000, 471500000)
+    assert pmtiles.pmtiles_stats(out)["metadata"]["bounds"] == [
+        9.5, 47.1, 9.6, 47.2]
+
+
 def test_job_raster_sink_clips_and_resumes(spark, tmp_path):
     """--raster-zoom honors --bbox (no world-spanning raster tiles) and
     routes through the checkpoint sink (second run rewrites nothing)."""

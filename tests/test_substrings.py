@@ -61,8 +61,8 @@ def test_substring_dup_planted_span(spark):
 
 
 def test_substring_mega_gram_cap(spark):
-    """Boilerplate shared by every doc is dropped by the cap; the stats
-    operator reports what was dropped (no silent caps)."""
+    """Boilerplate shared by every doc is dropped by the cap, and the cap
+    is the only gate: lifted, every doc pair matches on it."""
     boiler = "all rights reserved standard footer text here"
     # per-doc prefix built from a doc-unique 2-char unit, so no 20-char
     # substring is shared between two prefixes (only the boiler repeats)
@@ -73,11 +73,9 @@ def test_substring_mega_gram_cap(spark):
     capped = S.substring_dup_pairs(df, length=20, sample_hex=hexes,
                                    max_gram_freq=8)
     assert capped.count() == 0  # every shared gram is in >8 docs
-    st = S.substring_gram_stats(df, length=20, sample_hex=hexes,
-                                max_gram_freq=8).collect()[0]
-    assert st.n_dropped_keys > 0
-    assert st.occs_dropped >= 50
-    assert st.max_freq == 50
+    uncapped = S.substring_dup_pairs(df, length=20, sample_hex=hexes,
+                                     max_gram_freq=50)
+    assert uncapped.count() == 50 * 49 // 2
 
 
 def test_repetition_matches_oracle(spark, duck):
@@ -110,26 +108,9 @@ def test_bpe_merge_counts_matches_oracle(spark, duck):
     assert len(got) == 20
 
 
-def test_bpe_train_greedy_merges(spark):
-    """Closed-form corpus: 'abab' x3 + 'ab' x2 -> first merge must be
-    (a, b) (count 8); after merging, 'ab ab' pairs dominate next."""
-    rows = [(1, "abab abab abab ab ab")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    merges = T.bpe_train(df, n_merges=2)
-    assert merges[0] == ("a", "b")
-    assert merges[1] == ("ab", "ab")
-
-
-def test_bpe_train_deterministic_across_partitionings(spark):
-    df = spark.read.parquet(DOCS).limit(80)
-    m1 = T.bpe_train(df.repartition(1), n_merges=3)
-    m8 = T.bpe_train(df.repartition(8), n_merges=3)
-    assert m1 == m8
-
-
-def test_caption_verify_and_audit(spark):
+def test_caption_verify_flags_tampered_row(spark):
     """BASELINE per-row invariant, caption half: pristine table verifies
-    100%; a corrupted row is flagged; audit counts match."""
+    100%; a corrupted row, and only it, is flagged."""
     from tilemaker_spark.operators import images as I
     from tilemaker_spark.sources import synth
     from pyspark.sql import functions as F
@@ -142,8 +123,6 @@ def test_caption_verify_and_audit(spark):
         "caption",
         F.when(F.col("image_id") == "img_000000000007",
                F.lit("tampered")).otherwise(F.col("caption")))
-    a = I.caption_audit(bad).collect()[0]
-    assert (a.n, a.n_ok, a.n_bad) == (300, 299, 1)
     flagged = I.verify_captions(bad).filter("caption_ok = 0").collect()
     assert [r.image_id for r in flagged] == ["img_000000000007"]
 

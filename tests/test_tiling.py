@@ -99,7 +99,7 @@ def test_mbtiles_roundtrip(tiles, tmp_path):
 
 def test_filetree_roundtrip(tiles, tmp_path):
     out = str(tmp_path / "tree")
-    filetree.write_filetree(tiles, out)
+    assert filetree.write_filetree(tiles, out) == tiles.count()
     row = tiles.filter(F.col("z") == 14).first()
     blob = filetree.read_filetree_tile(out, 14, row["x"], row["y"])
     assert blob == bytes(row["tile"])

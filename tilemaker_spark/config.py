@@ -29,8 +29,6 @@ class LayerDef:
     combine_lines_below: int = 0
     combine_polygons_below: int = 0
     z_order_ascending: bool = True
-    source: str = ""                 # external source layers (shp/geojson)
-    source_columns: list = field(default_factory=list)
     write_to: str = ""               # merge this layer into another's output
     # typed attribute output (reference Attribute{Numeric,Boolean,Integer},
     # include/attribute_store.h:45-175): key -> Number|Integer|Boolean;
@@ -49,7 +47,7 @@ class Config:
     basezoom: int = 14
     include_ids: bool = False
     compress: str = "gzip"           # gzip | deflate | none
-    repair_geometry: bool = True     # clip-escalation + make_valid chain
+    repair_geometry: bool = True     # clip-escalation repair chain
     repair_area_guard: float = 0.5   # keep repair only if >=50% area survives
     # global clipping bbox (minlon, minlat, maxlon, maxlat) or None:
     # only tiles intersecting it are emitted (reference --bbox,
@@ -57,8 +55,6 @@ class Config:
     clip_bbox: tuple | None = None
     high_resolution: bool = False    # 8192 extent at maxzoom
     name: str = "tilemaker_spark"
-    version: str = "0.1"
-    description: str = ""
 
     @property
     def extent(self) -> int:

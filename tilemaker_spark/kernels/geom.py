@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .proj import RADIUS_METER, lat2tileyf, lon2tilexf
+from .proj import lat2tileyf, lon2tilexf
 
 # geometry kind codes, matching reference include/output_object.h:13
 POINT, LINESTRING, MULTILINESTRING, POLYGON = 0, 1, 2, 3
@@ -65,16 +65,8 @@ def unpack_multipolygon(flat, ring_sizes, poly_ring_counts):
     return _runs(unpack_lines(flat, ring_sizes), poly_ring_counts)
 
 
-def pack_lines(lines):
-    """[line(N,2), ...] -> (flat coords, line_sizes)."""
-    sizes = [len(l) for l in lines]
-    flat = (np.concatenate([np.asarray(l, np.float64).reshape(-1) for l in lines])
-            if lines else np.zeros(0))
-    return flat, np.asarray(sizes, np.int32)
-
-
 def unpack_lines(flat, sizes):
-    """Inverse of :func:`pack_lines`."""
+    """(flat coords, line_sizes) -> [line(N,2), ...]."""
     return _runs(np.asarray(flat, np.float64).reshape(-1, 2), sizes)
 
 
@@ -154,35 +146,6 @@ def signed_ring_area_planar(ring):
     """Shoelace area (planar); positive = counter-clockwise."""
     x, y = ring[:, 0], ring[:, 1]
     return 0.5 * np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
-
-
-# ---------------------------------------------------------------------------
-# Spherical measures (reference Area()/Length(),
-# src/osm_lua_processing.cpp:529-590: spherical strategy, R=6371000)
-# ---------------------------------------------------------------------------
-
-def ring_area_sq_m(ring):
-    """Spherical ring area (m^2), Chamberlain–Duquette discretization:
-    |sum over edges of (lam2-lam1) * (2 + sin(phi1) + sin(phi2))| * R^2 / 2.
-
-    Same formula is mirrored in the SQL oracles so Spark and DuckDB agree
-    bit-for-bit on synthetic fixtures.
-    """
-    lam = np.radians(ring[:, 0])
-    phi = np.radians(ring[:, 1])
-    s = np.sin(phi)
-    terms = (np.roll(lam, -1) - lam) * (2.0 + s + np.roll(s, -1))
-    return abs(terms.sum()) * RADIUS_METER * RADIUS_METER / 2.0
-
-
-def line_length_m(line):
-    """Haversine length in meters (reference Length(), R=6371000)."""
-    from .proj import haversine_m
-    if len(line) < 2:
-        return 0.0
-    return float(
-        haversine_m(line[:-1, 0], line[:-1, 1], line[1:, 0], line[1:, 1]).sum()
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -615,64 +615,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 # rotated pixels — a training pipeline that ignores it trains on sideways
 # images.
 
-def exif_app1_segment(orientation: int) -> bytes:
-    """Minimal APP1/Exif segment carrying just the orientation tag."""
-    if not 1 <= orientation <= 8:
-        raise ValueError(f"orientation={orientation} out of range 1..8")
-    tiff = (b"II" + struct.pack("<H", 42) + struct.pack("<I", 8)
-            + struct.pack("<H", 1)                       # 1 IFD entry
-            + struct.pack("<HHI", 0x0112, 3, 1)          # tag/SHORT/count
-            + struct.pack("<HH", orientation, 0)         # value (padded)
-            + struct.pack("<I", 0))                      # no next IFD
-    payload = b"Exif\x00\x00" + tiff
-    return b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
-
-
-def insert_exif_orientation(jpeg: bytes, orientation: int) -> bytes:
-    """Insert the APP1 right after SOI (where cameras put it)."""
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    return jpeg[:2] + exif_app1_segment(orientation) + jpeg[2:]
-
-
-def parse_exif_orientation(jpeg: bytes) -> int | None:
-    """Walk the marker stream for an APP1/Exif block and return the
-    orientation tag, or None when absent (most JFIFs).  Handles both
-    TIFF byte orders and stops at SOS like any header-only scan."""
-    if jpeg[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    while pos + 4 <= len(jpeg):
-        if jpeg[pos] != 0xFF:
-            return None
-        marker = jpeg[pos + 1]
-        if marker == 0xDA:                    # SOS: entropy data follows
-            return None
-        seg_len = struct.unpack(">H", jpeg[pos + 2:pos + 4])[0]
-        body = jpeg[pos + 4:pos + 2 + seg_len]
-        if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
-            tiff = body[6:]
-            if len(tiff) < 8:
-                return None
-            endian = "<" if tiff[:2] == b"II" else ">"
-            ifd_off = struct.unpack(endian + "I", tiff[4:8])[0]
-            if len(tiff) < ifd_off + 2:
-                return None
-            n = struct.unpack(endian + "H",
-                              tiff[ifd_off:ifd_off + 2])[0]
-            for i in range(n):
-                e = ifd_off + 2 + 12 * i
-                if len(tiff) < e + 12:
-                    return None
-                tag, typ, _cnt = struct.unpack(endian + "HHI",
-                                               tiff[e:e + 8])
-                if tag == 0x0112 and typ == 3:
-                    return struct.unpack(endian + "H",
-                                         tiff[e + 8:e + 10])[0]
-            return None
-        pos += 2 + seg_len
-    return None
-
 
 def apply_orientation(px: "np.ndarray", orientation: int) -> "np.ndarray":
     """Rotate/flip pixels so the image displays upright — the inverse

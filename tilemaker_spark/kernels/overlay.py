@@ -1,5 +1,5 @@
-"""Polygon boolean overlay (union / intersection / difference /
-make_valid), pure numpy — no GEOS in this environment.
+"""Polygon boolean overlay (union / intersection), pure numpy — no GEOS
+in this environment.
 
 Role parity: the reference engine unions same-attribute polygons per tile
 (/root/reference/src/tile_worker.cpp:393-404 via union_many,
@@ -413,25 +413,6 @@ def intersection(mp_a: list, mp_b: list) -> list:
     if not mp_a or not mp_b:
         return []
     return _overlay([mp_a, mp_b], lambda v: bool(v[0] and v[1]))
-
-
-def difference(mp_a: list, mp_b: list) -> list:
-    """Region covered by a but not b."""
-    if not mp_a:
-        return []
-    if not mp_b:
-        return mp_a
-    return _overlay([mp_a, mp_b], lambda v: bool(v[0] and not v[1]))
-
-
-def make_valid(mp: list) -> list:
-    """Resolve self-intersections / bowties / misoriented rings into a
-    valid multipolygon (even-odd fill — the region an even-odd renderer
-    would paint).  Reference role: make_valid fallback chain,
-    src/geom.cpp:140-224."""
-    if not mp:
-        return []
-    return _overlay([mp], lambda v: bool(v[0]))
 
 
 def area_planar(mp: list) -> float:

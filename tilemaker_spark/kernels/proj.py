@@ -18,6 +18,7 @@ import numpy as np
 
 RADIUS_METER = 6371000.0  # mean earth radius, reference include/coordinates.h:119
 MAX_LAT = 85.0511         # reference include/coordinates.h:94
+WORLD_BOUNDS = (-180.0, -MAX_LAT, 180.0, MAX_LAT)  # (minlon, minlat, maxlon, maxlat)
 CLAMP_LAT = 85.06         # forward-projection clamp, reference src/coordinates.cpp:23
 
 

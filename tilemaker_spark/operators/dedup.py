@@ -42,12 +42,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-def shingles(col, k: int = 5):
-    """Character k-shingles of a string as an array column (JVM-side)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(col) - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(col, i, k))
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n_hashes: int = 32,
                        k: int = 5) -> DataFrame:
@@ -225,8 +219,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
       bucket (boilerplate/template corpus) would otherwise go O(b^2).
       A true near-dup pair collides in ~``bands * j^r`` bands, so losing
       one mega-bucket rarely loses the pair; recall stays ~1 for any
-      corpus whose dup clusters are below the cap.  The number of dropped
-      buckets is observable via ``lsh_bucket_stats`` below.
+      corpus whose dup clusters are below the cap.
     * pair generation happens inside the bucket group (collect_list +
       combination explode), so the shuffle is one groupBy on a compact
       (band, bucket) key — no self-join, no skewed join key.
@@ -307,38 +300,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
         .select("doc_a", "doc_b", "jaccard")
     )
     return verified
-
-
-def lsh_bucket_stats(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", n_hashes: int = 32,
-                     bands: int = 8, k: int = 5,
-                     max_bucket_size: int = 256) -> DataFrame:
-    """Observability for the LSH bucket cap: per-band counts of buckets,
-    multi-doc buckets, and buckets dropped by ``max_bucket_size`` (the
-    'no silent caps' companion to :func:`minhash_lsh_pairs`)."""
-    rows_per_band = n_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, k)
-    banded = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col(f"h{j}")
-                             for j in range(b * rows_per_band,
-                                            (b + 1) * rows_per_band)])
-                .alias("bucket"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"),
-             F.col("bb.bucket").alias("bucket"))
-    sizes = banded.groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    return sizes.groupBy("band").agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("n") > max_bucket_size, 1).otherwise(0))
-        .alias("n_dropped"),
-        F.max("n").alias("max_size"),
-    ).orderBy("band")
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",

@@ -9,8 +9,8 @@ from-scratch baseline JFIF codec; both implemented from the public
 specs).
 
 Operators: decode-verify (PSNR vs the deterministic reference pixels),
-feature extraction (mean channel stats, our perceptual hash), resize
-(nearest-neighbor), and phash-based near-dup candidate blocking.
+channel stats, resize (nearest-neighbor), and phash-based near-dup
+candidate blocking.
 """
 
 from __future__ import annotations
@@ -158,49 +158,6 @@ def ssim_flat_audit(pairs: DataFrame) -> DataFrame:
 
     return pairs.select("k", "g1", "g2", "w", "h").mapInPandas(
         run, schema=schema)
-
-
-def image_features(images: DataFrame) -> DataFrame:
-    """Decode + feature-extract: channel means/stds and an 8x8 average-hash
-    perceptual hash (public aHash algorithm).  Output: image_id,
-    mean_r/g/b, std, phash64."""
-    schema = ("image_id string, mean_r double, mean_g double, mean_b double,"
-              " std double, phash64 long")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("image_id", "mean_r", "mean_g", "mean_b", "std",
-                    "phash64")}
-            # zip over columns (not iterrows: ~10x per-row overhead)
-            for img_id, blob, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt)
-                out["image_id"].append(img_id)
-                out["mean_r"].append(float(px[:, :, 0].mean()))
-                out["mean_g"].append(float(px[:, :, 1].mean()))
-                out["mean_b"].append(float(px[:, :, 2].mean()))
-                out["std"].append(float(px.std()))
-                out["phash64"].append(ahash64(px))
-            yield pd.DataFrame(out)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
-
-
-def ahash64(px: np.ndarray) -> int:
-    """8x8 average hash: downsample grayscale, threshold at mean."""
-    gray = px.mean(axis=2)
-    h, w = gray.shape
-    ys = (np.arange(8) * h // 8)
-    xs = (np.arange(8) * w // 8)
-    small = gray[np.minimum(ys, h - 1)][:, np.minimum(xs, w - 1)]
-    bits = (small > small.mean()).reshape(-1)
-    val = 0
-    for i, b in enumerate(bits):
-        if b:
-            val |= 1 << i
-    return np.int64(np.uint64(val).astype(np.int64)).item()
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -554,20 +511,6 @@ def verify_captions(images: DataFrame, id_col: str = "image_id",
         (F.col(caption_col).cast("binary") == ref.cast("binary"))
         .cast("int").alias("caption_ok"),
         F.md5(F.col(caption_col).cast("binary")).alias("caption_md5"),
-    )
-
-
-def caption_audit(images: DataFrame, id_col: str = "image_id",
-                  caption_col: str = "caption") -> DataFrame:
-    """Corpus rollup of :func:`verify_captions`: total rows, rows whose
-    caption is byte-identical to the reference, and corrupted rows.
-    A training pipeline runs this as the cheap gate before the expensive
-    pixel verify.  Output: one row (n, n_ok, n_bad)."""
-    v = verify_captions(images, id_col, caption_col)
-    return v.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("caption_ok").alias("n_ok"),
-        (F.count(F.lit(1)) - F.sum("caption_ok")).alias("n_bad"),
     )
 
 

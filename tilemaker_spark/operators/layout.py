@@ -1,4 +1,4 @@
-"""Z-order (Morton) data layout clustering.
+"""Z-order (Morton) layout keys.
 
 At 100 TB the dominant cost of a spatial query is how many parquet files
 it has to OPEN: a table laid out in row-arrival order spreads every
@@ -18,7 +18,7 @@ for the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..sql import tile_exprs as TE
@@ -68,56 +68,3 @@ def zorder_key(lon: Column, lat: Column, zoom: int = 12) -> Column:
 def zorder_key_sql(lon: str, lat: str, zoom: int = 12) -> str:
     return morton_key_sql(TE.lon2tilex_sql(lon, zoom),
                           TE.lat2tiley_sql(lat, zoom))
-
-
-def cluster_by_zorder(df: DataFrame, lon_col: str = "lon",
-                      lat_col: str = "lat", zoom: int = 12,
-                      num_partitions: int | None = None) -> DataFrame:
-    """Re-layout a table for spatial data skipping: range-partition on
-    the Morton key (contiguous key ranges per partition — what makes
-    per-file min/max stats selective) and sort within partitions.
-    Write the result with any parquet writer; bbox scans then prune by
-    footer stats.  One shuffle; the sort is partition-local."""
-    keyed = df.withColumn(
-        "_z", zorder_key(F.col(lon_col), F.col(lat_col), zoom))
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (keyed.repartitionByRange(n, "_z")
-            .sortWithinPartitions("_z").drop("_z"))
-
-
-def partition_extents(df: DataFrame, lon_col: str = "lon",
-                      lat_col: str = "lat") -> list[dict]:
-    """Per-partition bounding boxes + row counts — the observability
-    hook for layout quality (sum of bbox areas ~ expected scan
-    amplification of a random bbox probe)."""
-    ext = (df.withColumn("_pid", F.spark_partition_id())
-           .groupBy("_pid")
-           .agg(F.min(lon_col).alias("min_lon"),
-                F.max(lon_col).alias("max_lon"),
-                F.min(lat_col).alias("min_lat"),
-                F.max(lat_col).alias("max_lat"),
-                F.count(F.lit(1)).alias("n")))
-    return [r.asDict() for r in ext.collect()]
-
-
-def write_bucketed(df: DataFrame, table: str, key: str,
-                   n_buckets: int = 16,
-                   sorted_by: str | None = None) -> None:
-    """Persist a table hash-BUCKETED on its join key (Spark's
-    ``bucketBy`` — the Hive-compatible sort-merge-bucket layout): every
-    future equi-join or aggregation on ``key`` between tables bucketed
-    the same way runs with ZERO exchange on either side, because the
-    co-partitioning is a property of the STORAGE, not of one query's
-    shuffle.  At 100 TB this is the difference between re-shuffling a
-    fact table for every join against it and shuffling it once at
-    write time — `bucketed_join_is_shuffle_free` in tests/test_layout
-    asserts the no-Exchange plan.
-
-    ``sorted_by`` additionally sorts within buckets (sortBy), letting
-    the join skip its sort too (full SMB).  Overwrites the table."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets={n_buckets} must be >= 1")
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key)
-    if sorted_by:
-        w = w.sortBy(sorted_by)
-    w.saveAsTable(table)

@@ -10,8 +10,7 @@ decoded by :mod:`kernels.jpeg`.
 Scale design: every operator here is a single linear ``mapInPandas``
 (no shuffle, no driver collect); frame sampling slices only the wanted
 frames out of the container (O(n) 8-byte header reads + O(k) payload
-copies), and :func:`video_metadata` touches headers only — profiling a
-100 TB corpus without decoding a frame.
+copies).
 
 Reference scope: systemed/tilemaker has no media pipeline; this is the
 training-data-pipeline operator family the graft adds (image axis).
@@ -27,27 +26,6 @@ from pyspark.sql import DataFrame
 
 from ..kernels import png as P
 from ..kernels import riff as R
-
-
-def video_metadata(videos: DataFrame) -> DataFrame:
-    """Header-only container scan -> video_id, n_frames, fps, w, h,
-    codec.  No frame bytes are decoded (kernels/riff.decode_avi_header
-    stops after hdrl)."""
-    schema = ("video_id string, n_frames long, fps long, w long, h long,"
-              " codec string")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("video_id", "n_frames", "fps", "w", "h", "codec")}
-            for vid, blob in zip(pdf["video_id"], pdf["bytes"]):
-                m = R.decode_avi_header(bytes(blob))
-                rows["video_id"].append(vid)
-                for k in ("n_frames", "fps", "w", "h", "codec"):
-                    rows[k].append(m[k])
-            yield pd.DataFrame(rows)
-
-    return videos.select("video_id", "bytes").mapInPandas(run, schema=schema)
 
 
 def sample_frames(videos: DataFrame, target_fps: int = 5,

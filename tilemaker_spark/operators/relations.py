@@ -1,17 +1,12 @@
-"""Relation membership: parent-relation lookup and postscan tag bouncing.
+"""Relation membership: parent-relation lookup.
 
 Reference semantics (/root/reference/include/osm_store.h:97-200
-NextRelation/FindInRelation iteration; docs/RELATIONS.md:60-109;
-src/osm_lua_processing.cpp:1044-1108): an entity (node/way/relation) can
-read the tags of every *accepted* relation it is a member of, and a
-``relation_postscan_function`` can copy ("bounce") tags from flattened
-ancestor relations down onto child relations before ways are processed.
+NextRelation/FindInRelation iteration; docs/RELATIONS.md:60-109): an
+entity (node/way/relation) can read the tags of every *accepted*
+relation it is a member of.
 
 Spark-first re-expression: membership is one explode + equi-join +
-re-aggregate (the same shuffle shape as way assembly); ancestor
-flattening is an iterative small-join fixpoint (hierarchies are shallow —
-the reference also flattens); tag bouncing is a Column expression over
-the parents array (higher-order functions, zero Python).
+re-aggregate (the same shuffle shape as way assembly).
 
 Member struct layout follows the PBF source: mtype 0=node, 1=way,
 2=relation; members: array<struct<mtype:int, ref:long, role:string>>.
@@ -19,17 +14,11 @@ Member struct layout follows the PBF source: mtype 0=node, 1=way,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PARENTS_SCHEMA = "array<struct<rel_id:bigint,role:string," \
                  "rel_tags:map<string,string>>>"
-
-
-def accept_relations(relations: DataFrame, predicate: Column) -> DataFrame:
-    """relation_scan Accept(): keep relations matching a Column predicate
-    over (id, members, tags) — e.g. ``F.col("tags")["type"] == "route"``."""
-    return relations.filter(predicate)
 
 
 def parent_relations(entities: DataFrame, relations: DataFrame,
@@ -68,127 +57,3 @@ def parent_relations(entities: DataFrame, relations: DataFrame,
         F.when(F.col(parents_col).isNull(),
                F.array().cast(PARENTS_SCHEMA)).otherwise(F.col(parents_col)),
     )
-
-
-def relation_ancestors(relations: DataFrame, max_depth: int = 8,
-                       parents_col: str = "ancestors") -> DataFrame:
-    """Flattened ancestors (parents, grandparents, ...) per relation —
-    the postscan NextRelation iteration surface (docs/RELATIONS.md:106-109:
-    'tilemaker flattens them out').
-
-    Iterative small-join fixpoint: level k+1 = parents of level k,
-    bounded by ``max_depth`` (OSM hierarchies are shallow; the loop also
-    stops early when a level adds nothing).  Output: relations +
-    ``ancestors`` array<struct<rel_id, role, rel_tags>> (dedup by rel_id,
-    the role is the role along the first discovered path)."""
-    edges = relations.select(
-        F.col("id").alias("parent_id"),
-        F.col("tags").alias("parent_tags"),
-        F.explode(F.filter(
-            "members", lambda m: m["mtype"] == F.lit(2))).alias("m"),
-    ).select(
-        "parent_id", "parent_tags",
-        F.col("m.ref").alias("child_id"),
-        F.col("m.role").alias("role"),
-    )
-    # frontier: (child_id, anc struct)
-    frontier = edges.select(
-        "child_id",
-        F.struct(F.col("parent_id").alias("rel_id"), "role",
-                 F.col("parent_tags").alias("rel_tags")).alias("anc"),
-    )
-    acc = frontier
-    for _ in range(max_depth - 1):
-        # grandparents: parents of the current frontier's ancestors
-        nxt = frontier.join(
-            edges.withColumnsRenamed({"child_id": "anc_id"}),
-            on=frontier["anc"]["rel_id"] == F.col("anc_id"),
-        ).select(
-            "child_id",
-            F.struct(F.col("parent_id").alias("rel_id"), "role",
-                     F.col("parent_tags").alias("rel_tags")).alias("anc"),
-        )
-        if nxt.isEmpty():
-            break
-        acc = acc.unionByName(nxt)
-        frontier = nxt
-    flat = acc.groupBy("child_id").agg(
-        F.collect_list("anc").alias("_raw"))
-    # dedup by rel_id keeping first occurrence (array_distinct can't
-    # order map-bearing structs; the positional filter below can)
-    flat = flat.select(
-        "child_id",
-        F.filter(
-            "_raw",
-            lambda a, i: ~F.exists(
-                F.slice("_raw", F.lit(1), i),
-                lambda b: b["rel_id"] == a["rel_id"]),
-        ).alias(parents_col),
-    )
-    out = relations.join(
-        flat, on=relations["id"] == flat["child_id"], how="left"
-    ).drop("child_id")
-    return out.withColumn(
-        parents_col,
-        F.when(F.col(parents_col).isNull(),
-               F.array().cast(PARENTS_SCHEMA)).otherwise(F.col(parents_col)),
-    )
-
-
-def restart_relations(parents_col: str | Column) -> Column:
-    """RestartRelations equivalence (reference
-    src/osm_lua_processing.cpp:1055-1057 resets the NextRelation cursor
-    to -1 so a Lua rule can iterate the membership list again).
-
-    In this engine the membership list is a MATERIALIZED ARRAY COLUMN
-    (``rels``), not a cursor: every expression over it —
-    ``find_in_parents``, ``bounce_tag``, any ``F.filter``/
-    ``F.transform`` — independently scans the full array from the
-    start.  Restarting is therefore the identity; this named helper
-    exists so profile code porting a Lua rule has a 1:1 call to reach
-    for, and so the equivalence is documented + tested
-    (tests/test_relations.py::test_restart_relations_equivalence)."""
-    return F.col(parents_col) if isinstance(parents_col, str) \
-        else parents_col
-
-
-def find_in_parents(parents_col: str | Column, key: str) -> Column:
-    """FindInRelation(key) over the parents array: the first parent that
-    carries ``key`` supplies the value (null when none)."""
-    c = F.col(parents_col) if isinstance(parents_col, str) else parents_col
-    hits = F.filter(c, lambda p: p["rel_tags"][key].isNotNull())
-    return F.try_element_at(hits, F.lit(1))["rel_tags"][key]
-
-
-def bounce_tag(parents_col: str | Column, match_key: str, match_val: str,
-               take_key: str) -> Column:
-    """Postscan idiom (docs/RELATIONS.md:84-105): value of ``take_key``
-    from the first ancestor whose tags[match_key] == match_val."""
-    c = F.col(parents_col) if isinstance(parents_col, str) else parents_col
-    hits = F.filter(c, lambda p: p["rel_tags"][match_key] == match_val)
-    return F.try_element_at(hits, F.lit(1))["rel_tags"][take_key]
-
-
-def set_tag(tags_col: str | Column, key: str, value: Column) -> Column:
-    """SetTag(key, value) as a map expression: overwrite/insert ``key``
-    when ``value`` is not null, else leave tags unchanged (reference
-    src/osm_lua_processing.cpp:945-960, postscan-only there; here a plain
-    column op usable in any phase)."""
-    t = F.col(tags_col) if isinstance(tags_col, str) else tags_col
-    without = F.map_filter(t, lambda k, v: k != F.lit(key))
-    updated = F.map_concat(without, F.create_map(F.lit(key), value))
-    return F.when(value.isNull(), t).otherwise(updated)
-
-
-def relation_postscan(relations: DataFrame, rules: list[tuple] ,
-                      max_depth: int = 8) -> DataFrame:
-    """relation_postscan_function as data: apply a list of
-    (match_key, match_val, take_key, set_key) bounce rules in order, each
-    copying a tag from the first matching flattened ancestor onto the
-    child relation's tags.  Returns relations with updated ``tags``."""
-    rel = relation_ancestors(relations, max_depth=max_depth)
-    tags = F.col("tags")
-    for (match_key, match_val, take_key, set_key) in rules:
-        val = bounce_tag("ancestors", match_key, match_val, take_key)
-        tags = set_tag(tags, set_key, val)
-    return rel.withColumn("tags", tags).drop("ancestors")

@@ -1,26 +1,17 @@
-"""Sessionization: gap-based event sessions, batch and streaming.
+"""Sessionization: gap-based event sessions.
 
 The windows/sorts family's classic stateful operator (SURVEY.md §2.5):
 group each user's event stream into sessions separated by an inactivity
-gap.  Two implementations with the same semantics:
-
-* :func:`sessionize` (batch) — pure Catalyst: ``lag`` over the
-  (user, ts) window marks session starts, a running ``sum`` of the
-  marks numbers them.  Two window passes over ONE shuffle on the user
-  key (both windows share the partitioning, so Catalyst plans a single
-  Exchange); no UDF, fully whole-stage-codegen.  Exactly the SQL a
-  DuckDB oracle can mirror, so the driver hash-checks it.
-* :func:`streaming_sessions` (streaming) — Structured Streaming's
-  native ``session_window`` with a watermark: state-store-backed
-  merging session windows, the scale path for unbounded streams (late
-  events inside the watermark merge sessions exactly like the batch
-  twin; see tilemaker_spark/streaming/jobs.py for the file-stream
-  wiring).
+gap.  :func:`sessionize` is pure Catalyst: ``lag`` over the (user, ts)
+window marks session starts, a running ``sum`` of the marks numbers
+them.  Two window passes over ONE shuffle on the user key (both windows
+share the partitioning, so Catalyst plans a single Exchange); no UDF,
+fully whole-stage-codegen.  Exactly the SQL a DuckDB oracle can mirror,
+so its output is hash-checked against one.
 
 Scale notes: one shuffle on user_id; per-user event counts are bounded
 (sessions are per-user timelines), so no skew salting is needed beyond
-AQE.  At 100 TB the batch path is a single wide stage; the streaming
-path bounds state by the watermark horizon.
+AQE.  At 100 TB it is a single wide stage.
 """
 
 from __future__ import annotations

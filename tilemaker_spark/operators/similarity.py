@@ -5,17 +5,13 @@ Graft additions for training-data pipelines (not in the reference):
 * brute-force cosine top-k — the exact baseline, dot products computed
   JVM-side with higher-order functions (zip_with + aggregate), window
   top-k.  Right answer, O(Q*N) — fine when one side broadcasts.
-* LSH-bucketed ANN — random-hyperplane signatures (deterministic seed)
-  computed in a vectorized pandas UDF (one matmul per Arrow batch),
-  candidates from multi-probe bucket equi-joins, exact re-rank.  The
-  scale path: shuffles on compact bucket keys only.
-* embedding-cosine near-duplicate pairs — same machinery, threshold form.
 * IVF-Flat ANN — a deterministic k-means coarse quantizer (trained on a
   bounded driver-side sample, centroids shipped in the UDF closure),
   candidates partitioned by nearest-centroid list id, queries probing
-  their n_probes nearest lists, exact re-rank.  The second scale path:
-  unlike LSH its lists adapt to the data distribution, so clustered
-  real-world embeddings get balanced lists instead of mega-buckets.
+  their n_probes nearest lists, exact re-rank.  The scale path: its
+  lists adapt to the data distribution, so clustered real-world
+  embeddings get balanced lists instead of mega-buckets.
+* embedding near-duplicate pairs on an exact integer-quantized dot.
 """
 
 from __future__ import annotations
@@ -104,132 +100,16 @@ def label_recall_at_k(embeddings: DataFrame, k: int = 5,
                     F.col("hit_rank").cast("int").alias("hit_rank")))
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal((n_planes, dim)).astype(np.float32)
-
-
-def lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf("long")
-    def sig(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())  # (B, dim)
-        bits = (mat @ planes.T) > 0       # (B, n_planes)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series(bits @ weights)
-
-    return sig
-
-
-def lsh_probe_udf(dim: int, n_planes: int = 16, n_probes: int = 1,
-                  seed: int = 42):
-    """Margin-based multi-probe signatures: the base bucket plus the
-    (n_probes - 1) hamming-1 neighbors obtained by flipping the planes
-    with the SMALLEST |dot| margin for THIS query — the planes the point
-    sits closest to, i.e. the flips most likely to recover a near
-    neighbor that landed on the other side (standard multi-probe LSH,
-    Lv et al. VLDB'07).  Returns array<long> of bucket ids, base first.
-    """
-    planes = _hyperplanes(dim, n_planes, seed)
-    n_flip = max(0, min(n_planes, n_probes - 1))
-
-    @F.pandas_udf("array<long>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())          # (B, dim)
-        dots = mat @ planes.T                     # (B, n_planes)
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        base = ((dots > 0) @ weights).astype(np.int64)  # (B,)
-        if n_flip == 0:
-            return pd.Series(list(base[:, None]))
-        # per-row indices of the n_flip smallest |margin| planes
-        low = np.argpartition(np.abs(dots), n_flip - 1, axis=1)[:, :n_flip]
-        flipped = base[:, None] ^ weights[low]    # (B, n_flip)
-        return pd.Series(list(np.concatenate([base[:, None], flipped],
-                                             axis=1)))
-
-    return probes
-
-
 def _cap_buckets(df: DataFrame, bucket_col: str,
                  max_bucket_size: int) -> DataFrame:
     """Drop rows in buckets larger than ``max_bucket_size`` (same
     mega-bucket guard as dedup.minhash_lsh_pairs): one window count over
     the bucket key — the same shuffle the downstream equi-join needs, so
-    the cap is ~free.  Dropped-bucket counts are observable via
-    :func:`ann_bucket_stats`."""
+    the cap is ~free."""
     w = Window.partitionBy(bucket_col)
     return (df.withColumn("_bn", F.count(F.lit(1)).over(w))
             .filter(F.col("_bn") <= max_bucket_size)
             .drop("_bn"))
-
-
-def ann_bucket_stats(df: DataFrame, vec_col: str = "embedding",
-                     dim: int = 64, n_planes: int = 10,
-                     max_bucket_size: int = 1024) -> DataFrame:
-    """Observability for the ANN bucket cap ('no silent caps'): bucket
-    count, multi-member buckets, buckets over the cap, rows dropped, and
-    the max bucket size for a given plane configuration."""
-    sig = lsh_signature_udf(dim, n_planes)
-    sizes = (df.select(sig(F.col(vec_col)).alias("_bucket"))
-             .groupBy("_bucket").agg(F.count("*").alias("n")))
-    return sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("n") > max_bucket_size, 1).otherwise(0))
-        .alias("n_dropped"),
-        F.sum(F.when(F.col("n") > max_bucket_size, F.col("n"))
-              .otherwise(0)).alias("rows_dropped"),
-        F.max("n").alias("max_size"),
-    )
-
-
-def ann_lsh_topk(
-    queries: DataFrame, candidates: DataFrame, k: int, dim: int,
-    n_planes: int = 12, n_probes: int = 1,
-    query_id: str = "query_id", cand_id: str = "cand_id",
-    q_vec: str = "embedding", c_vec: str = "embedding",
-    max_bucket_size: int = 4096,
-) -> DataFrame:
-    """Approximate top-k: hyperplane-LSH bucket join + exact re-rank.
-
-    ``n_probes`` > 1 additionally probes the hamming-1 buckets whose
-    hyperplane margin is smallest for each query (margin-based
-    multi-probe), boosting recall at the cost of a wider candidate set.
-
-    Scale guard: candidate buckets larger than ``max_bucket_size`` are
-    dropped before the join — a degenerate embedding distribution (zero
-    vectors, one dense cluster) otherwise collapses into one bucket and
-    the equi-join goes O(b^2).  Use :func:`ann_bucket_stats` to size the
-    cap; queries probing a dropped bucket fall back to their remaining
-    probes (raise ``n_probes`` / ``n_planes`` if recall matters there).
-    """
-    sig = lsh_signature_udf(dim, n_planes)
-    # coalesce -> provably non-null bucket key, so the join's inferred
-    # isnotnull(_bucket) folds away instead of being pushed below the
-    # projection and re-evaluating the sig UDF over all candidates
-    c = candidates.select(
-        F.col(cand_id).alias("cand_id"), F.col(c_vec).alias("_cv"),
-        F.coalesce(sig(F.col(c_vec)),
-                   F.lit(-1).cast("long")).alias("_bucket"))
-    c = _cap_buckets(c, "_bucket", max_bucket_size)
-    probe = lsh_probe_udf(dim, n_planes, n_probes)
-    q = queries.select(F.col(query_id).alias("query_id"),
-                       F.col(q_vec).alias("_qv"),
-                       F.explode(probe(F.col(q_vec))).alias("_bucket"))
-    joined = q.join(c, on="_bucket", how="inner").filter(
-        F.col("query_id") != F.col("cand_id"))
-    sim = cosine_expr(F.col("_qv").cast("array<double>"),
-                      F.col("_cv").cast("array<double>")).alias("sim")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(),
-                                               F.col("cand_id").asc())
-    return (
-        joined.select("query_id", "cand_id", sim)
-        .dropDuplicates(["query_id", "cand_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "cand_id", "sim")
-    )
 
 
 def train_ivf_centroids(df: DataFrame, vec_col: str = "embedding",
@@ -258,87 +138,6 @@ def train_ivf_centroids(df: DataFrame, vec_col: str = "embedding",
                 cent[j] = members.mean(axis=0)
         cent /= np.maximum(np.linalg.norm(cent, axis=1, keepdims=True),
                            1e-12)
-    return cent.astype(np.float32)
-
-
-def _lloyd_partial_agg(vecs: DataFrame, cent: np.ndarray) -> DataFrame:
-    """One distributed Lloyd iteration's partial-sum DataFrame.
-
-    mapInPandas assigns every vector to its nearest centroid and emits
-    per-batch partial sums already exploded to (list, j, s, c) — at most
-    nlist x dim rows per Arrow batch regardless of batch size — then a
-    single groupBy(list, j) shuffle reduces them (map-side combine makes
-    the shuffle nlist x dim rows per partition).  The caller collects
-    only nlist x dim rows: the driver never sees a vector, just the
-    sufficient statistics, which is what makes the trainer valid at
-    10^12 rows.  Plan shape: 1 Arrow node, 1 shuffle (audited in
-    tests/test_similarity_images.py)."""
-    cent64 = np.ascontiguousarray(cent, dtype=np.float64)
-    nlist, dim = cent64.shape
-
-    def partials(batches):
-        for pdf in batches:
-            m = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-            m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True),
-                            1e-12)
-            a = np.argmax(m @ cent64.T, axis=1)
-            sums = np.zeros((nlist, dim), np.float64)
-            np.add.at(sums, a, m)
-            cnts = np.bincount(a, minlength=nlist)
-            nz = np.nonzero(cnts)[0]
-            if not len(nz):
-                continue
-            ls = np.repeat(nz, dim)
-            js = np.tile(np.arange(dim), len(nz))
-            c = np.zeros(len(ls), np.int64)
-            c[js == 0] = cnts[nz]
-            yield pd.DataFrame({"list": ls.astype("int32"),
-                                "j": js.astype("int32"),
-                                "s": sums[nz].reshape(-1), "c": c})
-
-    return (vecs.mapInPandas(partials, "list int, j int, s double, c long")
-            .groupBy("list", "j")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c")))
-
-
-def train_ivf_centroids_distributed(
-        df: DataFrame, vec_col: str = "embedding", nlist: int = 64,
-        iters: int = 10, seed: int = 42,
-        init_sample_size: int = 20000) -> np.ndarray:
-    """Fully distributed spherical k-means for the IVF coarse quantizer:
-    every Lloyd pass runs over the WHOLE table; the driver only reduces
-    nlist x (dim+1) sufficient statistics per iteration (the sums and
-    counts from :func:`_lloyd_partial_agg`), never the vectors.
-
-    Init is the same seeded PCG64 choice over the same bounded sample as
-    :func:`train_ivf_centroids`, so on an input that fits the sample the
-    two trainers produce the same centroids (summation order aside —
-    float64 partials keep them allclose; asserted in tests).  Use this
-    when the training set itself must shape the lists beyond what a 20k
-    sample can see; the sample path stays the cheap default."""
-    vecs = df.select(F.col(vec_col).alias("_v"))
-    rows = vecs.limit(init_sample_size).collect()
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    nlist = min(nlist, len(x))
-    rng = np.random.Generator(np.random.PCG64(seed))
-    cent = x[rng.choice(len(x), nlist, replace=False)]
-    dim = cent.shape[1]
-    cached = vecs.persist()
-    try:
-        for _ in range(iters):
-            sums = np.zeros((nlist, dim), np.float64)
-            cnts = np.zeros(nlist, np.int64)
-            for r in _lloyd_partial_agg(cached, cent).collect():
-                sums[r["list"], r["j"]] = r["s"]
-                if r["j"] == 0:
-                    cnts[r["list"]] = r["c"]
-            nzl = cnts > 0
-            cent[nzl] = sums[nzl] / cnts[nzl, None]
-            cent /= np.maximum(
-                np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    finally:
-        cached.unpersist()
     return cent.astype(np.float32)
 
 
@@ -417,38 +216,6 @@ def ann_ivf_topk(
     )
 
 
-def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        dim: int = 64, n_planes: int = 10,
-                        max_bucket_size: int = 4096) -> DataFrame:
-    """Near-duplicate pairs by cosine >= threshold, LSH-blocked.
-    Output: (id_a, id_b, sim).
-
-    Scale guard: buckets larger than ``max_bucket_size`` are dropped
-    before the self-join (the O(b^2) mega-bucket hole — same cap +
-    observability pattern as dedup.minhash_lsh_pairs; see
-    :func:`ann_bucket_stats` for the dropped counts)."""
-    sig = lsh_signature_udf(dim, n_planes)
-    # non-null bucket key (see ann_lsh_topk): stops Catalyst pushing the
-    # join's isnotnull guard below the projection, which would run the
-    # sig UDF twice per side of the self-join
-    base = df.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).alias("_v"),
-        F.coalesce(sig(F.col(vec_col)),
-                   F.lit(-1).cast("long")).alias("_bucket"))
-    base = _cap_buckets(base, "_bucket", max_bucket_size)
-    a, b = base.alias("a"), base.alias("b")
-    sim = cosine_expr(F.col("a._v").cast("array<double>"),
-                      F.col("b._v").cast("array<double>")).alias("sim")
-    return (
-        a.join(b, (F.col("a._bucket") == F.col("b._bucket"))
-               & (F.col("a.vid") < F.col("b.vid")))
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
-                sim)
-        .filter(F.col("sim") >= threshold)
-    )
-
-
 def quantized_dot(a, b, scale: int = 64):
     """Exact-integer dot product of two float vectors after symmetric
     fixed-scale int quantization: q(x) = floor(x*scale + 0.5).  Both
@@ -489,9 +256,7 @@ def embedding_near_dups_exact(vecs: DataFrame, id_col: str = "vec_id",
                               emb_col: str = "embedding",
                               scale: int = 64, threshold: int = 1000,
                               dim: int | None = None) -> DataFrame:
-    """Embedding near-dup pairs on the EXACT quantized dot — the
-    oracle-checkable twin of the LSH-bucketed
-    :func:`embedding_near_dups`: every pair whose fixed-scale integer
+    """Embedding near-dup pairs on the EXACT quantized dot: every pair whose fixed-scale integer
     dot (:func:`quantized_dot`) clears ``threshold``.  Declared
     broadcast-bounded O(n²) baseline (same contract as
     :func:`cosine_topk_bruteforce`): one side broadcasts, so it is the

@@ -421,8 +421,7 @@ def selection_quantiles(df: DataFrame, col: str,
 
     Returns a (driver-assembled, |q_ppms|-row) DataFrame
     (q_ppm int, value long).  The per-pass ``.collect()`` is the
-    n_buckets-row histogram — bounded by construction, same declared
-    pattern as bpe_train's 1-row collect.
+    n_buckets-row histogram — bounded by construction.
     """
     if not q_ppms or any(not 0 <= q <= 1_000_000 for q in q_ppms):
         raise ValueError(f"bad q_ppms {q_ppms}")

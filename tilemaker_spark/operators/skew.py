@@ -7,10 +7,9 @@ the BASELINE north rule calls out "partitioning / shuffle / skew handled
 explicitly", and the PIP cell join (operators/spatial_join.py) already
 accepts a FIXED ``n_salts``.  This module makes the salt count
 data-driven per key: one cheap counting pass emits a tiny (key,
-n_salts) plan, the plan broadcasts back, and each row derives its salt
-deterministically from its id — so a 10^12-row table pays one map-side
-combinable count-aggregate and a broadcast hash join, never a global
-sort or a driver-side histogram.
+n_salts) plan, small enough to broadcast back to the rows — so a
+10^12-row table pays one map-side combinable count-aggregate, never a
+global sort or a histogram collected to one process.
 
 Integer-exact by construction (ceil via (n + t - 1) div t, no floats),
 so the plan itself is oracle-checkable cross-engine.
@@ -41,20 +40,3 @@ def salt_plan(df: DataFrame, key_col: str, target_rows: int) -> DataFrame:
                     # ceil pure int64 as the module contract promises
                     F.expr(f"(n_rows + {t - 1}) div {t}")
                     .alias("n_salts")))
-
-
-def apply_salt_plan(df: DataFrame, plan: DataFrame, key_col: str,
-                    id_col: str) -> DataFrame:
-    """Attach a ``salt: int`` column per the plan: rows of a key with
-    n_salts = s land in salt buckets 0..s-1 via a deterministic hash of
-    the row id (stable across runs and partitionings — the same
-    contract as operators/sampling's membership functions).  The plan
-    side broadcasts (it is #keys rows); keys absent from the plan get
-    salt 0.  Downstream joins/aggregations key on (key, salt) and the
-    dimension side explodes ``F.sequence(0, n_salts - 1)`` — exactly
-    the shape pip_join already uses for its fixed-salt path."""
-    p = F.broadcast(plan.select(key_col, "n_salts"))
-    out = df.join(p, on=key_col, how="left")
-    salt = F.pmod(F.xxhash64(F.col(id_col)),
-                  F.coalesce(F.col("n_salts"), F.lit(1)))
-    return out.withColumn("salt", salt.cast("int")).drop("n_salts")

@@ -54,8 +54,7 @@ def substring_dup_pairs(
     collection -> in-group combination explode -> groupBy (doc_a, doc_b)
     re-aggregate.  Grams occurring more
     than ``max_gram_freq`` times are dropped (boilerplate mega-gram guard
-    — pair expansion is O(freq^2); see :func:`substring_gram_stats` for
-    the dropped counts).
+    — pair expansion is O(freq^2)).
     """
     occ = df.filter(F.length(text_col) >= length).select(
         F.col(id_col).alias("doc_id"),
@@ -122,30 +121,3 @@ FROM capped a
 JOIN capped b ON a.gkey = b.gkey AND a.doc_id < b.doc_id
 GROUP BY 1, 2
 """
-
-
-def substring_gram_stats(
-    df: DataFrame, length: int = 15,
-    sample_hex: tuple[str, ...] = DEFAULT_SAMPLE_HEX,
-    id_col: str = "doc_id", text_col: str = "text",
-    max_gram_freq: int = 64,
-) -> DataFrame:
-    """Observability for the mega-gram cap ('no silent caps'): sampled
-    gram-key counts, keys over the cap, and occurrences dropped."""
-    occ = df.filter(F.length(text_col) >= length).select(
-        F.col(text_col).alias("_t"),
-        F.explode(F.sequence(
-            F.lit(1), F.length(text_col) - F.lit(length - 1))).alias("pos"),
-    ).select(F.md5(F.expr(f"substring(_t, pos, {int(length)})")).alias("_h")
-             ).filter(F.substring("_h", 1, 1).isin(*sample_hex))
-    sizes = (occ.select(F.substring("_h", 1, 16).alias("gkey"))
-             .groupBy("gkey").agg(F.count(F.lit(1)).alias("n")))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_gram_keys"),
-        F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias("n_multi"),
-        F.sum(F.when(F.col("n") > max_gram_freq, 1).otherwise(0))
-        .alias("n_dropped_keys"),
-        F.sum(F.when(F.col("n") > max_gram_freq, F.col("n")).otherwise(0))
-        .alias("occs_dropped"),
-        F.max("n").alias("max_freq"),
-    )

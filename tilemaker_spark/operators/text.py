@@ -8,7 +8,6 @@ scoring, and document fingerprinting (md5 of normalized text).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -377,8 +376,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str = "text",
     the per-term idf back (a term-keyed equi-join; the term dim is
     vocabulary-sized, millions of rows at 100 TB — Catalyst/AQE picks
     broadcast vs shuffle-hash) → per-doc top-k window.  One extra
-    1-row ``count()`` action fetches N (the same declared scalar
-    bpe_train uses).  Output: doc_id, rank, term, score."""
+    1-row ``count()`` action fetches N.  Output: doc_id, rank, term, score."""
     n_docs = df.count()
     exploded = df.select(
         F.col(id_col).alias("doc_id"),
@@ -434,65 +432,6 @@ ranked AS (
 SELECT doc_id, CAST(rank AS int) AS rank, term, CAST(score AS BIGINT) AS score
 FROM ranked WHERE rank <= {int(top_k)}
 """
-
-
-def bpe_train(df: DataFrame, n_merges: int = 8,
-              text_col: str = "text") -> list[tuple[str, str]]:
-    """Full distributed BPE training loop (Sennrich et al. 2016): greedy
-    highest-count adjacent-pair merges.  Each iteration aggregates pair
-    counts over the (word, freq) VOCAB table (compact — the corpus is
-    touched exactly once) and collects only the single best pair
-    (driver-side argmax of a 1-row result, the one collect a BPE trainer
-    cannot avoid); the merge itself is applied to the vocab with one
-    Arrow-batched pandas UDF.  Returns the ordered merge list.
-
-    Deterministic: ties break lexicographically, so the same corpus
-    always yields the same merges regardless of partitioning.
-    """
-    words = (df.select(F.explode(tokens(F.col(text_col))).alias("w"))
-             .filter(F.length("w") >= 1))
-    vocab = (words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
-             .select(F.expr("transform(sequence(1, length(w)), "
-                            "i -> substring(w, i, 1))").alias("syms"),
-                     "freq"))
-    vocab = vocab.localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_counts = (
-            vocab.filter(F.size("syms") >= 2)
-            .select("freq", F.explode(F.expr(
-                "transform(sequence(1, size(syms) - 1), "
-                "i -> struct(syms[i-1] AS a, syms[i] AS b))")).alias("p"))
-            .groupBy("p.a", "p.b").agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1)
-            .collect())
-        if not pair_counts:
-            break
-        a, b = pair_counts[0]["a"], pair_counts[0]["b"]
-        merges.append((a, b))
-
-        @F.pandas_udf("array<string>")
-        def merge(col: pd.Series) -> pd.Series:
-            def one(syms):
-                out, i, n = [], 0, len(syms)
-                while i < n:
-                    if (i + 1 < n and syms[i] == a and syms[i + 1] == b):
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                return out
-            return col.map(one)
-
-        prev = vocab
-        vocab = (vocab.select(merge(F.col("syms")).alias("syms"), "freq")
-                 .localCheckpoint())
-        # release the prior iteration's checkpoint blocks once the new one
-        # is materialized — real BPE runs do thousands of merges, and
-        # without this the executor storage grows without bound
-        prev.rdd.unpersist(False)
-    return merges
 
 
 def word_ngrams(col, n: int):
@@ -688,8 +627,8 @@ FROM totals t LEFT JOIN per_doc p ON t.id = p.id
 def bpe_encode_counts(df: DataFrame, merges: list[tuple[str, str]],
                       text_col: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
-    """APPLY a BPE tokenizer (the encode side of :func:`bpe_train` —
-    Sennrich et al. 2016 §3): per document, the exact token count after
+    """APPLY a BPE tokenizer (the encode side of BPE — Sennrich et al.
+    2016 §3): per document, the exact token count after
     applying ``merges`` in rank order, plus the pre-merge word count.
 
     The whole encoder is pure Catalyst string algebra, zero UDF: each

@@ -40,45 +40,6 @@ def holds(key: str) -> Column:
         F.col("tags").getItem(key) != "")
 
 
-def significant_tags(filters: list[str]) -> Column:
-    """The node_keys / way_keys significant-tag filter as a Column
-    predicate (reference src/significant_tags.cpp:5-90).
-
-    Filters are ``[~]key[=value]``, all of one polarity:
-    * accept mode (no ``~``): entity passes if at least one of its tags
-      matches some filter;
-    * reject mode (``~``): entity passes if at least one of its tags is
-      NOT matched by any filter (e.g. ``["~building"]`` = everything
-      except building-only entities).
-    """
-    if not filters:
-        return F.lit(False)
-    parsed = []
-    accept = not filters[0].startswith("~")
-    for raw in filters:
-        neg = raw.startswith("~")
-        if neg != (not accept):
-            raise ValueError(
-                f"cannot mix reject and accept filters: {filters}")
-        body = raw[1:] if neg else raw
-        key, _, val = body.partition("=")
-        parsed.append((key, val))
-
-    def tag_matches_any(e):
-        conds = None
-        for key, val in parsed:
-            c = e["key"] == F.lit(key)
-            if val:
-                c = c & (e["value"] == F.lit(val))
-            conds = c if conds is None else (conds | c)
-        return conds
-
-    entries = F.map_entries(F.col("tags"))
-    if accept:
-        return F.exists(entries, tag_matches_any)
-    return F.exists(entries, lambda e: ~tag_matches_any(e))
-
-
 @dataclass
 class LayerRule:
     """One feature-emission rule: WHERE match -> emit into layer."""
@@ -136,36 +97,6 @@ def collect_data(df: DataFrame, key_col: str, val_col: str,
             f"collect_data: >{max_rows} rows; use a broadcast join for "
             "large external tables")
     return {r[0]: r[1] for r in rows}
-
-
-def used_closure(nodes: DataFrame, ways: DataFrame,
-                 relations: DataFrame | None = None,
-                 node_filter: Column | None = None,
-                 way_filter: Column | None = None,
-                 relation_pred: Column | None = None
-                 ) -> tuple[DataFrame, DataFrame]:
-    """Scan-pruning transitive closure (reference usedNodes/usedWays,
-    include/osm_store.h:270-300 + the way_keys phase of
-    src/pbf_processor.cpp:179-230): used ways = way_keys-passing ways
-    UNION way-members of accepted relations; used nodes = node_keys-
-    passing nodes UNION refs of used ways.  Explicit left_semi joins so
-    the node table is pruned BEFORE assembly — at planet scale most
-    nodes are untagged vertices whose only consumers are the used ways.
-
-    Returns (nodes_used, ways_used)."""
-    w = ways.filter(way_filter) if way_filter is not None else ways
-    if relations is not None and relation_pred is not None:
-        rel_way_ids = relations.filter(relation_pred).select(
-            F.explode(F.filter(
-                "members", lambda m: m["mtype"] == F.lit(1))).alias("m")
-        ).select(F.col("m.ref").alias("id")).distinct()
-        w = ways.join(rel_way_ids, "id", "left_semi").unionByName(
-            w).dropDuplicates(["id"])
-    used_node_ids = w.select(F.explode("refs").alias("id")).distinct()
-    n = nodes.join(used_node_ids, "id", "left_semi")
-    if node_filter is not None:
-        n = nodes.filter(node_filter).unionByName(n).dropDuplicates(["id"])
-    return n, w
 
 
 # LayerRule.source -> (Profile.apply argument, feature kind, a column that

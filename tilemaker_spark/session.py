@@ -21,7 +21,7 @@ ENGINE_CONF = {
     # coalesce their shuffles down to one fat partition
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # epoch-µs operators and the streaming jobs read timestamps as UTC
+    # epoch-µs operators read timestamps as UTC
     "spark.sql.session.timeZone": "UTC",
 }
 

@@ -15,10 +15,14 @@ from pyspark.sql import DataFrame
 
 
 def write_filetree(tiles: DataFrame, out_dir: str,
-                   metadata: dict | None = None) -> None:
+                   metadata: dict | None = None) -> int:
+    """tiles(z, x, y, tile) -> out_dir/z/x/y.pbf plus ``metadata`` as
+    out_dir/metadata.json. Returns tile count."""
     os.makedirs(out_dir, exist_ok=True)
+    written = tiles.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
+        n = 0
         for row in rows:
             d = os.path.join(out_dir, str(row["z"]), str(row["x"]))
             os.makedirs(d, exist_ok=True)
@@ -26,12 +30,15 @@ def write_filetree(tiles: DataFrame, out_dir: str,
             with open(tmp, "wb") as f:
                 f.write(row["tile"])
             os.replace(tmp, os.path.join(d, f"{row['y']}.pbf"))
+            n += 1
+        written.add(n)
 
     tiles.select("z", "x", "y", "tile").foreachPartition(write_partition)
     meta = {"name": "tilemaker_spark", "format": "pbf"}
     meta.update(metadata or {})
     with open(os.path.join(out_dir, "metadata.json"), "w") as f:
         json.dump(meta, f, indent=1)
+    return written.value
 
 
 def read_filetree_tile(out_dir: str, z: int, x: int, y: int) -> bytes | None:

@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame
 
 
 def write_mbtiles(tiles: DataFrame, path: str, metadata: dict | None = None,
-                  merge: bool = False,
-                  vector_layers: list | None = None) -> int:
+                  merge: bool = False) -> int:
     """tiles(z, x, y, tile) -> .mbtiles at path. Returns tile count.
 
     merge=True implements the reference's ``--merge`` semantics
@@ -28,10 +27,10 @@ def write_mbtiles(tiles: DataFrame, path: str, metadata: dict | None = None,
     with the new tile's (per layer) and the merged tile is written — not
     a whole-tile replace.
 
-    vector_layers (list of {id, fields, minzoom, maxzoom}) is stored
-    under the ``json`` metadata key (reference shared_data.cpp:184-209);
-    build it with ``sinks.meta.vector_layers`` or
-    ``sinks.meta.infer_vector_layers``."""
+    ``metadata`` is the TileJSON-shaped dict every sink takes; MBTiles
+    stores its ``bounds`` as a "minlon,minlat,maxlon,maxlat" string and
+    its ``vector_layers`` under the ``json`` key (reference
+    src/shared_data.cpp:21-36, 184-209)."""
     from ..kernels import mvt as M
     conn = sqlite3.connect(path)
     cur = conn.cursor()
@@ -68,9 +67,11 @@ def write_mbtiles(tiles: DataFrame, path: str, metadata: dict | None = None,
     cur.execute("DELETE FROM metadata")
     meta = {"name": "tilemaker_spark", "format": "pbf",
             "type": "baselayer", "version": "2"}
-    if vector_layers is not None:
-        meta["json"] = json.dumps({"vector_layers": vector_layers})
     meta.update(metadata or {})
+    if "bounds" in meta:
+        meta["bounds"] = ",".join(f"{float(v):.6f}" for v in meta["bounds"])
+    if "vector_layers" in meta:
+        meta["json"] = {"vector_layers": meta.pop("vector_layers")}
     for k, v in meta.items():
         if not isinstance(v, str):
             v = json.dumps(v)

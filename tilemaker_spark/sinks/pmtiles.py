@@ -19,6 +19,7 @@ import struct
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ..kernels.proj import WORLD_BOUNDS
 from ..kernels.wire import pack_uvarints, packed_varints
 
 MAGIC = b"PMTiles"
@@ -116,12 +117,12 @@ def _rle_entries(tids, offs, lens):
 
 
 def write_pmtiles(tiles: DataFrame, path: str,
-                  metadata: dict | None = None,
-                  vector_layers: list | None = None) -> int:
+                  metadata: dict | None = None) -> int:
     """tiles(z, x, y, tile) -> .pmtiles. Tile blobs must already be gzip
     (the engine's default tile compression). Returns tile count.
-    ``vector_layers`` goes into the JSON metadata blob (spec/TileJSON;
-    reference shared_data.cpp:184-209).
+    ``metadata`` is written as the archive's JSON metadata; its
+    ``bounds`` (minlon, minlat, maxlon, maxlat; world when absent) also
+    set the header's E7 bounds and center.
 
     Index assembly mirrors the reference writer (src/pmtiles.cpp:16-173):
     * identical tiny blobs (< TINY_LENGTH bytes — ocean/empty tiles) are
@@ -130,9 +131,6 @@ def write_pmtiles(tiles: DataFrame, path: str,
       entries (appendWithRLE) — together these shrink planet archives
       where sea tiles dominate.
     """
-    if vector_layers is not None:
-        metadata = dict(metadata or {})
-        metadata["vector_layers"] = vector_layers
     # no cluster-side orderBy: the archive order is HILBERT tile id,
     # which the driver-side items.sort below establishes anyway — a
     # (z, x, y) orderBy here would add a full range-shuffle whose
@@ -218,11 +216,11 @@ def write_pmtiles(tiles: DataFrame, path: str,
     header[99] = 1  # tile type: MVT
     header[100] = minz if entries else 0
     header[101] = maxz if entries else 0
-    # bounds (E7 ints): world
-    struct.pack_into("<iiii", header, 102,
-                     -180 * 10**7, -85 * 10**7, 180 * 10**7, 85 * 10**7)
-    struct.pack_into("<B", header, 118, (minz if entries else 0))
-    struct.pack_into("<ii", header, 119, 0, 0)
+    # bounds (E7 ints) from the metadata, else the world; the center is
+    # their midpoint at the archive's min zoom
+    box = [round(float(v) * 1e7) for v in meta.get("bounds", WORLD_BOUNDS)]
+    struct.pack_into("<iiiiBii", header, 102, *box, minz if entries else 0,
+                     (box[0] + box[2]) // 2, (box[1] + box[3]) // 2)
 
     with open(path, "wb") as f:
         f.write(header)

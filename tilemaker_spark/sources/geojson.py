@@ -17,10 +17,6 @@ from pyspark.sql import functions as F
 
 from ..kernels import geom as G
 
-PACKED_SCHEMA = ("kind tinyint, coords array<double>, ring_sizes array<int>,"
-                 " poly_ring_counts array<int>")
-
-
 def _pack_geometry(gtype: str, coords) -> tuple:
     if gtype == "Point":
         return (G.POINT, [float(coords[0]), float(coords[1])], [1], [])
@@ -61,6 +57,24 @@ def _feature_id(ft: dict):
     return fid
 
 
+def apply_attribute_function(attrs: dict, layer: str, minzoom: int,
+                             attribute_function=None) -> tuple[dict, int]:
+    """Run the ``attribute_function`` remap hook on one feature's
+    properties.  Returns (attrs, minzoom): values stringified into the
+    engine's ``map<string,string>`` attrs, and a returned ``_minzoom``
+    (int) overriding the feature's minzoom instead of becoming an
+    attribute (reference src/shp_processor.cpp:47-84)."""
+    if attribute_function is None:
+        return {str(k): str(v) for k, v in attrs.items()}, minzoom
+    out = attribute_function(dict(attrs), layer)
+    if out is None:
+        out = {}
+    mz = minzoom
+    if "_minzoom" in out:
+        mz = int(out.pop("_minzoom"))
+    return {str(k): str(v) for k, v in out.items()}, mz
+
+
 def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
                  minzoom: int = 0, attribute_function=None) -> DataFrame:
     """JSONL (one Feature per line) or FeatureCollection file -> features
@@ -74,12 +88,8 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
     file are therefore one feature.
 
     ``attribute_function(attrs, layer) -> dict`` remaps each feature's
-    properties (reference src/shp_processor.cpp:47-84 — same hook as the
-    shapefile source); a returned ``_minzoom`` key sets the feature's
-    minzoom.  In the JSONL path the callable ships to the workers, so it
-    must be picklable."""
-    from .remap import apply_attribute_function
-
+    properties (:func:`apply_attribute_function`).  In the JSONL path the
+    callable ships to the workers, so it must be picklable."""
     head = spark.read.text(path).limit(1).collect()
     first = head[0]["value"].lstrip() if head else ""
     if first.startswith("{") and '"FeatureCollection"' in first:
@@ -140,31 +150,3 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
 
     from ..operators.tiling import FEATURE_SCHEMA
     return lines.mapInPandas(parse, schema=FEATURE_SCHEMA)
-
-
-def write_geojson(features: DataFrame, path: str) -> None:
-    """Debug writer (reference include/geojson_writer.h): features ->
-    JSONL of GeoJSON Features (driver-side; debugging tool)."""
-    with open(path, "w") as f:
-        for r in features.toLocalIterator():
-            kind = r["kind"]
-            geom = G.unpack(kind, r["coords"], r["ring_sizes"],
-                            r["poly_ring_counts"])
-            if kind == G.POINT:
-                geom = ({"type": "Point", "coordinates": geom[0].tolist()}
-                        if len(geom) == 1 else
-                        {"type": "MultiPoint", "coordinates": geom.tolist()})
-            elif kind == G.LINESTRING and len(geom) == 1:
-                geom = {"type": "LineString",
-                        "coordinates": geom[0].tolist()}
-            elif kind in (G.LINESTRING, G.MULTILINESTRING):
-                geom = {"type": "MultiLineString",
-                        "coordinates": [l.tolist() for l in geom]}
-            else:
-                geom = {"type": "MultiPolygon",
-                        "coordinates": [[rg.tolist() for rg in poly]
-                                        for poly in geom]}
-            f.write(json.dumps({
-                "type": "Feature", "id": r["feature_id"],
-                "properties": dict(r["attrs"] or {}), "geometry": geom,
-            }) + "\n")

@@ -153,12 +153,6 @@ def grid_polygons_df(spark: SparkSession, nx: int = 360, ny: int = 180,
 # The BASELINE images table
 # ---------------------------------------------------------------------------
 
-IMAGE_META_COLS = [
-    "image_id", "w", "h", "fmt", "caption", "phash", "lon", "lat",
-    "h3_coarse", "salt",
-]
-
-
 def images_df(spark: SparkSession, n: int, with_bytes: bool = True,
               n_salts: int = 8, cell_zoom: int = 6,
               partitions: int | None = None) -> DataFrame:

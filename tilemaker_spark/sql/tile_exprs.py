@@ -129,9 +129,11 @@ def haversine_m_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
 
 def box_area_sq_m(minlon: Column, minlat: Column, maxlon: Column,
                   maxlat: Column) -> Column:
-    """Spherical area of a lon/lat box via the same Chamberlain–Duquette
-    edge discretization as kernels.geom.ring_area_sq_m (4 corners):
-    simplifies to |dlam * (sin(maxlat) - sin(minlat))| * R^2 for a box."""
+    """Spherical area of a lon/lat box by the Chamberlain–Duquette edge
+    discretization over its 4 corners (the reference's spherical Area(),
+    src/osm_lua_processing.cpp:529-590): |sum (lam2-lam1) * (2 + sin(phi1)
+    + sin(phi2))| * R^2 / 2 simplifies to |dlam * (sin(maxlat) -
+    sin(minlat))| * R^2 for a box."""
     dlam = F.radians(maxlon - minlon)
     return (
         F.abs(dlam * (F.sin(F.radians(maxlat)) - F.sin(F.radians(minlat))))
@@ -416,46 +418,6 @@ hfin AS (SELECT x0, y0, d AS hilbert FROM hrec WHERE i = -1)"""
 # against recomputation at the coarser level.
 # ---------------------------------------------------------------------------
 
-def _s2_face_uv(lon: Column, lat: Column) -> tuple[Column, Column, Column]:
-    """(face, u, v) for a lon/lat degree point — S2 face numbering and
-    component-ratio UV, pure Catalyst."""
-    lam, phi = F.radians(lon.cast("double")), F.radians(lat.cast("double"))
-    px = F.cos(phi) * F.cos(lam)
-    py = F.cos(phi) * F.sin(lam)
-    pz = F.sin(phi)
-    ax, ay, az = F.abs(px), F.abs(py), F.abs(pz)
-    face = (F.when((ax >= ay) & (ax >= az),
-                   F.when(px >= 0, F.lit(0)).otherwise(F.lit(3)))
-            .when(ay >= az, F.when(py >= 0, F.lit(1)).otherwise(F.lit(4)))
-            .otherwise(F.when(pz >= 0, F.lit(2)).otherwise(F.lit(5))))
-    u = (F.when(face == 0, py / px).when(face == 1, -px / py)
-         .when(face == 2, -px / pz).when(face == 3, pz / px)
-         .when(face == 4, pz / py).otherwise(-py / pz))
-    v = (F.when(face == 0, pz / px).when(face == 1, pz / py)
-         .when(face == 2, -py / pz).when(face == 3, py / px)
-         .when(face == 4, -px / py).otherwise(-px / pz))
-    return face, u, v
-
-
-def s2_cell_id(lon: Column, lat: Column, level: int = 10) -> Column:
-    """S2-analogue cell id of a lon/lat degree point at ``level``:
-    ``face * 4^level + hilbert_d(i, j, level)`` (see block comment)."""
-    if not 0 <= level <= 30:
-        raise ValueError(f"level={level} out of range [0, 30]")
-    n = 1 << level
-    face, u, v = _s2_face_uv(lon, lat)
-    i = F.least(F.lit(n - 1),
-                F.floor((u + F.lit(1.0)) / F.lit(2.0) * F.lit(float(n))))
-    j = F.least(F.lit(n - 1),
-                F.floor((v + F.lit(1.0)) / F.lit(2.0) * F.lit(float(n))))
-    return (face.cast("long") * F.lit(1 << (2 * level))
-            + hilbert_d(i, j, level)).cast("long")
-
-
-def s2_cell_face(cell: Column, level: int) -> Column:
-    """Face (0..5) back out of a packed S2-analogue cell id."""
-    return F.floor(cell / F.lit(1 << (2 * level))).cast("int")
-
 
 def s2_cell_parent(cell: Column, level: int, dz: int = 1) -> Column:
     """Ancestor cell at ``level - dz``: same face, Hilbert position
@@ -470,7 +432,7 @@ def s2_cell_parent(cell: Column, level: int, dz: int = 1) -> Column:
 
 
 def s2_sql_ctes(lon: str, lat: str, source: str, level: int = 10) -> str:
-    """DuckDB twin of :func:`s2_cell_id` as a CTE chain ending in
+    """DuckDB twin of :func:`with_s2_cell` as a CTE chain ending in
     ``s2fin`` (all source columns + ``cell``); mirrors the Spark
     literals and operation order exactly, with the Hilbert walk as a
     recursive CTE carrying (face, i, j) through the bit levels."""
@@ -535,14 +497,13 @@ def s2_sql_ctes(lon: str, lat: str, source: str, level: int = 10) -> str:
 
 def with_s2_cell(df, lon_col: str, lat_col: str, level: int = 10,
                  out: str = "cell"):
-    """DataFrame-staged :func:`s2_cell_id`: identical math, but each
-    stage (xyz -> face -> uv -> ij -> hilbert) lands in its own
-    projection with NAMED intermediate columns, so no expression is
-    inlined twice and the generated code stays inside whole-stage
-    codegen's method-size limit.  The fully-fused Column form blows
-    past it (the face CASE replicates into every u/v branch) and falls
-    back to interpreted evaluation — ~6x slower at sf0.1; caught by
-    the bench, kept here as the fast path for DataFrame callers.
+    """S2-analogue cell id at ``level``, staged: each stage (xyz ->
+    face -> uv -> ij -> hilbert) lands in its own projection with NAMED
+    intermediate columns, so no expression is inlined twice and the
+    generated code stays inside whole-stage codegen's method-size
+    limit.  A fully-fused Column form blows past it (the face CASE
+    replicates into every u/v branch) and falls back to interpreted
+    evaluation — ~6x slower at sf0.1.
     Appends ``out`` (the cell id) and drops the intermediates."""
     if not 0 <= level <= 30:
         raise ValueError(f"level={level} out of range [0, 30]")

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
+import tempfile
 
 import duckdb
 
@@ -44,10 +46,24 @@ def table_hash(rows, cols):
 
 
 def main():
+    # each run gets its own Spark scratch dir under SPARK_LOCAL_DIRS, so
+    # concurrent runs on one host never share block-manager or shuffle
+    # files; removed on exit
+    parent = (os.environ.get("SPARK_LOCAL_DIRS")
+              or tempfile.gettempdir()).split(",")[0]
+    os.makedirs(parent, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix="check_oracle-", dir=parent,
+                                     ignore_cleanup_errors=True) as local:
+        os.environ["SPARK_LOCAL_DIRS"] = local
+        sweep()
+
+
+def sweep():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as E
     from tilemaker_spark.session import get_spark, release_storage
 
