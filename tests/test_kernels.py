@@ -222,29 +222,6 @@ class TestGeom:
             assert np.array_equal(np.unique(old, axis=0),
                                   np.unique(new, axis=0))
 
-    def test_box_fastpath_matches_general_cover(self):
-        # the closed-form axis-aligned-rectangle cover equals boundary
-        # supercover + per-column fill
-        rng = np.random.RandomState(5)
-        for _ in range(40):
-            x0, y0 = rng.uniform(-60, 40, 2)
-            w, h = rng.uniform(0.05, 25, 2)
-            ring = np.array([[x0, y0], [x0 + w, y0], [x0 + w, y0 + h],
-                             [x0, y0 + h], [x0, y0]])
-            z = int(rng.choice([4, 8, 12]))
-            assert geom._axis_aligned_box([[ring]]) is not None
-            fast = geom.covering_tiles_polygon([[ring]], z)
-            # general path: force through the ring supercover
-            fx = geom.lon2tilexf(ring[:-1, 0], z)
-            fy = geom.lat2tileyf(ring[:-1, 1], z)
-            tx = geom.lon2tilexf(ring[1:, 0], z)
-            ty = geom.lat2tileyf(ring[1:, 1], z)
-            m = (np.int64(1) << z) - 1
-            gen = geom.fill_covered_tiles(np.unique(np.clip(
-                geom._supercover_segments(fx, fy, tx, ty), 0, m), axis=0))
-            key = lambda a: set(map(tuple, a.tolist()))
-            assert key(fast) == key(gen)
-
     def test_pack_roundtrip(self):
         mp = [[self.RING, self.RING * 0.5 + 0.2], [self.RING + 3]]
         flat, rs, pc = geom.pack_multipolygon(mp)
@@ -333,3 +310,142 @@ def test_merge_lines_runs_past_a_closed_ring():
     assert len(out) == 1
     assert out[0].tolist() == [[0, 0], [1, 0], [1, 1], [0, 1], [0, 0],
                                [-1, -1]]
+
+
+def _reference_cover(kind, geom, z):
+    """The cover rule written out per geometry, as a set of tiles: each
+    part walked on its own, cells clamped to the grid, and a polygon's
+    columns filled from their lowest to their highest tile."""
+    m = (1 << z) - 1
+
+    def clamp(v):
+        return min(max(int(v), 0), m)
+
+    def vertex(p):
+        return (clamp(np.floor(proj.lon2tilexf(p[0], z))),
+                clamp(np.floor(proj.lat2tileyf(p[1], z))))
+
+    def walk(part):
+        fx, fy = proj.lon2tilexf(part[:, 0], z), proj.lat2tileyf(part[:, 1], z)
+        cells, _ = G._supercover_segments(fx[:-1], fy[:-1], fx[1:], fy[1:])
+        return {(clamp(x), clamp(y)) for x, y in cells.tolist()}
+
+    if kind == G.POINT:
+        return {vertex(p) for p in geom}
+    if kind in (G.LINESTRING, G.MULTILINESTRING):
+        return set().union(*[walk(l) if len(l) > 1 else {vertex(l[0])}
+                             for l in geom if len(l)])
+    rings = [r for poly in geom for r in poly]
+    cells = set().union(*[walk(r) for r in rings if len(r) > 1])
+    if not cells:
+        pts = [p for r in rings for p in r]
+        return {vertex(pts[0])} if pts else set()
+    cols = {}
+    for x, y in cells:
+        cols.setdefault(x, []).append(y)
+    return {(x, y) for x, ys in cols.items()
+            for y in range(min(ys), max(ys) + 1)}
+
+
+def test_cover_batch_matches_per_geometry_cover():
+    """Property (hypothesis): over mixed-kind batches at z0-16, each row
+    of ``cover_batch`` (read from sliced Arrow list columns) equals the
+    one-geometry ``covering_tiles``, and both equal the plain per-part
+    rule above.  Inputs include boxes with edges on tile edges, lon
+    +-180, lat +-85.0511 and beyond, zero-length segments, one-point
+    lines, degenerate rings, holes and empty rows."""
+    import pyarrow as pa
+    from hypothesis import given, settings, strategies as st
+
+    lons = [-180.0, 180.0, 0.0]
+    lats = [-90.0, -85.06, -85.0511, 0.0, 85.0511, 85.06, 90.0]
+
+    def vertex(data, z, anchor):
+        if anchor is None:  # a small grid: anywhere on or off it
+            n = 1 << z
+            lon = data.draw(st.one_of(
+                st.floats(-180, 180), st.sampled_from(lons),
+                st.integers(0, n).map(lambda t: float(proj.tilex2lon(t, z)))))
+            lat = data.draw(st.one_of(
+                st.floats(-90, 90), st.sampled_from(lats),
+                st.integers(0, n).map(lambda t: float(proj.tiley2lat(t, z)))))
+            return lon, lat
+        # near an anchor tile, on tile edges or between them
+        off = st.one_of(st.integers(-2, 2), st.floats(-2, 2))
+        return (float(proj.tilex2lon(anchor[0] + data.draw(off), z)),
+                float(proj.tiley2lat(anchor[1] + data.draw(off), z)))
+
+    def part(data, z, anchor, lo, hi):
+        pts = [vertex(data, z, anchor)
+               for _ in range(data.draw(st.integers(lo, hi)))]
+        if data.draw(st.booleans()):  # a zero-length segment
+            pts = pts[:1] + pts
+        return np.array(pts, float).reshape(-1, 2)
+
+    def box(data, z, anchor):
+        (x0, y0), (x1, y1) = vertex(data, z, anchor), vertex(data, z, anchor)
+        return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+
+    def ring(data, z, anchor):
+        shape = data.draw(st.sampled_from(["box", "vertex", "open", "closed"]))
+        if shape == "box":
+            return box(data, z, anchor)
+        if shape == "vertex":  # a ring without an edge
+            return np.array([vertex(data, z, anchor)])
+        r = part(data, z, anchor, 1, 6)
+        return np.vstack([r, r[:1]]) if shape == "closed" else r
+
+    def row(data, z):
+        kind = data.draw(st.sampled_from(
+            [G.POINT, G.LINESTRING, G.MULTILINESTRING, G.POLYGON]))
+        n = 1 << z
+        anchor = None if z <= 6 else data.draw(st.tuples(
+            st.integers(-1, n + 1), st.integers(-1, n + 1)))
+        count = data.draw(st.integers(0, 3))  # 0: an empty row
+        if kind == G.POINT:
+            return kind, part(data, z, anchor, count, count)
+        if kind != G.POLYGON:
+            return kind, [part(data, z, anchor, 1, 5) for _ in range(count)]
+        return kind, [[ring(data, z, anchor)
+                       for _ in range(data.draw(st.integers(1, 3)))]
+                      for _ in range(count)]
+
+    def flat(kind, geom):
+        if kind == G.POINT:
+            return geom.reshape(-1), [len(geom)]
+        parts = geom if kind != G.POLYGON else [r for p in geom for r in p]
+        return (np.concatenate([np.zeros(0)] + [p.reshape(-1) for p in parts]),
+                [len(p) for p in parts])
+
+    @settings(max_examples=300, deadline=None)
+    @given(data=st.data(), z=st.integers(0, 16))
+    def check(data, z):
+        rows = [row(data, z) for _ in range(data.draw(st.integers(1, 6)))]
+        flats = [flat(k, g) for k, g in rows]
+        batch = pa.RecordBatch.from_arrays([
+            pa.array([G.POINT] + [k for k, _ in rows], pa.int8()),
+            pa.array([[0.0, 0.0]] + [c.tolist() for c, _ in flats],
+                     pa.list_(pa.float64())),
+            pa.array([[1]] + [s for _, s in flats], pa.list_(pa.int32())),
+        ], names=["kind", "coords", "ring_sizes"]).slice(1)
+        r, x, y = G.cover_batch(np.asarray(batch.column("kind")),
+                                *G.packed_flat(batch), z)
+        assert np.all(np.diff(r) >= 0)
+        for i, (kind, geom) in enumerate(rows):
+            want = sorted(_reference_cover(kind, geom, z))
+            assert G.covering_tiles(kind, geom, z).tolist() == \
+                [list(c) for c in want]
+            assert list(zip(x[r == i].tolist(), y[r == i].tolist())) == want
+
+    check()
+
+
+def test_fill_covered_tiles_per_row():
+    """With owner rows, each (row, x) is its own column: a gap is filled
+    only between two tiles of one row, and the order stays (row, x, y)."""
+    rows = np.array([0, 0, 1, 1, 1])
+    cells = np.array([[3, 1], [3, 4], [3, 6], [5, 0], [5, 2]], np.int64)
+    r, c = G.fill_covered_tiles(cells, rows)
+    assert r.tolist() == [0, 0, 0, 0, 1, 1, 1, 1]
+    assert c.tolist() == [[3, 1], [3, 2], [3, 3], [3, 4], [3, 6], [5, 0],
+                          [5, 1], [5, 2]]

@@ -161,6 +161,12 @@ def test_geojson_attribute_function_minzoom_in_tiling(spark, tmp_path):
 
     assert n_feats(z6[0]) == 1      # only the ungated feature
     assert n_feats(z7[0]) == 2      # both at z7
+
+
+def test_pmtiles_sink_round_trip(spark, tmp_path):
+    """Eight gzip blobs written by the PMTiles sink read back by tile id,
+    with the header's zoom range and, no bounds given, the world to the
+    Web Mercator latitude limit."""
     import gzip
     rows = [(z, x, y, gzip.compress(f"tile-{z}/{x}/{y}".encode(), 6))
             for z in (3, 4) for x in range(2) for y in range(2)]

@@ -162,6 +162,32 @@ def test_geom_join_builds_no_job(spark):
     assert {r["feature_id"] for r in out.collect()} == {1}
 
 
+def test_spatial_joins_plan_no_per_row_python(spark, pts, grid):
+    """Both covers and the geom_join refine run as ``mapInArrow`` over
+    whole Arrow batches: neither join's plan holds a scalar pandas UDF
+    (ArrowEvalPython) or a pandas map (MapInPandas)."""
+    import io
+    from contextlib import redirect_stdout
+
+    from tilemaker_spark.operators.spatial_join import geom_join
+    probes = spark.createDataFrame(
+        [(1, 1, [-5.0, 5.0, 5.0, 5.0], [2], [])], PROBE_SCHEMA)
+    plans = {
+        "pip_broadcast": spatial_join.pip_join_broadcast(pts, grid),
+        "pip_cell": spatial_join.pip_join_cell(pts, grid),
+        "geom_join": geom_join(probes, _box_poly_df(spark), index_zoom=4),
+        "geom_join_area": geom_join(probes, _box_poly_df(spark),
+                                    predicate="area", index_zoom=4)}
+    for name, df in plans.items():
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+        assert "MapInArrow" in plan, name
+        for node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
+            assert node not in plan, (name, node)
+
+
 def test_geom_join_covered_by(spark):
     from tilemaker_spark.operators.spatial_join import geom_join
     probes = spark.createDataFrame([

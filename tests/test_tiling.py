@@ -375,22 +375,28 @@ def test_combine_lines_below_merges_shared_endpoint(spark):
     assert got == [("minor", 1), ("primary", 1)]
 
 
+# a way and a relation with one OSM id in one layer: they tie on
+# (zorder, kind, feature_id)
+_SAME_ID_ROWS = [
+    (7, "water", 3, 0, 0, {"src": "way"},
+     [7.40, 43.72, 7.45, 43.72, 7.45, 43.76, 7.40, 43.76, 7.40, 43.72],
+     [5], [1]),
+    (7, "water", 3, 0, 0, {"src": "relation"},
+     [7.42, 43.73, 7.47, 43.73, 7.47, 43.77, 7.42, 43.77, 7.42, 43.73],
+     [5], [1]),
+]
+_SAME_ID_CFG = Config(layers={"water": LayerDef("water", minzoom=0,
+                                                maxzoom=14)},
+                      minzoom=0, maxzoom=14, include_ids=True)
+
+
 def test_same_id_features_in_one_layer_both_render(spark):
     """A way and a relation that share an OSM id and a layer are two
     features: both reach every tile they touch, at the base zoom and in
     the z < 6 pass alike."""
-    way = [7.40, 43.72, 7.45, 43.72, 7.45, 43.76, 7.40, 43.76, 7.40, 43.72]
-    rel = [7.42, 43.73, 7.47, 43.73, 7.47, 43.77, 7.42, 43.77, 7.42, 43.73]
-    rows = [
-        (7, "water", 3, 0, 0, {"src": "way"}, way, [5], [1]),
-        (7, "water", 3, 0, 0, {"src": "relation"}, rel, [5], [1]),
-    ]
-    feats = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
-    cfgw = Config(layers={"water": LayerDef("water", minzoom=0,
-                                            maxzoom=14)},
-                  minzoom=0, maxzoom=14, include_ids=True)
+    feats = spark.createDataFrame(_SAME_ID_ROWS, tiling.FEATURE_SCHEMA)
     srcs = {}
-    for r in tiling.generate_tiles(feats, cfgw).collect():
+    for r in tiling.generate_tiles(feats, _SAME_ID_CFG).collect():
         fs = mvt.decode_tile(bytes(r["tile"]))["water"]["features"]
         assert {f["id"] for f in fs} == {7}
         srcs[(r["z"], r["x"], r["y"])] = sorted(
@@ -398,6 +404,26 @@ def test_same_id_features_in_one_layer_both_render(spark):
     both = ["relation", "way"]
     assert srcs[(3, 4, 2)] == both
     assert any(z == 14 and s == both for (z, _, _), s in srcs.items())
+
+
+def test_tied_features_encode_the_same_in_any_row_order(spark):
+    """Features that tie on (zorder, kind, feature_id) are ordered by
+    their attrs, then their geometry, not by the order their rows reach
+    the builder: rows as read, reversed, or spread over 7 partitions
+    give byte-identical tiles, also when the attrs tie too."""
+    def build(rows, parts=None):
+        df = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
+        if parts:
+            df = df.repartition(parts)
+        return {(r["z"], r["x"], r["y"]): bytes(r["tile"]) for r in
+                tiling.generate_tiles(df, _SAME_ID_CFG).collect()}
+
+    same_attrs = [r[:5] + ({"src": "osm"},) + r[6:] for r in _SAME_ID_ROWS]
+    for rows in (_SAME_ID_ROWS, same_attrs):
+        want = build(rows)
+        assert len(want) == 32
+        assert build(rows[::-1]) == want
+        assert build(rows, parts=7) == want
 
 
 def test_repair_bowtie_polygon(spark):

@@ -11,8 +11,10 @@ In DataFrames the same shapes are stored columnar as
 ``coords: array<double>`` (flat x0,y0,x1,y1,...) plus
 ``ring_sizes: array<int>`` and ``poly_ring_counts: array<int>`` — see
 :func:`pack_multipolygon`; :func:`packed_views` reads them out of an Arrow
-batch as per-row views, :func:`unpack` turns one row back into geometry
-by its ``kind`` and :func:`covering_tiles` covers it with tiles.
+batch as per-row views and :func:`unpack` turns one row back into geometry
+by its ``kind``.  :func:`cover_batch` covers a whole batch with tiles at
+once from the flat buffers :func:`packed_flat` reads; :func:`covering_tiles`
+is its one-row form.
 
 Algorithms mirror the reference engine's semantics (cited per-function)
 without porting its code: Sutherland–Hodgman box clipping with escalation
@@ -73,17 +75,22 @@ def unpack_lines(flat, sizes):
 PACKED = ("coords", "ring_sizes", "poly_ring_counts")  # the list columns
 
 
+def _list_buffers(batch, name) -> tuple:
+    """(values, offsets) numpy views of an Arrow list column."""
+    col = batch.column(name)
+    if hasattr(col, "chunks"):  # a Table's ChunkedArray
+        col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    return col.values.to_numpy(zero_copy_only=False), col.offsets.to_numpy()
+
+
 def packed_views(batch, columns=PACKED):
     """Per-row read-only numpy views of an Arrow RecordBatch's or Table's
     list ``columns``, one list per column; zipped, they are the rows
     :func:`unpack` takes.  Copies only a Table column of several chunks."""
     out = []
     for name in columns:
-        col = batch.column(name)
-        if hasattr(col, "chunks"):  # a Table's ChunkedArray
-            col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-        vals = col.values.to_numpy(zero_copy_only=False)
-        off = col.offsets.to_numpy().tolist()
+        vals, off = _list_buffers(batch, name)
+        off = off.tolist()
         out.append([vals[a:b] for a, b in zip(off[:-1], off[1:])])
     return out
 
@@ -939,8 +946,9 @@ def _supercover_segment(x0, y0, x1, y1):
 
 def _supercover_segments(x0, y0, x1, y1):
     """Vectorized Amanatides–Woo supercover over MANY segments at once
-    (endpoints in fractional tile coords, shape (n,)).  Returns (K,2)
-    int64 cells, duplicates included.  Produces the same cell set per
+    (endpoints in fractional tile coords, shape (n,)).  Returns (cells,
+    seg): (K, 2) int64 cells, duplicates included, and the (K,) index of
+    the segment each cell belongs to.  Produces the same cell set per
     segment as :func:`_supercover_segment` (crossing events are merged by
     parameter t; exact corner ties step y before x like the scalar walk's
     ``t_max_x < t_max_y`` comparison)."""
@@ -958,8 +966,7 @@ def _supercover_segments(x0, y0, x1, y1):
         """(seg_id, t, step) for every axis-boundary crossing."""
         total = int(cnt.sum())
         seg = np.repeat(np.arange(n), cnt)
-        j = np.arange(total) - np.repeat(
-            np.concatenate([[0], np.cumsum(cnt)[:-1]]), cnt)
+        j = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
         bound = np.where(step[seg] > 0, c0[seg] + 1 + j, c0[seg] - j)
         t = (bound - p0[seg]) / dp[seg]
         return seg, t, step[seg]
@@ -983,123 +990,146 @@ def _supercover_segments(x0, y0, x1, y1):
     base_dy = np.repeat(cum_dy[offsets[:-1]], counts)
     ecx = cx[seg] + (cum_dx[1:] - base_dx)
     ecy = cy[seg] + (cum_dy[1:] - base_dy)
-    return np.concatenate([
+    cells = np.concatenate([
         np.column_stack([cx, cy]),          # every segment's start cell
         np.column_stack([ecx, ecy]),
     ])
+    return cells, np.concatenate([np.arange(n), seg])
+
+
+def fill_covered_tiles(cells, rows=None):
+    """Per-column fill between consecutive covered y's (reference
+    fillCoveredTiles, src/coordinates.cpp:52-67: every per-x gap between
+    successive present tiles is filled).  Fully vectorized: each cell
+    repeats once per tile up to the next cell of its column.
+
+    Without ``rows``: the filled (n, 2) cells sorted by (x, y).  With
+    ``rows`` (each cell's owner), ``cells`` must be sorted by (rows, x,
+    y), a column is one (row, x), and the result is (rows, cells) of the
+    filled set in the same order."""
+    if rows is None:
+        cells = np.asarray(cells, np.int64).reshape(-1, 2)
+        cells = cells[np.lexsort((cells[:, 1], cells[:, 0]))]
+        return fill_covered_tiles(cells, np.zeros(len(cells), np.int64))[1]
+    x, y = cells[:, 0], cells[:, 1]
+    reps = np.ones(len(x), np.int64)
+    reps[:-1] += np.where((rows[1:] == rows[:-1]) & (x[1:] == x[:-1]),
+                          np.maximum(y[1:] - y[:-1] - 1, 0), 0)
+    k = np.repeat(np.arange(len(x)), reps)
+    step = np.arange(len(k)) - np.repeat(np.cumsum(reps) - reps, reps)
+    return rows[k], np.column_stack([x[k], y[k] + step])
+
+
+def packed_flat(batch) -> list:
+    """The ``coords`` and ``ring_sizes`` columns of an Arrow RecordBatch or
+    Table as flat buffers: [coords values, coords offsets, ring_sizes
+    values, ring_sizes offsets], the geometry :func:`cover_batch` takes.
+    Zero-copy; copies only a Table column of several chunks."""
+    return [a for name in PACKED[:2] for a in _list_buffers(batch, name)]
+
+
+def pack_batch(rows: list) -> tuple:
+    """Rows of parts (each row a list of (n, 2) arrays: lines, rings, or
+    one array of points) -> the flat buffers :func:`packed_flat` reads."""
+    sizes = [len(p) for parts in rows for p in parts]
+    coords = np.concatenate(
+        [np.zeros(0)] + [np.asarray(p, np.float64).reshape(-1)
+                         for parts in rows for p in parts])
+    rings_off = np.cumsum([0] + [len(parts) for parts in rows])
+    coords_off = 2 * np.cumsum([0] + sizes)[rings_off]
+    return coords, coords_off, np.asarray(sizes, np.int64), rings_off
+
+
+def cover_batch(kinds, coords, coords_off, ring_sizes, rings_off, z):
+    """Tiles at zoom z covered by every row of a batch of packed
+    geometries, in one pass: ``kinds`` per row plus the flat values and
+    per-row offsets of the ``coords`` and ``ring_sizes`` list columns
+    (:func:`packed_flat`).  Returns (row, x, y) int64 arrays sorted by
+    (row, x, y), unique per row; a row without vertices covers nothing.
+
+    A point row covers the tile of each vertex.  A line row covers the
+    supercover of each of its lines (the ``ring_sizes`` runs; a one-point
+    line covers its vertex); a polygon row covers the supercover of its
+    rings' edges, or the tile of its first vertex when it has no edge.
+    Cells are clamped to the grid, then each polygon row's columns are
+    filled (:func:`fill_covered_tiles`)."""
+    kinds = np.asarray(kinds)
+    n = len(kinds)
+    co = np.asarray(coords_off, np.int64)
+    ro = np.asarray(rings_off, np.int64)
+    xy = np.asarray(coords, np.float64)[co[0]:co[-1]].reshape(-1, 2)
+    npts = np.diff(co) // 2
+    vrow = np.repeat(np.arange(n), npts)
+    fx = lon2tilexf(xy[:, 0], z)
+    fy = lat2tileyf(xy[:, 1], z)
+    point = kinds == POINT
+    poly = ~point & (kinds != LINESTRING) & (kinds != MULTILINESTRING)
+    # parts: a line or ring per ring_sizes run, a point per vertex; an
+    # edge joins each vertex to the next one of its part
+    sizes = np.asarray(ring_sizes, np.int64)[ro[0]:ro[-1]][
+        ~point[np.repeat(np.arange(n), np.diff(ro))]]
+    vpt = point[vrow]
+    part = np.empty(len(vrow), np.int64)
+    part[~vpt] = np.repeat(np.arange(len(sizes)), sizes)
+    part[vpt] = len(sizes) + np.arange(int(vpt.sum()))
+    edge = np.flatnonzero(part[1:] == part[:-1])
+    # vertices covered on their own: points, one-point lines, and the
+    # first vertex of a polygon row without an edge
+    lone = vpt.copy()
+    lone[~vpt] = np.repeat(sizes == 1, sizes) & ~poly[vrow[~vpt]]
+    bare = poly & (npts > 0) & (np.bincount(vrow[edge], minlength=n) == 0)
+    lone[(co[:-1][bare] - co[0]) // 2] = True
+    v = np.flatnonzero(lone)
+    cells, seg = _supercover_segments(fx[edge], fy[edge], fx[edge + 1],
+                                      fy[edge + 1])
+    m = (np.int64(1) << z) - 1
+    row = np.concatenate([vrow[edge][seg], vrow[v]])
+    x = np.clip(np.concatenate(
+        [cells[:, 0], np.floor(fx[v]).astype(np.int64)]), 0, m)
+    y = np.clip(np.concatenate(
+        [cells[:, 1], np.floor(fy[v]).astype(np.int64)]), 0, m)
+    order = np.lexsort((y, x, row))
+    row, x, y = row[order], x[order], y[order]
+    first = np.ones(len(row), bool)
+    first[1:] = (row[1:] != row[:-1]) | (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    row, x, y = row[first], x[first], y[first]
+    fill = poly[row]
+    frow, fcells = fill_covered_tiles(np.column_stack([x[fill], y[fill]]),
+                                      row[fill])
+    row = np.concatenate([row[~fill], frow])
+    order = np.argsort(row, kind="stable")  # rows are all fill or none
+    return (row[order], np.concatenate([x[~fill], fcells[:, 0]])[order],
+            np.concatenate([y[~fill], fcells[:, 1]])[order])
 
 
 def covering_tiles_line(line_lonlat, z):
     """Tiles covered by a polyline at zoom z. Returns unique (K,2) int64."""
-    fx = lon2tilexf(line_lonlat[:, 0], z)
-    fy = lat2tileyf(line_lonlat[:, 1], z)
-    if len(fx) < 2:
-        cells = np.asarray([[int(fx[0]), int(fy[0])]], np.int64)
-    else:
-        cells = np.unique(
-            _supercover_segments(fx[:-1], fy[:-1], fx[1:], fy[1:]), axis=0)
-    m = (np.int64(1) << z) - 1
-    return np.clip(cells, 0, m)
-
-
-def fill_covered_tiles(cells):
-    """Per-column fill between consecutive covered y's (reference
-    fillCoveredTiles, src/coordinates.cpp:52-67: every per-x gap between
-    successive present tiles is filled).  Fully vectorized: gap runs are
-    materialized with one repeat+arange, no per-gap Python loop."""
-    if len(cells) == 0:
-        return cells
-    order = np.lexsort((cells[:, 1], cells[:, 0]))
-    c = cells[order]
-    same_x = c[1:, 0] == c[:-1, 0]
-    gaps = np.nonzero(same_x & (c[1:, 1] > c[:-1, 1] + 1))[0]
-    if len(gaps) == 0:
-        return c
-    lens = (c[gaps + 1, 1] - c[gaps, 1] - 1).astype(np.int64)
-    total = int(lens.sum())
-    offs = np.concatenate([[0], np.cumsum(lens)[:-1]])
-    fy = (np.arange(total) - np.repeat(offs, lens)
-          + np.repeat(c[gaps, 1] + 1, lens))
-    fx = np.repeat(c[gaps, 0], lens)
-    out = np.concatenate([c, np.column_stack([fx, fy])])
-    return out[np.lexsort((out[:, 1], out[:, 0]))]
-
-
-def _axis_aligned_box(mp):
-    """(minlon, minlat, maxlon, maxlat) if mp is a single hole-free
-    axis-aligned rectangle ring, else None."""
-    if len(mp) != 1 or len(mp[0]) != 1:
-        return None
-    r = mp[0][0]
-    if len(r) != 5 or not np.array_equal(r[0], r[-1]):
-        return None
-    xs = np.unique(r[:4, 0]); ys = np.unique(r[:4, 1])
-    if len(xs) != 2 or len(ys) != 2:
-        return None
-    corners = {(x, y) for x in xs for y in ys}
-    if {(p[0], p[1]) for p in r[:4]} != corners:
-        return None
-    return float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1])
-
-
-def covering_tiles_box(minlon, minlat, maxlon, maxlat, z):
-    """Closed-form cover of an axis-aligned lon/lat box: the full product
-    of the tile ranges its corners span (== boundary supercover + fill)."""
-    m = (np.int64(1) << z) - 1
-    xa = min(max(int(np.floor(lon2tilexf(minlon, z))), 0), int(m))
-    xb = min(max(int(np.floor(lon2tilexf(maxlon, z))), 0), int(m))
-    ya = min(max(int(np.floor(lat2tileyf(maxlat, z))), 0), int(m))
-    yb = min(max(int(np.floor(lat2tileyf(minlat, z))), 0), int(m))
-    gx, gy = np.meshgrid(np.arange(xa, xb + 1, dtype=np.int64),
-                         np.arange(ya, yb + 1, dtype=np.int64),
-                         indexing="ij")
-    return np.column_stack([gx.ravel(), gy.ravel()])
+    return covering_tiles(LINESTRING, [line_lonlat], z)
 
 
 def covering_tiles_polygon(mp, z):
-    """Tiles covered by a multipolygon at zoom z: ring supercover + fill.
-    Axis-aligned rectangles (the overwhelmingly common synthetic-bbox
-    shape) short-circuit to a closed-form tile-range product."""
-    box = _axis_aligned_box(mp)
-    if box is not None:
-        return covering_tiles_box(*box, z)
-    rings = [r for poly in mp for r in poly]
-    fx = np.concatenate([lon2tilexf(r[:-1, 0], z) for r in rings])
-    fy = np.concatenate([lat2tileyf(r[:-1, 1], z) for r in rings])
-    tx = np.concatenate([lon2tilexf(r[1:, 0], z) for r in rings])
-    ty = np.concatenate([lat2tileyf(r[1:, 1], z) for r in rings])
-    if len(fx) == 0:
-        r0 = rings[0]
-        return covering_tiles_point(r0[0, 0], r0[0, 1], z)
-    m = (np.int64(1) << z) - 1
-    cells = np.clip(_supercover_segments(fx, fy, tx, ty), 0, m)
-    return fill_covered_tiles(np.unique(cells, axis=0))
+    """Tiles covered by a multipolygon at zoom z: ring supercover + fill."""
+    return covering_tiles(POLYGON, mp, z)
 
 
 def covering_tiles_point(lon, lat, z):
     """The (1, 2) int64 tile holding one point at zoom z, clamped to the
     grid."""
-    x = int(np.floor(lon2tilexf(lon, z)))
-    y = int(np.floor(lat2tileyf(lat, z)))
-    m = (1 << z) - 1
-    return np.asarray([[min(max(x, 0), m), min(max(y, 0), m)]], np.int64)
+    return covering_tiles(POINT, [(lon, lat)], z)
 
 
 def covering_tiles(kind, geom, z):
     """Unique (n, 2) int64 tiles at zoom z covered by ``geom``, a geometry
-    of ``kind`` in the shape :func:`unpack` returns.  An empty geometry
-    covers no tile."""
-    if len(geom) == 0:
-        return np.zeros((0, 2), np.int64)
+    of ``kind`` in the shape :func:`unpack` returns: a one-row
+    :func:`cover_batch`.  An empty geometry covers no tile."""
     if kind == POINT:
-        if len(geom) == 1:  # np.unique(axis=0) costs more than the cover
-            return covering_tiles_point(geom[0, 0], geom[0, 1], z)
-        return np.unique(np.concatenate([
-            covering_tiles_point(x, y, z) for x, y in geom]), axis=0)
-    if kind in (LINESTRING, MULTILINESTRING):
-        return np.unique(np.concatenate([
-            covering_tiles_line(l, z) for l in geom]), axis=0)
-    return covering_tiles_polygon(geom, z)
+        parts = [geom]
+    elif kind in (LINESTRING, MULTILINESTRING):
+        parts = geom
+    else:
+        parts = [r for poly in geom for r in poly]
+    _, x, y = cover_batch([kind], *pack_batch([parts]), z)
+    return np.column_stack([x, y])
 
 
 # ---------------------------------------------------------------------------

@@ -6,9 +6,10 @@ with its filter-refine strategy (z15 candidate pre-filter then exact test,
 src/shp_mem_tiles.cpp:58-127) as one Spark plan with two physical
 strategies:
 
-1. polygons explode to their covering cells at ``index_zoom`` (the
-   packed-geometry cell UDF :func:`geometry_cells_udf` over the small
-   polygon side only — the covering raster needs imperative code);
+1. polygons explode to their covering cells at ``index_zoom``
+   (:func:`cover_cells`: one ``mapInArrow`` over the small polygon side
+   only, each Arrow batch covered by one ``kernels.geom.cover_batch``
+   call — the covering raster needs imperative code);
 2. points compute one cell id each — a pure Catalyst expression;
 3. an equi-join on the cell key builds candidates: ``broadcast`` strategy
    broadcasts the exploded polygon-cell table (the R-tree analogue for
@@ -30,10 +31,12 @@ Polygon DataFrame contract (packed-ring schema, ``kernels.geom``):
 
 from __future__ import annotations
 
-import pandas as pd
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..kernels import geom as G
 from ..kernels import proj as P
@@ -88,20 +91,30 @@ def points_in_mp_expr(px: Column, py: Column, coords: Column,
     return total % 2 == 1
 
 
-def geometry_cells_udf(index_zoom: int):
-    """array<long> covering-cell ids for ANY packed geometry (point /
-    line / polygon by ``kind``): probes and polygons alike."""
+def cover_cells(df: DataFrame, index_zoom: int, keep: list,
+                kind: int | None = None) -> DataFrame:
+    """``df``'s ``keep`` columns once per cell its packed geometry covers
+    at ``index_zoom``, with the cell's tile id as ``_cell``.  The geometry
+    is of ``kind``, or of each row's ``kind`` column when None.  One
+    ``mapInArrow`` covers each whole Arrow batch with one
+    ``kernels.geom.cover_batch`` call: probes and polygons alike."""
+    geo = ["coords", "ring_sizes"] + (["kind"] if kind is None else [])
+    src = df.select(*dict.fromkeys([*keep, *geo]))
+    schema = StructType([src.schema[c] for c in keep]
+                        + [StructField("_cell", LongType())])
 
-    @F.pandas_udf("array<long>")
-    def cells(kind: pd.Series, coords: pd.Series, ring_sizes: pd.Series,
-              poly_counts: pd.Series) -> pd.Series:
-        out = []
-        for k, c, rs, pc in zip(kind, coords, ring_sizes, poly_counts):
-            cc = G.covering_tiles(k, G.unpack(k, c, rs, pc), index_zoom)
-            out.append(P.tile_id(index_zoom, cc[:, 0], cc[:, 1]).tolist())
-        return pd.Series(out)
+    def gen(batches):
+        for batch in batches:
+            kinds = (np.asarray(batch.column("kind")) if kind is None
+                     else np.full(batch.num_rows, kind))
+            row, x, y = G.cover_batch(kinds, *G.packed_flat(batch),
+                                      index_zoom)
+            yield pa.RecordBatch.from_arrays(
+                [*batch.select(keep).take(row).columns,
+                 pa.array(P.tile_id(index_zoom, x, y))],
+                names=[*keep, "_cell"])
 
-    return cells
+    return src.mapInArrow(gen, schema)
 
 
 def pip_join(
@@ -130,18 +143,12 @@ def pip_join(
     which is O(cols) and fragile for NaN-bearing floats.
     """
     iz = index_zoom
-    cells = geometry_cells_udf(iz)
-    geom_cols = ["coords", "ring_sizes", "poly_ring_counts"]
     has_bbox = all(c in polygons.columns
                    for c in ("minlon", "minlat", "maxlon", "maxlat"))
     keep = list(dict.fromkeys(
-        list(poly_cols) + geom_cols
+        list(poly_cols) + list(G.PACKED)
         + (["minlon", "minlat", "maxlon", "maxlat"] if has_bbox else [])))
-    poly_exploded = polygons.select(
-        *keep,
-        F.explode(cells(F.lit(G.POLYGON), "coords", "ring_sizes",
-                        "poly_ring_counts")).alias("_cell"),
-    )
+    poly_exploded = cover_cells(polygons, iz, keep, kind=G.POLYGON)
     pts = points.withColumn(
         "_cell", TE.cell_id(F.col(lon_col), F.col(lat_col), iz))
 
@@ -231,22 +238,26 @@ def pip_join_cell(points: DataFrame, polygons: DataFrame, **kw):
 # (reference src/osm_lua_processing.cpp:409-502)
 # ---------------------------------------------------------------------------
 
-def _refine_batch(pdf: pd.DataFrame, predicate: str,
-                  probe_cols: list, poly_cols: list) -> pd.DataFrame:
+def _refine_batch(batch, predicate: str, probe_cols: list,
+                  poly_cols: list) -> pa.RecordBatch:
     """Refine one Arrow batch of candidate rows: group by polygon (by the
     poly id VALUES — no hash proxies), unpack each polygon once, and test
     all of its probes in one vectorized batch-kernel call."""
     from ..kernels import overlay as OV
-    n = len(pdf)
+    n = batch.num_rows
     keep = np.zeros(n, bool)
     areas = np.zeros(n, np.float64)
-    kinds, coords, rsz, prc, pcoords, prsz, pprc = (
-        pdf[c].to_numpy() for c in (
-            "kind", "coords", "ring_sizes", "poly_ring_counts",
-            "_pcoords", "_pring_sizes", "_ppoly_ring_counts"))
+    kinds = np.asarray(batch.column("kind"))
+    coords, rsz, prc = G.packed_views(batch)
+    pcoords, prsz, pprc = G.packed_views(
+        batch, ("_pcoords", "_pring_sizes", "_ppoly_ring_counts"))
     is_line = np.isin(kinds, (G.LINESTRING, G.MULTILINESTRING))
-    for _, idx in pdf.groupby(list(poly_cols), sort=False).indices.items():
-        idx = np.asarray(idx)
+    codes = np.column_stack([
+        np.asarray(pc.dictionary_encode(batch.column(c)).indices)
+        for c in poly_cols])
+    key = np.unique(codes, axis=0, return_inverse=True)[1].reshape(-1)
+    order = np.argsort(key, kind="stable")
+    for idx in np.split(order, np.flatnonzero(np.diff(key[order])) + 1):
         i0 = idx[0]
         mpb = G.unpack(G.POLYGON, pcoords[i0], prsz[i0], pprc[i0])
         lpos = idx[is_line[idx]]
@@ -284,9 +295,9 @@ def _refine_batch(pdf: pd.DataFrame, predicate: str,
                     OV.area_planar(OV.intersection(m, mpb)) for m in mps])
                 areas[ppos] = a
                 keep[ppos] = a > 0.0
-    out = pdf.loc[keep, probe_cols + poly_cols].reset_index(drop=True)
+    out = batch.select(probe_cols + poly_cols).filter(pa.array(keep))
     if predicate == "area":
-        out["area_deg2"] = areas[keep]
+        out = out.append_column("area_deg2", pa.array(areas[keep]))
     return out
 
 
@@ -315,19 +326,15 @@ def geom_join(
     poly_ring_counts) + ``probe_cols`` identifying columns.
     Output: probe_cols + poly_cols (+ ``area_deg2`` for predicate='area').
     """
-    cells = geometry_cells_udf(index_zoom)
     # one task per core: a single-file probe table would otherwise run the
-    # covering UDF and refine on one core.  Always repartition: asking the
+    # cover and refine on one core.  Always repartition: asking the
     # input for its partition count runs every shuffle stage above it.
     probes = probes.repartition(
         probes.sparkSession.sparkContext.defaultParallelism)
-    geom_cols = ["kind", "coords", "ring_sizes", "poly_ring_counts"]
-    pr_ids = probes.select(
-        *probe_cols,
-        F.explode(cells(*geom_cols)).alias("_cell"))
-    po_ids = polygons.select(
-        *poly_cols,
-        F.explode(cells(F.lit(G.POLYGON), *geom_cols[1:])).alias("_cell"))
+    geom_cols = ["kind", *G.PACKED]
+    pr_ids = cover_cells(probes, index_zoom, list(probe_cols))
+    po_ids = cover_cells(polygons, index_zoom, list(poly_cols),
+                         kind=G.POLYGON)
     right = F.broadcast(po_ids) if strategy == "broadcast" else po_ids
     cand_ids = (
         pr_ids.join(right, on="_cell", how="inner")
@@ -355,8 +362,8 @@ def geom_join(
         out_schema += ", area_deg2 double"
 
     def refine(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield _refine_batch(pdf, predicate, pc_l, pl_l)
+        for batch in batches:
+            if batch.num_rows:
+                yield _refine_batch(batch, predicate, pc_l, pl_l)
 
-    return cand.mapInPandas(refine, schema=out_schema)
+    return cand.mapInArrow(refine, schema=out_schema)

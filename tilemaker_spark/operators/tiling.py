@@ -38,6 +38,8 @@ layer), so the build keys its per-tile dedupe and clip pyramid on
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -77,15 +79,37 @@ LARGE_THRESHOLD = 16
 # stage 1: cover
 # ---------------------------------------------------------------------------
 
-def _bbox_tile_span(pts: np.ndarray, z: int) -> int:
-    """Number of z-tiles in the bbox of pts (cheap upper bound on the
-    covering-tile count; the reference thresholds on the true covering
-    count but bbox span classifies identically for the features that
-    matter — anything bbox-small is covering-small)."""
+def _bbox_tile_spans(coords, coords_off, z: int) -> np.ndarray:
+    """Per row of a batch (flat ``coords`` and their offsets), the number
+    of z-tiles in the bbox of its vertices, 0 for a row with none: a
+    cheap upper bound on the covering-tile count (the reference
+    thresholds on the true covering count, but bbox span classifies
+    identically for the features that matter — anything bbox-small is
+    covering-small)."""
+    co = np.asarray(coords_off, np.int64)
+    xy = coords[co[0]:co[-1]].reshape(-1, 2)
     m = (1 << z) - 1
-    tx = np.clip(np.floor(P.lon2tilexf(pts[:, 0], z)), 0, m)
-    ty = np.clip(np.floor(P.lat2tileyf(pts[:, 1], z)), 0, m)
-    return int((tx.max() - tx.min() + 1) * (ty.max() - ty.min() + 1))
+    tx = np.clip(np.floor(P.lon2tilexf(xy[:, 0], z)), 0, m)
+    ty = np.clip(np.floor(P.lat2tileyf(xy[:, 1], z)), 0, m)
+    has = np.diff(co) > 0
+    start = (co[:-1][has] - co[0]) // 2
+    spans = np.zeros(len(has), np.int64)
+    if len(start):
+        spans[has] = ((np.maximum.reduceat(tx, start)
+                       - np.minimum.reduceat(tx, start) + 1)
+                      * (np.maximum.reduceat(ty, start)
+                         - np.minimum.reduceat(ty, start) + 1))
+    return spans
+
+
+def _cover_rows(batch, rows: np.ndarray, z: int) -> tuple:
+    """Cover rows ``rows`` of ``batch`` at zoom z in one kernel call ->
+    (batch row, x, y), sorted by (row, x, y)."""
+    if len(rows) < batch.num_rows:
+        batch = batch.select(["kind", *G.PACKED[:2]]).take(rows)
+    r, x, y = G.cover_batch(np.asarray(batch.column("kind")),
+                            *G.packed_flat(batch), z)
+    return rows[r], x, y
 
 
 def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
@@ -96,17 +120,14 @@ def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
         [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
 
 
-def _with_tiles(batch, rows, cells: list, coarse: np.ndarray) -> pa.Table:
+def _with_tiles(batch, rows, x, y, coarse) -> pa.Table:
     """Row ``rows[i]`` of ``batch`` (its feature columns and ``uid``)
-    once per tile of ``cells[i]`` (an (n, 2) array), with the tile
-    appended as (bx, by) and ``coarse[i]``: the one row-repeat step of
-    cover and of the coarse refine."""
-    reps = [len(c) for c in cells]
-    xy = np.concatenate(cells) if cells else np.zeros((0, 2), np.int64)
-    cols = batch.select(COVERED_ARROW.names[:-3]).take(np.repeat(rows, reps))
+    with tile (``x[i]``, ``y[i]``) appended as (bx, by) and ``coarse[i]``:
+    the one row-repeat step of cover and of the coarse refine."""
+    cols = batch.select(COVERED_ARROW.names[:-3]).take(rows)
     return pa.Table.from_arrays(
-        [*cols.columns, pa.array(xy[:, 0]), pa.array(xy[:, 1]),
-         pa.array(np.repeat(coarse, reps))], schema=COVERED_ARROW)
+        [*cols.columns, pa.array(x), pa.array(y), pa.array(coarse)],
+        schema=COVERED_ARROW)
 
 
 def cover_features(features: DataFrame, base_zoom: int = 14,
@@ -123,6 +144,8 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
     coarse rows is recovered inside the subtree worker by
     :func:`_expand_coarse_rows` (clip to cell bbox, cover the clip) —
     the clip-pyramid refine the reference gets from its R-tree walk.
+    Each Arrow batch takes one cover kernel call per path, and its rows
+    come out in input order, each row's tiles sorted.
     """
     dz = base_zoom - CLUSTER_ZOOM
     dual = large_threshold is not None and dz > 0
@@ -141,24 +164,25 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
         # F.monotonically_increasing_id
         uid = TaskContext.get().partitionId() << 33
         for batch in batches:
-            kinds = np.asarray(batch.column("kind"))
+            n = batch.num_rows
             batch = pa.RecordBatch.from_arrays(
-                [*batch.columns, pa.array(uid + np.arange(len(kinds)))],
+                [*batch.columns, pa.array(uid + np.arange(n))],
                 names=[*batch.schema.names, "uid"])
-            uid += len(kinds)
-            cells, coarse = [], np.zeros(len(kinds), bool)
-            for i, (kind, coords, rs, prc) in enumerate(zip(
-                    kinds, *G.packed_views(batch))):
-                geom = G.unpack(kind, coords, rs, prc)
-                if (dual and kind != G.POINT and _bbox_tile_span(
-                        coords.reshape(-1, 2), base_zoom) >= large_threshold):
-                    coarse[i] = True
-                    cells.append(  # cell -> its first base tile
-                        G.covering_tiles(kind, geom, CLUSTER_ZOOM) << dz)
-                else:
-                    cells.append(G.covering_tiles(kind, geom, base_zoom))
-            yield from _with_tiles(batch, np.arange(len(kinds)), cells,
-                                   coarse).to_batches()
+            uid += n
+            coarse = np.zeros(n, bool)
+            if dual:
+                coarse = (np.asarray(batch.column("kind")) != G.POINT) & (
+                    _bbox_tile_spans(*G.packed_flat(batch)[:2], base_zoom)
+                    >= large_threshold)
+            row, x, y = _cover_rows(batch, np.flatnonzero(~coarse), base_zoom)
+            crow, cx, cy = _cover_rows(batch, np.flatnonzero(coarse),
+                                       CLUSTER_ZOOM)
+            row = np.concatenate([row, crow])
+            order = np.argsort(row, kind="stable")  # back to input order
+            x = np.concatenate([x, cx << max(dz, 0)])  # cell -> first tile
+            y = np.concatenate([y, cy << max(dz, 0)])
+            yield from _with_tiles(batch, row[order], x[order], y[order],
+                                   coarse[row[order]]).to_batches()
 
     return features.mapInArrow(gen, from_arrow_schema(COVERED_ARROW))
 
@@ -166,25 +190,30 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
 def _expand_coarse_rows(batch, base_zoom: int) -> pa.Table:
     """Refine coarse (cell-granularity) rows to exact per-base-tile rows:
     clip each geometry to its z6 cell bbox (one base-tile margin so edge
-    supercover matches the global cover), cover the clipped geometry at
-    base_zoom, keep cells inside the z6 cell's tile range.  The exact
-    rows come first, then the refined ones.  Runs inside the subtree
-    worker — the fan-out never crosses a shuffle."""
+    supercover matches the global cover), cover the clipped geometries at
+    base_zoom in one kernel call, keep cells inside each z6 cell's tile
+    range.  The exact rows come first, then the refined ones.  Runs
+    inside the subtree worker — the fan-out never crosses a shuffle."""
     dz = base_zoom - CLUSTER_ZOOM
     coarse = np.asarray(batch.column("coarse"))
     exact, big = np.flatnonzero(~coarse), np.flatnonzero(coarse)
-    xy = np.column_stack([batch.column("bx"), batch.column("by")])
-    cells = list(xy[exact, None])  # an exact row keeps its one tile
-    for (bx, by), kind, coords, rs, prc in zip(
-            xy[big], np.asarray(batch.column("kind"))[big],
-            *G.packed_views(batch.take(big))):
-        cx, cy = int(bx) >> dz, int(by) >> dz
-        box = _tile_bbox(CLUSTER_ZOOM, cx, cy, margin=1.0 / (1 << dz))
+    bx, by = np.asarray(batch.column("bx")), np.asarray(batch.column("by"))
+    kinds = np.asarray(batch.column("kind"))[big]
+    parts = []  # each refined row's clipped lines or rings
+    for b, kind, coords, rs, prc in zip(
+            big, kinds, *G.packed_views(batch.take(big))):
+        box = _tile_bbox(CLUSTER_ZOOM, int(bx[b]) >> dz, int(by[b]) >> dz,
+                         margin=1.0 / (1 << dz))
         geom = G.clip_to_box(kind, G.unpack(kind, coords, rs, prc), *box)
-        c = G.covering_tiles(kind, geom, base_zoom)
-        cells.append(c[((c[:, 0] >> dz) == cx) & ((c[:, 1] >> dz) == cy)])
-    return _with_tiles(batch, np.concatenate([exact, big]), cells,
-                       np.zeros(len(cells), bool))
+        parts.append(geom if kind in (G.LINESTRING, G.MULTILINESTRING)
+                     else [r for poly in geom for r in poly])
+    row, x, y = G.cover_batch(kinds, *G.pack_batch(parts), base_zoom)
+    row = big[row]
+    keep = ((x >> dz) == (bx[row] >> dz)) & ((y >> dz) == (by[row] >> dz))
+    return _with_tiles(batch, np.concatenate([exact, row[keep]]),
+                       np.concatenate([bx[exact], x[keep]]),
+                       np.concatenate([by[exact], y[keep]]),
+                       np.zeros(len(exact) + int(keep.sum()), bool))
 
 
 def expand_coarse(covered: DataFrame, base_zoom: int = 14) -> DataFrame:
@@ -359,6 +388,15 @@ def _coerce_attr(v, typ: str | None):
     return v
 
 
+def _geom_digest(*values) -> int:
+    """64-bit digest of one row's kind and packed geometry arrays."""
+    h = hashlib.blake2b(digest_size=8)
+    for v in values:
+        v = np.asarray(v)
+        h.update(np.int64(v.size).tobytes() + v.tobytes())
+    return int.from_bytes(h.digest(), "little")
+
+
 def _tile_columns(table: pa.Table, cfg: Config) -> dict:
     """Take a table's columns out once, as numpy arrays and packed views,
     for :func:`_build_one_tile`; adds each row's layer code, layer
@@ -367,6 +405,16 @@ def _tile_columns(table: pa.Table, cfg: Config) -> dict:
         "feature_id", "uid", "kind", "minzoom", "zorder", "bx", "by")}
     cols.update(zip(G.PACKED, G.packed_views(table)))
     cols["attrs"] = table.column("attrs").to_pylist()
+    # the sort's tie-breakers after feature_id: a canonical form of the
+    # attrs, then a digest of the packed geometry; taken once per feature
+    # (uid) but never ordered by uid or row position
+    _, first, inv = np.unique(cols["uid"], return_index=True,
+                              return_inverse=True)
+    canon = [repr(sorted(cols["attrs"][i] or ())) for i in first]
+    cols["attrs_rank"] = np.unique(canon, return_inverse=True)[1][inv]
+    cols["geom_digest"] = np.array(
+        [_geom_digest(*(cols[c][i] for c in ("kind", *G.PACKED)))
+         for i in first], np.uint64)[inv]
     layer = table.column("layer").combine_chunks().dictionary_encode(
         null_encoding="encode")
     codes, names = np.asarray(layer.indices), layer.dictionary.to_pylist()
@@ -456,10 +504,12 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
         if len(sub) == 0:
             continue
         ld0 = cfg.layers.get(layer_name, LayerDef(layer_name))
-        # stable z-order sort within layer (reference
-        # src/tile_sorting.cpp:76-96): zorder, then kind, then feature id
+        # z-order sort within layer (reference src/tile_sorting.cpp:76-96):
+        # zorder, then kind, then feature id, then attrs and geometry, a
+        # total order: tied rows never keep their arrival order
         zo = zorders[sub]
-        sub = sub[np.lexsort((fids[sub], kinds[sub],
+        sub = sub[np.lexsort((cols["geom_digest"][sub],
+                              cols["attrs_rank"][sub], fids[sub], kinds[sub],
                               zo if ld0.z_order_ascending else -zo))]
         if ld0.feature_limit > 0 and (ld0.feature_limit_below <= 0
                                       or z < ld0.feature_limit_below):

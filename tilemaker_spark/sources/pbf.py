@@ -62,18 +62,22 @@ def read_pbf_multi(spark: SparkSession, paths: list[str]):
     in more than one extract with identical data, so with several inputs
     each table is deduplicated by OSM id (any one row wins: tags and
     geometry are equal by OSM id semantics)."""
-    refs = [(p, r.offset, r.size) for p in paths
+    refs = [(p, r) for p in paths
             for r in K.scan_blobs(p) if r.kind == "OSMData"]
+    # an Arrow table converts in the driver: no Python worker starts
+    refs = pa.table({
+        "path": pa.array([p for p, _ in refs], pa.string()),
+        "offset": pa.array([r.offset for _, r in refs], pa.int64()),
+        "size": pa.array([r.size for _, r in refs], pa.int64())})
     # Keep this shuffle: AQE plans the way ⋈ node joins from its runtime
     # statistics; without it read_features -> count() on the seed-42
     # synth extract took 23 Spark jobs instead of 14 and ran about 2x
-    # slower warm.  ROADMAP item 1 records the broadcast hazard it brings.
+    # slower warm.  ROADMAP item 3 records the broadcast hazard it brings.
     # At most one task per core: every phase reads every blob, and a
     # second wave of near-empty tasks costs more than the decodes.
     cores = spark.sparkContext.defaultParallelism
-    src = spark.createDataFrame(
-        refs, "path string, offset long, size long"
-    ).repartition(max(1, min(len(refs), cores)))
+    src = spark.createDataFrame(refs).repartition(
+        max(1, min(refs.num_rows, cores)))
 
     def phase(kind: str) -> DataFrame:
         df = src.mapInArrow(lambda it: _decode_blobs(it, kind),
