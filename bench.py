@@ -3,10 +3,8 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headline set = every registered query (``__spark_entry__.REGISTRY``)
-except an explicit skip set, + the flagship image -> z12 cell pipeline,
-whose throughput (images-assigned/sec, and distinct z12 cells/sec from a
-``groupBy().count()`` -- cells, not encoded MVT tiles) is the
-BASELINE.json target metric (reported in the "extras" field).
+except an explicit skip set.  Tile-path throughput (MVT tiles written
+per second) is measured by ``perfbench/`` (workload ``osm_z14``).
 """
 
 from __future__ import annotations
@@ -22,15 +20,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "200000"))
-
-    from pyspark.sql import functions as F
 
     import __spark_entry__ as E
     from tilemaker_spark.session import get_spark, release_storage
-    from tilemaker_spark.sources.synth import images_df, grid_polygons_df
-    from tilemaker_spark.operators import spatial_join
-    from tilemaker_spark.sql import tile_exprs as TE
 
     spark = get_spark(cpus=cpus, shuffle_partitions=max(cpus, 16))
 
@@ -79,30 +71,10 @@ def main():
          .mapInPandas(touch, "id long").count())
         return round(time.time() - t0, 3)
 
-    def flagship() -> tuple[float, int]:
-        t0 = time.time()
-        img = images_df(spark, n_images, with_bytes=False,
-                        partitions=max(cpus, 16))
-        grid = grid_polygons_df(spark, nx=72, ny=34)
-        assigned = spatial_join.pip_join_broadcast(
-            img.select("image_id", "lon", "lat"), grid,
-            poly_cols=("poly_id",), index_zoom=6)
-        z = 12
-        cells = (
-            assigned.select(
-                TE.lon2tilex(F.col("lon"), z).alias("x"),
-                TE.lat2tiley(F.col("lat"), z).alias("y"))
-            .groupBy("x", "y").agg(F.count("*").alias("n"))
-        )
-        n_cells = cells.count()
-        return time.time() - t0, n_cells
-
-    n_cells = 0
     round_totals: list[float] = []
     prewarm_secs: list[float] = []
 
     def run_round(rnd: int) -> float:
-        nonlocal n_cells
         pw = prewarm()
         prewarm_secs.append(pw)
         print(f"# r{rnd} prewarm (fixed calibration job): {pw}s",
@@ -117,13 +89,6 @@ def main():
                 timings[name] = sec
             print(f"# r{rnd} {name}: {n} rows in {sec}s", file=sys.stderr)
             release_storage(spark)
-        pipe_sec, n_cells = flagship()
-        total += pipe_sec
-        if ("image_pipeline" not in timings
-                or pipe_sec < timings["image_pipeline"]):
-            timings["image_pipeline"] = round(pipe_sec, 3)
-        print(f"# r{rnd} image_pipeline: {n_images} images -> {n_cells} "
-              f"z12 cells in {pipe_sec:.1f}s", file=sys.stderr)
         return total
 
     for rnd in range(rounds):
@@ -138,10 +103,6 @@ def main():
               f"disagree >1.5x (noisy host window) - running one extra "
               f"round", file=sys.stderr)
         round_totals.append(run_round(rounds))
-
-    pipe_sec = timings["image_pipeline"]
-    images_per_sec = round(n_images / pipe_sec, 1)
-    z12_cells_per_sec = round(n_cells / pipe_sec, 1)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -158,10 +119,7 @@ def main():
             # CORRECTNESS sweep that silently drops a row (r04 lost
             # `simplify` with no err entry) is detectable post hoc
             "n_registered_queries": len(qs),
-            "n_benched_queries": len(headline) + 1,
-            "bench_images": n_images,
-            "images_assigned_per_sec": images_per_sec,
-            "z12_cells_per_sec": z12_cells_per_sec,
+            "n_benched_queries": len(headline),
             "prewarm_sec_per_round": prewarm_secs,
         },
     }

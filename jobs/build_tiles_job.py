@@ -200,9 +200,9 @@ def main(argv=None) -> int:
     if args.checkpoint:
         from tilemaker_spark.lineage import CheckpointedSink
         sink = CheckpointedSink(args.checkpoint)
-        # the tile builder's work unit (the CLUSTER_ZOOM subtree) is the
-        # resume unit; lower zooms form one extra group (they are one
-        # plan anyway)
+        # resume key: a tile's CLUSTER_ZOOM ancestor cell, and one extra
+        # key for every lower zoom (the builder itself splits its work
+        # finer, so this is only the unit a resumed run skips)
         cz = CLUSTER_ZOOM
         pk = F.when(
             F.col("z") >= cz,

@@ -12,6 +12,7 @@ SPARK_GRAFT_SLOW=1 (runs several minutes) and locks tile-count goldens.
 
 import hashlib
 import os
+import re
 import sqlite3
 import struct
 import subprocess
@@ -138,6 +139,11 @@ def test_decode_block_kind_selective_mixed_block():
     _assert_kind_selective(raw)
 
 
+# the osm_z14 build of the seed-42 extract (test_synth_small_z14_tile_bytes)
+Z14_SHA256 = ("43063a75a49785659ee09e89f11db1ec"
+              "14dcbdef98abbc36004568f0b5f20e18")
+
+
 def tiles_sha256(rows) -> str:
     """sha256 over (z, x, y, tile) rows in (z, x, y) order: pins tile
     bytes, not just counts."""
@@ -255,8 +261,60 @@ def test_synth_small_z14_tile_bytes(spark, synth_small):
     rows = [tuple(r) for r in generate_tiles(features, cfg).select(
         "z", "x", "y", "tile").collect()]
     assert len(rows) == 200
-    assert tiles_sha256(rows) == ("43063a75a49785659ee09e89f11db1ec"
-                                  "14dcbdef98abbc36004568f0b5f20e18")
+    assert tiles_sha256(rows) == Z14_SHA256
+
+
+@pytest.fixture(scope="module")
+def synth_features(spark, synth_small):
+    """The seed-42 feature table, cached for the tests that build it
+    many ways."""
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    features, _ = J.read_features(spark, synth_small[0])
+    features = features.cache()
+    features.count()
+    yield features
+    features.unpersist()
+
+
+def _z14_config(cfg):
+    """The osm_z14 build: z0-14, 4096 extent."""
+    cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 14, 14
+    cfg.high_resolution = False
+    return cfg
+
+
+def test_tile_bytes_ignore_row_order_and_partitioning(spark, synth_small):
+    """The seed-42 z0-14 tiles come out byte for byte as the golden
+    whatever order and partitioning the features arrive in: as read,
+    reversed, shuffled, in one partition and in seven, each under 1 and
+    13 shuffle partitions."""
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import build_tiles_job as J
+    from pyspark.sql import functions as F
+    from tilemaker_spark.operators.tiling import generate_tiles
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for shuffle in (1, 13):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+            features, cfg = J.read_features(spark, synth_small[0])
+            features = features.cache()
+            cfg = _z14_config(cfg)
+            pos = features.withColumn("_pos", F.monotonically_increasing_id())
+            orders = {
+                "as read": features,
+                "reversed": pos.orderBy(F.col("_pos").desc()).drop("_pos"),
+                "shuffled": features.orderBy(F.rand(7)),
+                "one partition": features.repartition(1),
+                "seven partitions": features.repartition(7)}
+            for name, df in orders.items():
+                rows = [tuple(r) for r in generate_tiles(df, cfg).select(
+                    "z", "x", "y", "tile").collect()]
+                assert tiles_sha256(rows) == Z14_SHA256, (shuffle, name)
+            features.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def _feature_rich_config(cfg):
@@ -297,6 +355,52 @@ def test_synth_feature_rich_tile_bytes(spark, synth_small):
         "z", "x", "y", "tile").collect()]
     assert tiles_sha256(rows) == ("d639f0a52968da4f8112e5f0282fd2ae"
                                   "03300affe42c18b1f83c9abfa0a01e91")
+
+
+def _line_feature_limit_config(cfg):
+    """The osm_z14 build with transportation cut to 3 features per tile
+    below z14: the cut decides which roads reach the z_s - 1 clips."""
+    cfg = _z14_config(cfg)
+    cfg.layers["transportation"].feature_limit = 3
+    cfg.layers["transportation"].feature_limit_below = 14
+    return cfg
+
+
+def _minzoom_13_config(cfg):
+    """The osm_z14 build from z13 up: no tile above z13, so no clip is
+    handed over wherever z_s <= 13."""
+    cfg = _z14_config(cfg)
+    cfg.minzoom = 13
+    return cfg
+
+
+SPLIT_CASES = {"openmaptiles_lite": _z14_config,
+               "feature_rich": _feature_rich_config,
+               "line_feature_limit": _line_feature_limit_config,
+               "minzoom_above_split": _minzoom_13_config}
+
+
+@pytest.mark.parametrize("case", sorted(SPLIT_CASES))
+def test_split_zoom_keeps_tile_bytes(spark, synth_features, monkeypatch,
+                                     case):
+    """build_tiles split at z_s = 7, 9, 12 or 14 (the base zoom) gives
+    the bytes of the unsplit build (z_s <= CLUSTER_ZOOM): the z_s groups
+    clip from the z_s - 1 clips pass 1 hands over, so the clip pyramid,
+    feature_limit and minzoom visibility are the unsplit build's."""
+    from tilemaker_spark.operators import tiling
+    from tilemaker_spark.plans.profile import openmaptiles_lite
+
+    def digest(z_s):
+        cfg = SPLIT_CASES[case](openmaptiles_lite()[1])
+        monkeypatch.setattr(tiling, "SPLIT_DEPTH", cfg.basezoom - z_s)
+        rows = [tuple(r) for r in tiling.generate_tiles(
+            synth_features, cfg).select("z", "x", "y", "tile").collect()]
+        assert rows
+        return tiles_sha256(rows)
+
+    want = digest(tiling.CLUSTER_ZOOM)
+    for z_s in (tiling.CLUSTER_ZOOM + 1, 9, 12, 14):
+        assert digest(z_s) == want, z_s
 
 
 def test_synth_raster_tile_bytes(spark, synth_small):
@@ -357,9 +461,10 @@ def test_read_features_job_count(spark, synth_pbf):
 def test_generate_tiles_job_count(spark, synth_pbf):
     """PBF -> z0-14 tiles runs in a bounded number of Spark jobs, and its
     plan holds a bounded number of exchanges and Python nodes.  The z0-5
-    pass and its second cover run are about half of the exchanges and
-    Python nodes (with cfg.minzoom = 6 the same count takes 11 jobs, 20
-    exchanges and 11 Python nodes)."""
+    rows read the feature table and run the cover a second time, so the
+    front end's exchanges and Python nodes appear twice in the plan (with
+    cfg.minzoom = 6 the same count takes 13 jobs, 15 exchanges and 12
+    Python nodes)."""
     sys.path.insert(0, os.path.join(REPO, "jobs"))
     import build_tiles_job as J
     from tilemaker_spark.operators.tiling import generate_tiles
@@ -372,9 +477,52 @@ def test_generate_tiles_job_count(spark, synth_pbf):
     tiles = generate_tiles(features, cfg)
     audit = audit_plan(tiles)
     assert audit["python"] <= 22
-    assert audit["exchanges"] <= 42
+    assert audit["exchanges"] <= 28
     assert tiles.count() == 200
     assert len(set(tracker.getJobIdsForGroup()) - before) <= 14
+
+
+def _plan_nodes(node):
+    """A JVM physical plan node and every node below it, pre-order; an
+    adaptive query stage is followed by the plan it ran."""
+    yield node
+    if node.nodeName().endswith("QueryStage"):
+        yield from _plan_nodes(node.plan())
+        return
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_generate_tiles_builds_in_parallel(spark, synth_features):
+    """Two Spark behaviours would run the tile build's second pass as
+    one task: AQE coalesces a small shuffle to one partition, and
+    ``toLocalIterator`` (both archive sinks) runs the final stage one
+    partition per job.  So the plan ends in an Exchange above its last
+    Python node, and on seed 42 pass 2 reads a shuffle AQE left
+    uncoalesced, with rows in more than one of its partitions."""
+    from tilemaker_spark.operators.tiling import generate_tiles
+    from tilemaker_spark.plans.profile import openmaptiles_lite
+    from tools.plan_audit import audit_plan
+
+    tiles = generate_tiles(synth_features,
+                           _z14_config(openmaptiles_lite()[1]))
+    lines = audit_plan(tiles)["plan"].splitlines()
+    python = re.compile(r"\b(MapInArrow|FlatMapGroupsInArrow|MapInPandas|"
+                        r"ArrowEvalPython|BatchEvalPython)\b")
+    first_python = next(i for i, ln in enumerate(lines) if python.search(ln))
+    assert any("Exchange" in ln for ln in lines[:first_python])
+
+    assert len(tiles.collect()) == 200
+    final = tiles._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+    pass2 = next(n for n in _plan_nodes(final)
+                 if n.nodeName() == "FlatMapGroupsInArrow"
+                 and n.groupingAttributes().apply(0).name() == "_part")
+    read = next(n for n in _plan_nodes(pass2)
+                if n.nodeName() in ("ShuffleQueryStage", "AQEShuffleRead"))
+    assert read.nodeName() == "ShuffleQueryStage"
+    sizes = list(read.mapStats().get().bytesByPartitionId())
+    assert sum(b > 0 for b in sizes) > 1
 
 
 @pytest.mark.skipif(not os.environ.get("SPARK_GRAFT_SLOW"),

@@ -141,6 +141,32 @@ def test_zorder_feature_limit(spark):
     assert names == {"4", "3"}  # top-2 by zorder desc
 
 
+def test_feature_limit_cut_inside_a_tie_keeps_the_same_features(spark):
+    """Four points tie on (zorder, kind, feature_id) and feature_limit 2
+    cuts between them: their attrs decide which two stay, whatever order
+    the rows arrive in."""
+    rows = [(7, "poi", 0, 0, 5, {"n": n}, [7.42 + d, 43.73 + d], [1], [])
+            for n, d in (("d", 0.0), ("b", 0.001), ("c", 0.002),
+                         ("a", 0.003))]
+    cfgt = Config(layers={
+        "poi": LayerDef("poi", minzoom=14, maxzoom=14, feature_limit=2,
+                        feature_limit_below=15, combine_points=False)},
+        minzoom=14, maxzoom=14, include_ids=True)
+
+    def build(df):
+        return {(r["z"], r["x"], r["y"]): bytes(r["tile"])
+                for r in tiling.generate_tiles(df, cfgt).collect()}
+
+    df = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
+    want = build(df)
+    [tile] = want.values()
+    kept = mvt.decode_tile(tile)["poi"]["features"]
+    assert sorted(f["attrs"]["n"] for f in kept) == ["a", "b"]
+    for other in (spark.createDataFrame(rows[::-1], tiling.FEATURE_SCHEMA),
+                  df.repartition(7), df.orderBy(F.rand(3))):
+        assert build(other) == want
+
+
 def test_feature_limit_after_zoom_filter(spark):
     """Features invisible at this zoom must not consume feature_limit
     slots (reference zoom-filters the object list before featureLimit)."""
@@ -192,18 +218,42 @@ def test_multipoint_preserved(spark):
     assert total_pts == 2
 
 
+_WORLD_ROWS = [(1, "ocean", 3, 0, 0, {"class": "water"},
+                [-179.9, -84.0, 179.9, -84.0, 179.9, 84.0, -179.9, 84.0,
+                 -179.9, -84.0], [5], [1])]
+
+
 def test_large_object_coarse_cover(spark):
     """A planet-wide polygon explodes to O(4^CLUSTER_ZOOM) coarse rows,
     not O(4^base_zoom) — the reference's large-object path
     (src/tile_data.cpp:524-540)."""
-    world = [-179.9, -84.0, 179.9, -84.0, 179.9, 84.0, -179.9, 84.0,
-             -179.9, -84.0]
-    rows = [(1, "ocean", 3, 0, 0, {"class": "water"}, world, [5], [1])]
+    rows = _WORLD_ROWS
     feats = spark.createDataFrame(rows, tiling.FEATURE_SCHEMA)
     cov = tiling.cover_features(feats, 14)
     n = cov.count()
     assert n <= (1 << tiling.CLUSTER_ZOOM) ** 2  # <= 4096 z6 cells
     assert cov.filter(~F.col("coarse")).count() == 0
+
+
+def test_split_zoom_keeps_planet_polygon_tiles(spark, monkeypatch):
+    """The planet-wide polygon built z0-14 under a small clip box: its
+    coarse rows are refined and box-filtered in pass 1, and every split
+    zoom z_s (7, 9, 12, 14) gives the bytes of the unsplit build."""
+    feats = spark.createDataFrame(_WORLD_ROWS, tiling.FEATURE_SCHEMA)
+    cfgw = Config(layers={"ocean": LayerDef("ocean", minzoom=0,
+                                            maxzoom=14)},
+                  minzoom=0, maxzoom=14, include_ids=True,
+                  clip_bbox=(7.40, 43.70, 7.46, 43.76))
+
+    def build(z_s):
+        monkeypatch.setattr(tiling, "SPLIT_DEPTH", 14 - z_s)
+        return {(r["z"], r["x"], r["y"]): bytes(r["tile"])
+                for r in tiling.generate_tiles(feats, cfgw).collect()}
+
+    want = build(tiling.CLUSTER_ZOOM)  # z_s <= CLUSTER_ZOOM: no split
+    assert {z for z, _, _ in want} == set(range(15))
+    for z_s in (tiling.CLUSTER_ZOOM + 1, 9, 12, 14):
+        assert build(z_s) == want, z_s
 
 
 def test_coarse_expand_parity(spark):

@@ -1,7 +1,7 @@
 """Tile assembly: features table -> (z, x, y, tile bytes).
 
 The reference's tile phase (/root/reference/src/tilemaker.cpp:388-540,
-src/tile_worker.cpp) re-expressed as two DataFrame jobs:
+src/tile_worker.cpp) re-expressed as two DataFrame stages:
 
 1. **cover** — every feature explodes to its base-zoom covering tiles
    (point: 1 tile; line: supercover; polygon: boundary + fill — the
@@ -10,13 +10,16 @@ src/tile_worker.cpp) re-expressed as two DataFrame jobs:
    ``defaultParallelism``) producing (bx, by, feature) rows keyed by the
    z6 ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12).
 
-2. **build** — group by z6 subtree; one Arrow table holds all of a
-   subtree's features, and the ``applyInArrow`` worker materializes every
-   tile for zooms 6..basezoom top-down (the clip-pyramid locality the
-   reference gets from its tile iteration order, src/tile_sorting.cpp:98-152).
-   Zooms 0..5 come from one more, much smaller grouped pass keyed by
-   (z, x, y) (the reference's separate low-zoom object list,
-   include/tile_data.h:115-147).  Both passes are lazy: building the
+2. **build** — two grouped ``applyInArrow`` passes, split at
+   z_s = basezoom - SPLIT_DEPTH.  Pass 1 groups by z6 cell and builds
+   zooms 6..z_s-1 top-down (the clip-pyramid locality the reference gets
+   from its tile iteration order, src/tile_sorting.cpp:98-152), then
+   hands each row on with its z_s-1 clip.  Pass 2 groups by z_s tile and
+   builds z_s..basezoom, so a city in one z6 cell builds on every core
+   (the reference batches z12+ tiles over a thread pool,
+   src/tilemaker.cpp:463-481).  Pass 2 also builds each z0..5 tile from
+   its own small group keyed by (z, x, y) (the reference's separate
+   low-zoom object list, include/tile_data.h:115-147).  Building the
    plan runs no Spark job.  Workers pull each Arrow column out once
    (geometry as ``geom.packed_views``) and select rows with numpy indices.
 
@@ -39,6 +42,7 @@ layer), so the build keys its per-tile dedupe and clip pyramid on
 from __future__ import annotations
 
 import hashlib
+import heapq
 
 import numpy as np
 import pyarrow as pa
@@ -66,8 +70,21 @@ COVERED_ARROW = pa.schema(list(FEATURE_ARROW) + [
 TILE_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int32()),
                         ("y", pa.int32()), ("tile", pa.binary())])
 FEATURE_SCHEMA = from_arrow_schema(FEATURE_ARROW)
+CLIP_COLUMNS = tuple("clip_" + c for c in G.PACKED)
+# the rows between build_tiles' two grouped passes, keyed (_z, _tx, _ty)
+# and placed on pass 2's partition _part: a tile pass 1 finished, or a
+# cover row with its parent tile's clip
+HANDOFF_ARROW = pa.schema(
+    [("_part", pa.int32()), ("_z", pa.int32()), ("_tx", pa.int64()),
+     ("_ty", pa.int64()), ("tile", pa.binary()), *COVERED_ARROW]
+    + [(c, FEATURE_ARROW.field(p).type)
+       for c, p in zip(CLIP_COLUMNS, G.PACKED)])
 
 CLUSTER_ZOOM = 6  # reference include/tile_data_base.h:10-12
+
+# the high-zoom build splits at z_s = base zoom - SPLIT_DEPTH (see
+# build_tiles): z6 cells build down to z_s - 1, z_s tiles build the rest
+SPLIT_DEPTH = 2
 
 # features whose bbox spans >= this many base-zoom tiles take the coarse
 # path: explode to z6 cells, refine to tiles inside the subtree worker
@@ -583,12 +600,128 @@ def _build_one_tile(cols: dict, rows: np.ndarray, z: int, x: int, y: int,
     return M.build_tile(layers, compress=cfg.compress)
 
 
+def _build_levels(cols: dict, zooms: range, cfg: Config, base_zoom: int,
+                  clips: dict | None = None) -> tuple[list, dict]:
+    """Every tile of ``cols``' rows (see :func:`_tile_columns`) at
+    ``zooms``, top-down -> ((z, x, y, bytes) rows, the last zoom's clips).
+
+    Clip pyramid (reference include/clip_cache.h:21-37): each tile below
+    base zoom keeps its features' pre-simplify clips, keyed by ``uid``,
+    and its four children clip from those, not from the original.
+    ``clips`` maps a tile one zoom above ``zooms[0]`` to the clips its
+    children start from."""
+    out, clips = [], clips or {}
+    for z in zooms:
+        shift = base_zoom - z
+        tkey = ((cols["bx"] >> shift) << 32) | (cols["by"] >> shift)
+        cur: dict = {}
+        for key, rows in _tile_groups(tkey, cols["uid"]):
+            x, y = key >> 32, key & 0xFFFFFFFF
+            clip_out = {} if z < base_zoom else None
+            blob = _build_one_tile(cols, rows, z, x, y, cfg,
+                                   clip_in=clips.get((x >> 1, y >> 1)),
+                                   clip_out=clip_out)
+            if clip_out is not None:
+                cur[(x, y)] = clip_out
+            if blob is not None:
+                out.append((z, x, y, blob))
+        clips = cur
+    return out, clips
+
+
+def _hand_over(table: pa.Table, cols: dict, clips: dict, z_s: int,
+               base_zoom: int) -> pa.Table:
+    """Every row of ``table`` as a HANDOFF row keyed by its z_s tile (its
+    ``_part`` left for :func:`_place`).  The first row of a feature in a
+    z_s tile carries the clip the feature got in that tile's parent
+    (``clips``, the z_s - 1 level of :func:`_build_levels`), packed like
+    ``coords`` / ``ring_sizes`` / ``poly_ring_counts``; its other rows,
+    and a feature with no clip recorded, carry nulls."""
+    shift = base_zoom - z_s
+    tx, ty = cols["bx"] >> shift, cols["by"] >> shift
+    packed, seen = [(None,) * 3], set()  # packed[0]: no clip
+    slot = np.zeros(table.num_rows, np.int64)
+    for i, (x, y, uid, kind) in enumerate(zip(
+            tx.tolist(), ty.tolist(), cols["uid"].tolist(),
+            cols["kind"].tolist())):
+        clip = clips.get((x >> 1, y >> 1), {}).get(uid)
+        if clip is None or (x, y, uid) in seen:
+            continue
+        seen.add((x, y, uid))
+        slot[i] = len(packed)
+        packed.append(G.pack_multipolygon(
+            [clip] if kind in (G.LINESTRING, G.MULTILINESTRING) else clip))
+    take = pa.array(slot)
+    n = table.num_rows
+    return pa.Table.from_arrays(
+        [pa.nulls(n, pa.int32()), pa.array(np.full(n, z_s, np.int32)),
+         pa.array(tx), pa.array(ty), pa.nulls(n, pa.binary()),
+         *(table.column(c).combine_chunks() for c in COVERED_ARROW.names),
+         *(pa.array(list(c), HANDOFF_ARROW.field(name).type).take(take)
+           for c, name in zip(zip(*packed), CLIP_COLUMNS))],
+        schema=HANDOFF_ARROW)
+
+
+def _lpt(weights: np.ndarray, n: int) -> np.ndarray:
+    """Longest processing time first: each item, heaviest first, goes to
+    the least-loaded of ``n`` bins -> the bin of every item."""
+    load = [(0, b) for b in range(n)]
+    out = np.zeros(len(weights), np.int32)
+    for i in np.argsort(-weights, kind="stable"):
+        total, out[i] = heapq.heappop(load)
+        heapq.heappush(load, (total + int(weights[i]), int(out[i])))
+    return out
+
+
+def _place(table: pa.Table, n: int, offset: int) -> pa.Table:
+    """Set ``_part`` on HANDOFF rows: every (_z, _tx, _ty) group, weighed
+    by its row count, goes to one of ``n`` pass-2 partitions by
+    :func:`_lpt`, rotated by ``offset`` so that z6 cells do not all put
+    their heaviest group on partition 0."""
+    keys = np.column_stack([np.asarray(table.column(c))
+                            for c in ("_z", "_tx", "_ty")])
+    _, inv, counts = np.unique(keys, axis=0, return_inverse=True,
+                               return_counts=True)
+    part = (_lpt(counts, n) + offset) % n
+    return table.set_column(0, HANDOFF_ARROW.field("_part"),
+                            pa.array(part[inv.reshape(-1)], pa.int32()))
+
+
+def _handed_clips(table: pa.Table) -> dict:
+    """uid -> the clip :func:`_hand_over` packed into a row, for the
+    features that carry one."""
+    kinds = np.asarray(table.column("kind"))
+    uids = np.asarray(table.column("uid"))
+    views = G.packed_views(table, CLIP_COLUMNS)
+    clips: dict = {}
+    for i in np.flatnonzero(table.column(CLIP_COLUMNS[0]).is_valid()):
+        if uids[i] not in clips:
+            clips[uids[i]] = G.unpack(kinds[i], *(v[i] for v in views))
+    return clips
+
+
 def build_tiles(covered: DataFrame, cfg: Config,
                 base_zoom: int = 14) -> DataFrame:
     """Covered features -> (z, x, y, tile binary) for zooms
-    [cfg.minzoom, base_zoom], grouped by z6 subtree (clip-pyramid reuse).
-    With cfg.clip_bbox set, out-of-box cover rows are pruned before the
-    shuffle and only tiles intersecting the box are emitted."""
+    [cfg.minzoom, base_zoom], in two grouped passes split at
+    z_s = base_zoom - SPLIT_DEPTH (no split when z_s <= CLUSTER_ZOOM):
+
+    1. one group per z6 cell refines its coarse rows, builds zooms
+       6..z_s-1 down the clip pyramid and hands every row on, keyed by
+       its z_s tile and carrying its feature's z_s-1 clip;
+    2. one group per z_s tile builds z_s..base_zoom from the handed-over
+       clips; one group per z0-5 tile builds that tile from source; the
+       tiles pass 1 finished ride through as one-row groups.
+
+    Pass 1 places each pass-2 group on one of ``defaultParallelism``
+    partitions (:func:`_place`), and pass 2 reads them through
+    ``repartitionById``: AQE would coalesce the small build shuffle to
+    one task, and a hash of a dozen z_s tiles loads the cores unevenly.
+    The result ends in an exchange, so pass 2 runs as a parallel shuffle
+    stage even under ``toLocalIterator``, which runs the final stage one
+    partition per job.  With cfg.clip_bbox set, out-of-box cover rows
+    are pruned before the shuffle and only tiles intersecting the box are
+    emitted."""
     dz = base_zoom - CLUSTER_ZOOM
     box = None
     if cfg.clip_bbox is not None:
@@ -599,9 +732,11 @@ def build_tiles(covered: DataFrame, cfg: Config,
     ).withColumn("_cy", F.shiftright(F.col("by"), dz))
 
     lo = max(cfg.minzoom, CLUSTER_ZOOM)
-    schema = from_arrow_schema(TILE_ARROW)
+    split = base_zoom - SPLIT_DEPTH
+    if split <= CLUSTER_ZOOM:
+        split = base_zoom + 1  # pass 1 builds every zoom from z6 up
 
-    def build_subtree(table):  # unannotated: applyInArrow reads hints
+    def build_upper(key, table):  # unannotated: applyInArrow reads hints
         # refine coarse (large-object) rows to exact tiles, in-worker;
         # _tile_groups keeps one row per feature (uid) and tile
         table = _expand_coarse_rows(table, base_zoom)
@@ -613,72 +748,68 @@ def build_tiles(covered: DataFrame, cfg: Config,
             table = table.filter((bx >= x0) & (bx <= x1) & (by >= y0)
                                  & (by <= y1))
         cols = _tile_columns(table, cfg)
-        out = []
-        # clip pyramid (reference include/clip_cache.h:21-37): each tile
-        # keeps its pre-simplify clips; the four children at z+1 clip
-        # from their parent's clip, not the original
-        prev_clips: dict = {}
-        for z in range(lo, base_zoom + 1):
-            shift = base_zoom - z
-            tkey = ((cols["bx"] >> shift) << 32) | (cols["by"] >> shift)
-            cur_clips: dict = {}
-            for key, rows in _tile_groups(tkey, cols["uid"]):
-                x, y = key >> 32, key & 0xFFFFFFFF
-                clip_out = {} if z < base_zoom else None
-                blob = _build_one_tile(cols, rows, z, x, y, cfg,
-                                       clip_in=prev_clips.get((x >> 1,
-                                                               y >> 1)),
-                                       clip_out=clip_out)
-                if clip_out is not None:
-                    cur_clips[(x, y)] = clip_out
-                if blob is not None:
-                    out.append((z, x, y, blob))
-            prev_clips = cur_clips
-        return rows_table(out, TILE_ARROW)
+        out, clips = _build_levels(cols, range(lo, split), cfg, base_zoom)
+        rows = rows_table([(None, *t) + (None,) * (len(HANDOFF_ARROW) - 5)
+                           for t in out], HANDOFF_ARROW)
+        if split <= base_zoom:
+            rows = pa.concat_tables(
+                [rows, _hand_over(table, cols, clips, split, base_zoom)])
+        cx, cy = (k.as_py() for k in key)
+        return _place(rows, n, cx + (cy << CLUSTER_ZOOM))
 
-    high = with_cell.groupBy("_cx", "_cy").applyInArrow(build_subtree,
-                                                        schema=schema)
+    def build_lower(key, table):
+        _, z, x, y = (k.as_py() for k in key)
+        if z < CLUSTER_ZOOM:
+            out = [(z, x, y, _build_one_tile(
+                _tile_columns(table, cfg), np.arange(table.num_rows),
+                z, x, y, cfg))]
+        elif z < split:  # a tile pass 1 finished
+            out = [(z, x, y, table.column("tile")[0].as_py())]
+        else:
+            out, _ = _build_levels(
+                _tile_columns(table, cfg),
+                range(max(split, cfg.minzoom), base_zoom + 1), cfg,
+                base_zoom, {(x >> 1, y >> 1): _handed_clips(table)})
+        return rows_table([t for t in out if t[3] is not None], TILE_ARROW)
+
+    n = covered.sparkSession.sparkContext.defaultParallelism
+    handoff = from_arrow_schema(HANDOFF_ARROW)
+    rows = with_cell.groupBy("_cx", "_cy").applyInArrow(build_upper,
+                                                        schema=handoff)
     zooms = range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1))
-    if not zooms:
-        return high
+    if zooms:
+        # low-zoom rows: only features visible below CLUSTER_ZOOM
+        # (per-layer and per-feature minzoom), one per feature and z0-5
+        # tile.  A feature's cover rows sit in one cover partition, so
+        # the dedupe's map-side half removes the base-zoom fanout before
+        # the shuffle.  Pass 2 builds each (z, x, y) as one group, so low
+        # tiles build in parallel across tiles (the single z0 tile is
+        # irreducible, but its group holds only its own features, not
+        # the whole planet's fanout).  Coarse (large-object) rows need no
+        # expansion here: their z6-cell bx/by is exact membership for
+        # every z<=6 ancestor tile.
+        low_visible_layers = [
+            name for name, ld in cfg.layers.items()
+            if ld.minzoom < CLUSTER_ZOOM]
+        low = (
+            with_cell
+            .filter(F.col("layer").isin(low_visible_layers)
+                    if low_visible_layers else F.lit(False))
+            .filter(F.col("minzoom") < CLUSTER_ZOOM)
+            .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
+            .withColumn("_tx", F.expr(f"shiftright(bx, {base_zoom} - _z)"))
+            .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
+            .dropDuplicates(["uid", "_z", "_tx", "_ty"])
+            .withColumn("_part", F.pmod(F.hash("_z", "_tx", "_ty"), F.lit(n)))
+        )
+        rows = rows.unionByName(low.select(*[
+            (F.col(f.name) if f.name in low.columns else F.lit(None))
+            .cast(f.dataType).alias(f.name) for f in handoff]))
 
-    # low-zoom pass: only features visible below CLUSTER_ZOOM (per-layer
-    # and per-feature minzoom), pre-deduped to z5 tile granularity — the
-    # full base-zoom fanout never moves.  One job for every z<6 tile:
-    # each row explodes to its ancestor tile at every low zoom and the
-    # build groups by (z, x, y), so low tiles build in parallel across
-    # tiles (the single z0 tile is irreducible, but its group holds only
-    # its own features, not the whole planet's fanout).  Coarse
-    # (large-object) rows need no expansion here: their z6-cell bx/by is
-    # exact membership for every z<=6 ancestor tile.
-    low_visible_layers = [
-        name for name, ld in cfg.layers.items() if ld.minzoom < CLUSTER_ZOOM
-    ]
-
-    def build_low_tile(key, table):
-        z, x, y = (k.as_py() for k in key)
-        blob = _build_one_tile(_tile_columns(table, cfg),
-                               np.arange(table.num_rows), z, x, y, cfg)
-        return rows_table([(z, x, y, blob)] if blob is not None else [],
-                          TILE_ARROW)
-
-    dz5 = base_zoom - (CLUSTER_ZOOM - 1)
-    low = (
-        with_cell
-        .filter(F.col("layer").isin(low_visible_layers)
-                if low_visible_layers else F.lit(False))
-        .filter(F.col("minzoom") < CLUSTER_ZOOM)
-        .withColumn("_p5x", F.shiftright(F.col("bx"), dz5))
-        .withColumn("_p5y", F.shiftright(F.col("by"), dz5))
-        .dropDuplicates(["uid", "_p5x", "_p5y"])
-        .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
-        .withColumn("_tx", F.expr(f"shiftright(bx, {base_zoom} - _z)"))
-        .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
-        .dropDuplicates(["uid", "_z", "_tx", "_ty"])
-        .groupBy("_z", "_tx", "_ty")
-        .applyInArrow(build_low_tile, schema=schema)
-    )
-    return high.unionByName(low)
+    tiles = rows.repartitionById(n, "_part").groupBy(
+        "_part", "_z", "_tx", "_ty").applyInArrow(
+            build_lower, schema=from_arrow_schema(TILE_ARROW))
+    return tiles.repartition("z", "x", "y")
 
 
 def generate_tiles(features: DataFrame, cfg: Config) -> DataFrame:
