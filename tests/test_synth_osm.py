@@ -403,6 +403,23 @@ def test_split_zoom_keeps_tile_bytes(spark, synth_features, monkeypatch,
         assert digest(z_s) == want, z_s
 
 
+def test_below_cluster_zoom_tile_bytes(spark, synth_features):
+    """A build whose base zoom lies below CLUSTER_ZOOM (z0-5): every tile
+    is a z0-5 tile, so pass 1 builds none and hands every one over.  The
+    profile's features start at z4, so seed 42 gives one z4 and one z5
+    tile."""
+    from tilemaker_spark.operators import tiling
+    from tilemaker_spark.plans.profile import openmaptiles_lite
+
+    cfg = openmaptiles_lite()[1]
+    cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 5, 5
+    rows = [tuple(r) for r in tiling.generate_tiles(
+        synth_features, cfg).select("z", "x", "y", "tile").collect()]
+    assert sorted(r[:3] for r in rows) == [(4, 8, 5), (5, 16, 11)]
+    assert tiles_sha256(rows) == ("d79fd77b4cc6d157aadc4054d3c440ff"
+                                  "ef8252cab7a857c1fddc767e4a576d49")
+
+
 def test_synth_raster_tile_bytes(spark, synth_small):
     """z12 PNG raster tiles of the seed-42 extract pinned byte for byte."""
     path, _ = synth_small
@@ -460,11 +477,11 @@ def test_read_features_job_count(spark, synth_pbf):
 
 def test_generate_tiles_job_count(spark, synth_pbf):
     """PBF -> z0-14 tiles runs in a bounded number of Spark jobs, and its
-    plan holds a bounded number of exchanges and Python nodes.  The z0-5
-    rows read the feature table and run the cover a second time, so the
-    front end's exchanges and Python nodes appear twice in the plan (with
-    cfg.minzoom = 6 the same count takes 13 jobs, 15 exchanges and 12
-    Python nodes)."""
+    plan holds a bounded number of exchanges and Python nodes.  The cover
+    runs once: pass 1 hands pass 2 the z0-5 rows too, so the final
+    adaptive plan holds one cover ``MapInArrow`` (a z0-5 branch that read
+    the features again put the front end's exchanges and Python nodes in
+    the plan twice: 14 jobs, 28 exchanges and 22 Python nodes)."""
     sys.path.insert(0, os.path.join(REPO, "jobs"))
     import build_tiles_job as J
     from tilemaker_spark.operators.tiling import generate_tiles
@@ -476,10 +493,20 @@ def test_generate_tiles_job_count(spark, synth_pbf):
     cfg.minzoom, cfg.maxzoom, cfg.basezoom = 0, 14, 14
     tiles = generate_tiles(features, cfg)
     audit = audit_plan(tiles)
-    assert audit["python"] <= 22
-    assert audit["exchanges"] <= 28
-    assert tiles.count() == 200
-    assert len(set(tracker.getJobIdsForGroup()) - before) <= 14
+    assert audit["python"] <= 12
+    assert audit["exchanges"] <= 15
+    counted = tiles.groupBy().count()  # what tiles.count() runs
+    assert counted.collect()[0][0] == 200
+    assert len(set(tracker.getJobIdsForGroup()) - before) <= 13
+
+    def outputs(node):
+        out = node.output()
+        return {out.apply(i).name() for i in range(out.size())}
+
+    final = counted._jdf.queryExecution().executedPlan().finalPhysicalPlan()
+    covers = [n for n in _plan_nodes(final)
+              if n.nodeName() == "MapInArrow" and "coarse" in outputs(n)]
+    assert len(covers) == 1
 
 
 def _plan_nodes(node):

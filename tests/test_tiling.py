@@ -565,6 +565,25 @@ def test_clip_bbox_prunes_coarse_rows(spark):
     assert raster(box) == {t for t in full if in_box(*t)}
 
 
+def test_clip_bbox_keeps_each_low_zoom_tile_once(spark):
+    """A long line under a box that holds only its east end: every z0-5
+    tile the build emits holds the line exactly once.  The line's first
+    cover row in each z0-5 tile lies west of the box, so the z0-5 rows
+    must come from the cover rows that survive the box."""
+    feats = spark.createDataFrame(
+        [(1, "road", 1, 0, 0, {}, [-10.0, 40.0, 10.0, 40.5], [2], [])],
+        tiling.FEATURE_SCHEMA)
+    cfgb = Config(layers={"road": LayerDef("road", minzoom=0, maxzoom=10)},
+                  minzoom=0, maxzoom=10, basezoom=10, include_ids=True,
+                  clip_bbox=(8.0, 39.0, 10.0, 41.0))
+    low = [r for r in tiling.generate_tiles(feats, cfgb).collect()
+           if r["z"] < tiling.CLUSTER_ZOOM]
+    assert {r["z"] for r in low} == set(range(tiling.CLUSTER_ZOOM))
+    for r in low:
+        got = mvt.decode_tile(bytes(r["tile"]))["road"]["features"]
+        assert [f["id"] for f in got] == [1], (r["z"], r["x"], r["y"])
+
+
 def test_cover_kernel_microbench_golden_opcounts():
     """Wall-clock-free cover-kernel micro-bench (round-4 judge ask #8):
     a seeded fixed fixture through the exact kernels the cover_large

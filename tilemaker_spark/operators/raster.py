@@ -30,7 +30,7 @@ from ..kernels import png as PNG
 from ..kernels import proj as P
 from ..kernels import raster as R
 from .tiling import (FEATURE_ARROW, _to_tile_frac, cover_features,
-                     expand_coarse, prune_cover_to_bbox, rows_table)
+                     expand_coarse, rows_table)
 
 RASTER_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
                           ("y", pa.int64()), ("png", pa.binary())])
@@ -55,18 +55,12 @@ def render_raster_tiles(features: DataFrame, zoom: int,
     spans are clamped by the scanline fill, lines are Liang-Barsky
     clipped to the canvas first, points are filtered.
 
-    ``clip_bbox`` (minlon, minlat, maxlon, maxlat) prunes cover rows to
-    tiles intersecting the box BEFORE the shuffle — the raster twin of
-    build_tiles' cfg.clip_bbox pruning, so --bbox runs emit clipped
-    raster tiles too."""
-    covered = cover_features(features, base_zoom=zoom)
-    if clip_bbox is not None:
-        covered = prune_cover_to_bbox(covered, clip_bbox, zoom)
-    covered = expand_coarse(covered, zoom)
-    if clip_bbox is not None:
-        # large features refine to every tile of their z6 cell, which
-        # may overhang the box
-        covered = prune_cover_to_bbox(covered, clip_bbox, zoom)
+    ``clip_bbox`` (minlon, minlat, maxlon, maxlat) is pruned inside the
+    cover and its coarse refine, before the shuffle, as for the vector
+    tiles, so --bbox runs emit clipped raster tiles too."""
+    covered = expand_coarse(
+        cover_features(features, base_zoom=zoom, bbox=clip_bbox), zoom,
+        clip_bbox)
 
     def render_group(table):
         x, y = table.column("bx")[0].as_py(), table.column("by")[0].as_py()

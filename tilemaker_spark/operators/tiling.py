@@ -8,7 +8,9 @@ src/tile_worker.cpp) re-expressed as two DataFrame stages:
    object->tile fan-out of src/tile_data.cpp:495-608).  One
    ``mapInArrow`` task per core (the input is repartitioned to
    ``defaultParallelism``) producing (bx, by, feature) rows keyed by the
-   z6 ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12).
+   z6 ancestor cell (CLUSTER_ZOOM, include/tile_data_base.h:10-12),
+   pruned to the clip box, with each feature's first row in each z0..5
+   tile marked.
 
 2. **build** — two grouped ``applyInArrow`` passes, split at
    z_s = basezoom - SPLIT_DEPTH.  Pass 1 groups by z6 cell and builds
@@ -18,9 +20,10 @@ src/tile_worker.cpp) re-expressed as two DataFrame stages:
    builds z_s..basezoom, so a city in one z6 cell builds on every core
    (the reference batches z12+ tiles over a thread pool,
    src/tilemaker.cpp:463-481).  Pass 2 also builds each z0..5 tile from
-   its own small group keyed by (z, x, y) (the reference's separate
-   low-zoom object list, include/tile_data.h:115-147).  Building the
-   plan runs no Spark job.  Workers pull each Arrow column out once
+   its own small group keyed by (z, x, y), the marked rows pass 1 hands
+   over (the reference's low-zoom object list, taken from the same z6
+   object lists, src/tile_data.cpp:87-100).  Building the plan runs no
+   Spark job.  Workers pull each Arrow column out once
    (geometry as ``geom.packed_views``) and select rows with numpy indices.
 
 Per-tile semantics mirror tile_worker.cpp: layer zoom-range + per-feature
@@ -65,15 +68,15 @@ FEATURE_ARROW = pa.schema([
     ("coords", pa.list_(pa.float64())), ("ring_sizes", pa.list_(pa.int32())),
     ("poly_ring_counts", pa.list_(pa.int32()))])
 COVERED_ARROW = pa.schema(list(FEATURE_ARROW) + [
-    ("uid", pa.int64()),
-    ("bx", pa.int64()), ("by", pa.int64()), ("coarse", pa.bool_())])
+    ("uid", pa.int64()), ("bx", pa.int64()), ("by", pa.int64()),
+    ("coarse", pa.bool_()), ("low", pa.int8())])
 TILE_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int32()),
                         ("y", pa.int32()), ("tile", pa.binary())])
 FEATURE_SCHEMA = from_arrow_schema(FEATURE_ARROW)
 CLIP_COLUMNS = tuple("clip_" + c for c in G.PACKED)
 # the rows between build_tiles' two grouped passes, keyed (_z, _tx, _ty)
 # and placed on pass 2's partition _part: a tile pass 1 finished, or a
-# cover row with its parent tile's clip
+# cover row (at z_s with its parent tile's clip)
 HANDOFF_ARROW = pa.schema(
     [("_part", pa.int32()), ("_z", pa.int32()), ("_tx", pa.int64()),
      ("_ty", pa.int64()), ("tile", pa.binary()), *COVERED_ARROW]
@@ -137,20 +140,52 @@ def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
         [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
 
 
-def _with_tiles(batch, rows, x, y, coarse) -> pa.Table:
+def _with_tiles(batch, rows, x, y, coarse, low) -> pa.Table:
     """Row ``rows[i]`` of ``batch`` (its feature columns and ``uid``)
-    with tile (``x[i]``, ``y[i]``) appended as (bx, by) and ``coarse[i]``:
-    the one row-repeat step of cover and of the coarse refine."""
-    cols = batch.select(COVERED_ARROW.names[:-3]).take(rows)
+    with tile (``x[i]``, ``y[i]``) appended as (bx, by), ``coarse[i]``
+    and ``low[i]``: the one row-repeat step of cover and of the coarse
+    refine."""
+    cols = batch.select(COVERED_ARROW.names[:-4]).take(rows)
     return pa.Table.from_arrays(
-        [*cols.columns, pa.array(x), pa.array(y), pa.array(coarse)],
-        schema=COVERED_ARROW)
+        [*cols.columns, pa.array(x), pa.array(y), pa.array(coarse),
+         pa.array(low, pa.int8())], schema=COVERED_ARROW)
+
+
+def _in_bbox(bbox: tuple | None, zoom: int, x, y, coarse) -> np.ndarray:
+    """Which cover rows can reach a tile intersecting ``bbox`` (minlon,
+    minlat, maxlon, maxlat) at ``zoom`` (reference --bbox,
+    src/tilemaker.cpp:368-379): an exact row when its tile lies in the
+    box's tile range, a coarse row when its z6 cell's block of base
+    tiles overlaps that range.  Every row when ``bbox`` is None."""
+    if bbox is None:
+        return np.ones(len(x), bool)
+    minlon, minlat, maxlon, maxlat = bbox
+    m = (1 << zoom) - 1
+    x0 = max(0, min(m, int(P.lon2tilexf(minlon, zoom))))
+    x1 = max(0, min(m, int(P.lon2tilexf(maxlon, zoom))))
+    y0 = max(0, min(m, int(P.lat2tileyf(maxlat, zoom))))
+    y1 = max(0, min(m, int(P.lat2tileyf(minlat, zoom))))
+    w = np.where(coarse, (1 << max(0, zoom - CLUSTER_ZOOM)) - 1, 0)
+    return (x <= x1) & (x + w >= x0) & (y <= y1) & (y + w >= y0)
+
+
+def _low_marks(row, x, y, base_zoom: int) -> np.ndarray:
+    """Per cover row (its feature's batch ``row``, base tile ``x``,
+    ``y``), a bitmask with bit z set, for each z below
+    CLUSTER_ZOOM, when the row is its feature's first in its z tile: the
+    one row per feature and z0-5 tile that pass 2's z0-5 groups read."""
+    low = np.zeros(len(row), np.int8)
+    for z in range(min(CLUSTER_ZOOM, base_zoom + 1)):
+        s = base_zoom - z
+        key = (row << 2 * z) | ((x >> s) << z) | (y >> s)
+        low[np.unique(key, return_index=True)[1]] |= 1 << z
+    return low
 
 
 def cover_features(features: DataFrame, base_zoom: int = 14,
-                   large_threshold: int | None = LARGE_THRESHOLD
-                   ) -> DataFrame:
-    """Explode features to covering tiles. Adds (bx, by, coarse) columns.
+                   large_threshold: int | None = LARGE_THRESHOLD,
+                   bbox: tuple | None = None) -> DataFrame:
+    """Explode features to covering tiles: adds bx, by, coarse and low.
 
     Dual path (reference src/tile_data.cpp:524-540): small features
     explode to their exact base-zoom covering tiles (coarse=false); large
@@ -162,7 +197,9 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
     :func:`_expand_coarse_rows` (clip to cell bbox, cover the clip) —
     the clip-pyramid refine the reference gets from its R-tree walk.
     Each Arrow batch takes one cover kernel call per path, and its rows
-    come out in input order, each row's tiles sorted.
+    come out in input order, each row's tiles sorted.  Rows that cannot
+    reach a tile in ``bbox`` are dropped, then ``low`` marks each
+    feature's first kept row in each z0-5 tile (:func:`_low_marks`).
     """
     dz = base_zoom - CLUSTER_ZOOM
     dual = large_threshold is not None and dz > 0
@@ -198,19 +235,26 @@ def cover_features(features: DataFrame, base_zoom: int = 14,
             order = np.argsort(row, kind="stable")  # back to input order
             x = np.concatenate([x, cx << max(dz, 0)])  # cell -> first tile
             y = np.concatenate([y, cy << max(dz, 0)])
-            yield from _with_tiles(batch, row[order], x[order], y[order],
-                                   coarse[row[order]]).to_batches()
+            row, x, y = row[order], x[order], y[order]
+            keep = _in_bbox(bbox, base_zoom, x, y, coarse[row])
+            row, x, y = row[keep], x[keep], y[keep]
+            yield from _with_tiles(batch, row, x, y, coarse[row],
+                                   _low_marks(row, x, y, base_zoom)
+                                   ).to_batches()
 
     return features.mapInArrow(gen, from_arrow_schema(COVERED_ARROW))
 
 
-def _expand_coarse_rows(batch, base_zoom: int) -> pa.Table:
+def _expand_coarse_rows(batch, base_zoom: int,
+                        bbox: tuple | None = None) -> pa.Table:
     """Refine coarse (cell-granularity) rows to exact per-base-tile rows:
     clip each geometry to its z6 cell bbox (one base-tile margin so edge
     supercover matches the global cover), cover the clipped geometries at
     base_zoom in one kernel call, keep cells inside each z6 cell's tile
-    range.  The exact rows come first, then the refined ones.  Runs
-    inside the subtree worker — the fan-out never crosses a shuffle."""
+    range and ``bbox`` (a z6 cell may overhang the box).  The exact rows
+    come first, then the refined ones, all with ``low`` cleared (pass 1
+    reads it first).  Runs inside the subtree worker — the fan-out never
+    crosses a shuffle."""
     dz = base_zoom - CLUSTER_ZOOM
     coarse = np.asarray(batch.column("coarse"))
     exact, big = np.flatnonzero(~coarse), np.flatnonzero(coarse)
@@ -226,52 +270,26 @@ def _expand_coarse_rows(batch, base_zoom: int) -> pa.Table:
                      else [r for poly in geom for r in poly])
     row, x, y = G.cover_batch(kinds, *G.pack_batch(parts), base_zoom)
     row = big[row]
-    keep = ((x >> dz) == (bx[row] >> dz)) & ((y >> dz) == (by[row] >> dz))
+    keep = (((x >> dz) == (bx[row] >> dz)) & ((y >> dz) == (by[row] >> dz))
+            & _in_bbox(bbox, base_zoom, x, y, False))
+    n = len(exact) + int(keep.sum())
     return _with_tiles(batch, np.concatenate([exact, row[keep]]),
                        np.concatenate([bx[exact], x[keep]]),
                        np.concatenate([by[exact], y[keep]]),
-                       np.zeros(len(exact) + int(keep.sum()), bool))
+                       np.zeros(n, bool), np.zeros(n, np.int8))
 
 
-def expand_coarse(covered: DataFrame, base_zoom: int = 14) -> DataFrame:
+def expand_coarse(covered: DataFrame, base_zoom: int = 14,
+                  bbox: tuple | None = None) -> DataFrame:
     """DataFrame twin of :func:`_expand_coarse_rows` for consumers that
     need exact per-tile rows outside the subtree worker (e.g.
     :func:`tile_assignments` — whose output is inherently per-tile)."""
     def gen(batches):
         for batch in batches:
-            yield from _expand_coarse_rows(batch, base_zoom).to_batches()
+            yield from _expand_coarse_rows(batch, base_zoom,
+                                           bbox).to_batches()
 
     return covered.mapInArrow(gen, from_arrow_schema(COVERED_ARROW))
-
-
-def _bbox_tile_range(bbox: tuple, zoom: int) -> tuple[int, int, int, int]:
-    """Inclusive (x0, x1, y0, y1) range of the ``zoom`` tiles that
-    intersect ``bbox`` (minlon, minlat, maxlon, maxlat)."""
-    minlon, minlat, maxlon, maxlat = bbox
-    m = (1 << zoom) - 1
-    x0 = max(0, min(m, int(P.lon2tilexf(minlon, zoom))))
-    x1 = max(0, min(m, int(P.lon2tilexf(maxlon, zoom))))
-    y0 = max(0, min(m, int(P.lat2tileyf(maxlat, zoom))))
-    y1 = max(0, min(m, int(P.lat2tileyf(minlat, zoom))))
-    return x0, x1, y0, y1
-
-
-def prune_cover_to_bbox(covered: DataFrame, bbox: tuple,
-                        zoom: int) -> DataFrame:
-    """Keep the cover rows that can reach a tile intersecting ``bbox``
-    (minlon, minlat, maxlon, maxlat) at ``zoom`` (reference --bbox,
-    src/tilemaker.cpp:368-379): an exact row when its tile lies in the
-    box's tile range, a coarse row when its z6 cell's block of
-    ``1 << (zoom - CLUSTER_ZOOM)`` base tiles overlaps that range."""
-    x0, x1, y0, y1 = _bbox_tile_range(bbox, zoom)
-    exact_ok = F.col("bx").between(x0, x1) & F.col("by").between(y0, y1)
-    if "coarse" not in covered.columns:
-        return covered.filter(exact_ok)
-    width = 1 << max(0, zoom - CLUSTER_ZOOM)
-    coarse_ok = ((F.col("bx") <= x1) & (F.col("bx") + width - 1 >= x0)
-                 & (F.col("by") <= y1) & (F.col("by") + width - 1 >= y0))
-    return covered.filter(
-        F.when(F.col("coarse"), coarse_ok).otherwise(exact_ok))
 
 
 # ---------------------------------------------------------------------------
@@ -629,21 +647,23 @@ def _build_levels(cols: dict, zooms: range, cfg: Config, base_zoom: int,
     return out, clips
 
 
-def _hand_over(table: pa.Table, cols: dict, clips: dict, z_s: int,
-               base_zoom: int) -> pa.Table:
-    """Every row of ``table`` as a HANDOFF row keyed by its z_s tile (its
-    ``_part`` left for :func:`_place`).  The first row of a feature in a
-    z_s tile carries the clip the feature got in that tile's parent
-    (``clips``, the z_s - 1 level of :func:`_build_levels`), packed like
-    ``coords`` / ``ring_sizes`` / ``poly_ring_counts``; its other rows,
-    and a feature with no clip recorded, carry nulls."""
-    shift = base_zoom - z_s
-    tx, ty = cols["bx"] >> shift, cols["by"] >> shift
+def _hand_over(table: pa.Table, take: np.ndarray, z: np.ndarray,
+               base_zoom: int, clips: dict) -> pa.Table:
+    """Rows ``take`` of ``table`` as HANDOFF rows, row i keyed by its
+    tile at zoom ``z[i]`` (its ``_part`` left for :func:`_place`).  The
+    first row of a feature in a tile carries the clip the feature got in
+    that tile's parent (``clips``, the last level of
+    :func:`_build_levels`), packed like ``coords`` / ``ring_sizes`` /
+    ``poly_ring_counts``; its other rows, and a feature with no clip
+    recorded, carry nulls."""
+    tx = np.asarray(table.column("bx"))[take] >> (base_zoom - z)
+    ty = np.asarray(table.column("by"))[take] >> (base_zoom - z)
     packed, seen = [(None,) * 3], set()  # packed[0]: no clip
-    slot = np.zeros(table.num_rows, np.int64)
+    slot = np.zeros(len(take), np.int64)
     for i, (x, y, uid, kind) in enumerate(zip(
-            tx.tolist(), ty.tolist(), cols["uid"].tolist(),
-            cols["kind"].tolist())):
+            tx.tolist(), ty.tolist(),
+            *(np.asarray(table.column(c))[take].tolist()
+              for c in ("uid", "kind")))):
         clip = clips.get((x >> 1, y >> 1), {}).get(uid)
         if clip is None or (x, y, uid) in seen:
             continue
@@ -651,15 +671,41 @@ def _hand_over(table: pa.Table, cols: dict, clips: dict, z_s: int,
         slot[i] = len(packed)
         packed.append(G.pack_multipolygon(
             [clip] if kind in (G.LINESTRING, G.MULTILINESTRING) else clip))
-    take = pa.array(slot)
-    n = table.num_rows
+    n = len(take)
     return pa.Table.from_arrays(
-        [pa.nulls(n, pa.int32()), pa.array(np.full(n, z_s, np.int32)),
-         pa.array(tx), pa.array(ty), pa.nulls(n, pa.binary()),
-         *(table.column(c).combine_chunks() for c in COVERED_ARROW.names),
-         *(pa.array(list(c), HANDOFF_ARROW.field(name).type).take(take)
+        [pa.nulls(n, pa.int32()), pa.array(z, pa.int32()), pa.array(tx),
+         pa.array(ty), pa.nulls(n, pa.binary()),
+         *table.select(COVERED_ARROW.names).take(take).columns,
+         *(pa.array(list(c), HANDOFF_ARROW.field(name).type).take(slot)
            for c, name in zip(zip(*packed), CLIP_COLUMNS))],
         schema=HANDOFF_ARROW)
+
+
+def _low_rows(table: pa.Table, cfg: Config, base_zoom: int,
+              n: int) -> pa.Table:
+    """Pass 2's z0-5 rows out of cover rows ``table``: for each z from
+    cfg.minzoom below CLUSTER_ZOOM, the rows ``low`` marks as their
+    feature's first in its z tile, of features visible below CLUSTER_ZOOM
+    (layer and feature minzoom), keyed by that tile with no clip.  A tile
+    takes ``_part`` from its serial number in z order alone, so its rows
+    from every z6 cell meet in one pass-2 group."""
+    zooms = range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1))
+    layer = table.column("layer")
+    visible = pc.is_in(layer, value_set=pa.array(
+        [k for k, ld in cfg.layers.items() if ld.minzoom < CLUSTER_ZOOM],
+        layer.type)).to_numpy() & (
+            np.asarray(table.column("minzoom")) < CLUSTER_ZOOM)
+    low = np.asarray(table.column("low"))
+    take = [np.flatnonzero(visible & ((low >> z) & 1).astype(bool))
+            for z in zooms]
+    rows = _hand_over(
+        table, np.concatenate([np.zeros(0, np.int64), *take]),
+        np.repeat(np.asarray(zooms, np.int64), [len(t) for t in take]),
+        base_zoom, {})
+    z, x, y = (np.asarray(rows.column(c)) for c in ("_z", "_tx", "_ty"))
+    serial = ((1 << 2 * z) - 1) // 3 + (y << z) + x
+    return rows.set_column(0, HANDOFF_ARROW.field("_part"),
+                           pa.array(serial % n, pa.int32()))
 
 
 def _lpt(weights: np.ndarray, n: int) -> np.ndarray:
@@ -708,7 +754,8 @@ def build_tiles(covered: DataFrame, cfg: Config,
 
     1. one group per z6 cell refines its coarse rows, builds zooms
        6..z_s-1 down the clip pyramid and hands every row on, keyed by
-       its z_s tile and carrying its feature's z_s-1 clip;
+       its z_s tile and carrying its feature's z_s-1 clip, and each row
+       the cover marked in ``low`` keyed by its z0-5 tile;
     2. one group per z_s tile builds z_s..base_zoom from the handed-over
        clips; one group per z0-5 tile builds that tile from source; the
        tiles pass 1 finished ride through as one-row groups.
@@ -719,14 +766,10 @@ def build_tiles(covered: DataFrame, cfg: Config,
     one task, and a hash of a dozen z_s tiles loads the cores unevenly.
     The result ends in an exchange, so pass 2 runs as a parallel shuffle
     stage even under ``toLocalIterator``, which runs the final stage one
-    partition per job.  With cfg.clip_bbox set, out-of-box cover rows
-    are pruned before the shuffle and only tiles intersecting the box are
-    emitted."""
-    dz = base_zoom - CLUSTER_ZOOM
-    box = None
-    if cfg.clip_bbox is not None:
-        covered = prune_cover_to_bbox(covered, cfg.clip_bbox, base_zoom)
-        box = _bbox_tile_range(cfg.clip_bbox, base_zoom)
+    partition per job.  With cfg.clip_bbox set, ``covered`` must be the
+    cover pruned to that box (:func:`generate_tiles`), and only tiles
+    intersecting it are emitted."""
+    dz = max(base_zoom - CLUSTER_ZOOM, 0)
     with_cell = covered.withColumn(
         "_cx", F.shiftright(F.col("bx"), dz)
     ).withColumn("_cy", F.shiftright(F.col("by"), dz))
@@ -737,76 +780,37 @@ def build_tiles(covered: DataFrame, cfg: Config,
         split = base_zoom + 1  # pass 1 builds every zoom from z6 up
 
     def build_upper(key, table):  # unannotated: applyInArrow reads hints
+        low = _low_rows(table, cfg, base_zoom, n)
         # refine coarse (large-object) rows to exact tiles, in-worker;
         # _tile_groups keeps one row per feature (uid) and tile
-        table = _expand_coarse_rows(table, base_zoom)
-        if box is not None:
-            # a refined large feature covers its whole z6 cell, which
-            # may overhang the box
-            x0, x1, y0, y1 = box
-            bx, by = pc.field("bx"), pc.field("by")
-            table = table.filter((bx >= x0) & (bx <= x1) & (by >= y0)
-                                 & (by <= y1))
+        table = _expand_coarse_rows(table, base_zoom, cfg.clip_bbox)
         cols = _tile_columns(table, cfg)
         out, clips = _build_levels(cols, range(lo, split), cfg, base_zoom)
         rows = rows_table([(None, *t) + (None,) * (len(HANDOFF_ARROW) - 5)
                            for t in out], HANDOFF_ARROW)
         if split <= base_zoom:
-            rows = pa.concat_tables(
-                [rows, _hand_over(table, cols, clips, split, base_zoom)])
+            rows = pa.concat_tables([rows, _hand_over(
+                table, np.arange(table.num_rows),
+                np.full(table.num_rows, split), base_zoom, clips)])
         cx, cy = (k.as_py() for k in key)
-        return _place(rows, n, cx + (cy << CLUSTER_ZOOM))
+        return pa.concat_tables(
+            [_place(rows, n, cx + (cy << CLUSTER_ZOOM)), low])
 
     def build_lower(key, table):
         _, z, x, y = (k.as_py() for k in key)
-        if z < CLUSTER_ZOOM:
-            out = [(z, x, y, _build_one_tile(
-                _tile_columns(table, cfg), np.arange(table.num_rows),
-                z, x, y, cfg))]
-        elif z < split:  # a tile pass 1 finished
+        if CLUSTER_ZOOM <= z < split:  # a tile pass 1 finished
             out = [(z, x, y, table.column("tile")[0].as_py())]
-        else:
+        else:  # a z0-5 tile, or a z_s tile and the subtree below it
+            top = z if z < CLUSTER_ZOOM else base_zoom
             out, _ = _build_levels(
-                _tile_columns(table, cfg),
-                range(max(split, cfg.minzoom), base_zoom + 1), cfg,
-                base_zoom, {(x >> 1, y >> 1): _handed_clips(table)})
+                _tile_columns(table, cfg), range(max(z, cfg.minzoom), top + 1),
+                cfg, base_zoom, {(x >> 1, y >> 1): _handed_clips(table)})
         return rows_table([t for t in out if t[3] is not None], TILE_ARROW)
 
     n = covered.sparkSession.sparkContext.defaultParallelism
-    handoff = from_arrow_schema(HANDOFF_ARROW)
-    rows = with_cell.groupBy("_cx", "_cy").applyInArrow(build_upper,
-                                                        schema=handoff)
-    zooms = range(cfg.minzoom, min(CLUSTER_ZOOM, base_zoom + 1))
-    if zooms:
-        # low-zoom rows: only features visible below CLUSTER_ZOOM
-        # (per-layer and per-feature minzoom), one per feature and z0-5
-        # tile.  A feature's cover rows sit in one cover partition, so
-        # the dedupe's map-side half removes the base-zoom fanout before
-        # the shuffle.  Pass 2 builds each (z, x, y) as one group, so low
-        # tiles build in parallel across tiles (the single z0 tile is
-        # irreducible, but its group holds only its own features, not
-        # the whole planet's fanout).  Coarse (large-object) rows need no
-        # expansion here: their z6-cell bx/by is exact membership for
-        # every z<=6 ancestor tile.
-        low_visible_layers = [
-            name for name, ld in cfg.layers.items()
-            if ld.minzoom < CLUSTER_ZOOM]
-        low = (
-            with_cell
-            .filter(F.col("layer").isin(low_visible_layers)
-                    if low_visible_layers else F.lit(False))
-            .filter(F.col("minzoom") < CLUSTER_ZOOM)
-            .withColumn("_z", F.explode(F.array(*[F.lit(z) for z in zooms])))
-            .withColumn("_tx", F.expr(f"shiftright(bx, {base_zoom} - _z)"))
-            .withColumn("_ty", F.expr(f"shiftright(by, {base_zoom} - _z)"))
-            .dropDuplicates(["uid", "_z", "_tx", "_ty"])
-            .withColumn("_part", F.pmod(F.hash("_z", "_tx", "_ty"), F.lit(n)))
-        )
-        rows = rows.unionByName(low.select(*[
-            (F.col(f.name) if f.name in low.columns else F.lit(None))
-            .cast(f.dataType).alias(f.name) for f in handoff]))
-
-    tiles = rows.repartitionById(n, "_part").groupBy(
+    tiles = with_cell.groupBy("_cx", "_cy").applyInArrow(
+        build_upper, schema=from_arrow_schema(HANDOFF_ARROW)
+    ).repartitionById(n, "_part").groupBy(
         "_part", "_z", "_tx", "_ty").applyInArrow(
             build_lower, schema=from_arrow_schema(TILE_ARROW))
     return tiles.repartition("z", "x", "y")
@@ -814,7 +818,8 @@ def build_tiles(covered: DataFrame, cfg: Config,
 
 def generate_tiles(features: DataFrame, cfg: Config) -> DataFrame:
     """features -> (z, x, y, tile) end to end."""
-    covered = cover_features(features, base_zoom=cfg.basezoom)
+    covered = cover_features(features, base_zoom=cfg.basezoom,
+                             bbox=cfg.clip_bbox)
     return build_tiles(covered, cfg, base_zoom=cfg.basezoom)
 
 
