@@ -63,7 +63,7 @@ BUDGETS = {
     # 2 Arrow nodes exactly: a regression to 3+ means the join's null
     # guard is re-evaluating an assign/sig UDF over the candidate set
     "ann_ivf": (2, 1, 2),
-    # media queries are single linear synth -> encode -> mapInPandas
+    # media queries are single linear synth -> encode -> mapInArrow
     # chains: zero shuffles, by construction
     "video_frames": (0, 0, 2),
     "audio_features": (0, 0, 2),
@@ -105,24 +105,24 @@ BUDGETS = {
     # the final DAG itself carries zero Python nodes
     "corpus_dedup": (6, 1, 0),
     # round-5 image-transform chains: gradient-encode pandas UDF +
-    # resize/augment mapInPandas + checksum mapInPandas = 3 Arrow
+    # resize/augment mapInArrow + checksum mapInArrow = 3 Arrow
     # stages, map-only (zero shuffles) by construction
     "resize_check": (0, 0, 3),
     "augment_check": (0, 0, 3),
     "patchify_check": (0, 0, 3),
     "letterbox_check": (0, 0, 3),
-    # orientation_check: gradient-encode UDF + orient mapInPandas +
-    # checksum mapInPandas, map-only like the other transform chains
+    # orientation_check: gradient-encode UDF + orient mapInArrow +
+    # checksum mapInArrow, map-only like the other transform chains
     "orientation_check": (0, 0, 3),
     "grayscale_check": (0, 0, 3),
-    # round-5 training-corpus additions: channel_stats folds per-batch
-    # partials in Arrow (encode + fold = 2 nodes) and shuffles only the
-    # 3-rows-per-partition partials (1 exchange); mixup joins the image
-    # table twice — both sides broadcast at test scale (AQE would pick
-    # shuffle-hash at 100 TB), 4 Arrow nodes (2 encodes + blend +
-    # checksum), zero shuffles; shard_roundtrip audits the read side
-    # (the sink runs eagerly): repartition over shards + untar +
-    # checksum = 1 exchange, 2 Arrow nodes
+    # round-5 training-corpus additions: channel_stats emits 3 rows per
+    # image in Arrow (encode + stats = 2 nodes) and the map-side partial
+    # aggregate shuffles only 3 rows per partition (1 exchange); mixup
+    # joins the image table twice — both sides broadcast at test scale
+    # (AQE would pick shuffle-hash at 100 TB), 4 Arrow nodes (2 encodes
+    # + blend + checksum), zero shuffles; shard_roundtrip audits the
+    # read side (the sink runs eagerly): repartition over shards +
+    # untar + checksum = 1 exchange, 2 Arrow nodes
     "channel_stats": (1, 0, 2),
     "mixup_check": (0, 2, 4),
     "shard_roundtrip": (1, 0, 2),

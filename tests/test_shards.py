@@ -54,6 +54,30 @@ def test_shard_bytes_deterministic(spark, tmp_path):
         assert h1.hexdigest() == h2.hexdigest(), name
 
 
+# sha256 of each shard of _samples(spark) at n_shards=4, recorded from
+# the pandas group writer that preceded the Arrow one: the writer's
+# bytes are pinned, not only self-consistent
+SHARD_SHA256 = {
+    "shard-00000.tar":
+        "e2a184445e66cb01b9789130eb0fa6521a653d293734d5710387f4e6f778b741",
+    "shard-00001.tar":
+        "94b0376bd553c6e8a494ced664b4b20e4f6e84911e512ca4f4ce1bd65e1504da",
+    "shard-00002.tar":
+        "de6c977b34b60db9e8bb80f2381d668ab6add1c4b293a2264ba7997f227b003b",
+    "shard-00003.tar":
+        "2bb78e56952b7eeba88c1c71800f314e37b3131838d7ab8532c3054d610b6e40",
+}
+
+
+def test_shard_bytes_golden(spark, tmp_path):
+    out = str(tmp_path / "golden")
+    shards.write_shards(_samples(spark), out, n_shards=4)
+    got = {name: hashlib.sha256(
+               open(os.path.join(out, name), "rb").read()).hexdigest()
+           for name in os.listdir(out) if name.endswith(".tar")}
+    assert got == SHARD_SHA256
+
+
 def test_shard_members_sorted_and_paired(spark, tmp_path):
     out = str(tmp_path / "shards")
     shards.write_shards(_samples(spark), out, n_shards=2)

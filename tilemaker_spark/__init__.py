@@ -8,8 +8,10 @@ spatial joins (point-in-polygon, covered-by, kNN) -> z/x/y tile assembly
 
 Architecture is Spark-first: DataFrame/SQL plans with Catalyst-optimizable
 column expressions for all tile math (see ``tilemaker_spark.sql.tile_exprs``),
-Arrow-vectorized pandas UDFs only for genuinely non-relational kernels
-(ring stitching, clipping, MVT encode). Zero per-row Python anywhere.
+and Python only for genuinely non-relational kernels (ring stitching,
+clipping, MVT encode, image and media codecs), always over whole Arrow
+batches (the tile, spatial-join and blob paths through ``mapInArrow`` /
+``applyInArrow``); no plan holds a row-at-a-time Python UDF.
 """
 
 __version__ = "0.1.0"

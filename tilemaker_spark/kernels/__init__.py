@@ -1,5 +1,5 @@
 """Pure numpy/python kernels (no Spark imports).
 
-Everything here is vectorized over numpy arrays so it can be called from
-Arrow-batched pandas UDFs without per-row Python overhead.
+Everything here works on numpy arrays and is called from the
+Arrow-batched Spark workers of ``operators/`` and ``sources/``.
 """

@@ -170,6 +170,10 @@ def encode_jpeg(pixels: np.ndarray, quality: int = JPEG_QUALITY) -> bytes:
     return J.encode_jpeg(pixels, quality=quality)
 
 
+# the formats decode_image reads back bit-exactly
+LOSSLESS_FORMATS = frozenset({"png"})
+
+
 def decode_image(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return decode_png(data)

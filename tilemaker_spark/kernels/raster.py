@@ -14,7 +14,7 @@ half, built on the repo's own PNG codec (kernels/png.py):
   mid-cell interpolation), so rendered tiles can be vectorized back and
   checked against the source geometry by area.
 
-Everything here is per-tile work executed inside applyInPandas batches
+Everything here is per-tile work executed inside applyInArrow groups
 (operators/raster.py); no kernel touches Spark.
 """
 

@@ -1,12 +1,12 @@
 """Multimodal (image) column operators.
 
 Images are opaque ``binary`` columns with typed metadata (w, h, fmt) per
-BASELINE.json input_hint.  All processing is Arrow-batched ``mapInPandas``
-— schema, partitioning, UDF signature and batch shape are real, and so
-are both codecs (no image libraries in this container — see
-``kernels.png`` for the PNG codec and ``kernels.jpeg`` for the
-from-scratch baseline JFIF codec; both implemented from the public
-specs).
+BASELINE.json input_hint.  Every decode runs in one Arrow-batched
+``mapInArrow`` row worker (:func:`operators.rows.map_rows`) — schema,
+partitioning and batch shape are real, and so are both codecs (no image
+libraries in this container — see ``kernels.png`` for the PNG codec and
+``kernels.jpeg`` for the from-scratch baseline JFIF codec; both
+implemented from the public specs).
 
 Operators: decode-verify (PSNR vs the deterministic reference pixels),
 channel stats, resize (nearest-neighbor), and phash-based near-dup
@@ -15,14 +15,38 @@ candidate blocking.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import png as P
+from .rows import map_rows
+
+
+def _ddl(df: DataFrame, cols) -> str:
+    """``", c type"`` for each of ``cols``, typed as in ``df``."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return "".join(f", {c} {types[c]}" for c in cols)
+
+
+def reference_psnr(seed: int, w: int, h: int, px: np.ndarray) -> tuple:
+    """Decoded pixels ``px`` against the deterministic reference image of
+    ``seed`` at w x h -> (reference, PSNR in dB capped at 99, so an exact
+    match reads 99): the per-row pixel check of decode_verify,
+    image_quality and media.sample_frames."""
+    ref = P.synth_pixels(seed, w, h)
+    p = P.psnr_db(ref, px)
+    return ref, float(min(p, 99.0)) if np.isfinite(p) else 99.0
+
+
+_PNG_DDL = "image_id string, bytes binary, w int, h int, fmt string"
+
+
+def _png_row(px: np.ndarray, *keys) -> tuple:
+    """``(*keys, png bytes, w, h, 'png')``: the output row of every
+    operator that re-encodes pixels as PNG."""
+    return (*keys, P.encode_png(np.ascontiguousarray(px)), px.shape[1],
+            px.shape[0], "png")
 
 
 def decode_verify(images: DataFrame, psnr_min: float = 40.0,
@@ -32,38 +56,16 @@ def decode_verify(images: DataFrame, psnr_min: float = 40.0,
     per-row invariant.  Output: image_id, fmt, psnr_db, pix_ok, w, h
     (+ any ``passthrough`` columns, so downstream stages need no
     re-join with the source table)."""
-    extra = list(passthrough)
-    in_schema = {f.name: f.dataType.simpleString()
-                 for f in images.schema.fields}
-    schema = ("image_id string, fmt string, psnr_db double, pix_ok boolean,"
-              " w int, h int"
-              + "".join(f", {c} {in_schema[c]}" for c in extra))
+    def row(img_id, blob, w, h, fmt, *extra):
+        got = P.decode_image(blob, fmt)
+        _, psnr = reference_psnr(int(img_id.rsplit("_", 1)[-1]), w, h, got)
+        yield (img_id, fmt, psnr, psnr >= psnr_min, got.shape[1],
+               got.shape[0], *extra)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fmts, psnrs, oks, ws, hs = [], [], [], [], [], []
-            for img_id, blob, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                seed = int(img_id.rsplit("_", 1)[-1])
-                ref = P.synth_pixels(seed, int(w), int(h))
-                got = P.decode_image(bytes(blob), fmt)
-                p = P.psnr_db(ref, got)
-                ids.append(img_id)
-                fmts.append(fmt)
-                psnrs.append(min(p, 99.0) if np.isfinite(p) else 99.0)
-                oks.append(bool(p >= psnr_min))
-                ws.append(got.shape[1])
-                hs.append(got.shape[0])
-            out = pd.DataFrame({
-                "image_id": ids, "fmt": fmts, "psnr_db": psnrs,
-                "pix_ok": oks, "w": ws, "h": hs})
-            for c in extra:
-                out[c] = pdf[c].to_numpy()
-            yield out
-
-    return images.select("image_id", "bytes", "w", "h", "fmt",
-                         *extra).mapInPandas(run, schema=schema)
+    return map_rows(
+        images, ["image_id", "bytes", "w", "h", "fmt", *passthrough],
+        "image_id string, fmt string, psnr_db double, pix_ok boolean,"
+        " w int, h int" + _ddl(images, passthrough), row)
 
 
 def image_quality(images: DataFrame, psnr_min: float = 40.0,
@@ -75,36 +77,21 @@ def image_quality(images: DataFrame, psnr_min: float = 40.0,
     hit SSIM 1.0; lossy formats must clear ``ssim_min`` alongside the
     PSNR floor.  Output: image_id, fmt, psnr_db, ssim, ok."""
     from ..kernels import metrics as M
-    schema = ("image_id string, fmt string, psnr_db double, ssim double,"
-              " ok boolean")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("image_id", "fmt", "psnr_db", "ssim", "ok")}
-            for img_id, blob, w, h, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"],
-                    pdf["fmt"]):
-                seed = int(img_id.rsplit("_", 1)[-1])
-                ref = P.synth_pixels(seed, int(w), int(h))
-                got = P.decode_image(bytes(blob), fmt)
-                p = P.psnr_db(ref, got)
-                s = M.ssim(ref, got)
-                out["image_id"].append(img_id)
-                out["fmt"].append(fmt)
-                out["psnr_db"].append(
-                    min(p, 99.0) if np.isfinite(p) else 99.0)
-                out["ssim"].append(s)
-                # enforce the documented lossless contract: a PNG that
-                # decodes but scores below exactly 1.0 is corrupted,
-                # not merely low-quality — the lossy threshold must not
-                # paper over it
-                floor = (1.0 - 1e-12) if fmt == "png" else ssim_min
-                out["ok"].append(bool(p >= psnr_min and s >= floor))
-            yield pd.DataFrame(out)
+    def row(img_id, blob, w, h, fmt):
+        got = P.decode_image(blob, fmt)
+        ref, psnr = reference_psnr(int(img_id.rsplit("_", 1)[-1]), w, h,
+                                   got)
+        s = M.ssim(ref, got)
+        # enforce the documented lossless contract: a lossless image that
+        # decodes but scores below exactly 1.0 is corrupted, not merely
+        # low-quality — the lossy threshold must not paper over it
+        floor = (1.0 - 1e-12) if fmt in P.LOSSLESS_FORMATS else ssim_min
+        yield img_id, fmt, psnr, s, bool(psnr >= psnr_min and s >= floor)
 
-    return images.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "w", "h", "fmt"],
+                    "image_id string, fmt string, psnr_db double,"
+                    " ssim double, ok boolean", row)
 
 
 def ssim_flat_audit(pairs: DataFrame) -> DataFrame:
@@ -134,56 +121,30 @@ def ssim_flat_audit(pairs: DataFrame) -> DataFrame:
     Output: k, g1, g2, ssim_num:bigint, ssim_den:bigint, ssim_ok:int.
     """
     from ..kernels import metrics as M
-    schema = ("k long, g1 int, g2 int, ssim_num long, ssim_den long,"
-              " ssim_ok int")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ks, nums, dens, oks = [], [], [], []
-            for k, g1, g2, w, h in zip(pdf["k"], pdf["g1"], pdf["g2"],
-                                       pdf["w"], pdf["h"]):
-                a = np.full((int(h), int(w), 3), int(g1), np.uint8)
-                b = np.full((int(h), int(w), 3), int(g2), np.uint8)
-                s = M.ssim(a, b)
-                num = 20000 * int(g1) * int(g2) + 65025
-                den = 10000 * (int(g1) ** 2 + int(g2) ** 2) + 65025
-                ks.append(int(k))
-                nums.append(num)
-                dens.append(den)
-                oks.append(int(abs(s - num / den) < 1e-9))
-            yield pd.DataFrame({
-                "k": ks, "g1": pdf["g1"].astype("int32"),
-                "g2": pdf["g2"].astype("int32"),
-                "ssim_num": nums, "ssim_den": dens, "ssim_ok": oks})
+    def row(k, g1, g2, w, h):
+        s = M.ssim(np.full((h, w, 3), g1, np.uint8),
+                   np.full((h, w, 3), g2, np.uint8))
+        num = 20000 * g1 * g2 + 65025
+        den = 10000 * (g1 ** 2 + g2 ** 2) + 65025
+        yield k, g1, g2, num, den, int(abs(s - num / den) < 1e-9)
 
-    return pairs.select("k", "g1", "g2", "w", "h").mapInPandas(
-        run, schema=schema)
+    return map_rows(pairs, ["k", "g1", "g2", "w", "h"],
+                    "k long, g1 int, g2 int, ssim_num long, ssim_den long,"
+                    " ssim_ok int", row)
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize, re-encoded as PNG.  Output: image_id,
     bytes, w, h, fmt='png'."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
+    def row(img_id, blob, fmt):
+        px = P.decode_image(blob, fmt)
+        h, w = px.shape[:2]
+        yi = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
+        xi = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
+        yield _png_row(px[yi][:, xi], img_id)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs = [], []
-            # zip over columns (not iterrows: ~10x per-row overhead)
-            for img_id, blob, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt)
-                h, w = px.shape[:2]
-                yi = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
-                xi = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
-                ids.append(img_id)
-                blobs.append(P.encode_png(px[yi][:, xi]))
-            yield pd.DataFrame({
-                "image_id": ids, "bytes": blobs,
-                "w": [out_w] * len(ids), "h": [out_h] * len(ids),
-                "fmt": ["png"] * len(ids)})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"], _PNG_DDL, row)
 
 
 def letterbox_images(images: DataFrame, fill: int = 114) -> DataFrame:
@@ -195,31 +156,17 @@ def letterbox_images(images: DataFrame, fill: int = 114) -> DataFrame:
     oy=(side-h)//2.  Map-only at any scale (decode -> pad -> re-encode
     PNG inside one Arrow batch, zero shuffles).  Output: image_id,
     bytes, w, h (both = side), fmt='png', ox, oy."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string," \
-             " ox int, oy int"
+    def row(img_id, blob, fmt):
+        px = P.decode_image(blob, fmt)
+        h, w = px.shape[:2]
+        side = max(w, h)
+        ox, oy = (side - w) // 2, (side - h) // 2
+        canvas = np.full((side, side, 3), fill, dtype=np.uint8)
+        canvas[oy:oy + h, ox:ox + w] = px
+        yield *_png_row(canvas, img_id), ox, oy
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, blobs, sides, oxs, oys = [], [], [], [], []
-            for img_id, blob, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt)
-                h, w = px.shape[:2]
-                side = max(w, h)
-                ox, oy = (side - w) // 2, (side - h) // 2
-                canvas = np.full((side, side, 3), fill, dtype=np.uint8)
-                canvas[oy:oy + h, ox:ox + w] = px
-                ids.append(img_id)
-                blobs.append(P.encode_png(canvas))
-                sides.append(side)
-                oxs.append(ox)
-                oys.append(oy)
-            yield pd.DataFrame({
-                "image_id": ids, "bytes": blobs, "w": sides, "h": sides,
-                "fmt": ["png"] * len(ids), "ox": oxs, "oy": oys})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"],
+                    _PNG_DDL + ", ox int, oy int", row)
 
 
 AUGMENT_OPS = ("flip_h", "flip_v", "rot90")
@@ -236,35 +183,22 @@ def augment_images(images: DataFrame,
     len(ops) rows inside the same Arrow batch.  Real per-row codec work
     (PNG decode + encode), the same batch shape a 100 TB augmentation
     pass would run.  Output: image_id, op, bytes, w, h, fmt='png'."""
-    schema = "image_id string, op string, bytes binary, w int, h int," \
-             " fmt string"
+    def row(img_id, blob, fmt):
+        px = P.decode_image(blob, fmt)
+        for op in ops:
+            if op == "flip_h":
+                out = px[:, ::-1]
+            elif op == "flip_v":
+                out = px[::-1]
+            elif op == "rot90":
+                out = np.rot90(px, k=-1)  # clockwise
+            else:
+                raise ValueError(f"unknown augment op {op}")
+            yield _png_row(out, img_id, op)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, opl, blobs, ws, hs = [], [], [], [], []
-            for img_id, blob, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt)
-                for op in ops:
-                    if op == "flip_h":
-                        out = px[:, ::-1]
-                    elif op == "flip_v":
-                        out = px[::-1]
-                    elif op == "rot90":
-                        out = np.rot90(px, k=-1)  # clockwise
-                    else:
-                        raise ValueError(f"unknown augment op {op}")
-                    ids.append(img_id)
-                    opl.append(op)
-                    blobs.append(P.encode_png(np.ascontiguousarray(out)))
-                    ws.append(out.shape[1])
-                    hs.append(out.shape[0])
-            yield pd.DataFrame({
-                "image_id": ids, "op": opl, "bytes": blobs,
-                "w": ws, "h": hs, "fmt": ["png"] * len(ids)})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"],
+                    "image_id string, op string, bytes binary, w int,"
+                    " h int, fmt string", row)
 
 
 def patchify_images(images: DataFrame, patch: int = 8) -> DataFrame:
@@ -278,36 +212,19 @@ def patchify_images(images: DataFrame, patch: int = 8) -> DataFrame:
     the grid split in one strided view (no per-patch slicing loop over
     pixels).  Output: image_id, py, px (patch grid coords), bytes,
     w, h, fmt='png'."""
-    schema = ("image_id string, py int, px int, bytes binary,"
-              " w int, h int, fmt string")
+    def row(img_id, blob, fmt):
+        im = P.decode_image(blob, fmt)
+        ny, nx = im.shape[0] // patch, im.shape[1] // patch
+        grid = (im[:ny * patch, :nx * patch]
+                .reshape(ny, patch, nx, patch, 3)
+                .transpose(0, 2, 1, 3, 4))  # (ny, nx, p, p, 3)
+        for gy in range(ny):
+            for gx in range(nx):
+                yield _png_row(grid[gy, gx], img_id, gy, gx)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pys, pxs, blobs = [], [], [], []
-            for img_id, blob, fmt in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                im = P.decode_image(bytes(blob), fmt)
-                h, w = im.shape[:2]
-                ny, nx = h // patch, w // patch
-                if ny == 0 or nx == 0:
-                    continue
-                grid = (im[:ny * patch, :nx * patch]
-                        .reshape(ny, patch, nx, patch, 3)
-                        .transpose(0, 2, 1, 3, 4))  # (ny, nx, p, p, 3)
-                for gy in range(ny):
-                    for gx in range(nx):
-                        ids.append(img_id)
-                        pys.append(gy)
-                        pxs.append(gx)
-                        blobs.append(P.encode_png(
-                            np.ascontiguousarray(grid[gy, gx])))
-            n = len(ids)
-            yield pd.DataFrame({
-                "image_id": ids, "py": pys, "px": pxs, "bytes": blobs,
-                "w": [patch] * n, "h": [patch] * n, "fmt": ["png"] * n})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"],
+                    "image_id string, py int, px int, bytes binary,"
+                    " w int, h int, fmt string", row)
 
 
 def pixel_checksum(images: DataFrame,
@@ -318,30 +235,14 @@ def pixel_checksum(images: DataFrame,
     change alters the sum — a transform-chain verifier that needs no
     float tolerance and no reference image shipped alongside.
     Output: image_id (+passthrough), checksum bigint."""
-    in_schema = {f.name: f.dataType.simpleString()
-                 for f in images.schema.fields}
-    extra = list(passthrough)
-    schema = ("image_id string"
-              + "".join(f", {c} {in_schema[c]}" for c in extra)
-              + ", checksum bigint")
+    def row(img_id, blob, fmt, *extra):
+        px = P.decode_image(blob, fmt).astype(np.int64)
+        wts = np.arange(1, px.size + 1, dtype=np.int64).reshape(px.shape)
+        yield img_id, *extra, int((px * wts).sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sums = []
-            for blob, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt).astype(np.int64)
-                h, w = px.shape[:2]
-                wts = (np.arange(h * w * 3, dtype=np.int64) + 1
-                       ).reshape(h, w, 3)
-                sums.append(int((px * wts).sum()))
-            out = pd.DataFrame({"image_id": pdf["image_id"]})
-            for c in extra:
-                out[c] = pdf[c].to_numpy()
-            out["checksum"] = np.array(sums, dtype=np.int64)
-            yield out
-
-    return images.select("image_id", "bytes", "fmt", *extra).mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt", *passthrough],
+                    "image_id string" + _ddl(images, passthrough)
+                    + ", checksum bigint", row)
 
 
 def channel_stats(images: DataFrame) -> DataFrame:
@@ -351,25 +252,20 @@ def channel_stats(images: DataFrame) -> DataFrame:
     caller derives mean = sum_v/n_px and var = sum_sq/n_px - mean²
     in whatever precision it wants; the engine never rounds).
 
-    Scale shape: partial sums are folded inside each Arrow batch (every
-    batch emits exactly 3 rows no matter how many images it holds), so
-    the one ``groupBy(c)`` shuffle moves O(partitions·3) rows — at
-    10^12 images the shuffle is still a few thousand rows."""
-    schema = "c int, n_px bigint, sum_v bigint, sum_sq bigint"
+    Scale shape: every image emits its three per-channel
+    (c, n_px, sum_v, sum_sq) rows, and Spark's map-side partial
+    aggregate folds them per partition before the one ``groupBy(c)``
+    shuffle, which therefore moves O(partitions·3) rows — at 10^12
+    images the shuffle is still a few thousand rows."""
+    def row(blob, fmt):
+        px = P.decode_image(blob, fmt).astype(np.int64)
+        for c in range(3):
+            ch = px[..., c]
+            yield c, ch.size, int(ch.sum()), int((ch * ch).sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tot = np.zeros((3, 3), dtype=np.int64)  # per c: n, sum, sumsq
-            for blob, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt).astype(np.int64)
-                tot[:, 0] += px.shape[0] * px.shape[1]
-                tot[:, 1] += px.sum(axis=(0, 1))
-                tot[:, 2] += (px * px).sum(axis=(0, 1))
-            yield pd.DataFrame({
-                "c": np.arange(3, dtype=np.int32), "n_px": tot[:, 0],
-                "sum_v": tot[:, 1], "sum_sq": tot[:, 2]})
-
-    partials = images.select("bytes", "fmt").mapInPandas(run, schema=schema)
+    partials = map_rows(images, ["bytes", "fmt"],
+                        "c int, n_px bigint, sum_v bigint, sum_sq bigint",
+                        row)
     return partials.groupBy("c").agg(
         F.sum("n_px").alias("n_px"),
         F.sum("sum_v").alias("sum_v"),
@@ -400,30 +296,21 @@ def mixup_images(images: DataFrame, pairs: DataFrame,
                       F.col("bytes").alias("bytes_b"),
                       F.col("fmt").alias("fmt_b"))
     joined = pairs.join(a, "id_a").join(b, "id_b")
-    schema = ("id_a string, id_b string, bytes binary, w int, h int,"
-              " fmt string")
     lam = int(lam_256)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, ws, hs = [], [], []
-            for ba, fa, bb, fb in zip(pdf["bytes_a"], pdf["fmt_a"],
-                                      pdf["bytes_b"], pdf["fmt_b"]):
-                pa = P.decode_image(bytes(ba), fa).astype(np.int64)
-                pb = P.decode_image(bytes(bb), fb).astype(np.int64)
-                if pa.shape != pb.shape:
-                    raise ValueError(
-                        f"mixup pair dims differ: {pa.shape} vs {pb.shape}")
-                out = ((lam * pa + (256 - lam) * pb + 128) >> 8
-                       ).astype(np.uint8)
-                blobs.append(P.encode_png(out))
-                hs.append(out.shape[0])
-                ws.append(out.shape[1])
-            yield pd.DataFrame({
-                "id_a": pdf["id_a"], "id_b": pdf["id_b"], "bytes": blobs,
-                "w": ws, "h": hs, "fmt": ["png"] * len(blobs)})
+    def row(id_a, id_b, ba, fa, bb, fb):
+        pa = P.decode_image(ba, fa).astype(np.int64)
+        pb = P.decode_image(bb, fb).astype(np.int64)
+        if pa.shape != pb.shape:
+            raise ValueError(
+                f"mixup pair dims differ: {pa.shape} vs {pb.shape}")
+        out = ((lam * pa + (256 - lam) * pb + 128) >> 8).astype(np.uint8)
+        yield _png_row(out, id_a, id_b)
 
-    return joined.mapInPandas(run, schema=schema)
+    return map_rows(joined,
+                    ["id_a", "id_b", "bytes_a", "fmt_a", "bytes_b", "fmt_b"],
+                    "id_a string, id_b string, bytes binary, w int, h int,"
+                    " fmt string", row)
 
 
 def _phash_pairs(images: DataFrame, max_hamming: int,
@@ -527,25 +414,13 @@ def to_grayscale(images: DataFrame) -> DataFrame:
     Map-only at any scale: decode -> vectorized numpy luma -> encode
     inside the Arrow batch, zero shuffles.  Output: image_id, bytes,
     w, h, fmt='png'."""
-    schema = "image_id string, bytes binary, w int, h int, fmt string"
+    def row(img_id, blob, fmt):
+        px = P.decode_image(blob, fmt).astype(np.int64)
+        g = ((77 * px[..., 0] + 150 * px[..., 1] + 29 * px[..., 2] + 128)
+             >> 8).astype(np.uint8)
+        yield _png_row(np.repeat(g[:, :, None], 3, axis=2), img_id)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, ws, hs = [], [], []
-            for blob, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                px = P.decode_image(bytes(blob), fmt).astype(np.int64)
-                g = ((77 * px[..., 0] + 150 * px[..., 1]
-                      + 29 * px[..., 2] + 128) >> 8).astype(np.uint8)
-                out = np.repeat(g[:, :, None], 3, axis=2)
-                blobs.append(P.encode_png(np.ascontiguousarray(out)))
-                ws.append(out.shape[1])
-                hs.append(out.shape[0])
-            yield pd.DataFrame({
-                "image_id": pdf["image_id"], "bytes": blobs,
-                "w": ws, "h": hs, "fmt": ["png"] * len(blobs)})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"], _PNG_DDL, row)
 
 
 # SDXL-style aspect-ratio buckets (Podell et al. 2023 §2.3 train with
@@ -621,28 +496,21 @@ def scan_corrupt(images: DataFrame) -> DataFrame:
     Map-only at any scale (zero shuffles); the whole cost is the
     decode itself, which is the point — a blob that decodes here
     decodes everywhere downstream."""
-    schema = "image_id string, status string"
+    def row(img_id, blob, fmt):
+        try:
+            P.decode_image(blob, fmt)
+            status = "ok"
+        except (AssertionError, ValueError) as e:
+            # kernels/png.py:51 "not a PNG" / kernels/jpeg.py:451
+            # "not a JPEG (missing SOI)" — wrong container signature vs
+            # any other malformation
+            status = "bad_magic" if "not a" in str(e) else "corrupt"
+        except Exception:
+            status = "corrupt"
+        yield img_id, status
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            statuses = []
-            for blob, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                try:
-                    P.decode_image(bytes(blob), fmt)
-                    statuses.append("ok")
-                except (AssertionError, ValueError) as e:
-                    # kernels/png.py:51 "not a PNG" / kernels/jpeg.py:451
-                    # "not a JPEG (missing SOI)" — wrong container
-                    # signature vs any other malformation
-                    statuses.append(
-                        "bad_magic" if "not a" in str(e) else "corrupt")
-                except Exception:
-                    statuses.append("corrupt")
-            yield pd.DataFrame({"image_id": pdf["image_id"],
-                                "status": statuses})
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, schema=schema)
+    return map_rows(images, ["image_id", "bytes", "fmt"],
+                    "image_id string, status string", row)
 
 
 _PNG_SIG_HEX = "89504E470D0A1A0A"
@@ -751,25 +619,11 @@ def orient_images(images: DataFrame,
     values) to each decoded image and re-encodes PNG.  Map-only, zero
     shuffles.  Output: image_id, bytes, w/h (post-rotation), fmt,
     orientation (passed through)."""
-    schema = ("image_id string, bytes binary, w int, h int, fmt string, "
-              "orientation int")
+    from ..kernels import jpeg as J
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import jpeg as J
-        for pdf in batches:
-            ids, blobs, ws, hs, os_ = [], [], [], [], []
-            for img_id, blob, fmt, o in zip(
-                    pdf["image_id"], pdf["bytes"], pdf["fmt"],
-                    pdf[orient_col]):
-                px = P.decode_image(bytes(blob), fmt)
-                up = J.apply_orientation(px, int(o))
-                ids.append(img_id)
-                blobs.append(P.encode_png(np.ascontiguousarray(up)))
-                hs.append(up.shape[0])
-                ws.append(up.shape[1])
-                os_.append(int(o))
-            yield pd.DataFrame({
-                "image_id": ids, "bytes": blobs, "w": ws, "h": hs,
-                "fmt": ["png"] * len(ids), "orientation": os_})
+    def row(img_id, blob, fmt, o):
+        yield *_png_row(J.apply_orientation(P.decode_image(blob, fmt), o),
+                        img_id), o
 
-    return images.mapInPandas(run, schema)
+    return map_rows(images, ["image_id", "bytes", "fmt", orient_col],
+                    _PNG_DDL + ", orientation int", row)

@@ -1,13 +1,14 @@
 """Multimodal (video/audio) column operators.
 
 Same contract as operators/images.py: media are opaque ``binary``
-columns with typed metadata, processed by Arrow-batched ``mapInPandas``
-— and, unusually for a container with no media libraries, the codecs
+columns with typed metadata, processed by one Arrow-batched
+``mapInArrow`` row worker (:func:`operators.rows.map_rows`) — and,
+unusually for a container with no media libraries, the codecs
 underneath are real: AVI/MJPEG and WAV/PCM are parsed by
 :mod:`kernels.riff` and video frames are genuine baseline-JFIF images
 decoded by :mod:`kernels.jpeg`.
 
-Scale design: every operator here is a single linear ``mapInPandas``
+Scale design: every operator here is a single linear ``mapInArrow``
 (no shuffle, no driver collect); frame sampling slices only the wanted
 frames out of the container (O(n) 8-byte header reads + O(k) payload
 copies).
@@ -18,14 +19,13 @@ training-data-pipeline operator family the graft adds (image axis).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels import png as P
 from ..kernels import riff as R
+from .images import reference_psnr
+from .rows import map_rows
 
 
 def sample_frames(videos: DataFrame, target_fps: int = 5,
@@ -38,47 +38,29 @@ def sample_frames(videos: DataFrame, target_fps: int = 5,
     the deterministic reference pixels (seed convention of
     sources/synth.videos_df: seed = video_seed*1000 + frame_idx) — the
     BASELINE per-row invariant extended to the video path."""
-    schema = ("video_id string, frame_idx long, t_ms long, w long, h long,"
-              " pix_ok boolean")
+    def row(vid, data):
+        meta = R.decode_avi_header(data)
+        fps = meta["fps"]
+        if fps <= 0:
+            raise ValueError(
+                f"{vid}: non-positive fps {fps} in AVI header "
+                "(strh rate < scale?) — cannot derive timestamps")
+        step = max(1, fps // max(target_fps, 1))
+        frames = R.avi_frames(data, set(range(0, meta["n_frames"], step)))
+        # the synth-seed convention only applies when verifying against
+        # the deterministic reference pixels; parsing it eagerly would
+        # reject real-world video ids even with verify=False
+        vseed = int(vid.rsplit("_", 1)[-1]) if verify else 0
+        for idx in sorted(frames):
+            px = P.decode_image(frames[idx], "jpeg")
+            h, w = px.shape[:2]
+            ok = (not verify or reference_psnr(vseed * 1000 + idx, w, h,
+                                               px)[1] >= psnr_min)
+            yield vid, idx, idx * 1000 // fps, w, h, ok
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("video_id", "frame_idx", "t_ms", "w", "h", "pix_ok")}
-            for vid, blob in zip(pdf["video_id"], pdf["bytes"]):
-                data = bytes(blob)
-                meta = R.decode_avi_header(data)
-                fps = meta["fps"]
-                if fps <= 0:
-                    raise ValueError(
-                        f"{vid}: non-positive fps {fps} in AVI header "
-                        "(strh rate < scale?) — cannot derive timestamps")
-                step = max(1, fps // max(target_fps, 1))
-                wanted = set(range(0, meta["n_frames"], step))
-                frames = R.avi_frames(data, wanted)
-                # the synth-seed convention only applies when verifying
-                # against the deterministic reference pixels; parsing it
-                # eagerly would reject real-world video ids even with
-                # verify=False
-                vseed = int(vid.rsplit("_", 1)[-1]) if verify else 0
-                for idx in sorted(frames):
-                    px = P.decode_image(frames[idx], "jpeg")
-                    h, w = px.shape[:2]
-                    ok = True
-                    if verify:
-                        ref = P.synth_pixels(vseed * 1000 + idx, w, h)
-                        ok = bool(P.psnr_db(ref, px) >= psnr_min)
-                    rows["video_id"].append(vid)
-                    rows["frame_idx"].append(idx)
-                    rows["t_ms"].append(idx * 1000 // fps)
-                    rows["w"].append(w)
-                    rows["h"].append(h)
-                    rows["pix_ok"].append(ok)
-            yield pd.DataFrame(rows).astype(
-                {"frame_idx": "int64", "t_ms": "int64",
-                 "w": "int64", "h": "int64"})
-
-    return videos.select("video_id", "bytes").mapInPandas(run, schema=schema)
+    return map_rows(videos, ["video_id", "bytes"],
+                    "video_id string, frame_idx long, t_ms long, w long,"
+                    " h long, pix_ok boolean", row)
 
 
 def audio_features(audio: DataFrame) -> DataFrame:
@@ -91,31 +73,15 @@ def audio_features(audio: DataFrame) -> DataFrame:
     them bit-exactly with no cross-engine float canonicalization
     (RMS, if needed, is sqrt(sum_sq / n_samples) downstream).  16-bit
     PCM keeps sum_sq <= n * 2^30, far inside int64 for any real clip."""
-    schema = ("audio_id string, sample_rate long, n_samples long,"
-              " duration_ms long, peak long, zero_crossings long,"
-              " sum_sq long")
+    def row(aid, blob):
+        s, sr = R.decode_wav(blob)
+        v = s.astype(np.int64)
+        n = len(v)
+        neg = v < 0
+        yield (aid, sr, n, n * 1000 // sr, int(np.abs(v).max()) if n else 0,
+               int((neg[1:] != neg[:-1]).sum()), int((v * v).sum()))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("audio_id", "sample_rate", "n_samples", "duration_ms",
-                     "peak", "zero_crossings", "sum_sq")}
-            for aid, blob in zip(pdf["audio_id"], pdf["bytes"]):
-                s, sr = R.decode_wav(bytes(blob))
-                v = s.astype(np.int64)
-                n = len(v)
-                neg = v < 0
-                rows["audio_id"].append(aid)
-                rows["sample_rate"].append(sr)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(n * 1000 // sr)
-                rows["peak"].append(int(np.abs(v).max()) if n else 0)
-                rows["zero_crossings"].append(
-                    int((neg[1:] != neg[:-1]).sum()) if n > 1 else 0)
-                rows["sum_sq"].append(int((v * v).sum()))
-            yield pd.DataFrame(rows).astype(
-                {"sample_rate": "int64", "n_samples": "int64",
-                 "duration_ms": "int64", "peak": "int64",
-                 "zero_crossings": "int64", "sum_sq": "int64"})
-
-    return audio.select("audio_id", "bytes").mapInPandas(run, schema=schema)
+    return map_rows(audio, ["audio_id", "bytes"],
+                    "audio_id string, sample_rate long, n_samples long,"
+                    " duration_ms long, peak long, zero_crossings long,"
+                    " sum_sq long", row)

@@ -29,8 +29,9 @@ from ..kernels import geom as G
 from ..kernels import png as PNG
 from ..kernels import proj as P
 from ..kernels import raster as R
+from .rows import rows_table
 from .tiling import (FEATURE_ARROW, _to_tile_frac, cover_features,
-                     expand_coarse, rows_table)
+                     expand_coarse)
 
 RASTER_ARROW = pa.schema([("z", pa.int32()), ("x", pa.int64()),
                           ("y", pa.int64()), ("png", pa.binary())])

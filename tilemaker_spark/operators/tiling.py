@@ -60,6 +60,7 @@ from ..kernels import geom as G
 from ..kernels import mvt as M
 from ..kernels import overlay as OV
 from ..kernels import proj as P
+from .rows import rows_table
 
 FEATURE_ARROW = pa.schema([
     ("feature_id", pa.int64()), ("layer", pa.string()), ("kind", pa.int8()),
@@ -130,14 +131,6 @@ def _cover_rows(batch, rows: np.ndarray, z: int) -> tuple:
     r, x, y = G.cover_batch(np.asarray(batch.column("kind")),
                             *G.packed_flat(batch), z)
     return rows[r], x, y
-
-
-def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
-    """Python row tuples -> one Arrow table of ``schema``: how workers
-    hand back rows they compute one at a time."""
-    cols = list(zip(*rows)) or [()] * len(schema)
-    return pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
 
 
 def _with_tiles(batch, rows, x, y, coarse, low) -> pa.Table:

@@ -9,7 +9,7 @@ the same (image_id, bytes, fmt, caption) DataFrame, so the pair is a
 lossless round trip a checksum oracle can gate.
 
 Scale shape: one shuffle — ``repartition(shard_id)`` co-locates every
-sample of a shard on one task (``applyInPandas`` over the shard key);
+sample of a shard on one task (``applyInArrow`` over the shard key);
 each task writes its tar(s) with a tmp-file + atomic rename, so a
 re-run or speculative duplicate task can never leave a torn shard.
 Shard bytes are deterministic: members sorted by sample key, tar
@@ -21,34 +21,40 @@ as cache keys at 10^12-image scale.
 from __future__ import annotations
 
 import io
+import json
 import os
 import tarfile
-from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from ..operators.rows import map_rows, rows_table
 
 MANIFEST = "manifest.json"
+MANIFEST_ARROW = pa.schema([("shard_id", pa.int32()),
+                            ("n_samples", pa.int64()),
+                            ("n_bytes", pa.int64())])
+SAMPLE_COLUMNS = ("image_id", "bytes", "fmt", "caption")
 
 
-def _shard_tar_bytes(pdf: pd.DataFrame) -> bytes:
-    """Deterministic tar: members sorted by image_id, metadata pinned."""
+def _shard_tar_bytes(samples) -> bytes:
+    """Deterministic tar of (image_id, bytes, fmt, caption) rows: members
+    sorted by image_id, metadata pinned."""
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as tf:
-        for _, row in pdf.sort_values("image_id").iterrows():
-            cap = row["caption"]
-            if cap is None or (isinstance(cap, float) and pd.isna(cap)):
-                # str(None) would silently write the 4-byte literal
-                # "None" and the round trip would resurrect it as a
-                # non-null caption — reject instead of corrupting
+        for image_id, blob, fmt, cap in sorted(samples, key=lambda r: r[0]):
+            if cap is None:
+                # writing str(None) would store the 4-byte literal "None"
+                # and the round trip would resurrect it as a non-null
+                # caption — reject instead of corrupting
                 raise ValueError(
-                    f"null caption for image_id={row['image_id']!r}: "
+                    f"null caption for image_id={image_id!r}: "
                     "shards store caption BYTES (WebDataset .txt "
                     "member); filter or fill nulls before write_shards")
-            for name, payload in (
-                    (f"{row['image_id']}.{row['fmt']}", bytes(row["bytes"])),
-                    (f"{row['image_id']}.txt", str(cap).encode("utf-8"))):
+            for name, payload in ((f"{image_id}.{fmt}", blob),
+                                  (f"{image_id}.txt", cap.encode("utf-8"))):
                 ti = tarfile.TarInfo(name=name)
                 ti.size = len(payload)
                 ti.mtime = 0
@@ -56,6 +62,30 @@ def _shard_tar_bytes(pdf: pd.DataFrame) -> bytes:
                 ti.mode = 0o644
                 tf.addfile(ti, io.BytesIO(payload))
     return buf.getvalue()
+
+
+def _shard_writer(samples: DataFrame, out_dir: str, n_shards: int,
+                  shard_id: Column | None) -> DataFrame:
+    """The manifest plan of :func:`write_shards`: running it writes each
+    shard's tar from one ``applyInArrow`` group and yields that shard's
+    manifest row."""
+    sid = (F.pmod(F.xxhash64("image_id"), F.lit(n_shards))
+           if shard_id is None else shard_id).cast("int")
+    keyed = samples.select(sid.alias("shard_id"), *SAMPLE_COLUMNS)
+
+    def write_group(table):  # unannotated: applyInArrow reads hints
+        s = table.column("shard_id")[0].as_py()
+        blob = _shard_tar_bytes(
+            zip(*(table.column(c).to_pylist() for c in SAMPLE_COLUMNS)))
+        path = os.path.join(out_dir, f"shard-{s:05d}.tar")
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(blob)
+        os.replace(tmp, path)
+        return rows_table([(s, table.num_rows, len(blob))], MANIFEST_ARROW)
+
+    return keyed.groupBy("shard_id").applyInArrow(
+        write_group, from_arrow_schema(MANIFEST_ARROW))
 
 
 def write_shards(samples: DataFrame, out_dir: str, n_shards: int = 16,
@@ -69,31 +99,12 @@ def write_shards(samples: DataFrame, out_dir: str, n_shards: int = 16,
     explicit Column (e.g. a modulo of a sequence number) when the
     assignment itself must be reproducible in plain SQL."""
     os.makedirs(out_dir, exist_ok=True)
-    sid = (F.pmod(F.xxhash64("image_id"), F.lit(n_shards))
-           if shard_id is None else shard_id).cast("int")
-    keyed = samples.select(
-        sid.alias("shard_id"), "image_id", "bytes", "fmt", "caption")
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = int(pdf["shard_id"].iloc[0])
-        blob = _shard_tar_bytes(pdf)
-        path = os.path.join(out_dir, f"shard-{s:05d}.tar")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(blob)
-        os.replace(tmp, path)
-        return pd.DataFrame({"shard_id": [s], "n_samples": [len(pdf)],
-                             "n_bytes": [len(blob)]})
-
-    manifest = keyed.groupBy("shard_id").applyInPandas(
-        write_group,
-        schema="shard_id int, n_samples bigint, n_bytes bigint")
+    manifest = _shard_writer(samples, out_dir, n_shards, shard_id)
     rows = sorted(manifest.collect(), key=lambda r: r["shard_id"])
-    import json
     with open(os.path.join(out_dir, MANIFEST), "w") as f:
         json.dump([r.asDict() for r in rows], f, indent=1)
     return manifest.sparkSession.createDataFrame(
-        rows, schema="shard_id int, n_samples bigint, n_bytes bigint")
+        rows, schema=from_arrow_schema(MANIFEST_ARROW))
 
 
 def read_shards(spark: SparkSession, out_dir: str,
@@ -108,8 +119,6 @@ def read_shards(spark: SparkSession, out_dir: str,
     glob would silently mix them into the round trip.  Falls back to
     the glob only when no manifest exists (externally produced
     shards)."""
-    import json
-
     mpath = os.path.join(out_dir, MANIFEST)
     if os.path.exists(mpath):
         with open(mpath) as f:
@@ -125,29 +134,21 @@ def read_shards(spark: SparkSession, out_dir: str,
         paths = sorted(
             os.path.join(out_dir, p) for p in os.listdir(out_dir)
             if p.endswith(".tar"))
-    pdf = spark.createDataFrame([(p,) for p in paths], schema="path string")
+    paths_df = spark.createDataFrame([(p,) for p in paths],
+                                     schema="path string")
     if partitions:
-        pdf = pdf.repartition(partitions)
+        paths_df = paths_df.repartition(partitions)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for path in b["path"]:
-                ids, blobs, fmts, caps = [], [], [], []
-                with tarfile.open(path, mode="r") as tf:
-                    members = {m.name: tf.extractfile(m).read()
-                               for m in tf.getmembers() if m.isfile()}
-                for name in sorted(members):
-                    if name.endswith(".txt"):
-                        continue
-                    stem, fmt = name.rsplit(".", 1)
-                    ids.append(stem)
-                    blobs.append(members[name])
-                    fmts.append(fmt)
-                    caps.append(members[f"{stem}.txt"].decode("utf-8"))
-                yield pd.DataFrame({
-                    "image_id": ids, "bytes": blobs, "fmt": fmts,
-                    "caption": caps})
+    def row(path):
+        with tarfile.open(path, mode="r") as tf:
+            members = {m.name: tf.extractfile(m).read()
+                       for m in tf.getmembers() if m.isfile()}
+        for name in sorted(members):
+            if name.endswith(".txt"):
+                continue
+            stem, fmt = name.rsplit(".", 1)
+            yield stem, members[name], fmt, members[f"{stem}.txt"].decode(
+                "utf-8")
 
-    return pdf.mapInPandas(
-        run, schema="image_id string, bytes binary, fmt string,"
-                    " caption string")
+    return map_rows(paths_df, ["path"], "image_id string, bytes binary,"
+                    " fmt string, caption string", row)
