@@ -1859,7 +1859,7 @@ def q_kmv_distinct(spark, sf_dir):
     Bar-Yossef RANDOM'02 / theta-sketch family): per event_type,
     estimate distinct users from the k=64 smallest 52-bit key hashes.
     The sketch is a bounded mergeable set, so the plan is ONE
-    mapInPandas partial-sketch pass (<= k hashes per group leave each
+    mapInArrow partial-sketch pass (<= k hashes per group leave each
     partition — manual map-side combine) + one shuffle over only the
     bounded partials; raw rows never shuffle and no COUNT(DISTINCT)
     materializes.  The estimate ``(k-1)*2^52 div h_k`` is pure int64
@@ -1884,7 +1884,7 @@ def q_hot_ngrams(spark, sf_dir):
     holding >= 1500 ppm of the corpus, with its exact count.  The
     tokenize/bigram explode is pure Catalyst (split + transform over an
     index sequence); the frequent-items pass never shuffles the full
-    distinct-bigram space — one bounded-state mapInPandas candidate
+    distinct-bigram space — one bounded-state mapInArrow candidate
     pass (<= k counters per partition, candidates a PROVABLE superset
     of the answer), broadcast semi-join, recount of candidates only,
     exact integer ppm threshold (n * 1e6 >= total * ppm, no floats).
@@ -2189,7 +2189,7 @@ def q_analyze(spark, sf_dir):
     """ANALYZE-style table statistics in one pass (operators/
     sketches.py analyze_table): per lineitem column, exact row/null
     counts plus a KMV NDV estimate — every column's sketch folds
-    through the SAME mapInPandas pass and ONE bounded merge shuffle,
+    through the SAME mapInArrow pass and ONE bounded merge shuffle,
     instead of one COUNT(DISTINCT) shuffle per column (at 10^12 rows
     x 16 columns that is 16 full-table distinct shuffles saved).
     k=256 < the key columns' cardinality, so the gate covers the
@@ -3794,7 +3794,6 @@ def q_poly_union(spark, sf_dir):
     Union area of unit grid boxes == number of distinct occupied cells
     (shared edges dissolve, duplicates collapse) — the DuckDB-checkable
     invariant.  Merged-component counts are covered in pytest."""
-    import pandas as pd
     from tilemaker_spark.kernels import overlay as OV
     pts = _customer_points(spark, sf_dir)
     cells = (
@@ -3805,25 +3804,24 @@ def q_poly_union(spark, sf_dir):
         .withColumn("gy", F.floor(F.col("cy") / 8).cast("long"))
     )
 
-    def union_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def union_group(t):
         import numpy as np
+        import pyarrow as pa
         boxes = []
-        for cx, cy in zip(pdf["cx"], pdf["cy"]):
-            x0, y0 = float(cx), float(cy)
+        for x0, y0 in zip(t["cx"].to_pylist(), t["cy"].to_pylist()):
             boxes.append([[np.array(
                 [[x0, y0], [x0 + 1, y0], [x0 + 1, y0 + 1], [x0, y0 + 1],
                  [x0, y0]], np.float64)]])
         u = OV.union_many(boxes)
-        return pd.DataFrame({
-            "gx": [int(pdf["gx"].iloc[0])],
-            "gy": [int(pdf["gy"].iloc[0])],
+        return pa.table({
+            "gx": t["gx"][:1], "gy": t["gy"][:1],
             "union_area": [int(round(OV.area_planar(u)))],
         })
 
     return (
         cells.groupBy("gx", "gy")
-        .applyInPandas(union_group,
-                       schema="gx long, gy long, union_area long")
+        .applyInArrow(union_group,
+                      schema="gx long, gy long, union_area long")
     )
 
 
@@ -3849,7 +3847,6 @@ def q_line_clip(spark, sf_dir):
     clip_segments_to_box).  One world-spanning segment per order (both
     endpoints LCG-derived), clipped to [-60,60]x[-45,45]; the oracle is
     the same parametric clip written as closed-form SQL."""
-    import pandas as pd
     from tilemaker_spark.kernels import geom as G
 
     o = _t(spark, sf_dir, "orders")
@@ -3860,22 +3857,20 @@ def q_line_clip(spark, sf_dir):
 
     def gen(batches):
         import numpy as np
-        for pdf in batches:
-            if not len(pdf):
+        import pyarrow as pa
+        for b in batches:
+            if not b.num_rows:
                 continue
-            a = np.column_stack([pdf["x0"], pdf["y0"]])
-            b = np.column_stack([pdf["x1"], pdf["y1"]])
-            ok, pa, pb = G.clip_segments_to_box(a, b, -60.0, -45.0,
-                                                60.0, 45.0)
-            yield pd.DataFrame({
-                "o_orderkey": pdf["o_orderkey"].to_numpy()[ok],
-                "cx0": np.round(pa[ok, 0], 7),
-                "cy0": np.round(pa[ok, 1], 7),
-                "cx1": np.round(pb[ok, 0], 7),
-                "cy1": np.round(pb[ok, 1], 7),
-            })
+            key, x0, y0, x1, y1 = (c.to_numpy() for c in b.columns)
+            ok, ca, cb = G.clip_segments_to_box(
+                np.column_stack([x0, y0]), np.column_stack([x1, y1]),
+                -60.0, -45.0, 60.0, 45.0)
+            yield pa.record_batch(
+                [key[ok], *(np.round(p[ok, i], 7)
+                            for p in (ca, cb) for i in (0, 1))],
+                ["o_orderkey", "cx0", "cy0", "cx1", "cy1"])
 
-    return seg.mapInPandas(
+    return seg.mapInArrow(
         gen, "o_orderkey long, cx0 double, cy0 double, "
              "cx1 double, cy1 double")
 
@@ -4029,8 +4024,8 @@ def q_simplify(spark, sf_dir):
     exactly 0), so both algorithms keep precisely the endpoints and the
     three corners — a closed-form SQL twin.  Even orderkeys run DP,
     odd ones Visvalingam."""
-    import pandas as pd
     from tilemaker_spark.kernels import geom as G
+    from tilemaker_spark.operators.rows import map_rows
 
     o = _t(spark, sf_dir, "orders")
     lon, lat = synth.geo_point_expr(F.col("o_orderkey"))
@@ -4044,39 +4039,29 @@ def q_simplify(spark, sf_dir):
         F.lit(2).alias("r4"),
     )
 
-    def gen(batches):
+    def simplify(key, x0, y0, *runs):
         import numpy as np
-        for pdf in batches:
-            keys, idxs, xs, ys = [], [], [], []
-            for t in pdf.itertuples(index=False):
-                # integer offsets + ONE float add per point, so corner
-                # coordinates are bit-identical to the oracle's
-                # x0 + (integer sum) regardless of association order
-                pts = [(t.x0, t.y0)]
-                ox = oy = 0
-                for d, r in (((1, 0), t.r1), ((0, 1), t.r2),
-                             ((1, 0), t.r3), ((0, 1), t.r4)):
-                    for _ in range(int(r)):
-                        ox, oy = ox + d[0], oy + d[1]
-                        pts.append((t.x0 + ox, t.y0 + oy))
-                line = np.asarray(pts, np.float64)
-                # tol sits far above float collinearity noise (~1e-12 at
-                # these magnitudes) and far below any true corner's
-                # distance/area (>= ~0.09), so both algorithms keep
-                # exactly endpoints + corners
-                out = (G.douglas_peucker(line, 1e-6)
-                       if t.o_orderkey % 2 == 0
-                       else G.visvalingam(line, 1e-6))
-                for i, (px, py) in enumerate(out):
-                    keys.append(t.o_orderkey)
-                    idxs.append(i)
-                    xs.append(px)
-                    ys.append(py)
-            yield pd.DataFrame({"o_orderkey": keys, "pt": idxs,
-                                "x": xs, "y": ys})
+        # integer offsets + ONE float add per point, so corner
+        # coordinates are bit-identical to the oracle's
+        # x0 + (integer sum) regardless of association order
+        pts = [(x0, y0)]
+        ox = oy = 0
+        for d, r in zip(((1, 0), (0, 1), (1, 0), (0, 1)), runs):
+            for _ in range(r):
+                ox, oy = ox + d[0], oy + d[1]
+                pts.append((x0 + ox, y0 + oy))
+        line = np.asarray(pts, np.float64)
+        # tol sits far above float collinearity noise (~1e-12 at
+        # these magnitudes) and far below any true corner's
+        # distance/area (>= ~0.09), so both algorithms keep
+        # exactly endpoints + corners
+        out = (G.douglas_peucker(line, 1e-6) if key % 2 == 0
+               else G.visvalingam(line, 1e-6))
+        for i, (px, py) in enumerate(out):
+            yield key, i, px, py
 
-    return base.mapInPandas(
-        gen, "o_orderkey long, pt int, x double, y double")
+    return map_rows(base, base.columns, "o_orderkey long, pt int, "
+                    "x double, y double", simplify)
 
 
 def sql_simplify():

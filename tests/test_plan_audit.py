@@ -104,7 +104,7 @@ BUDGETS = {
     # stages live behind the components checkpoint (ExistingRDD), so
     # the final DAG itself carries zero Python nodes
     "corpus_dedup": (6, 1, 0),
-    # round-5 image-transform chains: gradient-encode pandas UDF +
+    # round-5 image-transform chains: gradient-encode Arrow UDF +
     # resize/augment mapInArrow + checksum mapInArrow = 3 Arrow
     # stages, map-only (zero shuffles) by construction
     "resize_check": (0, 0, 3),
@@ -177,7 +177,7 @@ BUDGETS = {
     # length_median: ONE shuffle on the group key shared by both
     # window passes and the rollup
     "length_median": (1, 0, 0),
-    # kmv_distinct: ONE mapInPandas partial-sketch pass (the manual
+    # kmv_distinct: ONE mapInArrow partial-sketch pass (the manual
     # map-side combine — <= k hashes per group leave each partition)
     # + ONE merge shuffle over the bounded partials
     "kmv_distinct": (1, 0, 1),

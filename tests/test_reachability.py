@@ -25,7 +25,7 @@ ENTRY_POINTS = ("__spark_entry__.py", "bench.py", "jobs/*.py",
 ALLOWLIST = {
     "_supercover_segment": "scalar reference for _supercover_segments",
     "tile_assignments": "JVM parity target, FIXTURES.md §5",
-    "radius_join_audit": "exactness audit; ROADMAP item 9 removes it "
+    "radius_join_audit": "exactness audit; ROADMAP item 7 removes it "
                          "with its fix",
     "decode_file": "PBF-writer round trip; the documented decode smoke "
                    "check",

@@ -18,7 +18,7 @@ pairwise verify runs only within buckets.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -48,7 +48,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     """MinHash signatures, one vectorized Arrow pass: shingle bytes ->
     uint64 polynomial rolling hash (numpy sliding windows, batch-wide),
     then n multiply-shift permutations h_j(x) = mix(a_j*x + b_j) with the
-    min taken per doc — a single ``mapInPandas`` with no shuffle at all.
+    min taken per doc — a single ``mapInArrow`` with no shuffle at all.
     Output: (doc_id, sh array<long> distinct 64-bit-hashed shingles,
     h0..h{n-1}).
 
@@ -172,12 +172,13 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
         return sh_out, hmat
 
     def run(batches):
-        for pdf in batches:
-            n = len(pdf)
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
+            ids, col = batch.columns
             texts = [ws.sub(" ", str(t).lower()).encode("utf-8")
-                     for t in pdf[text_col]]
+                     for t in col.to_pylist()]
             # pad short docs to k bytes with spaces
             texts = [t if len(t) >= k else t + b" " * (k - len(t))
                      for t in texts]
@@ -186,18 +187,17 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
                 sh_out, hmat = _sigs_flat(texts)
             else:
                 sh_out, hmat = _sigs_perdoc(texts)
-            out = pd.DataFrame({"doc_id": pdf[id_col].to_numpy(),
-                                "sh": sh_out})
-            hs = hmat.astype(np.int64)
-            for j in range(n_hashes):
-                out[f"h{j}"] = hs[:, j]
-            yield out
+            hs = np.ascontiguousarray(hmat.T).view(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(sh_out, pa.list_(pa.int64())),
+                 *map(pa.array, hs)],
+                names=["doc_id", "sh", *(f"h{j}" for j in range(n_hashes))])
 
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     return (
         df.repartition(parallelism, F.col(id_col))
         .select(F.col(id_col), F.col(text_col))
-        .mapInPandas(run, schema=schema)
+        .mapInArrow(run, schema)
     )
 
 
@@ -412,12 +412,12 @@ def jaccard_join_prefix(df: DataFrame, text_col: str = "text",
 
 def simhash(df: DataFrame, text_col: str = "text",
             id_col: str = "doc_id") -> DataFrame:
-    """64-bit SimHash per doc: sign-sum of word-hash bits, vectorized in an
-    Arrow pandas UDF (numpy bit unpacking — one call per batch).
+    """64-bit SimHash per doc: sign-sum of word-hash bits, vectorized in a
+    scalar Arrow UDF (numpy bit unpacking — one call per batch).
     Output: (doc_id, simhash long)."""
 
-    @F.pandas_udf("long")
-    def sh(texts: pd.Series) -> pd.Series:
+    @F.arrow_udf("long")
+    def sh(texts):
         # Vectorized across documents: every doc's unique words are
         # hashed in one flat FNV-1a sweep (loop over CHAR POSITIONS, not
         # words — each step a masked vectorized xor-multiply), bits are
@@ -426,12 +426,13 @@ def simhash(df: DataFrame, text_col: str = "text",
         n = len(texts)
         out = np.zeros(n, np.int64)
         if n == 0:
-            return pd.Series(out)
-        per_doc = [sorted(set(str(t).lower().split())) for t in texts]
+            return pa.array(out)
+        per_doc = [sorted(set(str(t).lower().split()))
+                   for t in texts.to_pylist()]
         nw = np.fromiter(map(len, per_doc), np.int64, n)
         words = [w.encode("utf-8") for ws_ in per_doc for w in ws_]
         if not words:
-            return pd.Series(out)
+            return pa.array(out)
         wlen = np.fromiter(map(len, words), np.int64, len(words))
         flat = np.frombuffer(b"".join(words), np.uint8)
         wstart = np.concatenate(([0], np.cumsum(wlen)[:-1]))
@@ -454,7 +455,7 @@ def simhash(df: DataFrame, text_col: str = "text",
             vals |= ((2 * cnt > nw_nz).astype(np.uint64)
                      << np.uint64(b))
         out[nz] = vals.astype(np.int64)
-        return pd.Series(out)
+        return pa.array(out)
 
     return df.select(F.col(id_col).alias("doc_id"),
                      sh(F.col(text_col)).alias("simhash"))

@@ -4,10 +4,13 @@ output one row at a time hand it back to Spark.
 ``rows_table`` turns row tuples into an Arrow table of a given schema
 (the tile and raster builders call it inside their own ``mapInArrow`` /
 ``applyInArrow`` workers).  ``map_rows`` is the whole worker for the
-per-blob operators (images, media, tar shards): one ``mapInArrow`` that
-pulls each input column out of the Arrow batch once, calls a row
-function on every row and packs what it yields, so no operator builds a
-pandas frame or a per-column list by hand.
+per-blob operators (images, media, tar shards), the WKB polygon and
+JSONL GeoJSON readers and the driver's simplify query: one
+``mapInArrow`` that pulls each input column out of the Arrow batch once,
+calls a row function on every row and packs what it yields, so no
+operator builds a pandas frame or a per-column list by hand.
+``row_udf`` is the same for a function of one value per row (the
+synthetic blob encoders, the WKB writers): a scalar ``arrow_udf``.
 """
 
 from __future__ import annotations
@@ -15,9 +18,10 @@ from __future__ import annotations
 from typing import Callable, Iterable
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+from pyspark.sql.types import DataType, StructType
 
 
 def rows_table(rows: list, schema: pa.Schema) -> pa.Table:
@@ -53,3 +57,15 @@ def map_rows(df: DataFrame, cols: list, ddl_schema: str,
                 yield from rows_table(out, schema).to_batches()
 
     return df.select(*cols).mapInArrow(gen, struct)
+
+
+def row_udf(ddl_type: str, fn: Callable, *cols) -> Column:
+    """``fn(*values)`` on every row of ``cols``: one value of
+    ``ddl_type`` per row, from a scalar ``arrow_udf``."""
+    typ = to_arrow_type(DataType.fromDDL(ddl_type))
+
+    def udf(*arrays):
+        return pa.array([fn(*row) for row in
+                         zip(*(a.to_pylist() for a in arrays))], typ)
+
+    return F.arrow_udf(udf, ddl_type)(*cols)

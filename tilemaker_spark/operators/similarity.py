@@ -17,7 +17,8 @@ Graft additions for training-data pipelines (not in the reference):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -148,9 +149,13 @@ def ivf_assign_udf(centroids: np.ndarray, n_probes: int = 1):
     cent = np.asarray(centroids, dtype=np.float32)
     n_probes = max(1, min(n_probes, len(cent)))
 
-    @F.pandas_udf("array<long>")
-    def assign(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float32)
+    @F.arrow_udf("array<long>")
+    def assign(vecs):
+        dims = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+        if (dims != dims[0]).any():
+            raise ValueError("vectors of different lengths (or null)")
+        mat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False) \
+            .astype(np.float32).reshape(len(vecs), -1)
         mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
                           1e-12)
         dots = mat @ cent.T                              # (B, nlist)
@@ -162,7 +167,9 @@ def ivf_assign_udf(centroids: np.ndarray, n_probes: int = 1):
             order = np.argsort(
                 -np.take_along_axis(dots, part, axis=1), axis=1)
             top = np.take_along_axis(part, order, axis=1)
-        return pd.Series(list(top.astype(np.int64)))
+        return pa.ListArray.from_arrays(
+            np.arange(0, top.size + 1, n_probes, dtype=np.int32),
+            top.ravel().astype(np.int64))
 
     return assign
 

@@ -24,7 +24,7 @@ reproduces the ESTIMATE bit-for-bit, not just approximately:
   hashes, else the sketch holds the whole distinct set and the count is
   exact.
 
-Plan shape (the 100 TB story): one ``mapInPandas`` pass folds each
+Plan shape (the 100 TB story): one ``mapInArrow`` pass folds each
 input partition into per-group bounded sketches (at most k hashes per
 group PER PARTITION leave the map side — the manual map-side combine),
 then one shuffle moves only ``<= k * n_partitions`` rows per group to a
@@ -36,15 +36,47 @@ more (the estimator then needs decimal(38), noted, not built).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 HASH_BITS = 52
 HASH_SPACE = 1 << HASH_BITS  # 4503599627370496
+
+
+def _head_per_group(t: pa.Table, gcols: list[str], k: int) -> pa.Table:
+    """The first ``k`` rows of every group of ``gcols`` in ``t``, in
+    ``t``'s row order; NULL keys form their own group, as in SQL GROUP
+    BY."""
+    rows = t.append_column("__i", pa.array(np.arange(t.num_rows)))
+    idx = rows.group_by(gcols, use_threads=False).aggregate(
+        [("__i", "list")])["__i_list"]
+    return t.take(pc.list_flatten(pc.list_slice(idx, 0, k)))
+
+
+def _fold_partition(fold):
+    """A ``mapInArrow`` worker that folds its partition into one bounded
+    table: ``acc = fold(acc ++ batch)`` after every batch, so the state
+    stays as small as ``fold`` keeps it; the last ``acc`` is the
+    output."""
+    def run(batches):
+        acc = None
+        for b in batches:
+            t = pa.Table.from_batches([b])
+            acc = fold(t if acc is None else pa.concat_tables([acc, t]))
+        if acc is not None:
+            yield from acc.to_batches()
+
+    return run
+
+
+def _kmv_partial(gcols: list[str], k: int):
+    """The map side of a KMV sketch: each partition folds to the ``k``
+    smallest distinct ``__h`` per group of ``gcols``."""
+    return _fold_partition(lambda t: _head_per_group(
+        t.group_by([*gcols, "__h"]).aggregate([]).sort_by("__h"), gcols, k))
 
 
 def kmv_hash_col(key_col: str, salt: int) -> F.Column:
@@ -74,9 +106,9 @@ def kmv_distinct(df: DataFrame, key_col: str, group_cols: list[str],
     hashes the final sketch holds).
 
     NULL keys are excluded (COUNT(DISTINCT) semantics, mirrored in the
-    oracle) — a null would hash to NULL and become float NaN inside the
-    pandas partial, corrupting the k-smallest trim.  NULL GROUP values
-    are kept (dropna=False below), matching SQL GROUP BY.
+    oracle) — a null would hash to NULL and take a slot in the
+    k-smallest trim.  NULL GROUP values are kept as their own group,
+    matching SQL GROUP BY.
     """
     if not 2 <= k <= 2048:
         # (k-1) * 2^52 must stay inside int64 for the pure-integer
@@ -94,26 +126,7 @@ def kmv_distinct(df: DataFrame, key_col: str, group_cols: list[str],
         for f in hashed.schema if f.name in gcols
     ) + ", __h long"
 
-    def partial_sketch(batches: Iterator[pd.DataFrame]
-                       ) -> Iterator[pd.DataFrame]:
-        # Fold the WHOLE partition (all Arrow batches) into one bounded
-        # sketch per group before emitting anything: at most k hashes
-        # per (group, partition) reach the shuffle.
-        acc: dict[tuple, set] = {}
-        for pdf in batches:
-            for key, sub in pdf.groupby(gcols, sort=False, dropna=False):
-                if not isinstance(key, tuple):
-                    key = (key,)
-                s = acc.setdefault(key, set())
-                s.update(sub["__h"].tolist())
-                if len(s) > k:
-                    # keep the k smallest; bounded regardless of input
-                    acc[key] = set(sorted(s)[:k])
-        rows = [(*key, h) for key, s in acc.items() for h in s]
-        cols = gcols + ["__h"]
-        yield pd.DataFrame(rows, columns=cols)
-
-    partials = hashed.mapInPandas(partial_sketch, out_schema)
+    partials = hashed.mapInArrow(_kmv_partial(gcols, k), out_schema)
 
     # Final merge: k smallest distinct hashes per group.  Input is
     # <= k * n_partitions rows per group, so the sort_array/collect_set
@@ -168,7 +181,7 @@ def heavy_hitters(df: DataFrame, key_col: str, share_ppm: int,
     The classical lossless two-pass (Misra-Gries '82 candidates +
     exact recount):
 
-    1. One ``mapInPandas`` pass runs a batched Misra-Gries summary with
+    1. One ``mapInArrow`` pass runs a batched Misra-Gries summary with
        ``k = ceil(1e6 / share_ppm)`` counters per partition.  MG's
        guarantee: a key can only lose counter mass when >= k other
        counter units drop with it, so any key with partition count
@@ -194,22 +207,22 @@ def heavy_hitters(df: DataFrame, key_col: str, share_ppm: int,
     if k is None:
         k = -(-1_000_000 // share_ppm)  # ceil(1e6 / ppm)
 
-    import numpy as np
-
     # NULL keys are excluded on BOTH sides (here and in the oracle's
-    # WHERE): pandas value_counts drops NaN and an equi-semi-join can
-    # never recount a null, so "frequency of a key" is defined over
-    # present keys — but the DENOMINATOR stays the full table count,
-    # so a key's share is unaffected by how many nulls exist
+    # WHERE): an equi-semi-join can never recount a null, so
+    # "frequency of a key" is defined over present keys — but the
+    # DENOMINATOR stays the full table count, so a key's share is
+    # unaffected by how many nulls exist
     keyed = df.where(F.col(key_col).isNotNull()) \
         .select(F.col(key_col).alias("__k"))
 
-    def mg_candidates(batches: Iterator[pd.DataFrame]
-                      ) -> Iterator[pd.DataFrame]:
+    def mg_candidates(batches):
         d: dict = {}
-        for pdf in batches:
-            for key, cnt in pdf["__k"].value_counts().items():
-                d[key] = d.get(key, 0) + int(cnt)
+        for b in batches:
+            keys = b.column(0)
+            vc = pc.value_counts(keys)
+            for key, cnt in zip(vc.field("values").to_pylist(),
+                                vc.field("counts").to_pylist()):
+                d[key] = d.get(key, 0) + cnt
             if len(d) > k:
                 vals = np.sort(np.fromiter(d.values(), dtype="int64"))
                 # (len-k)-th smallest: subtracting it everywhere drops
@@ -218,9 +231,10 @@ def heavy_hitters(df: DataFrame, key_col: str, share_ppm: int,
                 # >= k other counters losing the same unit)
                 c = int(vals[len(d) - k - 1])
                 d = {kk: v - c for kk, v in d.items() if v > c}
-        yield pd.DataFrame({"__k": list(d.keys())})
+        if d:
+            yield pa.record_batch([pa.array(list(d), keys.type)], ["__k"])
 
-    cands = (keyed.mapInPandas(
+    cands = (keyed.mapInArrow(
         mg_candidates, f"__k {df.schema[key_col].dataType.simpleString()}")
         .distinct())
 
@@ -285,18 +299,8 @@ def kmv_set_ops(df: DataFrame, key_col: str, tag_col: str,
               .select(F.col(tag_col).alias("__t"),
                       kmv_hash_col(key_col, salt).alias("__h")))
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[str, set] = {}
-        for pdf in batches:
-            for tag, sub in pdf.groupby("__t", sort=False):
-                s = acc.setdefault(tag, set())
-                s.update(sub["__h"].tolist())
-                if len(s) > k:
-                    acc[tag] = set(sorted(s)[:k])
-        yield pd.DataFrame([(t, h) for t, s in acc.items() for h in s],
-                           columns=["__t", "__h"])
-
-    partials = tagged.mapInPandas(partial, "__t string, __h long")
+    partials = tagged.mapInArrow(_kmv_partial(["__t"], k),
+                                 "__t string, __h long")
     sk = (partials.groupBy("__t")
           .agg(F.slice(F.sort_array(F.collect_set("__h")), 1, k)
                .alias("mins")))
@@ -358,12 +362,12 @@ def grouped_topk(df: DataFrame, group_cols: list[str], order_col: str,
     break on ``tie_col`` ascending, making the result deterministic
     and partitioning-independent (and the oracle a plain ROW_NUMBER).
 
-    NULL handling: NULL group values form their own group (pandas
-    dropna=False, matching SQL GROUP BY); NULL order values sort where
-    Spark's window puts them (nulls first ascending, nulls last
-    descending — na_position mirrors it below so the local cut and the
-    global window agree).  ``tie_col`` must be non-null — a null
-    tie-break is ambiguous by definition.
+    NULL handling: NULL group values form their own group (matching SQL
+    GROUP BY); NULL order values sort where Spark's window puts them
+    (nulls first ascending, nulls last descending — null_placement
+    mirrors it below so the local cut and the global window agree).
+    ``tie_col`` must be non-null — a null tie-break is ambiguous by
+    definition.
 
     Adds a ``rk`` column (1-based rank within the group).
     """
@@ -372,23 +376,17 @@ def grouped_topk(df: DataFrame, group_cols: list[str], order_col: str,
     schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                        for f in df.schema)
     gcols = list(group_cols)
-    colnames = [f.name for f in df.schema]
+    keys = [(order_col, "ascending" if ascending else "descending"),
+            (tie_col, "ascending")]
 
-    def local_topk(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-        acc: pd.DataFrame | None = None
-        for pdf in batches:
-            acc = pdf if acc is None else pd.concat((acc, pdf))
-            # fold each Arrow batch into the running per-group top-k so
-            # partition-local state stays <= k rows per group
-            acc = (acc.sort_values(
-                [order_col, tie_col], ascending=[ascending, True],
-                na_position="first" if ascending else "last")
-                .groupby(gcols, sort=False, dropna=False).head(k))
-        yield acc if acc is not None else pd.DataFrame(
-            {c: [] for c in colnames})
+    def local_topk(t):
+        # fold each Arrow batch into the running per-group top-k so
+        # partition-local state stays <= k rows per group
+        return _head_per_group(t.sort_by(
+            keys, null_placement="at_start" if ascending else "at_end"),
+            gcols, k)
 
-    cands = df.mapInPandas(local_topk, schema)
+    cands = df.mapInArrow(_fold_partition(local_topk), schema)
     order = (F.col(order_col).asc() if ascending
              else F.col(order_col).desc())
     w = Window.partitionBy(*gcols).orderBy(order, F.col(tie_col).asc())
@@ -622,7 +620,7 @@ def analyze_table(df: DataFrame, cols: list[str] | None = None,
     without one COUNT(DISTINCT) shuffle per column.
 
     Plan: every column's (hash, null) pair is computed in the same
-    projection, the per-column sketches fold through ONE mapInPandas
+    projection, the per-column sketches fold through ONE mapInArrow
     pass + ONE bounded merge shuffle (<= k hashes per (column,
     partition)), exactly the kmv_distinct shape but column-parallel.
     All-integer output, so the estimates are cross-engine exact.
@@ -638,25 +636,28 @@ def analyze_table(df: DataFrame, cols: list[str] | None = None,
             kmv_hash_col(c, salt)).alias(f"__h{i}")
         for i, c in enumerate(cols)])
 
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mins: dict[str, set] = {}
-        n: dict[str, int] = {}
-        nulls: dict[str, int] = {}
-        for pdf in batches:
-            for i, c in enumerate(cols):
-                col = pdf[f"__h{i}"]
-                n[c] = n.get(c, 0) + len(col)
-                isnull = col.isna()
-                nulls[c] = nulls.get(c, 0) + int(isnull.sum())
-                s = mins.setdefault(c, set())
-                s.update(int(v) for v in col[~isnull])
-                if len(s) > k:
-                    mins[c] = set(sorted(s)[:k])
-        rows = [(c, int(h), 0, 0) for c, s in mins.items() for h in s]
-        rows += [(c, None, n.get(c, 0), nulls.get(c, 0)) for c in n]
-        yield pd.DataFrame(rows, columns=["col", "h", "n", "nulls"])
+    def partial(batches):
+        mins = [np.empty(0, np.int64)] * len(cols)
+        n = np.zeros(len(cols), np.int64)
+        nulls = np.zeros(len(cols), np.int64)
+        b = None
+        for b in batches:
+            for i, col in enumerate(b.columns):
+                n[i] += len(col)
+                nulls[i] += pc.count(col, mode="only_null").as_py()
+                mins[i] = np.unique(np.concatenate(
+                    [mins[i], pc.drop_null(col).to_numpy()]))[:k]
+        if b is not None:
+            m = np.concatenate(mins)
+            pad = np.zeros(len(m), np.int64)
+            yield pa.record_batch([
+                pa.array([c for c, h in zip(cols, mins) for _ in h] + cols),
+                pa.concat_arrays([pa.array(m),
+                                  pa.nulls(len(cols), pa.int64())]),
+                pa.array(np.r_[pad, n]), pa.array(np.r_[pad, nulls])],
+                ["col", "h", "n", "nulls"])
 
-    partials = hashed.mapInPandas(
+    partials = hashed.mapInArrow(
         partial, "col string, h long, n long, nulls long")
     merged = (partials.groupBy("col").agg(
         F.slice(F.sort_array(F.collect_set("h")), 1, k).alias("mins"),

@@ -4,7 +4,7 @@
 jobs apply it to a builder whose master comes from spark-submit, and
 ``get_spark`` adds the local-mode settings (``local[N]``, driver memory,
 no UI) on top for tests, benches and tools.  The same settings scale to
-a real cluster (AQE for skew, Arrow for the pandas-UDF tier).
+a real cluster (AQE for skew, Arrow for the Python workers).
 """
 
 from __future__ import annotations

@@ -4,18 +4,20 @@ The reference reads FeatureCollection or newline-delimited GeoJSON with
 parallel newline-chunked JSONL (/root/reference/src/geojson_processor.cpp:
 17-77).  Spark's ``spark.read.json`` IS that chunked-parallel JSONL read;
 this module just maps GeoJSON geometry to the engine's packed-ring
-schema with column expressions + one Arrow UDF for ring packing.
+schema with column expressions + one Arrow row worker
+(``operators.rows.map_rows``) for ring packing.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import geom as G
+from ..operators.rows import map_rows
+from ..operators.tiling import FEATURE_SCHEMA
 
 def _pack_geometry(gtype: str, coords) -> tuple:
     if gtype == "Point":
@@ -110,43 +112,25 @@ def read_geojson(spark: SparkSession, path: str, layer: str = "geojson",
                 attribute_function)
             rows.append((fid, layer, kind, fmz, 0, props, flat, sizes,
                          counts))
-        from ..operators.tiling import FEATURE_SCHEMA
         return spark.createDataFrame(rows, FEATURE_SCHEMA)
 
     lines = spark.read.text(path).withColumn(
         "__lid", F.xxhash64(F.input_file_name(), "value")
         .bitwiseAND(F.lit(2**63 - 1)))
 
-    def parse(batches):
-        from ..operators.tiling import FEATURE_SCHEMA  # noqa: F401
-        for pdf in batches:
-            out = {k: [] for k in ("feature_id", "layer", "kind", "minzoom",
-                                   "zorder", "attrs", "coords", "ring_sizes",
-                                   "poly_ring_counts")}
-            for line, lid in zip(pdf["value"], pdf["__lid"]):
-                line = line.strip().rstrip(",")
-                if not line or line in ("[", "]"):
-                    continue
-                ft = json.loads(line)
-                if ft.get("type") != "Feature":
-                    continue
-                kind, flat, sizes, counts = _pack_geometry(
-                    ft["geometry"]["type"], ft["geometry"]["coordinates"])
-                props, fmz = apply_attribute_function(
-                    ft.get("properties") or {}, layer, minzoom,
-                    attribute_function)
-                fid = _feature_id(ft)
-                out["feature_id"].append(lid if fid is None else fid)
-                out["layer"].append(layer)
-                out["kind"].append(kind)
-                out["minzoom"].append(fmz)
-                out["zorder"].append(0)
-                out["attrs"].append(props)
-                out["coords"].append(flat)
-                out["ring_sizes"].append(sizes)
-                out["poly_ring_counts"].append(counts)
-            if out["feature_id"]:
-                yield pd.DataFrame(out)
+    def parse(line, lid):
+        line = line.strip().rstrip(",")
+        if not line or line in ("[", "]"):
+            return
+        ft = json.loads(line)
+        if ft.get("type") != "Feature":
+            return
+        kind, flat, sizes, counts = _pack_geometry(
+            ft["geometry"]["type"], ft["geometry"]["coordinates"])
+        props, fmz = apply_attribute_function(
+            ft.get("properties") or {}, layer, minzoom, attribute_function)
+        fid = _feature_id(ft)
+        yield (lid if fid is None else fid, layer, kind, fmz, 0, props,
+               flat, sizes, counts)
 
-    from ..operators.tiling import FEATURE_SCHEMA
-    return lines.mapInPandas(parse, schema=FEATURE_SCHEMA)
+    return map_rows(lines, ["value", "__lid"], FEATURE_SCHEMA.toDDL(), parse)

@@ -13,17 +13,19 @@ Two jobs:
 2. ``images_df`` — the BASELINE ``input_hint`` table
    (image_id, bytes, w, h, fmt, caption, phash, lon, lat, h3_coarse, salt)
    materialized at any scale from ``spark.range``: metadata columns are
-   pure Catalyst expressions; ``bytes`` is an Arrow-batched pandas UDF
-   producing real PNGs (lossless) and real baseline-JFIF JPEGs
-   (lossy path, kernels/jpeg.py).
+   pure Catalyst expressions; ``bytes`` is a scalar Arrow UDF
+   (``operators.rows.row_udf``) producing real PNGs (lossless) and real
+   baseline-JFIF JPEGs (lossy path, kernels/jpeg.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..kernels import png as P
+from ..kernels import riff as R
+from ..operators.rows import row_udf
 from ..sql import tile_exprs as TE
 
 M32 = 4294967296  # 2^32
@@ -220,34 +222,16 @@ def gradient_images_df(spark: SparkSession, n: int,
 
 
 def _encode_gradient_udf(k: Column, w: Column, h: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def enc(ks: pd.Series, ws: pd.Series, hs: pd.Series) -> pd.Series:
-        from ..kernels import png as P
-        return pd.Series([
-            P.encode_png(P.gradient_pixels(int(kk), int(ww), int(hh)))
-            for kk, ww, hh in zip(ks, ws, hs)])
-
-    return enc(k, w, h)
+    return row_udf("binary", lambda kk, ww, hh: P.encode_png(
+        P.gradient_pixels(kk, ww, hh)), k, w, h)
 
 
 def _encode_image_udf(k: Column, w: Column, h: Column, fmt: Column) -> Column:
-    from pyspark.sql.functions import pandas_udf
+    def enc(kk, ww, hh, ff):
+        px = P.synth_pixels(kk, ww, hh)
+        return P.encode_png(px) if ff == "png" else P.encode_jpeg(px)
 
-    @pandas_udf("binary")
-    def enc(ks: pd.Series, ws: pd.Series, hs: pd.Series,
-            fmts: pd.Series) -> pd.Series:
-        from ..kernels import png as P
-        out = []
-        for kk, ww, hh, ff in zip(ks, ws, hs, fmts):
-            if ff == "png":
-                out.append(P.encode_png(P.synth_pixels(int(kk), int(ww), int(hh))))
-            else:
-                out.append(P.encode_jpeg(P.synth_pixels(int(kk), int(ww), int(hh))))
-        return pd.Series(out)
-
-    return enc(k, w, h, fmt)
+    return row_udf("binary", enc, k, w, h, fmt)
 
 
 def videos_df(spark: SparkSession, n: int,
@@ -274,26 +258,14 @@ def videos_df(spark: SparkSession, n: int,
         F.lit("MJPG").alias("codec"),
     )
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def enc(ks: pd.Series, nfs: pd.Series, fpss: pd.Series,
-            ws: pd.Series, hs: pd.Series) -> pd.Series:
-        from ..kernels import png as P
-        from ..kernels import riff as R
-        out = []
-        for kk, nf, fps, ww, hh in zip(ks, nfs, fpss, ws, hs):
-            frames = [
-                P.encode_jpeg(P.synth_pixels(int(kk) * 1000 + j,
-                                             int(ww), int(hh)))
-                for j in range(int(nf))]
-            out.append(R.encode_avi_mjpeg(frames, int(fps),
-                                          int(ww), int(hh)))
-        return pd.Series(out)
+    def enc(kk, nf, fps, ww, hh):
+        frames = [P.encode_jpeg(P.synth_pixels(kk * 1000 + j, ww, hh))
+                  for j in range(nf)]
+        return R.encode_avi_mjpeg(frames, fps, ww, hh)
 
     return df.withColumn(
-        "bytes", enc(F.col("_k"), F.col("n_frames"), F.col("fps"),
-                     F.col("w"), F.col("h"))
+        "bytes", row_udf("binary", enc, F.col("_k"), F.col("n_frames"),
+                         F.col("fps"), F.col("w"), F.col("h"))
     ).select("video_id", "bytes", "n_frames", "fps", "w", "h", "codec")
 
 
@@ -314,15 +286,8 @@ def audio_df(spark: SparkSession, n: int, sample_rate: int = 8000,
         (F.lit(4000) + (k % 7) * F.lit(1000)).cast("int").alias("n_samples"),
     )
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def enc(ks: pd.Series, srs: pd.Series, nss: pd.Series) -> pd.Series:
-        from ..kernels import riff as R
-        return pd.Series([
-            R.encode_wav(R.synth_audio_samples(int(kk), int(ns)), int(sr))
-            for kk, sr, ns in zip(ks, srs, nss)])
-
     return df.withColumn(
-        "bytes", enc(F.col("_k"), F.col("sample_rate"), F.col("n_samples"))
+        "bytes", row_udf("binary", lambda kk, sr, ns: R.encode_wav(
+            R.synth_audio_samples(kk, ns), sr),
+            F.col("_k"), F.col("sample_rate"), F.col("n_samples"))
     ).select("audio_id", "bytes", "sample_rate", "n_samples")

@@ -11,11 +11,11 @@ operators/spatial_join and kernels/geom consume), so a GeoParquet table
 drops straight into the PIP / kNN / tiling operators.
 
 Parsing is Arrow-batched: the fixed-width point case is a single
-vectorized ``np.frombuffer`` reshape per batch (no per-row Python in
-the common path); variable-length polygons parse per row, but each
-iteration is a whole-geometry decode — codec work, not row-at-a-time
-overhead.  Both byte orders (00 big / 01 little) are supported, as ISO
-WKB requires.
+vectorized reshape of the batch's binary values buffer (no per-row
+Python in the common path); variable-length polygons parse per row
+(``operators.rows.map_rows``), but each iteration is a whole-geometry
+decode — codec work, not row-at-a-time overhead.  Both byte orders
+(00 big / 01 little) are supported, as ISO WKB requires.
 """
 
 from __future__ import annotations
@@ -24,8 +24,10 @@ import struct
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from ..operators.rows import map_rows, row_udf
 
 
 _WKB_POINT = 1
@@ -64,16 +66,21 @@ def points_from_wkb(df: DataFrame, wkb_col: str = "wkb",
                    for f in df.schema.fields)[id_col]
     schema = f"{id_col} {id_type}, lon double, lat double"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [bytes(b) for b in pdf[wkb_col]]
-            if not blobs:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, blobs = batch.columns
+            n = len(blobs)
+            if not n:
                 continue
-            if any(len(b) != 21 for b in blobs):
-                bad = next(len(b) for b in blobs if len(b) != 21)
+            # a null blob has no bytes, so the offsets catch it too
+            _, offs, data = blobs.buffers()
+            off = np.frombuffer(offs, np.int32)[blobs.offset:][:n + 1]
+            lens = np.diff(off)
+            if (lens != 21).any():
+                bad = lens[lens != 21][0]
                 raise ValueError(
                     f"non-point WKB blob (len {bad} != 21) in {wkb_col}")
-            arr = np.frombuffer(b"".join(blobs), np.uint8).reshape(-1, 21)
+            arr = np.frombuffer(data, np.uint8, 21 * n, off[0]).reshape(-1, 21)
             little = arr[:, 0] == 1
             gtype = np.where(
                 little,
@@ -85,10 +92,11 @@ def points_from_wkb(df: DataFrame, wkb_col: str = "wkb",
             be = arr[:, 5:21].copy().view(">f8")
             lon = np.where(little, le[:, 0], be[:, 0])
             lat = np.where(little, le[:, 1], be[:, 1])
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "lon": lon, "lat": lat})
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(lon), pa.array(lat)],
+                names=[id_col, "lon", "lat"])
 
-    return df.select(id_col, wkb_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, wkb_col).mapInArrow(run, schema)
 
 
 def _parse_polygon(blob: bytes) -> tuple[list[float], list[int]]:
@@ -123,46 +131,23 @@ def polygons_from_wkb(df: DataFrame, wkb_col: str = "wkb",
                    for f in df.schema.fields)[id_col]
     schema = f"{id_col} {id_type}, coords array<double>, ring_sizes array<int>"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [_parse_polygon(bytes(b)) for b in pdf[wkb_col]]
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "coords": [c for c, _ in parsed],
-                "ring_sizes": [s for _, s in parsed]})
-
-    return df.select(id_col, wkb_col).mapInPandas(run, schema=schema)
+    return map_rows(df, [id_col, wkb_col], schema,
+                    lambda i, blob: [(i, *_parse_polygon(blob))])
 
 
 def wkb_point_col(id_col, lon_col, lat_col):
     """Column of ISO WKB point blobs from (id, lon, lat) — the writer
     side for tests/fixtures; every 3rd id is big-endian so both byte
     orders flow through parse paths."""
-    from pyspark.sql import functions as F
-
-    @F.pandas_udf("binary")
-    def pack(ids: pd.Series, lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series([
-            wkb_point(float(lo), float(la), little=(int(i) % 3 != 0))
-            for i, lo, la in zip(ids, lons, lats)])
-
-    return pack(id_col, lon_col, lat_col)
+    return row_udf("binary", lambda i, lo, la: wkb_point(
+        lo, la, little=i % 3 != 0), id_col, lon_col, lat_col)
 
 
 def wkb_box_col(id_col, minlon, minlat, maxlon, maxlat):
     """Column of ISO WKB polygon blobs for axis-aligned boxes (closed
     CCW ring) — fixture writer; every 3rd id big-endian."""
-    from pyspark.sql import functions as F
+    def pack(i, lo, la, hi, ha):
+        ring = [(lo, la), (hi, la), (hi, ha), (lo, ha), (lo, la)]
+        return wkb_polygon([ring], little=i % 3 != 0)
 
-    @F.pandas_udf("binary")
-    def pack(ids: pd.Series, a: pd.Series, b: pd.Series,
-             c: pd.Series, d: pd.Series) -> pd.Series:
-        out = []
-        for i, lo, la, hi, ha in zip(ids, a, b, c, d):
-            ring = [(float(lo), float(la)), (float(hi), float(la)),
-                    (float(hi), float(ha)), (float(lo), float(ha)),
-                    (float(lo), float(la))]
-            out.append(wkb_polygon([ring], little=(int(i) % 3 != 0)))
-        return pd.Series(out)
-
-    return pack(id_col, minlon, minlat, maxlon, maxlat)
+    return row_udf("binary", pack, id_col, minlon, minlat, maxlon, maxlat)
