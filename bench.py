@@ -3,7 +3,7 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Headline set = every registered query (``__spark_entry__.REGISTRY``)
-except an explicit skip set.  Tile-path throughput (MVT tiles written
+whose row has the bench flag set.  Tile-path throughput (MVT tiles written
 per second) is measured by ``perfbench/`` (workload ``osm_z14``).
 """
 
@@ -26,22 +26,8 @@ def main():
 
     spark = get_spark(cpus=cpus, shuffle_partitions=max(cpus, 16))
 
-    qs = E.queries()
-    # registered queries left out of the headline sweep
-    not_benched = {
-        "spherical_area", "minzoom_filter", "combine_points", "area_filter",
-        "events_window", "lang_id", "fingerprint", "dedup_canonical",
-        "simhash_dups", "video_frames", "audio_features", "image_quality",
-        "resize_check", "augment_check", "patchify_check", "caption_check",
-        "mixture", "zorder_layout", "getdata_lookup", "label_centroid",
-        "raster_roundtrip", "simplify",
-        # emb_dups is deliberately skipped: it is the DECLARED O(n²)
-        # exact ground-truth baseline (oracle-checked at sf0.01); at
-        # sf0.1 its 12.5M-pair broadcast loop costs ~12s by design and
-        # would read as a headline regression rather than a baseline
-        "emb_dups",
-    }
-    headline = [name for name in qs if name not in not_benched]
+    headline = {name: row.query for name, row in E.REGISTRY.items()
+                if row.bench}
     # best-of-N with INTERLEAVED rounds (run the whole list, then run it
     # again): single-shot numbers on this noisy shared host drift 20-50%
     # between rounds, which made round-over-round comparisons meaningless
@@ -63,12 +49,11 @@ def main():
 
         def touch(batches):
             from tilemaker_spark.kernels import geom, jpeg, png  # noqa: F401
-            for pdf in batches:
-                yield pdf
+            yield from batches
 
         t0 = time.time()
         (spark.range(cpus * 4, numPartitions=cpus)
-         .mapInPandas(touch, "id long").count())
+         .mapInArrow(touch, "id long").count())
         return round(time.time() - t0, 3)
 
     round_totals: list[float] = []
@@ -80,9 +65,9 @@ def main():
         print(f"# r{rnd} prewarm (fixed calibration job): {pw}s",
               file=sys.stderr)
         total = 0.0
-        for name in headline:
+        for name, query in headline.items():
             t0 = time.time()
-            n = qs[name](spark, sf_dir).count()
+            n = query(spark, sf_dir).count()
             sec = round(time.time() - t0, 3)
             total += sec
             if name not in timings or sec < timings[name]:
@@ -118,7 +103,7 @@ def main():
             # sweep manifest: the registered-query count, so a driver
             # CORRECTNESS sweep that silently drops a row (r04 lost
             # `simplify` with no err entry) is detectable post hoc
-            "n_registered_queries": len(qs),
+            "n_registered_queries": len(E.REGISTRY),
             "n_benched_queries": len(headline),
             "prewarm_sec_per_round": prewarm_secs,
         },

@@ -1,7 +1,7 @@
 """No pandas in the engine: every Python worker under ``tilemaker_spark/``,
-in ``jobs/`` and in ``__spark_entry__.py`` runs on Arrow (``mapInArrow``,
-``applyInArrow``, ``arrow_udf``), so no batch is converted to a pandas
-frame and back.
+in ``jobs/``, ``tools/``, ``__spark_entry__.py`` and ``bench.py`` runs on
+Arrow (``mapInArrow``, ``applyInArrow``, ``arrow_udf``), so no batch is
+converted to a pandas frame and back.
 
 Pure AST, no imports of the package.  Fails on ``import pandas`` /
 ``from pandas ...`` and on any name, attribute or imported name
@@ -16,7 +16,8 @@ import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-SOURCES = ("tilemaker_spark/**/*.py", "jobs/*.py", "__spark_entry__.py")
+SOURCES = ("tilemaker_spark/**/*.py", "jobs/*.py", "tools/*.py",
+           "__spark_entry__.py", "bench.py")
 BANNED = {"mapInPandas", "applyInPandas", "pandas_udf"}
 
 

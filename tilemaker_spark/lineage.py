@@ -258,7 +258,11 @@ class CheckpointedSink:
         An unknown ``as_of`` beyond the latest committed snapshot raises
         (matching Iceberg's unknown-snapshot error) rather than silently
         returning the latest table; ``as_of=0`` is the explicit empty
-        view before any snapshot."""
+        view before any snapshot.
+
+        A fresh sink, or one whose data files are all vacuumed, has no
+        parquet to take a schema from: it returns an empty frame with the
+        single column ``pk bigint``, not the data schema."""
         snaps = [int(f.split(".")[0]) for f in self._snapshots()]
         if as_of is not None and as_of != 0 and (
                 not snaps or as_of > max(snaps)):

@@ -35,17 +35,13 @@ pipeline tier (event attribution, campaign/interval analytics).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .sessions import _epoch
 
 _SIDE = "__asof_side"
 _OTS = "__asof_ts"
-
-
-def _epoch(c: Column) -> Column:
-    """Timestamp -> fractional epoch seconds (microsecond-exact double
-    difference; see operators/sessions._epoch for the NTZ rationale)."""
-    return c.cast("timestamp").cast("double")
 
 
 def asof_join(left: DataFrame, right: DataFrame,

@@ -76,8 +76,8 @@ WITH base AS (
   FROM {table}
 )
 SELECT doc_id,
-       n_tokens,
-       n_chars,
+       CAST(n_tokens AS INTEGER) AS n_tokens,
+       CAST(n_chars AS INTEGER) AS n_chars,
        round(CAST(n_punct AS double) / greatest(n_chars, 1), 6) AS punct_ratio,
        round(CAST(stop_hits AS double) / greatest(uniq, 1), 6) AS stopword_ratio,
        round(CAST(uniq AS double) / greatest(n_tokens, 1), 6) AS uniq_ratio,
@@ -126,8 +126,8 @@ def lang_scores_oracle_sql(table: str = "documents", text_col: str = "text",
     toks = f"list_distinct(string_split(trim({norm}), ' '))"
     hits_sql = {
         lang: (
-            f"len(list_intersect({toks}, "
-            f"[{', '.join(repr(w) for w in words)}]))"
+            f"CAST(len(list_intersect({toks}, "
+            f"[{', '.join(repr(w) for w in words)}])) AS INTEGER)"
         )
         for lang, words in LANG_MARKERS.items()
     }
@@ -299,7 +299,7 @@ grams AS (
   SELECT doc_id, toks, {ng(2)} AS g2, {ng(3)} AS g3 FROM base
 )
 SELECT doc_id,
-       len(toks) AS n_tokens,
+       CAST(len(toks) AS INTEGER) AS n_tokens,
        {dup('toks')} AS dup_token_frac,
        {dup('g2')} AS dup_2gram_frac,
        {dup('g3')} AS dup_3gram_frac,
