@@ -4,12 +4,17 @@ process whose executors import the package from the shipped zip (no
 repo on sys.path), producing a valid mbtiles from the monaco fixture and
 from a synthetic extract.  The fresh driver is also the one place the
 jobs' own session config (session.ENGINE_CONF) takes effect: the
-in-process ``main`` tests below reuse the test session."""
+in-process ``main`` tests below reuse the test session.  The zip tests
+check the package's rule that workers keep the import index of an
+unchanged zip (pyspark.zip, a ``--py-files`` archive) across tasks."""
 
+import importlib
 import os
 import sqlite3
 import subprocess
 import sys
+import zipfile
+import zipimport
 
 import pytest
 
@@ -62,6 +67,88 @@ def test_spark_submit_pyfiles(tmp_path, extract):
     conn.close()
     assert n >= 5  # pyramid zooms 4..10 over the extract
     assert meta["format"] == "pbf"
+
+
+def _write_zip(path, files):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in files.items():
+            z.writestr(name, src)
+
+
+def test_unchanged_zip_keeps_its_import_index(tmp_path, monkeypatch):
+    """``importlib.invalidate_caches()``, which PySpark's worker calls
+    before every task, re-reads a zip archive on the path only when it
+    changed on disk.  A rewrite reaches both the root importer and the
+    package-subpath importer over the archive, and a deleted archive
+    empties them."""
+    import tilemaker_spark  # noqa: F401  (installs the rule)
+
+    archive = str(tmp_path / "zpkg.zip")
+    _write_zip(archive, {"zpkg/__init__.py": "", "zpkg/a.py": "A = 1\n"})
+    sys.path.insert(0, archive)
+    try:
+        import zpkg.a  # noqa: F401
+        root = sys.path_importer_cache[archive]
+        sub = sys.path_importer_cache[os.path.join(archive, "zpkg")]
+        importlib.invalidate_caches()  # first call stamps both importers
+
+        read_directory = zipimport._read_directory
+        reads = []
+
+        def counted(path):
+            reads.append(path)
+            return read_directory(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counted)
+        importlib.invalidate_caches()
+        assert archive not in reads
+        assert root.find_spec("ztop") is None
+        assert sub.find_spec("zpkg.b") is None
+
+        _write_zip(archive, {"zpkg/__init__.py": "", "zpkg/a.py": "A = 1\n",
+                             "zpkg/b.py": "B = 2\n", "ztop.py": ""})
+        importlib.invalidate_caches()
+        assert root.find_spec("ztop") is not None
+        assert sub.find_spec("zpkg.b") is not None
+        import zpkg.b
+        assert zpkg.b.B == 2
+
+        os.remove(archive)
+        importlib.invalidate_caches()
+        assert root.find_spec("zpkg") is None
+    finally:
+        sys.path.remove(archive)
+        for path in list(sys.path_importer_cache):
+            if path.startswith(archive):
+                del sys.path_importer_cache[path]
+        zipimport._zip_directory_cache.pop(archive, None)
+        for name in ("zpkg.b", "zpkg.a", "zpkg"):
+            sys.modules.pop(name, None)
+
+
+def test_workers_keep_unchanged_zip_indexes(spark):
+    """An engine worker imports the package when it unpickles its
+    function, so every Python task after the first on a worker skips the
+    re-read of pyspark.zip's directory."""
+    from tilemaker_spark.operators.rows import map_rows
+
+    def probe(i):
+        import zipimport
+
+        import pyspark
+        from pyspark import TaskContext
+        yield (TaskContext.get().partitionId(),
+               zipimport.zipimporter.invalidate_caches.__module__,
+               ".zip" + os.sep in pyspark.__file__)
+
+    df = spark.range(0, 8, numPartitions=4)
+    for _ in range(2):
+        seen = map_rows(df, ["id"], "part int, rule string, zipped boolean",
+                        probe).collect()
+        if not all(r.zipped for r in seen):
+            pytest.skip("workers import pyspark from a directory, not a zip")
+        assert {r.part for r in seen} == {0, 1, 2, 3}
+        assert {r.rule for r in seen} == {"tilemaker_spark"}
 
 
 def test_job_checkpoint_resume(spark, tmp_path):

@@ -5,6 +5,14 @@ jobs apply it to a builder whose master comes from spark-submit, and
 ``get_spark`` adds the local-mode settings (``local[N]``, driver memory,
 no UI) on top for tests, benches and tools.  The same settings scale to
 a real cluster (AQE for skew, Arrow for the Python workers).
+
+The one piece of worker tuning that is not a conf key lives in the
+package ``__init__``: zip archives that have not changed keep their
+import index across tasks.  No conf key reaches a worker's import
+system, and ``spark.python.daemon.module`` cannot carry it: the daemon
+starts before a ``--py-files`` zip is on its path, so ``spark-submit
+--py-files`` fails.  Every worker imports the package when it unpickles
+an engine function, so the ``__init__`` reaches them all.
 """
 
 from __future__ import annotations
